@@ -8,7 +8,8 @@ import java.nio.file.{Files, Paths}
   * plan evidence the optimization rounds commit alongside the code.
   *
   * Usage: runMain graft.PlanSnap <tag> <query> [<query> ...]
-  *   (SPARK_GRAFT_PLANS_DIR selects the output dir, default plans/r16;
+  *   (SPARK_GRAFT_PLANS_DIR selects the output dir and is required, so
+  *   new snapshots never land in an earlier round's evidence directory;
   *   SPARK_GRAFT_SF_DIR selects the data dir, default sf0.1 — plans are
   *   dumped under the BENCH session settings so join strategies match the
   *   timed runs, not PlanDump's local[4] PLANS.md settings.)
@@ -17,7 +18,9 @@ object PlanSnap {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanSnap <tag> <query> [<query>...]")
     val tag = args(0)
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r16")
+    require(sys.env.contains("SPARK_GRAFT_PLANS_DIR"),
+      "set SPARK_GRAFT_PLANS_DIR to the plan snapshot output directory")
+    val outDir = sys.env("SPARK_GRAFT_PLANS_DIR")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

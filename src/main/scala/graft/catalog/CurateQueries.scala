@@ -897,9 +897,12 @@ object CurateQueries extends Catalog {
     // window + bloom subtree — r15/r16 JobProbe measured ~1–1.8 s of PURE
     // driver-side plan analysis per run (guide §5: the driver should do
     // almost no data work; §7.3 planning-time bottleneck). The checkpoint
-    // truncates every downstream reference to a LogicalRDD; the frame is
-    // materialized INSIDE the query's own first action (no precompute),
-    // and the blocks are batch-sized. Execution-mode trade (same as the
+    // truncates every downstream reference to a LogicalRDD. Under AQE
+    // even `localCheckpoint(false)` materializes stages 1-2 when this
+    // frame is CONSTRUCTED (building its RDD executes the adaptive plan's
+    // stages), so any caller that merely builds the query — a plan dump,
+    // a test — runs them; in the bench that stays inside the timed
+    // region. The blocks are batch-sized. Execution-mode trade (same as the
     // BPE/graph loops): checkpoint blocks are executor-local, so on a
     // real cluster an executor loss mid-query fails the job loudly and
     // the ingest re-runs from parquet — acceptable for a per-batch ingest

@@ -415,7 +415,7 @@ object Dedup {
     * rows feed band joins (twice, for a self-join), the shingle sets feed
     * the exact-Jaccard verify join-backs.
     */
-  private def minHashSide(docs: DataFrame, numHashes: Int, bands: Int,
+  private[graft] def minHashSide(docs: DataFrame, numHashes: Int, bands: Int,
                           shingleSize: Int, idCol: String, textCol: String,
                           storage: org.apache.spark.storage.StorageLevel)
       : (DataFrame, DataFrame, () => Unit) = {
@@ -736,32 +736,47 @@ object Dedup {
 
   /** Shared probe pipeline: (i, j, jaccard) over NEW×CORPUS and
     * NEW×earlier-NEW candidates — both public incremental surfaces wrap
-    * this, so flag rows and pair rows cannot drift.
+    * this, so flag rows and pair rows cannot drift. The batch is signed
+    * UNCACHED: a lazy result has no release point for a cache.
     */
   private def minHashIncrementalPairFrame(newDocs: DataFrame,
                                           corpusToks: DataFrame, corpusBanded: DataFrame,
                                           threshold: Double,
                                           numHashes: Int, bands: Int, shingleSize: Int,
                                           idCol: String, textCol: String): DataFrame = {
+    val (nToks, nBand, _) = minHashSide(newDocs, numHashes, bands, shingleSize,
+      idCol, textCol, org.apache.spark.storage.StorageLevel.NONE)
+    minHashProbePairs(nToks, nBand, corpusToks, corpusBanded, threshold,
+      numHashes, bands, shingleSize, broadcastBatch = false)
+  }
+
+  /** The probe over an ALREADY-SIGNED batch (`minHashSide`'s frames), for
+    * callers that own the signature. `broadcastBatch` broadcasts the batch
+    * side into every band and verify join, so the corpus side is never
+    * shuffled; the caller decides it from the batch's measured size.
+    */
+  private[graft] def minHashProbePairs(nToks: DataFrame, nBand: DataFrame,
+                                       corpusToks: DataFrame, corpusBanded: DataFrame,
+                                       threshold: Double,
+                                       numHashes: Int, bands: Int, shingleSize: Int,
+                                       broadcastBatch: Boolean): DataFrame = {
     minHashPreflight(corpusToks, corpusBanded, numHashes, bands, shingleSize)
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val (nToks, nBand, _) =
-      minHashSide(newDocs, numHashes, bands, shingleSize, idCol, textCol, mem)
+    def batchSide(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     def bandJoin(a: DataFrame, b: DataFrame, extra: Column) = a.as("a")
       .join(b.as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
           extra)
       .select(col("a.id").as("i"), col("b.id").as("j"))
       .distinct()
-    val candCorpus = bandJoin(nBand, corpusBanded, lit(true))
-    val candEarlier = bandJoin(nBand, nBand, col("b.id") < col("a.id"))
+    val candCorpus = bandJoin(batchSide(nBand), corpusBanded, lit(true))
+    val candEarlier = bandJoin(nBand, batchSide(nBand), col("b.id") < col("a.id"))
     def verify(cand: DataFrame, toksJ: DataFrame) = cand
-      .join(nToks.select(col("id").as("i"), col("ts").as("ts_a")), "i")
+      .join(batchSide(nToks.select(col("id").as("i"), col("ts").as("ts_a"))), "i")
       .join(toksJ.select(col("id").as("j"), col("ts").as("ts_b")), "j")
       .select(col("i"), col("j"),
         round(jaccard(col("ts_a"), col("ts_b")), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    verify(candCorpus, corpusToks).unionByName(verify(candEarlier, nToks))
+    verify(candCorpus, corpusToks).unionByName(verify(candEarlier, batchSide(nToks)))
   }
 
   /** Near-duplicate CLUSTERS: connected components over the verified

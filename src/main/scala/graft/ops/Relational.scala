@@ -1425,6 +1425,9 @@ object Relational {
 
   private def histStats(left: DataFrame, right: DataFrame,
                         keys: Seq[String], buckets: Int): HistStats = {
+    // every auto-strategy entry point routes through here, so the check
+    // covers autoJoinWithStrategy and autoJoin3WithOrder alike
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     def keyCol(df: DataFrame): Column =
       if (keys.size == 1) df(keys.head)
       else struct(keys.map(df(_)): _*)
@@ -1460,12 +1463,10 @@ object Relational {
                            buckets: Int = 65536,
                            broadcastRowLimit: Long = 10000L,
                            skewShareBpLimit: Long = 2000L,
-                           salts: Int = 8): (DataFrame, String) = {
-    require(buckets >= 1, "buckets must be >= 1")
+                           salts: Int = 8): (DataFrame, String) =
     routeWithStats(left, right, keys,
       histStats(left, right, keys, buckets),
       broadcastRowLimit, skewShareBpLimit, salts)
-  }
 
   /** Routing decision against ALREADY-measured histogram stats — split
     * out (r16) so `autoJoin3WithOrder` reuses the stats its order

@@ -321,7 +321,10 @@ object Text {
     // checkpoint block is a side effect of computing it), so they can be
     // dropped deterministically instead of waiting for a driver GC. The
     // final round's parent is left alone — the returned frame is still
-    // LAZY and needs it to materialize.
+    // LAZY and needs it to materialize. Spark logs one WARN per dropped
+    // parent ("lineage has been truncated and cannot be recomputed after
+    // unpersisting"): that is expected here, not a defect — nothing
+    // recomputes the parent once the current round's blocks exist.
     var parent: Option[DataFrame] = None
     def dropCheckpointBlocks(ds: DataFrame): Unit =
       ds.queryExecution.analyzed match {

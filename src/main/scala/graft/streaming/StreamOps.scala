@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 import graft.ops.{EventOps, Exact}
 
 /** Structured-Streaming surface (SURVEY §2.8): the same event-time operators
@@ -453,16 +454,16 @@ object StreamOps {
     * root whose only content is a half-written dir with no committed
     * parquet reads as the empty fallback), and writes OVERWRITE exactly
     * that batch's `batch=<id>` partition, so replay converges to
-    * identical state wherever the previous attempt died.
+    * identical state wherever the previous attempt died. Reads pin the
+    * state's known schema, so they launch no schema-inference job.
     */
   private final class BatchState(spark: SparkSession, batchId: Long) {
     def hasData(p: String): Boolean =
       graft.etl.Load.fsFor(spark, p).exists(new org.apache.hadoop.fs.Path(p))
-    def readPriorOr(root: String, empty: => DataFrame): DataFrame =
-      if (!hasData(root)) empty
-      else
-        try spark.read.parquet(root).filter(col("batch") =!= batchId).drop("batch")
-        catch { case _: org.apache.spark.sql.AnalysisException => empty }
+    def readPriorOr(root: String, schema: StructType): DataFrame =
+      if (!hasData(root)) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else spark.read.schema(schema.add("batch", LongType)).parquet(root)
+        .filter(col("batch") =!= batchId).drop("batch")
     def overwriteOwn(df: DataFrame, root: String): Unit =
       df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$root/batch=$batchId")
@@ -470,11 +471,17 @@ object StreamOps {
 
   /** The steady-state corpus-ingest loop as a STREAMING sink: every
     * micro-batch is (1) exact-deduped against the stored digest set,
-    * (2) near-dedup-probed against the stored MinHash index
-    * (`Dedup.minHashIncrementalIndexed` — batch shingling + band probes
-    * only, the corpus is never re-shingled), (3) its novel survivors land
-    * in `stateDir/out/`, and (4) the survivors' digests/shingles/bands are
-    * appended to the stored state so the NEXT batch dedups against them.
+    * (2) shingled and MinHash-signed ONCE, (3) near-dup-probed with that
+    * signature against the stored MinHash index (band probes plus an
+    * id-keyed verify — the corpus is never re-shingled), (4) its novel
+    * survivors land in `stateDir/out/`, and (5) the survivors'
+    * digests/shingles/bands are appended to the stored state so the NEXT
+    * batch dedups against them — the index rows come from the batch's own
+    * signature. When the signed batch's measured size is within the
+    * session's `spark.sql.autoBroadcastJoinThreshold` the batch side is
+    * broadcast into every band and verify join, so the corpus side is
+    * never shuffled; otherwise (or at -1) the joins shuffle. Every cache a
+    * batch creates is released before it returns.
     *
     * State layout — every table batch-partitioned (`.../batch=<id>/`):
     * {{{
@@ -517,41 +524,59 @@ object StreamOps {
                          threshold: Double = 0.5,
                          numHashes: Int = 16, bands: Int = 8,
                          shingleSize: Int = 3,
-                         idCol: String = "doc_id", textCol: String = "text"): Unit = {
+                         idCol: String = "doc_id", textCol: String = "text"): Unit =
+    minHashDedupBatch(batch, new BatchState(batch.sparkSession, batchId),
+      stateDir, Nil, threshold, numHashes, bands, shingleSize, idCol, textCol)
+
+  /** The per-batch body both MinHash dedup sinks share. The stored delta
+    * index and each `baseIndexes` (toks, banded) pair are probed
+    * separately, so a bucketed base keeps its layout in a shuffled probe.
+    */
+  private def minHashDedupBatch(batch: DataFrame, st: BatchState,
+                                stateDir: String,
+                                baseIndexes: Seq[(DataFrame, DataFrame)],
+                                threshold: Double, numHashes: Int, bands: Int,
+                                shingleSize: Int, idCol: String,
+                                textCol: String): Unit = {
     import graft.ops.Dedup
-    import org.apache.spark.sql.SaveMode
-    val spark = batch.sparkSession
-    val st = new BatchState(spark, batchId)
-    import st.{readPriorOr, overwriteOwn}
     val digestsRoot = s"$stateDir/digests"
     val toksRoot = s"$stateDir/index/toks"
     val bandedRoot = s"$stateDir/index/banded"
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val priorDigests =
-      readPriorOr(digestsRoot, Dedup.contentDigests(batch.limit(0), textCol))
+    val priorDigests = st.readPriorOr(digestsRoot,
+      Dedup.contentDigests(batch.limit(0), textCol).schema)
     val exact = Dedup.exactIncremental(batch, priorDigests, idCol, textCol)
       .persist(mem)
-    // schema-correct EMPTY index for the bootstrap batch (storage NONE —
-    // nothing to cache); within-batch near-dups are still caught via the
-    // probe's NEW×earlier-NEW leg
-    lazy val emptyIndex = Dedup.minHashIndex(batch.limit(0), numHashes, bands,
-      shingleSize, idCol, textCol, org.apache.spark.storage.StorageLevel.NONE)
-    val priorToks = readPriorOr(toksRoot, emptyIndex._1)
-    val priorBanded = readPriorOr(bandedRoot, emptyIndex._2)
-    val flagged = Dedup.minHashIncrementalIndexed(exact, priorToks, priorBanded,
-      threshold, numHashes, bands, shingleSize, idCol, textCol)
-    val survivors = exact
-      .join(flagged.select(col(idCol)), Seq(idCol), "left_anti")
+    val (nToks, nBand, releaseSigned) = Dedup.minHashSide(exact, numHashes,
+      bands, shingleSize, idCol, textCol, mem)
+    // one job fills all three caches (banded reads toks reads exact), so
+    // the broadcast gate below sees measured sizes, not plan estimates
+    nBand.count()
+    val limit = batch.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    // a fresh plan over the cache re-reads its stats (sizes are >= 0, so a
+    // threshold of -1 never fits)
+    def fits(df: DataFrame) =
+      df.select(col("*")).queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+    val broadcastBatch = fits(nToks) && fits(nBand)
+    // the bootstrap batch probes an empty delta index (in-batch near-dups
+    // are caught by the probe's NEW×earlier-NEW leg)
+    val indexes = (st.readPriorOr(toksRoot, nToks.schema),
+      st.readPriorOr(bandedRoot, nBand.schema)) +: baseIndexes
+    def batchSide(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
+    // flagged ids are distinct batch ids, so they fit wherever the batch does
+    val flagged = indexes.map { case (toks, banded) =>
+      Dedup.minHashProbePairs(nToks, nBand, toks, banded, threshold,
+        numHashes, bands, shingleSize, broadcastBatch).select(col("i").as(idCol))
+    }.reduce(_ unionByName _).distinct()
+    val survivors = exact.join(batchSide(flagged), Seq(idCol), "left_anti")
       .persist(mem)
-    overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
-    overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
-    val (sToks, sBanded) = Dedup.minHashIndex(survivors.drop("content_md5"),
-      numHashes, bands, shingleSize, idCol, textCol)
-    overwriteOwn(sToks, toksRoot)
-    overwriteOwn(sBanded, bandedRoot)
-    sToks.unpersist()
-    sBanded.unpersist()
+    st.overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
+    st.overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
+    val keptIds = batchSide(survivors.select(col(idCol).as("id")))
+    st.overwriteOwn(nToks.join(keptIds, Seq("id"), "left_semi"), toksRoot)
+    st.overwriteOwn(nBand.join(keptIds, Seq("id"), "left_semi"), bandedRoot)
     survivors.unpersist()
+    releaseSigned()
     exact.unpersist()
     ()
   }
@@ -605,21 +630,17 @@ object StreamOps {
                       expectedItems: Long = 1L << 17, numBits: Long = 1L << 21,
                       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     import graft.ops.Dedup
-    import org.apache.spark.sql.SaveMode
     val spark = batch.sparkSession
     val st = new BatchState(spark, batchId)
     import st.{readPriorOr, overwriteOwn}
     val digestsRoot = s"$stateDir/digests"
     val bloomRoot = s"$stateDir/bloom"
-    val priorDigests =
-      readPriorOr(digestsRoot, Dedup.contentDigests(batch.limit(0), textCol))
+    val priorDigests = readPriorOr(digestsRoot,
+      Dedup.contentDigests(batch.limit(0), textCol).schema)
     // OR-fold the prior sketches on the driver — KBs per batch, and
     // mergeInPlace is Spark's own compatibility-checked sketch union
     val priorSketches = readPriorOr(bloomRoot,
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("bf",
-              org.apache.spark.sql.types.BinaryType)))))
+        StructType(Seq(StructField("bf", BinaryType))))
       .collect().map(_.getAs[Array[Byte]]("bf"))
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
     val (survRaw, releaseBloom) =
@@ -705,57 +726,21 @@ object StreamOps {
                                  shingleSize: Int = 3,
                                  idCol: String = "doc_id",
                                  textCol: String = "text"): Unit = {
-    import graft.ops.Dedup
-    import org.apache.spark.sql.SaveMode
     val spark = batch.sparkSession
     val st = new BatchState(spark, batchId)
-    import st.{hasData, readPriorOr, overwriteOwn}
-    val digestsRoot = s"$stateDir/digests"
-    val toksRoot = s"$stateDir/index/toks"
-    val bandedRoot = s"$stateDir/index/banded"
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val priorDigests =
-      readPriorOr(digestsRoot, Dedup.contentDigests(batch.limit(0), textCol))
-    val exact = Dedup.exactIncremental(batch, priorDigests, idCol, textCol)
-      .persist(mem)
-    lazy val emptyIndex = Dedup.minHashIndex(batch.limit(0), numHashes, bands,
-      shingleSize, idCol, textCol, org.apache.spark.storage.StorageLevel.NONE)
-    // corpus side 1: the unfolded deltas (recent batches, small)
-    val deltaToks = readPriorOr(toksRoot, emptyIndex._1)
-    val deltaBanded = readPriorOr(bandedRoot, emptyIndex._2)
-    // corpus side 2: the bucketed base (prior batches folded by maintenance)
-    // — probed SEPARATELY so the bucketed scan keeps its zero-exchange join
-    // (a union with the deltas would discard the bucket layout). The
-    // NEW×earlier-NEW leg rides both probes; flags are unioned into one
-    // id set, so the duplication is harmless.
-    val baseExists = spark.catalog.tableExists(s"${indexName}_toks") &&
-      hasData(load.tablePath(s"${indexName}_toks"))
-    val flaggedDelta = Dedup.minHashIncrementalIndexed(exact, deltaToks,
-      deltaBanded, threshold, numHashes, bands, shingleSize, idCol, textCol)
-    val flagged =
-      if (!baseExists) flaggedDelta.select(col(idCol))
-      else flaggedDelta.select(col(idCol)).unionByName(
-        Dedup.minHashIncrementalIndexed(exact,
-          spark.table(s"${indexName}_toks"), spark.table(s"${indexName}_banded"),
-          threshold, numHashes, bands, shingleSize, idCol, textCol)
-          .select(col(idCol)))
-    val survivors = exact
-      .join(flagged.distinct(), Seq(idCol), "left_anti")
-      .persist(mem)
-    overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
-    overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
-    val (sToks, sBanded) = Dedup.minHashIndex(survivors.drop("content_md5"),
-      numHashes, bands, shingleSize, idCol, textCol)
-    overwriteOwn(sToks, toksRoot)
-    overwriteOwn(sBanded, bandedRoot)
-    sToks.unpersist()
-    sBanded.unpersist()
-    survivors.unpersist()
-    exact.unpersist()
-    foldIndexDeltas(spark, load, indexName, buckets, toksRoot, bandedRoot,
-      excludeBatch = batchId, foldEvery, numHashes, bands, shingleSize,
-      alsoCompact = Seq(digestsRoot))
-    ()
+    // the bucketed base (prior batches folded by maintenance) is probed
+    // beside the unfolded deltas, not unioned with them: a union would
+    // discard the bucket layout the shuffled probe relies on
+    val base =
+      if (spark.catalog.tableExists(s"${indexName}_toks") &&
+          st.hasData(load.tablePath(s"${indexName}_toks")))
+        Seq((spark.table(s"${indexName}_toks"), spark.table(s"${indexName}_banded")))
+      else Nil
+    minHashDedupBatch(batch, st, stateDir, base, threshold, numHashes, bands,
+      shingleSize, idCol, textCol)
+    foldIndexDeltas(spark, load, indexName, buckets, s"$stateDir/index/toks",
+      s"$stateDir/index/banded", excludeBatch = batchId, foldEvery,
+      numHashes, bands, shingleSize, alsoCompact = Seq(s"$stateDir/digests"))
   }
 
   /** Maintenance half of the bucketed sink: fold prior batches' index
@@ -970,16 +955,15 @@ object StreamOps {
                           idCol: String = "vec_id",
                           vecCol: String = "embedding"): Unit = {
     import graft.ops.Vectors
-    import org.apache.spark.sql.SaveMode
     val spark = batch.sparkSession
     val st = new BatchState(spark, batchId)
     import st.{readPriorOr, overwriteOwn}
     val none = org.apache.spark.storage.StorageLevel.NONE
-    lazy val emptyIndex =
+    val emptyIndex =
       Vectors.cosineIndex(batch.limit(0), planesPerBand, bands, dims,
         idCol, vecCol, none)
-    val priorNormed = readPriorOr(s"$stateDir/normed", emptyIndex._1)
-    val priorBanded = readPriorOr(s"$stateDir/banded", emptyIndex._2)
+    val priorNormed = readPriorOr(s"$stateDir/normed", emptyIndex._1.schema)
+    val priorBanded = readPriorOr(s"$stateDir/banded", emptyIndex._2.schema)
     val flagged = Vectors.cosineIncrementalIndexed(batch, priorNormed,
       priorBanded, threshold, planesPerBand, bands, dims, idCol, vecCol)
     val survivors = batch

@@ -85,10 +85,15 @@ class DedupVectorsSpec extends SparkSpec {
     val (toks, banded) = Dedup.minHashIndex(corpus)
     toks.write.parquet(s"$dir/toks")
     banded.write.parquet(s"$dir/banded")
+    spark.catalog.clearCache() // isolate the probe's own cache lifecycle
     val indexed = Dedup.minHashIncrementalIndexed(batch,
         spark.read.parquet(s"$dir/toks"), spark.read.parquet(s"$dir/banded"), 0.5)
       .collect().map(_.toSeq).toSet
     assert(indexed == direct && direct.nonEmpty)
+    // the probe returns a lazy frame with no release point, so it must
+    // not leave cached batch signatures behind
+    assert(org.apache.spark.sql.graftbridge.ColumnBridge.sqlCacheIsEmpty(spark),
+      "minHashIncrementalIndexed must retain no cached frames")
     // mismatched build params must fail fast, not silently admit near-dups
     intercept[IllegalArgumentException] {
       Dedup.minHashIncrementalIndexed(batch,

@@ -1055,6 +1055,16 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
+  test("autoJoin3WithOrder: buckets = 0 is rejected before any histogram runs") {
+    val a = Seq((1, 1)).toDF("k1", "av")
+    val b = Seq((1, 2)).toDF("k1", "k2")
+    val c = Seq((2, "x")).toDF("k2", "cv")
+    val e = intercept[IllegalArgumentException] {
+      Relational.autoJoin3WithOrder(a, b, c, Seq("k1"), Seq("k2"), buckets = 0)
+    }
+    assert(e.getMessage.contains("buckets must be >= 1"), e.getMessage)
+  }
+
   test("holtForecastBp: hand-traced recurrence, truncation-toward-zero on " +
       "the negative trend step, same-second event_id order, single event") {
     val ts = (s: Long) => new java.sql.Timestamp(s * 1000)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.EventOps
+import graft.ops.{Dedup, EventOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
@@ -377,45 +377,87 @@ class StreamOpsSpec extends SparkSpec {
     assert(ids == Seq(1L, 2L, 3L))
   }
 
+  /** The three micro-batch files the MinHash dedup sink specs feed, in
+    * arrival order: in-batch exact dup (3), cross-batch exact (11, 21) and
+    * near (12, 22) dups of earlier batches, fresh docs (2, 13, 23).
+    */
+  private val dedupFiles: Seq[(String, Seq[String])] = Seq(
+    "b1.json" -> Seq(
+      """{"doc_id":1,"lang":"en","text":"the quick brown fox jumps over the lazy dog tonight"}""",
+      """{"doc_id":2,"lang":"en","text":"completely different text about spark engines at scale"}""",
+      """{"doc_id":3,"lang":"en","text":"the quick brown fox jumps over the lazy dog tonight"}"""),
+    "b2.json" -> Seq(
+      """{"doc_id":11,"lang":"en","text":"the quick brown fox jumps over the lazy dog tonight"}""",
+      """{"doc_id":12,"lang":"en","text":"the quick brown fox jumps over the lazy dog today"}""",
+      """{"doc_id":13,"lang":"en","text":"novel content never seen in the corpus before now"}"""),
+    "b3.json" -> Seq(
+      """{"doc_id":21,"lang":"en","text":"novel content never seen in the corpus before now"}""",
+      """{"doc_id":22,"lang":"en","text":"the quick brown fox jumps over the lazy dog yesterday"}""",
+      """{"doc_id":23,"lang":"en","text":"absolutely fresh material arriving in the third batch"}"""))
+
+  private def writeDedupFile(src: String, file: (String, Seq[String])): Unit = {
+    java.nio.file.Files.write(java.nio.file.Paths.get(src, file._1),
+      file._2.mkString("\n").getBytes("UTF-8"))
+    Thread.sleep(5) // distinct mtimes → deterministic batch order
+  }
+
+  private def runDedupSink(src: String, state: String, ckpt: String): Unit = {
+    val q = StreamOps.incrementalDedupSink(
+      StreamOps.readDocumentStream(spark, src, maxFilesPerTrigger = Some(1)),
+      state, ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000), "streaming query did not terminate within 120s")
+    q.exception.foreach(e => throw e)
+  }
+
+  private def dedupOutIds(state: String): Set[Long] = spark.read.parquet(s"$state/out")
+    .select("doc_id").as[Long].collect().toSet
+
+  private def dedupStateCounts(state: String): (Long, Long, Long) = (
+    spark.read.parquet(s"$state/digests").count(),
+    spark.read.parquet(s"$state/index/toks").count(),
+    spark.read.parquet(s"$state/index/banded").count())
+
   test("incrementalDedupSink: cross-batch dedup via stored index, restart-safe, replay-idempotent") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.ColumnBridge
     val src = tmpDir("docs-src")
     val state = tmpDir("dedup-state")
     val ckpt = tmpDir("dedup-ckpt")
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5) // distinct mtimes → deterministic batch order
+    def outIds: Set[Long] = dedupOutIds(state)
+    // every cache a micro-batch creates is released before it returns:
+    // nothing may stay in the SQL cache or as a persistent RDD
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def assertNothingRetained(after: String): Unit = {
+      assert(ColumnBridge.sqlCacheIsEmpty(spark), s"SQL cache entries left after $after")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+      assert(leaked.isEmpty, s"persistent RDDs left after $after: $leaked")
     }
-    def runOnce(): Unit = {
-      val q = StreamOps.incrementalDedupSink(
-        StreamOps.readDocumentStream(spark, src, maxFilesPerTrigger = Some(1)),
-        state, ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(120000), "streaming query did not terminate within 120s")
-    }
-    def outIds: Set[Long] = spark.read.parquet(s"$state/out")
-      .select("doc_id").as[Long].collect().toSet
-    writeFile("b1.json", Seq(
-      """{"doc_id":1,"lang":"en","text":"the quick brown fox jumps over the lazy dog tonight"}""",
-      """{"doc_id":2,"lang":"en","text":"completely different text about spark engines at scale"}""",
-      """{"doc_id":3,"lang":"en","text":"the quick brown fox jumps over the lazy dog tonight"}"""))
-    writeFile("b2.json", Seq(
-      """{"doc_id":11,"lang":"en","text":"the quick brown fox jumps over the lazy dog tonight"}""",
-      """{"doc_id":12,"lang":"en","text":"the quick brown fox jumps over the lazy dog today"}""",
-      """{"doc_id":13,"lang":"en","text":"novel content never seen in the corpus before now"}"""))
-    runOnce()
+    dedupFiles.take(2).foreach(writeDedupFile(src, _))
+    runDedupSink(src, state, ckpt)
     // batch 1: doc 3 dies (in-batch exact dup of 1). batch 2 vs STORED
     // state: 11 dies on the digest set, 12 dies on the MinHash index
     // (near-dup of 1 — only the appended index rows can catch it), 13 lives.
     assert(outIds == Set(1L, 2L, 13L))
     // restart from the SAME checkpoint with a third file: the new batch
     // dedups against state appended by BOTH earlier batches
-    writeFile("b3.json", Seq(
-      """{"doc_id":21,"lang":"en","text":"novel content never seen in the corpus before now"}""",
-      """{"doc_id":22,"lang":"en","text":"the quick brown fox jumps over the lazy dog yesterday"}""",
-      """{"doc_id":23,"lang":"en","text":"absolutely fresh material arriving in the third batch"}"""))
-    runOnce()
+    writeDedupFile(src, dedupFiles(2))
+    runDedupSink(src, state, ckpt)
     assert(outIds == Set(1L, 2L, 13L, 23L))
+    assertNothingRetained("the streaming run")
+    // the appended index rows are taken from each batch's own signature;
+    // they must equal a from-text index build over the surviving rows,
+    // exactly and as multisets (no row lost, none duplicated)
+    val rebuilt = Dedup.minHashIndex(spark.read.parquet(s"$state/out").drop("batch"),
+      storage = org.apache.spark.storage.StorageLevel.NONE)
+    def multiset(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.length }
+    Seq("toks" -> rebuilt._1, "banded" -> rebuilt._2).foreach { case (t, want) =>
+      val stored = spark.read.parquet(s"$state/index/$t").drop("batch")
+        .select(want.columns.map(col): _*)
+      assert(multiset(stored) == multiset(want), s"stored index/$t != minHashIndex(out)")
+    }
     // crash-replay idempotence: re-running the LAST committed batch by hand
     // (what foreachBatch does after a crash before checkpoint commit) must
     // leave output AND stored state identical — not double-append, and not
@@ -425,14 +467,70 @@ class StreamOpsSpec extends SparkSpec {
       .map(_.stripPrefix("batch=").toLong).max
     val b3 = spark.read.schema("doc_id BIGINT, lang STRING, text STRING")
       .json(s"$src/b3.json")
-    def stateCounts: (Long, Long, Long) = (
-      spark.read.parquet(s"$state/digests").count(),
-      spark.read.parquet(s"$state/index/toks").count(),
-      spark.read.parquet(s"$state/index/banded").count())
-    val before = stateCounts
+    val before = dedupStateCounts(state)
     StreamOps.dedupDocumentBatch(b3, lastBatch, state)
     assert(outIds == Set(1L, 2L, 13L, 23L))
-    assert(stateCounts == before)
+    assert(dedupStateCounts(state) == before)
+    assertNothingRetained("the manual replay")
+  }
+
+  test("incrementalDedupSink: the batch-side broadcast is size-gated — with " +
+      "autoBroadcastJoinThreshold=-1 the probe joins shuffle, same results") {
+    import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val src = tmpDir("docs-gate-src")
+    dedupFiles.foreach(writeDedupFile(src, _))
+    // physical operators of a finished plan, through adaptive stages and
+    // into cached relations (the probe runs inside the survivors' cache)
+    def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+      case q: QueryStageExec => operators(q.plan)
+      case c: CommandResultExec => operators(c.commandPhysicalPlan)
+      case m: InMemoryTableScanExec => m +: operators(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(operators)
+    }
+    // the probe's band joins key on band_key, its verify joins on i / j
+    def isProbe(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      keys.flatMap(_.references.map(_.name)).exists(Set("band_key", "i", "j"))
+    def runCapturing(threshold: Option[String]): (String, Seq[String]) = {
+      val state = tmpDir("dedup-gate-state")
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      d: Long): Unit = { plans.add(qe.executedPlan); () }
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      e: Exception): Unit = ()
+      }
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val saved = spark.conf.getOption(key)
+      threshold.foreach(spark.conf.set(key, _))
+      spark.listenerManager.register(listener)
+      try runDedupSink(src, state, tmpDir("dedup-gate-ckpt"))
+      finally {
+        org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+        spark.listenerManager.unregister(listener)
+        saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      }
+      import scala.jdk.CollectionConverters._
+      val probeJoins = plans.asScala.toSeq.flatMap(operators).collect {
+        case j: BroadcastHashJoinExec if isProbe(j.leftKeys) => "broadcast"
+        case j: SortMergeJoinExec if isProbe(j.leftKeys) => "shuffled"
+      }
+      (state, probeJoins)
+    }
+    val (small, smallJoins) = runCapturing(None)
+    val (gated, gatedJoins) = runCapturing(Some("-1"))
+    assert(dedupOutIds(small) == Set(1L, 2L, 13L, 23L))
+    assert(dedupOutIds(gated) == dedupOutIds(small))
+    assert(dedupStateCounts(gated) == dedupStateCounts(small))
+    // under the default threshold the tiny batch side is broadcast; at -1
+    // every probe join falls back to the shuffled plan
+    assert(smallJoins.contains("broadcast"), s"default run probe joins: $smallJoins")
+    assert(gatedJoins.nonEmpty && !gatedJoins.contains("broadcast"),
+      s"threshold -1 run probe joins: $gatedJoins")
   }
 
   test("bloomDedupSink: streamed survivors ≡ the serial exactIncremental " +
