@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Exact, Quality, Relational, Sketch}
+import graft.ops.{Exact, Quality, Relational, Sketch, Stop}
 import graft.tables.Tables.load
 
 /** The relational query surface: scans, filters, projections, the full join
@@ -1666,7 +1666,7 @@ object RelationalQueries extends Catalog {
     Q("basket_components_twostar",
       (s, dir) => graft.ops.Graph.twoStarComponents(
           StoredIndexes.basketEdges(s, dir).filter(col("support") >= 2),
-          a = "item_a", b = "item_b")
+          a = "item_a", b = "item_b").out
         .orderBy(col("node")),
       Some(BasketComponentsOracle)),
 
@@ -1712,7 +1712,7 @@ object RelationalQueries extends Catalog {
           graft.ops.Relational.basketPairs(
               load(s, dir, "lineitem"), "l_orderkey", "l_partkey")
             .filter(col("support") >= 2),
-          iters = 4, "item_a", "item_b")
+          Stop.Rounds(4), "item_a", "item_b").out
         .orderBy(col("node")),
       Some(lpaOracle(4))),
 
@@ -1722,7 +1722,7 @@ object RelationalQueries extends Catalog {
     Q("graph_lpa_communities_indexed",
       (s, dir) => graft.ops.Graph.labelPropagation(
           StoredIndexes.basketEdges(s, dir).filter(col("support") >= 2),
-          iters = 4, "item_a", "item_b")
+          Stop.Rounds(4), "item_a", "item_b").out
         .orderBy(col("node")),
       Some(lpaOracle(4))),
 
@@ -1760,7 +1760,7 @@ object RelationalQueries extends Catalog {
           graft.ops.Relational.basketPairs(
               load(s, dir, "lineitem"), "l_orderkey", "l_partkey")
             .filter(col("support") >= 2),
-          minSeedDegree = 4, maxHops = 3, "item_a", "item_b")
+          minSeedDegree = 4, Stop.Rounds(3), "item_a", "item_b").out
         .orderBy(col("node")),
       Some(BasketBfsOracle)),
 
@@ -1769,7 +1769,7 @@ object RelationalQueries extends Catalog {
     Q("graph_bfs_hops_indexed",
       (s, dir) => graft.ops.Graph.bfsHops(
           StoredIndexes.basketEdges(s, dir).filter(col("support") >= 2),
-          minSeedDegree = 4, maxHops = 3, "item_a", "item_b")
+          minSeedDegree = 4, Stop.Rounds(3), "item_a", "item_b").out
         .orderBy(col("node")),
       Some(BasketBfsOracle)),
 
@@ -1785,7 +1785,7 @@ object RelationalQueries extends Catalog {
               load(s, dir, "lineitem"), "l_orderkey", "l_partkey")
             .filter(col("support") >= 2)
             .withColumn("w", expr("10000 div support")),
-          "w", minSeedDegree = 4, rounds = 3, "item_a", "item_b")
+          "w", minSeedDegree = 4, Stop.Rounds(3), "item_a", "item_b").out
         .orderBy(col("node")),
       Some(basketHubCostOracle(3))),
 
@@ -1795,7 +1795,7 @@ object RelationalQueries extends Catalog {
       (s, dir) => graft.ops.Graph.minCostHops(
           StoredIndexes.basketEdges(s, dir).filter(col("support") >= 2)
             .withColumn("w", expr("10000 div support")),
-          "w", minSeedDegree = 4, rounds = 3, "item_a", "item_b")
+          "w", minSeedDegree = 4, Stop.Rounds(3), "item_a", "item_b").out
         .orderBy(col("node")),
       Some(basketHubCostOracle(3))),
 
@@ -2795,7 +2795,8 @@ object RelationalQueries extends Catalog {
             (col("o_custkey") * 2 + 1).as("dst"))
         // no .distinct() here: undirect's union+distinct dedups anyway —
         // a pre-distinct would just add a full extra shuffle round.
-        graft.ops.Graph.pageRankBp(graft.ops.Graph.undirect(edges), 3)
+        graft.ops.Graph.pageRankBp(graft.ops.Graph.undirect(edges),
+            Stop.Rounds(3)).out
           .select(
             when(col("node") % 2 === 0,
                 concat(lit("s"), expr("node div 2").cast("string")))
@@ -2842,7 +2843,7 @@ object RelationalQueries extends Catalog {
           .filter(col("s_nationkey") === 0)
           .select((col("s_suppkey") * 2).as("node"))
         graft.ops.Graph.personalizedPageRankBp(
-            graft.ops.Graph.undirect(edges), seeds, 3)
+            graft.ops.Graph.undirect(edges), seeds, Stop.Rounds(3)).out
           .select(
             when(col("node") % 2 === 0,
                 concat(lit("s"), expr("node div 2").cast("string")))
@@ -2892,7 +2893,8 @@ object RelationalQueries extends Catalog {
         val seeds = load(s, dir, "part")
           .filter(col("p_brand") === "Brand#11")
           .select(col("p_partkey").as("node"))
-        graft.ops.Graph.personalizedPageRankBp(edges, seeds, 3)
+        graft.ops.Graph.personalizedPageRankBp(edges, seeds,
+            Stop.Rounds(3)).out
           .orderBy(col("node"))
       },
       Some {
@@ -2924,7 +2926,7 @@ object RelationalQueries extends Catalog {
            |ORDER BY node""".stripMargin
       }),
 
-    // Convergence-terminated PageRank (ops/Graph.pageRankBpConverged):
+    // Convergence-terminated PageRank (ops/Graph.pageRankBp, Stop.Converge):
     // the stop rule is "state repeated" (exact integer fixpoint, or the
     // period-2 cycle truncating division produces), detected by an
     // order-independent xxhash64 state signature — ONE node-sized agg per
@@ -2948,15 +2950,15 @@ object RelationalQueries extends Catalog {
             col("o_custkey") === col("c_custkey"))
           .select((col("s_nationkey") * 2).as("src"),
             (col("c_nationkey") * 2 + 1).as("dst"))
-        val (ranks, rounds) = graft.ops.Graph.pageRankBpConvergedWithRounds(
-          graft.ops.Graph.undirect(edges), maxIters = 24)
-        ranks.select(
+        val pr = graft.ops.Graph.pageRankBp(
+          graft.ops.Graph.undirect(edges), Stop.Converge(24))
+        pr.out.select(
             when(col("node") % 2 === 0,
                 concat(lit("sn"), expr("node div 2").cast("string")))
               .otherwise(
                 concat(lit("cn"), expr("(node - 1) div 2").cast("string")))
               .as("node"),
-            col("rank_bp"), lit(rounds.toLong).as("rounds_run"))
+            col("rank_bp"), lit(pr.rounds.toLong).as("rounds_run"))
           .orderBy(col("node"))
       },
       Some {
@@ -3048,7 +3050,7 @@ object RelationalQueries extends Catalog {
           .select(col("item_a").as("a"), col("item_b").as("b"))
         val clique = (for { i <- 1 to 6; j <- (i + 1) to 6 }
           yield (10000000L + i, 10000000L + j)).toDF("a", "b")
-        graft.ops.Graph.kTrussEdges(organic.unionByName(clique), k = 3)
+        graft.ops.Graph.kTrussEdges(organic.unionByName(clique), k = 3).out
           .select(col("a").as("item_a"), col("b").as("item_b"),
             col("support"))
           .orderBy(col("item_a"), col("item_b"))
@@ -3068,7 +3070,7 @@ object RelationalQueries extends Catalog {
           .select(col("item_a").as("a"), col("item_b").as("b"))
         val clique = (for { i <- 1 to 6; j <- (i + 1) to 6 }
           yield (10000000L + i, 10000000L + j)).toDF("a", "b")
-        graft.ops.Graph.kTrussEdges(organic.unionByName(clique), k = 3)
+        graft.ops.Graph.kTrussEdges(organic.unionByName(clique), k = 3).out
           .select(col("a").as("item_a"), col("b").as("item_b"),
             col("support"))
           .orderBy(col("item_a"), col("item_b"))

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Exact, Text}
+import graft.ops.{Dedup, Exact, Stop, Text}
 import graft.tables.Tables.load
 
 /** Text-analysis + document-dedup query surface over `documents` (north-star
@@ -657,7 +657,8 @@ object TextQueries extends Catalog {
         val edges = Text.pmiState(load(s, dir, "documents"), 3)
           .filter(col("kind") === "p" && col("c") >= 3)
           .select(col("w1").as("src"), col("w2").as("dst"))
-        graft.ops.Graph.pageRankBp(graft.ops.Graph.undirect(edges), 3)
+        graft.ops.Graph.pageRankBp(graft.ops.Graph.undirect(edges),
+            Stop.Rounds(3)).out
           .select(col("node").as("token"), col("rank_bp"))
           .orderBy(col("rank_bp").desc, col("token"))
           .limit(25)

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.functions._
-import graft.ops.Vectors
+import graft.ops.{Stop, Vectors}
 import graft.tables.Tables.load
 
 /** Similarity-search query surface over `embeddings(vec_id, embedding
@@ -946,7 +946,7 @@ object VectorQueries extends Catalog {
         val knn = Vectors.knnGraph(load(s, dir, "embeddings"), 0.4, 5)
         val und = knn.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b")).distinct()
-        graft.ops.Graph.kCore(und, k = 2, rounds = 4)
+        graft.ops.Graph.kCore(und, k = 2, Stop.Rounds(4)).out
           .select(col("node").as("vec_id"), col("degree"))
           .orderBy(col("vec_id"))
       },

@@ -23,8 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Exact dedup: canonical survivor (min id) per content digest.
     * SURVEY X2: `dropDuplicates` semantics but deterministic, and grouping on
     * the digest keeps shuffle width constant regardless of document size.
@@ -854,25 +852,14 @@ object Dedup {
       return out.toDF("doc_id", "cluster_rep")
     }
     // Distributed path: alternating large-star/small-star rounds
-    // (`Graph.twoStarComponentsWithRounds`, Kiveris et al. 2014) —
-    // O(log² n) worst-case rounds instead of the O(diameter) a plain
-    // min-label propagation needs, so a deep duplicate CHAIN (the shape
-    // the old propagation engine silently under-converged on past
-    // maxIters rounds) resolves exactly: `maxIters` two-star rounds
-    // cover any graph that fits in storage. Each round is two edge-sized
-    // keyed shuffles with node-sized min side-tables; rounds are
-    // localCheckpointed, nothing retained on exit.
-    val (labels, rounds, converged) =
-      Graph.twoStarComponentsWithStatus(pairs, maxIters, "a", "b")
-    // Warn ONLY on a genuinely unconfirmed fixpoint: a fixpoint confirmed
-    // exactly on the final allowed round (converged, rounds == maxIters)
-    // is a success — rounds alone cannot distinguish the two.
-    if (!converged)
-      log.warn(
-        s"components: two-star hit the round cap (maxIters=$maxIters, " +
-          s"ran $rounds) without confirming the fixpoint; raise " +
-          "maxIters (log₂²(n) rounds always suffice)")
-    labels.select(col("node").as("doc_id"), col("component").as("cluster_rep"))
+    // (`Graph.twoStarComponents`, Kiveris et al. 2014) — O(log² n)
+    // worst-case rounds instead of the O(diameter) a plain min-label
+    // propagation needs, so a deep duplicate CHAIN resolves exactly:
+    // `maxIters` two-star rounds (log₂²(n) always suffice) cover any graph
+    // that fits in storage. The iteration driver warns if the cap cuts
+    // the rounds short.
+    Graph.twoStarComponents(pairs, Stop.Converge(maxIters), "a", "b").out
+      .select(col("node").as("doc_id"), col("component").as("cluster_rep"))
   }
 
   /** Incremental clustering — merge a batch's near-dup pairs into STORED

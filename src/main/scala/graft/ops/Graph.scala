@@ -10,17 +10,16 @@ import org.apache.spark.sql.functions._
   * division are order-independent — the DuckDB oracle replays the identical
   * recurrence and hash-matches bit-for-bit.
   *
-  * Scale shape: degrees and ranks are keyed on node id; each iteration is
-  * one (edges ⋈ ranks) join keyed on src plus one groupBy keyed on dst —
-  * the standard Pregel decomposition with a fixed iteration count and
-  * map-side partial aggregation on the contribution sum. The edge frame is
-  * reused across iterations (cache it for >3 iterations; for billion-edge
-  * graphs pre-bucket it by src so the per-iteration join never re-shuffles
-  * the edge side).
+  * Every iterative operator takes a `Stop` rule — a fixed round count, the
+  * form an unrolled SQL oracle replays, or run-to-fixpoint under a cap —
+  * and returns an `Iterated` (output, rounds run, converged). All of them
+  * loop through `Iterate.run`, which owns materialization, the fixpoint
+  * test and the release of setup caches. Integer state makes every
+  * fixpoint an exact equality, not an epsilon test.
   */
 object Graph {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
 
   /** Undirected closure: both directions of each distinct edge. */
   def undirect(edges: DataFrame, src: String = "src",
@@ -69,7 +68,6 @@ object Graph {
     */
   def trianglesPerNode(edges: DataFrame, a: String = "a",
                        b: String = "b"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
     val e = edges.select(col(a).as("u"), col(b).as("v"))
     val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
     val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -116,7 +114,6 @@ object Graph {
     */
   def clusteringCoefficientBp(edges: DataFrame, a: String = "a",
                               b: String = "b"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
     val e = edges.select(col(a).as("a"), col(b).as("b")).persist(MEMORY_ONLY)
     val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
     val deg = sym.groupBy(col("a").as("node")).agg(count(lit(1)).as("degree"))
@@ -126,132 +123,120 @@ object Graph {
         .otherwise(expr("(20000 * triangles) div (degree * (degree - 1))")))
   }
 
-  /** Fixed-iteration SYNCHRONOUS label propagation (Raghavan, Albert &
-    * Kumara 2007) over an undirected edge list of UNIQUE canonical pairs:
-    * every node starts labeled with its own id; each round it adopts the
-    * most frequent label among its neighbors, ties to the SMALLEST label —
-    * a deterministic total order, so the whole trajectory replays
-    * bit-identically in an unrolled SQL twin (same discipline as
-    * `pageRankBp`). Unlike `connectedComponents` (one label per connected
-    * component), LPA finds DENSER sub-communities inside a component.
-    * Fixed `iters` rather than convergence detection: synchronous LPA can
-    * oscillate on bipartite-ish structures, so a fixed budget IS the
-    * deterministic semantics, not an approximation of one.
+  /** Synchronous label propagation (Raghavan, Albert & Kumara 2007) over
+    * an undirected edge list of UNIQUE canonical pairs: every node starts
+    * labeled with its own id; each round it adopts the most frequent label
+    * among its neighbors, ties to the SMALLEST label — a deterministic
+    * total order, so the whole trajectory replays bit-identically in an
+    * unrolled SQL twin (same discipline as `pageRankBp`). Unlike
+    * `connectedComponents` (one label per connected component), LPA finds
+    * DENSER sub-communities inside a component. `Stop.Rounds` is the
+    * deterministic semantics (synchronous LPA can oscillate on
+    * bipartite-ish structures); `Stop.Converge` stops when the label state
+    * repeats — a fixpoint or the classic period-2 ping-pong.
     *
     * Scale shape: the symmetric edge list is pre-shuffled and cached on
-    * the per-iteration join key once (the `pageRankBp` trick — zero edge
-    * exchange per round); each round is one keyed join + one (node,
-    * label) count + one per-node argmax window, all node/edge-sized.
-    *
-    * Lifecycle at iters ≥ `checkpointEvery`: the label frame is
-    * `localCheckpoint`ed every `checkpointEvery` rounds (bounded plan
-    * depth — an unbroken 20-round lineage pays quadratic re-optimization
-    * and re-plans every round from the raw edges on failure), the FINAL
-    * result is materialized the same way, and the edge cache is dropped
-    * before returning — a long-lived session (the stored-index ingest
-    * loop) retains ZERO cached frames per call. Below the threshold
-    * (bench queries run 3–4 rounds) the plan stays fully lazy and
-    * contract-inspectable, and the caller's first action both computes
-    * and releases nothing extra.
+    * the per-round join key once (zero edge exchange per round); each
+    * round is one keyed join + one (node, label) count + one per-node
+    * argmax window, all node/edge-sized.
     */
-  def labelPropagation(edges: DataFrame, iters: Int,
-                       srcCol: String, dstCol: String,
-                       checkpointEvery: Int = 8): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
+  def labelPropagation(edges: DataFrame, stop: Stop,
+                       srcCol: String, dstCol: String): Iterated = {
+    require(stop.maxRounds >= 1, s"rounds must be >= 1, got ${stop.maxRounds}")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-    val sym = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("b")).sortWithinPartitions(col("b"))
-      .persist(MEMORY_ONLY)
-    sym.count()
-    var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    val w = Window.partitionBy(col("a"))
+    val sym = symmetric(edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
+    val w = Window.partitionBy(col("b"))
       .orderBy(col("c").desc, col("lbl").asc)
-    val deep = iters >= checkpointEvery
-    for (i <- 1 to iters) {
-      labels = sym.join(labels, col("b") === col("node"))
-        .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("c"))
+    val r = Iterate.run("labelPropagation",
+        sym.select(col("a").as("node")).distinct().withColumn("lbl", col("node")),
+        stop, Iterate.repeats(2, "node", "lbl"), sym) { (labels, _) =>
+      sym.join(labels, col("a") === col("node"))
+        .groupBy(col("b"), col("lbl")).agg(count(lit(1)).as("c"))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1)
-        .select(col("a").as("node"), col("lbl"))
-      if (deep && i % checkpointEvery == 0 && i < iters)
-        labels = labels.localCheckpoint()
+        .select(col("b").as("node"), col("lbl"))
     }
-    val out = labels.select(col("node"), col("lbl").as("community"))
-    if (deep) {
-      val materialized = out.localCheckpoint()
-      sym.unpersist()
-      materialized
-    } else out
+    r.copy(out = r.out.select(col("node"), col("lbl").as("community")))
   }
 
-  /** Fixed-iteration PageRank in basis points over `edges(src, dst)`:
-    * r₀(v) = `baseBp`; r_{k+1}(v) = 15%·baseBp + Σ_{(u,v)∈E}
-    * (85·r_k(u)) div (100·outdeg(u)). All-long arithmetic with truncating
-    * division (Spark `div` ≡ DuckDB `//` on non-negatives), so results are
-    * exactly reproducible. Output: `(node, rank_bp)` for every node with
-    * ≥1 out-edge; run on an `undirect` closure every such node also has
-    * in-mass, so no dangling-mass redistribution term is needed (a node
-    * with out-edges but no in-edges would keep only the 15% base — that is
-    * the documented semantics, not a bug).
-    *
-    * Lifecycle at iters ≥ `checkpointEvery`: same contract as
-    * `labelPropagation` — rank lineage truncated every `checkpointEvery`
-    * rounds, final ranks materialized, degree/edge caches unpersisted on
-    * exit; below the threshold the plan stays lazy (and the caches live
-    * until the session drops them), which is the bench's 3-iteration path.
+  /** Both directions of `e0(a, b, …)`, pre-shuffled and pre-sorted on `a` —
+    * the per-round join key — and cached, so the edges never move again:
+    * every round's keyed join reads the edge side with zero exchange and
+    * only the node-sized state moves. Filled by the first job that reads
+    * it (the loop's initial checkpoint).
     */
-  def pageRankBp(edges: DataFrame, iters: Int,
-                 baseBp: Long = 10000L,
-                 checkpointEvery: Int = 8): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
-    import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    // One materialization of the (possibly expensive) edge-build lineage:
-    // without this, the degree aggregate, the degree-annotated join AND the
-    // rank initialization each replay the upstream scans/joins/distincts.
+  private def symmetric(e0: DataFrame): DataFrame = {
+    val flipped = e0.columns.map {
+      case "a" => col("b").as("a")
+      case "b" => col("a").as("b")
+      case c => col(c)
+    }
+    e0.unionByName(e0.select(flipped: _*))
+      .repartition(col("a")).sortWithinPartitions(col("a"))
+      .persist(MEMORY_ONLY)
+  }
+
+  /** PageRank in basis points over `edges(src, dst)`: r₀(v) = `baseBp`;
+    * r_{k+1}(v) = 15%·baseBp + Σ_{(u,v)∈E} (85·r_k(u)) div (100·outdeg(u)).
+    * All-long arithmetic with truncating division (Spark `div` ≡ DuckDB
+    * `//` on non-negatives), so results are exactly reproducible. Output:
+    * `(node, rank_bp)` for every node with ≥1 out-edge; run on an
+    * `undirect` closure every such node also has in-mass, so no
+    * dangling-mass redistribution term is needed (a node with out-edges but
+    * no in-edges would keep only the 15% base — that is the documented
+    * semantics, not a bug).
+    *
+    * `Stop.Converge` stops when the rank state REPEATS — an exact integer
+    * fixpoint (period 1) or the period-2 oscillation truncating division
+    * produces on some graphs (amplitude ~1 bp: floor-div alternately
+    * over/under-shoots; a float engine would call both states "within
+    * epsilon"). A pre-converged graph costs exactly one confirming round,
+    * and the result ≡ `Stop.Rounds(rounds)` bit-for-bit.
+    *
+    * Scale shape: each round is one (edges ⋈ ranks) join keyed on src plus
+    * one groupBy keyed on dst, the standard Pregel decomposition with
+    * map-side partial aggregation on the contribution sum; the edge side is
+    * built once by `degreeEdges`.
+    */
+  def pageRankBp(edges: DataFrame, stop: Stop,
+                 baseBp: Long = 10000L): Iterated = {
+    val (deg, withDeg) = degreeEdges(edges)
+    Iterate.run("pageRankBp",
+        deg.select(col("src").as("node"), lit(baseBp).as("rank_bp")),
+        stop, Iterate.repeats(2, "node", "rank_bp"), deg, withDeg) { (ranks, _) =>
+      inflow(withDeg, ranks).select(col("node"),
+        (lit(baseBp * 15L / 100L) + col("_in")).as("rank_bp"))
+    }
+  }
+
+  /** Rank setup shared by `pageRankBp` and `personalizedPageRankBp`: out
+    * degrees (node-sized, cached) and the degree-annotated edges,
+    * pre-shuffled and pre-sorted on src — the per-round join key — and
+    * cached, so every round's sort-merge join reads the edge side with
+    * zero exchange and zero sort. One eager pass fills both from a
+    * temporary edge cache (the edge-build lineage may be expensive), which
+    * is then dropped so only one edge-sized cache is held.
+    */
+  private def degreeEdges(edges: DataFrame): (DataFrame, DataFrame) = {
     val e = edges.select(col("src"), col("dst")).persist(MEMORY_ONLY)
-    // Node-sized; cached so r0 below doesn't re-aggregate the edges.
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
       .persist(MEMORY_ONLY)
-    // Pre-shuffle + pre-sort the degree-annotated edges on the
-    // per-iteration join key ONCE: InMemoryTableScan reports the cached
-    // plan's partitioning and ordering, so every iteration's sort-merge
-    // join reads the edge side with zero exchange and zero sort — only the
-    // node-sized ranks frame moves per iteration. At billion-edge scale
-    // this is the difference between 1 and `iters` edge shuffles.
     val withDeg = e.join(deg, "src")
       .repartition(col("src")).sortWithinPartitions(col("src"))
       .persist(MEMORY_ONLY)
-    // Eager: one pass populates e → deg → withDeg, then the raw edge cache
-    // is dropped — withDeg carries everything the iterations need, and at
-    // scale holding TWO edge-sized caches would double the footprint.
     withDeg.count()
     e.unpersist()
-    var ranks = deg.select(col("src").as("node"), lit(baseBp).as("rank_bp"))
-    val deep = iters >= checkpointEvery
-    for (i <- 1 to iters) {
-      val contrib = withDeg.join(ranks, col("src") === col("node"))
-        .select(col("dst"),
-          expr("(85 * rank_bp) div (100 * outdeg)").as("_c"))
-      ranks = contrib.groupBy(col("dst")).agg(sum(col("_c")).as("_in"))
-        .select(col("dst").as("node"),
-          (lit(baseBp * 15L / 100L) + col("_in")).as("rank_bp"))
-      if (deep && i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
-    }
-    if (deep) {
-      val materialized = ranks.localCheckpoint()
-      deg.unpersist()
-      withDeg.unpersist()
-      materialized
-    } else ranks
+    (deg, withDeg)
   }
+
+  /** One round's walk mass `(node, _in)`: every ranked node sends
+    * (85·rank) div (100·outdeg) along each out-edge, summed per target.
+    */
+  private def inflow(withDeg: DataFrame, ranks: DataFrame): DataFrame =
+    withDeg.join(ranks, col("src") === col("node"))
+      .select(col("dst"), expr("(85 * rank_bp) div (100 * outdeg)").as("_c"))
+      .groupBy(col("dst")).agg(sum(col("_c")).as("_in"))
+      .select(col("dst").as("node"), col("_in"))
 
   /** Jaccard link prediction over CANONICAL undirected edges (`a` < `b`,
     * distinct): every NON-adjacent pair sharing ≥1 neighbor scored by
@@ -290,372 +275,140 @@ object Graph {
   }
 
   /** Multi-source BFS hop distances over CANONICAL undirected edges
-    * (`a` < `b`, distinct): every node within `maxHops` of a SEED — the
-    * nodes whose undirected degree is ≥ `minSeedDegree` — labeled with its
-    * exact hop distance to the NEAREST seed (0 for seeds themselves).
-    * "How far is every item from a hub" is the catalog-proximity feature
-    * recommender and coverage audits derive from a co-occurrence graph; a
-    * fixed `maxHops` keeps the trajectory finite and lets a recursive-CTE
-    * oracle replay it exactly (min-dist is reduction-order-independent).
+    * (`a` < `b`, distinct): every node within `stop.maxRounds` hops of a
+    * SEED — the nodes whose undirected degree is ≥ `minSeedDegree` —
+    * labeled with its exact hop distance to the NEAREST seed (0 for seeds
+    * themselves). "How far is every item from a hub" is the
+    * catalog-proximity feature recommender and coverage audits derive from
+    * a co-occurrence graph; a fixed hop count keeps the trajectory finite
+    * and lets a recursive-CTE oracle replay it exactly (min-dist is
+    * reduction-order-independent). `Stop.Converge` stops once a round
+    * reaches no new node.
     *
     * Scale shape: the symmetric adjacency is pre-shuffled and cached on
-    * the frontier join key ONCE (the `pageRankBp` trick — zero edge
-    * exchange per round); each round is one keyed join + one distinct +
-    * one anti-join against the visited set, all frontier/node-sized.
-    * Every round's NEW frontier is `localCheckpoint`ed — it is referenced
-    * by both the next round's expansion and the final union, and BFS
-    * lineage would otherwise compound per round (the `kCore` discipline);
-    * the visited union stays lazy over ≤ maxHops+1 materialized leaves,
-    * and the edge cache is dropped before returning, so a long-lived
-    * session retains zero cached frames per call.
+    * the frontier join key once (zero edge exchange per round); the state
+    * is the visited set, and each round expands only its last frontier
+    * (the rows at distance round−1): one keyed join + one distinct + one
+    * anti-join against the visited set, all frontier/node-sized.
     */
-  def bfsHops(edges: DataFrame, minSeedDegree: Int, maxHops: Int,
-              a: String = "a", b: String = "b"): DataFrame = {
+  def bfsHops(edges: DataFrame, minSeedDegree: Int, stop: Stop,
+              a: String = "a", b: String = "b"): Iterated = {
     require(minSeedDegree >= 1,
       s"minSeedDegree must be >= 1, got $minSeedDegree")
-    require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val e0 = edges.select(col(a).cast("long").as("a"),
-      col(b).cast("long").as("b"))
-    val sym = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("a")).sortWithinPartitions(col("a"))
-      .persist(MEMORY_ONLY)
-    sym.count()
-    var frontier = sym.groupBy(col("a").as("node"))
-      .agg(count(lit(1)).as("d"))
-      .filter(col("d") >= minSeedDegree)
-      .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    var visited = frontier
-    for (h <- 1 to maxHops) {
-      val next = sym
-        .join(frontier.select(col("node")), col("a") === col("node"))
+    val sym = symmetric(edges.select(col(a).cast("long").as("a"),
+      col(b).cast("long").as("b")))
+    Iterate.run("bfsHops", hubs(sym, minSeedDegree, "dist"), stop,
+        Iterate.countStable, sym) { (visited, h) =>
+      visited.unionByName(sym
+        .join(visited.filter(col("dist") === h - 1).select(col("node")),
+          col("a") === col("node"))
         .select(col("b").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .select(col("node"), lit(h.toLong).as("dist"))
-        .localCheckpoint()
-      visited = visited.unionByName(next)
-      frontier = next
+        .select(col("node"), lit(h.toLong).as("dist")))
     }
-    sym.unpersist()
-    visited
   }
 
-  /** Fixed-round Bellman-Ford relaxation over CANONICAL WEIGHTED undirected
-    * edges (`a` < `b`, distinct, integer `weightCol` ≥ 0): cheapest total
-    * cost from every node to its nearest degree-≥`minSeedDegree` hub,
-    * reachable within `rounds` relaxations. The weighted sibling of
-    * `bfsHops` — hop count asks "how far", this asks "how expensive" under
-    * an edge cost like `10000 div support` (strong co-purchase links are
-    * cheap to traverse). All-long arithmetic and min() reductions, so the
-    * per-round trajectory is reduction-order-FREE and an unrolled-CTE
-    * oracle replays it exactly (the pageRankBp discipline).
+  /** Every node of undirected degree ≥ `minSeedDegree`, with 0 in `value`. */
+  private def hubs(sym: DataFrame, minSeedDegree: Int,
+                   value: String): DataFrame =
+    sym.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
+      .filter(col("d") >= minSeedDegree)
+      .select(col("node"), lit(0L).as(value))
+
+  /** Bellman-Ford relaxation over CANONICAL WEIGHTED undirected edges
+    * (`a` < `b`, distinct, integer `weightCol` ≥ 0): cheapest total cost
+    * from every node to its nearest degree-≥`minSeedDegree` hub, reachable
+    * within `stop.maxRounds` relaxations. The weighted sibling of `bfsHops`
+    * — hop count asks "how far", this asks "how expensive" under an edge
+    * cost like `10000 div support` (strong co-purchase links are cheap to
+    * traverse). All-long arithmetic and min() reductions, so the per-round
+    * trajectory is reduction-order-FREE and an unrolled-CTE oracle replays
+    * it exactly. `Stop.Converge` stops when no cost changes.
     *
     * Scale shape: the weighted symmetric adjacency is pre-shuffled and
     * cached on the relaxation join key once; each round is one keyed join
     * (reached ⋈ edges) + one min-aggregate over (previous ∪ candidates) —
-    * node-sized exchanges only, edges never move after the build. Each
-    * round's frame is referenced twice (carry + expand) so it
-    * `localCheckpoint`s, and the edge cache drops on exit — zero retained
-    * frames per call.
+    * node-sized exchanges only, edges never move after the build.
     */
   def minCostHops(edges: DataFrame, weightCol: String, minSeedDegree: Int,
-                  rounds: Int, a: String = "a", b: String = "b"): DataFrame = {
+                  stop: Stop, a: String = "a", b: String = "b"): Iterated = {
     require(minSeedDegree >= 1,
       s"minSeedDegree must be >= 1, got $minSeedDegree")
-    require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val e0 = edges.select(col(a).cast("long").as("a"),
-      col(b).cast("long").as("b"), col(weightCol).cast("long").as("w"))
-    val sym = e0.unionByName(
-        e0.select(col("b").as("a"), col("a").as("b"), col("w")))
-      .repartition(col("a")).sortWithinPartitions(col("a"))
-      .persist(MEMORY_ONLY)
-    sym.count()
-    var reached = sym.groupBy(col("a").as("node"))
-      .agg(count(lit(1)).as("d"))
-      .filter(col("d") >= minSeedDegree)
-      .select(col("node"), lit(0L).as("cost"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val relaxed = sym.join(reached, col("a") === col("node"))
-        .select(col("b").as("node"), (col("cost") + col("w")).as("cost"))
-      reached = reached.unionByName(relaxed)
+    val sym = symmetric(edges.select(col(a).cast("long").as("a"),
+      col(b).cast("long").as("b"), col(weightCol).cast("long").as("w")))
+    Iterate.run("minCostHops", hubs(sym, minSeedDegree, "cost"), stop,
+        Iterate.repeats(1, "node", "cost"), sym) { (reached, _) =>
+      reached.unionByName(sym.join(reached, col("a") === col("node"))
+          .select(col("b").as("node"), (col("cost") + col("w")).as("cost")))
         .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint()
     }
-    sym.unpersist()
-    reached
   }
 
-  /** Fixed-round k-core peeling over CANONICAL undirected edges
-    * (`a` < `b`, distinct): each round drops every node whose degree in
-    * the CURRENT residual graph is < `k`, plus all its edges. Output:
-    * `(node, degree)` for nodes still present after `rounds` peels, with
-    * their residual degree — the standard density filter (Seidman 1983);
-    * on a similarity graph the 2-core is the cycle-bound clusters with
-    * pendant chains pruned (tight-cluster extraction, the SemDeDup-style
-    * cohesion signal).
+  /** k-core peeling over CANONICAL undirected edges (`a` < `b`, distinct):
+    * each round drops every node whose degree in the CURRENT residual graph
+    * is < `k`, plus all its edges. Output: `(node, degree)` for nodes still
+    * present, with their residual degree — the standard density filter
+    * (Seidman 1983); on a similarity graph the 2-core is the cycle-bound
+    * clusters with pendant chains pruned (tight-cluster extraction, the
+    * SemDeDup-style cohesion signal).
     *
-    * Fixed `rounds`, not run-to-fixpoint, so an oracle can replay the
-    * exact trajectory as unrolled CTEs (the `pageRankBp` /
-    * `labelPropagation` discipline); callers wanting the true k-core pick
-    * `rounds` ≥ the peel depth (spec asserts rounds+1 ≡ rounds at
-    * convergence).
+    * `Stop.Rounds` lets an oracle replay the exact trajectory as unrolled
+    * CTEs; it under-peels when the count is below the peel depth.
+    * `Stop.Converge` peels until a round removes no edge: the true k-core.
     *
     * Scale shape: each round is one node-keyed degree count + two
-    * edge-keyed semi-joins — edge-sized keyed shuffles, nothing
-    * collected. The residual edge set SHRINKS every round but each round
-    * references the previous one several times (degree build + both
-    * semi-joins), so every round materializes via `localCheckpoint` —
-    * bounded plan depth by construction (a lazy chain would grow the
-    * logical tree ~3× per round), and the first checkpoint doubles as the
-    * single materialization of a possibly-expensive edge-build lineage
-    * (the kNN construction, for the semantic-core query). Storage for a
-    * round's blocks is released by the ContextCleaner once the next
-    * round's reassignment drops the only reference, so peak checkpoint
-    * footprint is O(current + previous round), not O(rounds).
+    * edge-keyed semi-joins — edge-sized keyed shuffles, nothing collected.
+    * The initial checkpoint doubles as the single materialization of a
+    * possibly-expensive edge-build lineage (the kNN construction, for the
+    * semantic-core query).
     */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-            a: String = "a", b: String = "b"): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, stop: Stop,
+            a: String = "a", b: String = "b"): Iterated = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = edges.select(col(a).cast("long").as("a"),
-      col(b).cast("long").as("b")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val keep = e.select(col("a").as("n"))
-        .unionByName(e.select(col("b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("n"))
-      e = e.join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint()
+    require(stop.maxRounds >= 1, s"rounds must be >= 1, got ${stop.maxRounds}")
+    val r = Iterate.run("kCore", edges.select(col(a).cast("long").as("a"),
+        col(b).cast("long").as("b")), stop, Iterate.countStable) { (e, _) =>
+      val keep = endpointDegrees(e).filter(col("degree") >= k)
+      e.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
     }
+    r.copy(out = endpointDegrees(r.out))
+  }
+
+  /** `(node, degree)` over the endpoints of an `(a, b)` edge list. */
+  private def endpointDegrees(e: DataFrame): DataFrame =
     e.select(col("a").as("node")).unionByName(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-  }
-
-  // ---------------------------------------------------------------------
-  // Convergence-terminated variants. The fixed-round forms above are the
-  // oracle-replayable surface (an unrolled CTE can't know the round count
-  // ahead of time); these run the SAME per-round recurrence but stop at
-  // the fixpoint — the form a user actually runs when they don't know the
-  // graph's diameter. Exact-integer rank/label arithmetic means the
-  // fixpoint is a true equality (delta == 0), not an epsilon test.
-  //
-  // Cost note: detecting delta requires ACTING on each round's frame (one
-  // node-sized count job per round). Since the round must materialize
-  // anyway, each round is localCheckpointed — the delta count and the
-  // next round's input share one computation, plan depth stays O(1), and
-  // on exit no cached frames remain (the fixed-round lifecycle contract).
-  // -------------------------------------------------------------------
-
-  /** Node-sized state signature: order-independent sum of per-row
-    * xxhash64, accumulated in Decimal(38,0) (a Long sum of ±2⁶³ hashes
-    * overflows under ANSI) — ONE tiny aggregate job per round, no join.
-    * Two equal states always collide; two different states collide with
-    * ~2⁻⁶⁴ probability (the standard fingerprint trade; the stop decision
-    * is probabilistic, the RESULT is still the exact recurrence state).
-    */
-  private def stateSig(df: DataFrame, cols: Seq[String]): String =
-    df.agg(coalesce(
-        sum(xxhash64(cols.map(col): _*)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-        lit(0).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-      .cast("string"))
-      .collect()(0).getString(0)
-
-  /** `pageRankBp` run until the rank state REPEATS — an exact integer
-    * fixpoint (period 1) or the period-2 oscillation truncating division
-    * produces on some graphs (amplitude ~1 bp: floor-div alternately
-    * over/under-shoots; a float engine would call both states "within
-    * epsilon") — or `maxIters`. Returns the ranks plus rounds actually
-    * run; a pre-converged graph costs exactly one confirming round.
-    * Result ≡ `pageRankBp(edges, roundsRun)` bit-for-bit — the recurrence
-    * is the same; only the stop rule differs — which is what the spec
-    * pins.
-    */
-  def pageRankBpConvergedWithRounds(edges: DataFrame, maxIters: Int,
-                                    baseBp: Long = 10000L): (DataFrame, Int) = {
-    require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val e = edges.select(col("src"), col("dst")).persist(MEMORY_ONLY)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .persist(MEMORY_ONLY)
-    val withDeg = e.join(deg, "src")
-      .repartition(col("src")).sortWithinPartitions(col("src"))
-      .persist(MEMORY_ONLY)
-    withDeg.count()
-    e.unpersist()
-    var ranks = deg.select(col("src").as("node"), lit(baseBp).as("rank_bp"))
-      .localCheckpoint()
-    val sigCols = Seq("node", "rank_bp")
-    var prevSig = stateSig(ranks, sigCols)
-    var prevPrevSig = "_none_" // sentinel: never equal on round 1
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxIters) {
-      val contrib = withDeg.join(ranks, col("src") === col("node"))
-        .select(col("dst"),
-          expr("(85 * rank_bp) div (100 * outdeg)").as("_c"))
-      val next = contrib.groupBy(col("dst")).agg(sum(col("_c")).as("_in"))
-        .select(col("dst").as("node"),
-          (lit(baseBp * 15L / 100L) + col("_in")).as("rank_bp"))
-        .localCheckpoint()
-      rounds += 1
-      val sig = stateSig(next, sigCols)
-      done = sig == prevSig || sig == prevPrevSig
-      prevPrevSig = prevSig; prevSig = sig
-      ranks = next
-    }
-    deg.unpersist()
-    withDeg.unpersist()
-    (ranks, rounds)
-  }
-
-  def pageRankBpConverged(edges: DataFrame, maxIters: Int,
-                          baseBp: Long = 10000L): DataFrame =
-    pageRankBpConvergedWithRounds(edges, maxIters, baseBp)._1
 
   /** PERSONALIZED PageRank (random walk with restart): teleportation goes
     * only to `seeds` instead of every node — rank becomes proximity TO
     * THE SEED SET, the standard "related items for THIS user/topic"
-    * readout (Haveliwala, WWW '02). Same exact basis-point recurrence as
-    * `pageRankBp` (85/100 damping, truncating `div`), with the per-round
-    * teleport mass `15%·baseBp` folded in through a FULL OUTER merge, so
-    * non-seed nodes hold pure walk mass and unvisited nodes hold exactly
-    * none.
+    * readout (Haveliwala, WWW '02). Same exact basis-point recurrence and
+    * stop rules as `pageRankBp` (85/100 damping, truncating `div`), with
+    * the per-round teleport mass `15%·baseBp` folded in through a FULL
+    * OUTER merge, so non-seed nodes hold pure walk mass and unvisited nodes
+    * hold exactly none.
     *
-    * Scale shape: identical to `pageRankBp` — the degree-annotated edge
-    * cache is pre-partitioned on the join key once, so each round moves
-    * only the rank state; but here that state starts SEED-SIZED and grows
-    * with the walk frontier, never past the reachable set — on a 100 TB
-    * graph a localized seed keeps every round's shuffle a small fraction
-    * of node-sized. `seeds` must expose a `node` column.
+    * Scale shape: identical to `pageRankBp`, but the rank state starts
+    * SEED-SIZED and grows with the walk frontier, never past the reachable
+    * set — on a 100 TB graph a localized seed keeps every round's shuffle a
+    * small fraction of node-sized. `seeds` must expose a `node` column.
     */
-  def personalizedPageRankBp(edges: DataFrame, seeds: DataFrame, iters: Int,
-                             baseBp: Long = 10000L,
-                             checkpointEvery: Int = 8): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
-    import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val e = edges.select(col("src"), col("dst")).persist(MEMORY_ONLY)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val withDeg = e.join(deg, "src")
-      .repartition(col("src")).sortWithinPartitions(col("src"))
-      .persist(MEMORY_ONLY)
-    withDeg.count()
-    e.unpersist()
+  def personalizedPageRankBp(edges: DataFrame, seeds: DataFrame, stop: Stop,
+                             baseBp: Long = 10000L): Iterated = {
+    val (deg, withDeg) = degreeEdges(edges)
     // node-sized at most, usually tiny; referenced every round (teleport)
     val seed = seeds.select(col("node")).distinct().persist(MEMORY_ONLY)
     val teleport = seed.select(col("node"), lit(baseBp * 15L / 100L).as("_t"))
-    var ranks = seed.select(col("node"), lit(baseBp).as("rank_bp"))
-    val deep = iters >= checkpointEvery
-    for (i <- 1 to iters) {
-      val in = withDeg.join(ranks, col("src") === col("node"))
-        .select(col("dst"),
-          expr("(85 * rank_bp) div (100 * outdeg)").as("_c"))
-        .groupBy(col("dst")).agg(sum(col("_c")).as("_in"))
-        .select(col("dst").as("node"), col("_in"))
-      ranks = in.join(teleport, Seq("node"), "full_outer")
+    Iterate.run("personalizedPageRankBp",
+        seed.select(col("node"), lit(baseBp).as("rank_bp")), stop,
+        Iterate.repeats(2, "node", "rank_bp"), deg, withDeg, seed) { (ranks, _) =>
+      inflow(withDeg, ranks).join(teleport, Seq("node"), "full_outer")
         .select(col("node"),
           (coalesce(col("_in"), lit(0L)) + coalesce(col("_t"), lit(0L)))
             .as("rank_bp"))
-      if (deep && i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
     }
-    // Unconditional: the final ranks frame is at most reachable-set-sized,
-    // so materializing it is cheap at ANY depth, and it frees withDeg/seed
-    // on every path — the shallow path (iters < checkpointEvery, the
-    // catalog's 3-round calls) previously leaked both MEMORY_ONLY caches
-    // into the session (the zero-retained-frames lifecycle contract the
-    // other iterative ops pin).
-    val materialized = ranks.localCheckpoint()
-    withDeg.unpersist()
-    seed.unpersist()
-    materialized
   }
-
-  /** `labelPropagation` run until the label state repeats — fixpoint or
-    * the classic period-2 ping-pong (synchronous LPA on bipartite-ish
-    * regions) — or `maxIters`. Same per-round argmax recurrence; the
-    * edge cache drops on exit.
-    */
-  def labelPropagationConvergedWithRounds(edges: DataFrame, maxIters: Int,
-                                          srcCol: String, dstCol: String): (DataFrame, Int) = {
-    require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-    val sym = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("b")).sortWithinPartitions(col("b"))
-      .persist(MEMORY_ONLY)
-    sym.count()
-    var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint()
-    val w = Window.partitionBy(col("a"))
-      .orderBy(col("c").desc, col("lbl").asc)
-    val sigCols = Seq("node", "lbl")
-    var prevSig = stateSig(labels, sigCols)
-    var prevPrevSig = "_none_"
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxIters) {
-      val next = sym.join(labels, col("b") === col("node"))
-        .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("c"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("a").as("node"), col("lbl"))
-        .localCheckpoint()
-      rounds += 1
-      val sig = stateSig(next, sigCols)
-      done = sig == prevSig || sig == prevPrevSig
-      prevPrevSig = prevSig; prevSig = sig
-      labels = next
-    }
-    sym.unpersist()
-    (labels.select(col("node"), col("lbl").as("community")), rounds)
-  }
-
-  def labelPropagationConverged(edges: DataFrame, maxIters: Int,
-                                srcCol: String, dstCol: String): DataFrame =
-    labelPropagationConvergedWithRounds(edges, maxIters, srcCol, dstCol)._1
-
-  /** `kCore` peeled to its fixpoint: rounds continue until a peel removes
-    * no edge (or `maxRounds`). The fixpoint here is the true k-core — the
-    * fixed-round form under-peels when `rounds` is less than the peel
-    * depth; this is the form production callers want.
-    */
-  def kCoreConvergedWithRounds(edges: DataFrame, k: Int, maxRounds: Int,
-                               a: String = "a", b: String = "b"): (DataFrame, Int) = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var e = edges.select(col(a).cast("long").as("a"),
-      col(b).cast("long").as("b")).localCheckpoint()
-    var nEdges = e.count()
-    var rounds = 0
-    var changed = true
-    while (changed && rounds < maxRounds) {
-      val keep = e.select(col("a").as("n"))
-        .unionByName(e.select(col("b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("n"))
-      e = e.join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      rounds += 1
-      val nNext = e.count()
-      changed = nNext != nEdges
-      nEdges = nNext
-    }
-    (e.select(col("a").as("node")).unionByName(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree")), rounds)
-  }
-
-  def kCoreConverged(edges: DataFrame, k: Int, maxRounds: Int,
-                     a: String = "a", b: String = "b"): DataFrame =
-    kCoreConvergedWithRounds(edges, k, maxRounds, a, b)._1
 
   /** Connected components by alternating large-star / small-star rounds
     * (Kiveris et al. 2014, "Connected Components in MapReduce and
@@ -675,31 +428,16 @@ object Graph {
     *    per node u (now larger than all its neighbors), m = min(Γ(u));
     *    emit (v, m) for v ∈ Γ(u) ∪ {u} \ {m}.
     * Both emit strictly larger→smaller pairs, so no self-loops survive;
-    * the fixpoint is a min-rooted star forest, detected by the same
-    * order-independent state signature as the other converged ops (a
-    * min-rooted star forest is invariant under BOTH transforms, so a
-    * pre-converged input costs exactly one confirming round). Rounds are
-    * `localCheckpoint`ed — O(1) plan depth, zero retained caches on exit.
+    * the fixpoint is a min-rooted star forest, detected by a repeated
+    * state (a min-rooted star forest is invariant under BOTH transforms,
+    * so a pre-converged input costs exactly one confirming round).
+    * Callers that warn on non-convergence must branch on `converged`, not
+    * on `rounds == maxRounds`: a fixpoint confirmed on the last allowed
+    * round is a success.
     */
-  def twoStarComponentsWithRounds(edges: DataFrame, maxRounds: Int = 20,
-                                  a: String = "a",
-                                  b: String = "b"): (DataFrame, Int) = {
-    val (labels, rounds, _) =
-      twoStarComponentsWithStatus(edges, maxRounds, a, b)
-    (labels, rounds)
-  }
-
-  /** `twoStarComponentsWithRounds` plus the CONVERGED flag: true iff the
-    * loop exited because the star-forest fixpoint was confirmed (including
-    * confirmation exactly on the final allowed round), false only when the
-    * round cap cut the iteration short. Callers that warn on
-    * non-convergence must branch on THIS, not on `rounds == maxRounds` —
-    * a fixpoint confirmed on the last round is a success, not a warning.
-    */
-  def twoStarComponentsWithStatus(edges: DataFrame, maxRounds: Int = 20,
-                                  a: String = "a",
-                                  b: String = "b"): (DataFrame, Int, Boolean) = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
+  def twoStarComponents(edges: DataFrame, stop: Stop = Stop.Converge(20),
+                        a: String = "a", b: String = "b"): Iterated = {
+    require(stop.maxRounds >= 1, s"maxRounds must be >= 1, got ${stop.maxRounds}")
     val raw = edges.select(col(a).cast("long").as("u"),
       col(b).cast("long").as("v"))
     // nodes from the UNFILTERED list: a self-loop-only node still gets a
@@ -707,7 +445,6 @@ object Graph {
     val nodes = raw.select(col("u").as("node"))
       .unionByName(raw.select(col("v").as("node")))
       .distinct().localCheckpoint()
-    val e0 = raw.filter(col("u") =!= col("v"))
 
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.select(col("u"), col("v"))
@@ -727,28 +464,13 @@ object Graph {
         .distinct()
     }
 
-    var e = e0.distinct().localCheckpoint()
-    val sigCols = Seq("u", "v")
-    var prevSig = stateSig(e, sigCols)
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
-      rounds += 1
-      val sig = stateSig(next, sigCols)
-      done = sig == prevSig
-      prevSig = sig
-      e = next
-    }
-    val labels = nodes.join(
-        e.select(col("u").as("node"), col("v").as("_c")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("_c"), col("node")).as("component"))
-    (labels, rounds, done)
+    val r = Iterate.run("twoStarComponents",
+        raw.filter(col("u") =!= col("v")).distinct(), stop,
+        Iterate.repeats(1, "u", "v")) { (e, _) => smallStar(largeStar(e)) }
+    r.copy(out = nodes.join(
+        r.out.select(col("u").as("node"), col("v").as("_c")), Seq("node"), "left")
+      .select(col("node"), coalesce(col("_c"), col("node")).as("component")))
   }
-
-  def twoStarComponents(edges: DataFrame, maxRounds: Int = 20,
-                        a: String = "a", b: String = "b"): DataFrame =
-    twoStarComponentsWithRounds(edges, maxRounds, a, b)._1
 
   /** Per-edge triangle support over a CANONICAL (a < b) edge set: one
     * wedge equi-join + one closing equi-join (never a nested loop), each
@@ -776,63 +498,31 @@ object Graph {
     * is mutual). Iterative peeling: per round, per-edge triangle support
     * over the CURRENT edge set (two keyed equi-joins + one keyed count —
     * edge-sized shuffles, wedge fan-out bounded by the canonical
-    * ordering), drop edges under k−2, stop at the fixpoint (edge COUNT
-    * equality suffices — peeling only removes) or `maxRounds`. Rounds are
-    * `localCheckpoint`ed; zero retained caches. Peeling converges in
-    * O(edges) rounds worst-case but in practice a handful; extra rounds at
-    * the fixpoint are identities, so a fixed-round oracle unroll ≥ the
-    * realized count replays exactly.
+    * ordering), drop edges under k−2. `Stop.Converge` stops at the
+    * fixpoint (edge COUNT equality suffices — peeling only removes) or
+    * when the set empties. Peeling converges in O(edges) rounds worst-case
+    * but in practice a handful; extra rounds at the fixpoint are
+    * identities, so a fixed-round oracle unroll ≥ the realized count
+    * replays exactly.
     *
     * Returns the truss edges with their support inside the final set
     * (edges whose support fell to zero in a non-converged final set drop
     * on both engines — inner join).
     */
-  def kTrussEdges(edges: DataFrame, k: Int, maxRounds: Int = 6,
-                  a: String = "a", b: String = "b"): DataFrame = {
-    val (out, rounds, converged) =
-      kTrussEdgesWithStatus(edges, k, maxRounds, a, b)
-    // Warn ONLY on a genuinely unconfirmed fixpoint (the `components`
-    // discipline, Dedup.scala): a fixpoint confirmed exactly on the final
-    // allowed round is a success — rounds alone cannot distinguish them.
-    if (!converged)
-      log.warn(
-        s"kTrussEdges: peel hit the round cap (maxRounds=$maxRounds, ran " +
-          s"$rounds) without confirming the fixpoint; the returned edge " +
-          "set may still contain under-supported edges — raise maxRounds")
-    out
-  }
-
-  /** `kTrussEdges` plus the convergence evidence its iterative siblings
-    * (pageRank/LPA/two-star) report: `(truss, rounds, converged)`.
-    * `converged` is true iff a peel round removed nothing (count
-    * equality — peeling only removes) or the edge set emptied; a
-    * truncated peel is thereby OBSERVABLE, not distinguishable only by
-    * reading support values.
-    */
-  def kTrussEdgesWithStatus(edges: DataFrame, k: Int, maxRounds: Int = 6,
-                            a: String = "a", b: String = "b")
-      : (DataFrame, Int, Boolean) = {
+  def kTrussEdges(edges: DataFrame, k: Int, stop: Stop = Stop.Converge(6),
+                  a: String = "a", b: String = "b"): Iterated = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
+    require(stop.maxRounds >= 1, s"maxRounds must be >= 1, got ${stop.maxRounds}")
     val minSup = (k - 2).toLong
-    var e = edges
-      .select(least(col(a), col(b)).as("a"), greatest(col(a), col(b)).as("b"))
-      .filter(col("a") < col("b")).distinct()
-      .localCheckpoint()
-    var n = e.count()
-    var rounds = 0
-    var done = n == 0
-    while (!done && rounds < maxRounds) {
-      val next = e.join(triangleSupport(e), Seq("a", "b"))
+    val r = Iterate.run("kTrussEdges", edges
+        .select(least(col(a), col(b)).as("a"), greatest(col(a), col(b)).as("b"))
+        .filter(col("a") < col("b")).distinct(),
+        stop, Iterate.countStableOrEmpty) { (e, _) =>
+      e.join(triangleSupport(e), Seq("a", "b"))
         .filter(col("support") >= minSup)
         .select(col("a"), col("b"))
-        .localCheckpoint()
-      val m = next.count()
-      done = m == n || m == 0
-      n = m; e = next; rounds += 1
     }
-    val out = e.join(triangleSupport(e), Seq("a", "b"))
-      .select(col("a"), col("b"), col("support"))
-    (out, rounds, done)
+    r.copy(out = r.out.join(triangleSupport(r.out), Seq("a", "b"))
+      .select(col("a"), col("b"), col("support")))
   }
 }
