@@ -1,82 +1,157 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
+  // A query whose own repeats spread wider than this gets ONE extra
+  // repeat (median-of-4): the r9 driver capture carried a 90 s spike in
+  // one repeat of a 5 s query — with 3 samples a single burst drags the
+  // median; a 4th sample restores it to the idle value while the raw
+  // array still shows the spike. The same bound feeds the contended
+  // flag below: the start/middle/end canary protocol missed that burst
+  // entirely because it fell between checkpoints.
+  val SpreadBound = 4.0
+  // Canary-normalized headline: the driver box has self-flagged
+  // contended for five straight rounds while judge-side idle re-runs of
+  // the same code land 20-25% faster — the r9 rule (scale the total by
+  // reference-canary / measured-canary) kept being redone by hand from
+  // the raw fields. Emit it directly: canary_ref is PINNED at the r24
+  // idle host level (0.249 s), the fixed point every cross-round
+  // comparison since has used; value_normalized = value × ref ÷
+  // measured estimates what this exact pass would have cost on that
+  // idle host. A re-pin is a reviewed change to this constant.
+  val CanaryRef = 0.249
+  // Compact last line budget: the driver tails only ~2000 chars of stdout.
+  val CompactMaxChars = 1800
+
+  def spreadOf(ts: Seq[Double]): Double =
+    if (ts.size > 1 && ts.min > 0) ts.max / ts.min else 0.0
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.isEmpty) 0.0
+    else if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
+
+  /** One query in one timed pass: the reported median, whether every repeat
+    * succeeded, each repeat's seconds, and the max task spill over repeats. */
+  final case class QueryResult(
+      name: String, median: Double, ok: Boolean, timings: Seq[Double], spill: Long)
+
+  /** One full timed pass over the catalog, with its own canary samples
+    * and contention verdict. */
+  final case class Attempt(
+      results: Seq[QueryResult],
+      canarySamples: Seq[Double], loadBefore: String, loadAfter: String) {
+    val canarySpread: Double =
+      if (canarySamples.nonEmpty && canarySamples.min > 0)
+        canarySamples.max / canarySamples.min
+      else 0.0
+    val maxSpread: Double = {
+      val ss = results.filter(_.timings.size > 1).map(r => spreadOf(r.timings))
+      if (ss.nonEmpty) ss.max else 0.0
+    }
+    // Contended when EITHER signal trips: the canary spread (sustained
+    // load across checkpoints) OR any query's own repeat spread (a burst
+    // the canary sampling missed — r9 shipped contended:false around a
+    // 19.6× query spread; per-query repeats ARE a denser contention
+    // sensor than any canary cadence can be).
+    val contended: Boolean = canarySpread > 3.0 || maxSpread > SpreadBound
+    // The canary's absolute LEVEL (median) is the cross-round normalizer
+    // the spread can't provide: a uniformly slower host (VM migration,
+    // steal) inflates every query the same way without tripping the
+    // spread flag — r9 measured the identical fixed-cost canary 1.4×
+    // slower than r8's capture on an "idle" box. Divide totals by the
+    // canary median before comparing rounds.
+    val canaryMedian: Double = median(canarySamples)
+    val total: Double = results.map(_.median).sum
+    // Idle-estimate total: sum of per-query MIN of repeats. Under
+    // external contention the min is the least-disturbed sample, so even
+    // a contended capture carries a usable lower bound alongside the
+    // median (VERDICT r7 item 8).
+    val totalMin: Double = results.map(_.timings.min).sum
+  }
+
+  /** Headline pass: the first clean attempt. When EVERY attempt is
+    * contended, the median-total attempt (lower-middle for even counts —
+    * deterministic), NOT the minimum: a min statistic over noisy passes
+    * biases the headline low relative to single-pass rounds. The per-query
+    * min across attempts still surfaces as value_min. */
+  def chosenAttempt(attempts: Seq[Attempt]): Int =
+    attempts.indexWhere(!_.contended) match {
+      case -1 =>
+        val byTotal = attempts.zipWithIndex.sortBy(_._1.total)
+        byTotal((byTotal.size - 1) / 2)._2
+      case i => i
+    }
+
+  /** The two result lines, a pure function of the attempts: the full
+    * per-query line (also the BENCH_LOCAL.json record) and the compact
+    * last line of at most CompactMaxChars. */
+  def report(attempts: Seq[Attempt], warmed: Boolean, prewarmed: Boolean,
+             sfDir: String): (String, String) = {
+    val chosenIdx = chosenAttempt(attempts)
+    val at = attempts(chosenIdx)
+    val results = at.results
+    val total = at.total
+    val valueNormalized =
+      if (at.canaryMedian > 0) total * CanaryRef / at.canaryMedian else total
+    // a failed query must be visible, not folded in as a fast success
+    val failed = results.filterNot(_.ok).map(_.name)
+    val full = Json.obj(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "value_normalized" -> r3(valueNormalized), "canary_ref" -> CanaryRef,
+      "queries" -> Json.obj(results.map(r => r.name -> r.median): _*),
+      "timings" -> Json.obj(results.map(r => r.name -> r.timings): _*),
+      "prewarmed" -> prewarmed, "warmed" -> warmed, "failed" -> failed,
+      "loadavg_before" -> at.loadBefore, "loadavg_after" -> at.loadAfter,
+      "canary" -> at.canarySamples.map(r3),
+      "canary_spread" -> r3(at.canarySpread),
+      "canary_median" -> r3(at.canaryMedian), "contended" -> at.contended,
+      "max_query_spread" -> r3(at.maxSpread), "value_min" -> r3(at.totalMin),
+      "attempts" -> attempts.map(a => Json.obj(
+        "contended" -> a.contended, "value" -> r3(a.total),
+        "value_min" -> r3(a.totalMin), "canary_median" -> r3(a.canaryMedian),
+        "canary_spread" -> r3(a.canarySpread),
+        "max_query_spread" -> r3(a.maxSpread))),
+      "attempt_chosen" -> (chosenIdx + 1),
+      // Spill ledger: per-query max-across-repeats task spill (mem+disk),
+      // nonzero entries only; total = sum of those maxima. Zero everywhere
+      // under the default 8g heap at sf0.1; the SPARK_DRIVER_MEM=4g sf1
+      // protocol reads these to prove heavy queries degrade by SPILLING.
+      "spilled_bytes" -> results.map(_.spill).sum,
+      "spilled" -> Json.obj(
+        results.filter(_.spill > 0).map(r => r.name -> r.spill): _*),
+      "sf" -> sfDir)
+    // Compact LAST line, sized to fit the driver's ~2000-char tail whole:
+    // total + failures + the slowest queries (the ones worth comparing
+    // round over round). The slowest list SHRINKS until the line fits —
+    // a grown catalog must degrade to fewer reported queries, never to an
+    // unparseable overflow (which is how BENCH_r1..r4 were lost).
+    def compactLine(topN: Int): String = Json.write(Json.obj(
+      "metric" -> "total", "value" -> r3(total), "unit" -> "sec",
+      "value_normalized" -> r3(valueNormalized), "canary_ref" -> CanaryRef,
+      "value_min" -> r3(at.totalMin), "contended" -> at.contended,
+      "canary_spread" -> r3(at.canarySpread),
+      "canary_median" -> r3(at.canaryMedian), "attempts" -> attempts.size,
+      "loadavg" -> s"${at.loadBefore} -> ${at.loadAfter}",
+      "n_queries" -> results.size, "prewarmed" -> prewarmed,
+      "warmed" -> warmed, "failed" -> failed,
+      "slowest" -> Json.obj(
+        results.sortBy(-_.median).take(topN).map(r => r.name -> r3(r.median)): _*),
+      "full_results" -> "BENCH_LOCAL.json", "sf" -> sfDir))
+    val compact = Iterator.range(15, 0, -1).map(compactLine)
+      .find(_.length <= CompactMaxChars).getOrElse(compactLine(0))
+    (Json.write(full), compact)
+  }
+
+  private def warn(msg: String): Unit =
+    System.err.println(s"[bench] WARNING: $msg")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Same pin as Verify/CheckOne/PlanDump: Tables.load's TIMESTAMP_NTZ →
-      // timestamp cast is value-identical only under a UTC session zone —
-      // relying on the machine default would silently shift ts values on a
-      // non-UTC box.
-      .config("spark.sql.session.timeZone", "UTC")
-      // Coalesce for FEWER tasks, not device parallelism: at sf0.1 most
-      // post-shuffle stages are a few MB spread over 32 partitions, and on a
-      // contended machine per-task scheduling overhead dominates — let AQE
-      // shrink those stages to size instead of keeping one task per core.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "4m")
-      // Split small files into more input partitions than the 128m default
-      // would: map-side work rooted at a scan (shingling, gram hashing,
-      // char splitting) parallelizes only as far as the SCAN's splits, and
-      // a 30 MB single-file corpus otherwise runs that whole phase on one
-      // of 32 cores (sf1 spot-check: curate_dsir_select 25 s → 8 s from
-      // this alone). 8m ≈ corpus-file size / cores at the bench SFs; a
-      // real cluster reading 100 TB has thousands of natural splits and
-      // tunes this the same way (brief: "size maxPartitionBytes so
-      // partitions fit in executor memory at the target SF").
-      // Env-overridable for A/B measurement (r10: bisecting the sf0.1
-      // graph_pagerank cost of the 8m sf1 fix).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: pay one-time session costs (whole-stage-codegen
-    // compiler, parquet footer/filesystem init, shuffle machinery, and the
-    // codegen compile of the heavy dedup/vector plan shapes) outside the
-    // per-query numbers so the first timed query isn't penalized.
-    try {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.{Window => W}
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().collect()
-      // Warmup inputs sized so AQE picks the SAME join strategies as the
-      // timed sf0.1 runs — a 64-row warmup compiles different (broadcast)
-      // plan shapes and the first timed heavy query then pays a fresh
-      // whole-stage-codegen compile.
-      val docs = graft.tables.Tables.load(spark, sfDir, "documents").limit(512)
-      graft.ops.Dedup.ngramJaccardPairs(docs, 3, 0.6).count()
-      graft.ops.Dedup.minHashNearDupPairs(docs, 0.5).count()
-      graft.ops.Dedup.simHashNearDupPairs(docs, 3).count()
-      val emb = graft.tables.Tables.load(spark, sfDir, "embeddings").limit(500)
-      graft.ops.Vectors.cosineNearDupPairsBanded(emb, 0.4).count()
-      // window + regex codegen shapes (the other heavy first-compile hits).
-      // The warmup expressions must be OBSERVED by the action — a bare
-      // count() lets column pruning delete an unreferenced projection or
-      // window and nothing compiles.
-      docs.select(graft.ops.Text.normalize(col("text")).as("n"))
-        .agg(max(length(col("n")))).collect()
-      spark.read.parquet(s"$sfDir/lineitem.parquet").limit(256)
-        .withColumn("rn", row_number().over(
-          W.partitionBy("l_returnflag").orderBy("l_extendedprice")))
-        .filter(col("rn") === 1).count()
-    } catch { case _: Throwable => }
-    // Build the stored dedup state OUTSIDE the timed region: the *_indexed
-    // queries exist precisely to measure probe-only steady state, so their
-    // index build must not ride the first timed call. In its OWN try — if
-    // this fails it must be loudly visible (and flagged in the results),
-    // not swallowed with the warmup while the *_indexed timings silently
-    // absorb a full index build and still read as "probe-only".
-    val prewarmed =
-      try { graft.catalog.StoredIndexes.prewarm(spark, sfDir); true }
-      catch { case e: Throwable =>
-        System.err.println("[bench] WARNING: stored-index prewarm FAILED " +
-          s"(${e.getMessage}) — *_indexed timings include their index build")
-        false
-      }
+    val spark = Session("graft-bench")
+    val paid = Warmup(spark, sfDir)
     // --- Contention telemetry -------------------------------------------
     // BENCH_r07 measured 211.7s for a workload an idle box runs in 121.7s;
     // the driver's number was 1.7x inflated by EXTERNAL load and only a
@@ -106,7 +181,8 @@ object Bench {
         .groupBy("r_name").agg(count("*")).collect()
       (System.nanoTime() - t0) / 1e9
     }
-    try { canaryOnce(); () } catch { case _: Throwable => }  // compile, untimed
+    try { canaryOnce(); () }  // compile, untimed
+    catch { case NonFatal(e) => warn(s"canary compile FAILED ($e)") }
     // --- Spill telemetry ------------------------------------------------
     // Sum of task-level memory+disk spill, attributed per query by
     // snapshotting around each timed run (listener bus drained first —
@@ -125,12 +201,9 @@ object Bench {
           }
         }
       })
-    def drainBus(): Unit =
-      try org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
-      catch { case _: Throwable => }
     def timeOne(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): (Double, Boolean, Long) = {
-      drainBus()
+      Session.drainEvents(spark)
       val s0 = spillBytes.get()
       val t0 = System.nanoTime()
       val ok =
@@ -140,7 +213,7 @@ object Bench {
           false
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      drainBus()
+      Session.drainEvents(spark)
       (dt, ok, spillBytes.get() - s0)
     }
     // This box's run-to-run noise is 2-10x per query (BASELINE.md records
@@ -158,64 +231,16 @@ object Bench {
     // a single query without a 174-query run. Unset in driver runs.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // A query whose own repeats spread wider than this gets ONE extra
-    // repeat (median-of-4): the r9 driver capture carried a 90 s spike in
-    // one repeat of a 5 s query — with 3 samples a single burst drags the
-    // median; a 4th sample restores it to the idle value while the raw
-    // array still shows the spike. The same bound feeds the contended
-    // flag below: the start/middle/end canary protocol missed that burst
-    // entirely because it fell between checkpoints.
-    val spreadBound = 4.0
-    def spreadOf(ts: Seq[Double]): Double =
-      if (ts.size > 1 && ts.min > 0) ts.max / ts.min else 0.0
     val allQueries = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) 0.0
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    // One full timed pass over the catalog, with its own canary samples
-    // and contention verdict. (name, reported median, ok, raw timings,
-    // max spill) per query.
-    final case class Attempt(
-        results: Seq[(String, Double, Boolean, Seq[Double], Long)],
-        canarySamples: Seq[Double], loadBefore: String, loadAfter: String) {
-      val canarySpread: Double =
-        if (canarySamples.nonEmpty && canarySamples.min > 0)
-          canarySamples.max / canarySamples.min
-        else 0.0
-      val maxSpread: Double = {
-        val ss = results.filter(_._4.size > 1).map(r => spreadOf(r._4))
-        if (ss.nonEmpty) ss.max else 0.0
-      }
-      // Contended when EITHER signal trips: the canary spread (sustained
-      // load across checkpoints) OR any query's own repeat spread (a burst
-      // the canary sampling missed — r9 shipped contended:false around a
-      // 19.6× query spread; per-query repeats ARE a denser contention
-      // sensor than any canary cadence can be).
-      val contended: Boolean = canarySpread > 3.0 || maxSpread > spreadBound
-      // The canary's absolute LEVEL (median) is the cross-round normalizer
-      // the spread can't provide: a uniformly slower host (VM migration,
-      // steal) inflates every query the same way without tripping the
-      // spread flag — r9 measured the identical fixed-cost canary 1.4×
-      // slower than r8's capture on an "idle" box. Divide totals by the
-      // canary median before comparing rounds.
-      val canaryMedian: Double = median(canarySamples)
-      val total: Double = results.map(_._2).sum
-      // Idle-estimate total: sum of per-query MIN of repeats. Under
-      // external contention the min is the least-disturbed sample, so even
-      // a contended capture carries a usable lower bound alongside the
-      // median (VERDICT r7 item 8).
-      val totalMin: Double = results.map(_._4.min).sum
-    }
     def runAttempt(): Attempt = {
       val loadBefore = loadavg()
       val canarySamples = scala.collection.mutable.ArrayBuffer[Double]()
       def sampleCanary(n: Int): Unit =
         try (1 to n).foreach(_ => canarySamples += canaryOnce())
-        catch { case _: Throwable => }
+        catch { case NonFatal(e) =>
+          warn(s"canary sample FAILED ($e); the contention verdict has fewer samples")
+        }
       sampleCanary(3)
       val results = allQueries.zipWithIndex.map { case ((name, fn), idx) =>
         // Canary every ~32 queries, not just start/middle/end: a
@@ -241,18 +266,18 @@ object Bench {
             timeOne(name, fn)
           }
         // Burst rescue: one extra repeat when this query's own repeats
-        // disagree by > spreadBound — the median then has a majority of
+        // disagree by > SpreadBound — the median then has a majority of
         // undisturbed samples even if one landed inside a burst.
         val all =
           if (base.forall(_._2) && base.size > 1 &&
-              spreadOf(base.map(_._1)) > spreadBound) {
+              spreadOf(base.map(_._1)) > SpreadBound) {
             spark.catalog.clearCache()
             base :+ timeOne(name, fn)
           } else base
         val ts = all.map(_._1)
         // Per-query spill: max across repeats (repeats are same-shape; max
         // is the conservative per-run footprint, immune to a lucky run)
-        (name, median(ts), all.forall(_._2), ts, all.map(_._3).max)
+        QueryResult(name, median(ts), all.forall(_._2), ts, all.map(_._3).max)
       }
       sampleCanary(3)
       Attempt(results, canarySamples.toSeq, loadBefore, loadavg())
@@ -264,9 +289,7 @@ object Bench {
     // being the inflated one. Since the harness already computes
     // `contended` per pass, retry the whole timed pass (warmup, prewarm
     // and codegen stay paid) until one lands clean or the attempt budget
-    // runs out, then report the best pass: the first clean one, else the
-    // MEDIAN-total one (see chosenIdx below — a min over noisy passes
-    // would bias the headline low vs single-pass rounds). Every attempt's
+    // runs out, then report the best pass (chosenAttempt). Every attempt's
     // summary stays in the JSON so a reader sees what was retried and why.
     val maxAttempts = (scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ATTEMPTS", "2").trim.toInt)
@@ -279,94 +302,40 @@ object Bench {
       go = a.contended && attempts.size < maxAttempts
       if (go) System.err.println(
         s"[bench] attempt ${attempts.size}/$maxAttempts CONTENDED " +
-        s"(canary spread ${math.rint(a.canarySpread * 1000) / 1000}x, " +
-        s"max query spread ${math.rint(a.maxSpread * 1000) / 1000}x) — retrying")
+        s"(canary spread ${r3(a.canarySpread)}x, " +
+        s"max query spread ${r3(a.maxSpread)}x) — retrying")
     }
-    // Headline pass: the first clean attempt. When EVERY attempt is
-    // contended, report the median-total attempt (lower-middle for even
-    // counts — deterministic), NOT the minimum: a min statistic over
-    // noisy passes biases the headline low relative to single-pass
-    // rounds, breaking cross-round comparison. The per-query min across
-    // attempts still surfaces as value_min (the idle lower bound).
-    val chosenIdx = attempts.indexWhere(!_.contended) match {
-      case -1 =>
-        val byTotal = attempts.zipWithIndex.sortBy(_._1.total)
-        byTotal((byTotal.size - 1) / 2)._2
-      case i => i
-    }
-    val at = attempts(chosenIdx)
-    val results = at.results
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
-    val attemptsJson = attempts.map { a =>
-      s"""{"contended":${a.contended},"value":${r3(a.total)}""" +
-      s""","value_min":${r3(a.totalMin)},"canary_median":${r3(a.canaryMedian)}""" +
-      s""","canary_spread":${r3(a.canarySpread)},"max_query_spread":${r3(a.maxSpread)}}"""
-    }.mkString("[", ",", "]")
-    val contentionJson =
-      s""""loadavg_before":"${at.loadBefore}","loadavg_after":"${at.loadAfter}"""" +
-      s""","canary":${at.canarySamples.map(r3).mkString("[", ",", "]")}""" +
-      s""","canary_spread":${r3(at.canarySpread)},"canary_median":${r3(at.canaryMedian)},"contended":${at.contended}""" +
-      s""","max_query_spread":${r3(at.maxSpread)},"value_min":${r3(at.totalMin)}""" +
-      s""","attempts":$attemptsJson,"attempt_chosen":${chosenIdx + 1}"""
-    if (at.contended) System.err.println(
-      s"[bench] WARNING: CONTENDED RUN — canary spread ${r3(at.canarySpread)}x" +
-      s" (>3x) or max query spread ${r3(at.maxSpread)}x (>${spreadBound}x) " +
+    val at = attempts(chosenAttempt(attempts.toSeq))
+    if (at.contended) warn(
+      s"CONTENDED RUN — canary spread ${r3(at.canarySpread)}x" +
+      s" (>3x) or max query spread ${r3(at.maxSpread)}x (>${SpreadBound}x) " +
       s"across all $maxAttempts attempts; medians are inflated by external " +
       s"load. Idle-estimate total (sum of per-query min) = ${r3(at.totalMin)}s.")
-    val qs = results.map { case (k, v, _, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val timings = results.map { case (k, _, _, ts, _) =>
-      "\"" + k + "\":" + ts.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val failed = results.filterNot(_._3).map("\"" + _._1 + "\"")
-      .mkString("[", ",", "]")
-    val total = at.total
-    // Spill ledger: per-query max-across-repeats task spill (mem+disk),
-    // nonzero entries only; total = sum of those maxima. Zero everywhere
-    // under the default 8g heap at sf0.1; the SPARK_DRIVER_MEM=4g sf1
-    // protocol reads these to prove heavy queries degrade by SPILLING.
-    val spilled = results.filter(_._5 > 0).map { case (k, _, _, _, sp) =>
-      "\"" + k + "\":" + sp
-    }.mkString("{", ",", "}")
-    val spilledTotal = results.map(_._5).sum
-    // Canary-normalized headline: the driver box has self-flagged
-    // contended for five straight rounds while judge-side idle re-runs of
-    // the same code land 20-25% faster — the r9 rule (scale the total by
-    // reference-canary / measured-canary) kept being redone by hand from
-    // the raw fields. Emit it directly: canary_ref is PINNED at the r24
-    // idle host level (0.249 s), the fixed point every cross-round
-    // comparison since has used; value_normalized = value × ref ÷
-    // measured estimates what this exact pass would have cost on that
-    // idle host. Overridable for a future re-pin via env.
-    val canaryRef = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_CANARY_REF", "0.249").trim.toDouble)
-      .getOrElse(0.249)
-    val valueNormalized =
-      if (at.canaryMedian > 0) total * canaryRef / at.canaryMedian else total
-    val normJson =
-      s""""value_normalized":${r3(valueNormalized)},"canary_ref":$canaryRef"""
-    // a failed query must be visible, not folded in as a fast success
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec",$normJson,"queries":$qs,"timings":$timings,"prewarmed":$prewarmed,"failed":$failed,$contentionJson,"spilled_bytes":$spilledTotal,"spilled":$spilled,"sf":"$sfDir"}"""
+    val (fullJson, compactJson) =
+      report(attempts.toSeq, paid.warmed, paid.prewarmed, sfDir)
     // Full per-query JSON: one line for the log, and a FILE for programmatic
     // reads — the driver captures only the last ~2000 chars of stdout, which
     // a >2500-char 80-query line overflows (BENCH_r1..r4 all have
     // "parsed": null for exactly this reason).
     println(fullJson)
+    def write(file: String): Unit = java.nio.file.Files.write(
+      java.nio.file.Paths.get(file), fullJson.getBytes("UTF-8"))
     // Subset (BENCH_ONLY) runs write a SIBLING file: BENCH_LOCAL.json is
     // the tracked full-catalog record, and a 4-query tuning run silently
     // replacing it would destroy the per-query reference it exists for.
+    // That file IS the record: a failed write fails the run (after the
+    // stdout lines), never passes silently.
     val localFile =
       if (only.isEmpty) "BENCH_LOCAL.json" else "BENCH_LOCAL_ONLY.json"
-    try java.nio.file.Files.write(java.nio.file.Paths.get(localFile),
-      fullJson.getBytes("UTF-8"))
-    catch { case _: Throwable => }
+    val localWriteError =
+      try { write(localFile); None }
+      catch { case NonFatal(e) =>
+        warn(s"could not write $localFile ($e)"); Some(e)
+      }
     // Round-stamped copy so each round's full per-query results SURVIVE
     // the next round's run (the r8 run overwrote r7's BENCH_LOCAL.json,
     // destroying the idle per-query reference — VERDICT r8 item 7). The
-    // current round = highest driver-written BENCH_r{N}.json + 1; falls
-    // back silently if the repo dir isn't readable (e.g. dev runs from
-    // elsewhere).
+    // current round = highest driver-written BENCH_r{N}.json + 1.
     // Only FULL-catalog runs get a round-stamped copy (a BENCH_ONLY
     // subset overwriting the full-run history would be worse than no
     // copy), and an already-existing stamp is never overwritten — two
@@ -380,23 +349,10 @@ object Bench {
       while (java.nio.file.Files.exists(
           java.nio.file.Paths.get(f"BENCH_LOCAL_r$round%02d.json")))
         round += 1
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(f"BENCH_LOCAL_r$round%02d.json"),
-        fullJson.getBytes("UTF-8"))
-    } catch { case _: Throwable => }
-    // Compact LAST line, sized to fit the driver's ~2000-char tail whole:
-    // total + failures + the slowest queries (the ones worth comparing
-    // round over round). The slowest list SHRINKS until the line fits —
-    // a grown catalog must degrade to fewer reported queries, never to an
-    // unparseable overflow (which is how BENCH_r1..r4 were lost).
-    def compactLine(topN: Int): String = {
-      val slowest = results.sortBy(-_._2).take(topN)
-        .map { case (k, v, _, _, _) => "\"" + k + "\":" + math.rint(v * 1000) / 1000 }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec",$normJson,"value_min":${r3(at.totalMin)},"contended":${at.contended},"canary_spread":${r3(at.canarySpread)},"canary_median":${r3(at.canaryMedian)},"attempts":${attempts.size},"loadavg":"${at.loadBefore} -> ${at.loadAfter}","n_queries":${results.size},"prewarmed":$prewarmed,"failed":$failed,"slowest":$slowest,"full_results":"BENCH_LOCAL.json","sf":"$sfDir"}"""
-    }
-    println(Iterator.range(15, 0, -1).map(compactLine)
-      .find(_.length <= 1800).getOrElse(compactLine(0)))
+      write(f"BENCH_LOCAL_r$round%02d.json")
+    } catch { case NonFatal(e) => warn(s"round-stamped copy not written ($e)") }
+    println(compactJson)
     spark.stop()
+    localWriteError.foreach(e => throw e)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness that RUNS the Bloom-prefiltered ingest dedup at the scale
@@ -34,14 +33,7 @@ object BloomScale {
     val b = if (args.length > 1) args(1).toLong else 1000000L
     val hitPcts = if (args.length > 2) args.drop(2).map(_.toInt).toSeq
                   else Seq(0, 1, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bloomscale")
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -99,8 +91,8 @@ object BloomScale {
 
     val bits = 10L * n
     val (bloom, tBuild) = timed(ops.Dedup.digestBloom(corpus, n, bits))
-    println(s"""{"run":"bloom_build","n_digests":$n,"num_bits":$bits,""" +
-      s""""sketch_bytes":${bloom.length},"sec":$tBuild}""")
+    Json.line("run" -> "bloom_build", "n_digests" -> n, "num_bits" -> bits,
+      "sketch_bytes" -> bloom.length, "sec" -> tBuild)
 
     // realized fpp on b known-ABSENT digests, via the ingest's own probe
     val (fp, tFpp) = timed(spark.range(b)
@@ -108,8 +100,8 @@ object BloomScale {
         .cast("binary")).as("content_md5"))
       .filter(ops.Dedup.bloomMightContain(bloom, col("content_md5")))
       .count())
-    println(s"""{"run":"bloom_fpp","probes":$b,"false_positives":$fp,""" +
-      s""""fpp":${math.rint(fp * 1e6 / b) / 1e6},"sec":$tFpp}""")
+    Json.line("run" -> "bloom_fpp", "probes" -> b, "false_positives" -> fp,
+      "fpp" -> math.rint(fp * 1e6 / b) / 1e6, "sec" -> tFpp)
 
     var warmed = false
     for (hitPct <- hitPcts) {
@@ -144,12 +136,12 @@ object BloomScale {
       spark.catalog.clearCache()
       require(cPlain == cBloom,
         s"LOSSLESSNESS VIOLATION at hit=$hitPct%: plain=$cPlain bloom=$cBloom")
-      println(s"""{"run":"bloom_ingest","hit_pct":$hitPct,"batch":$b,""" +
-        s""""corpus":$n,"survivors":$cBloom,"sec_plain":$tPlain,""" +
-        s""""sec_bloom":$tBloom,"shuffle_mb_plain":${shPlain / 1048576},""" +
-        s""""shuffle_mb_bloom":${shBloom / 1048576},""" +
-        s""""input_mb_plain":${inPlain / 1048576},""" +
-        s""""input_mb_bloom":${inBloom / 1048576}}""")
+      Json.line("run" -> "bloom_ingest", "hit_pct" -> hitPct, "batch" -> b,
+        "corpus" -> n, "survivors" -> cBloom, "sec_plain" -> tPlain,
+        "sec_bloom" -> tBloom, "shuffle_mb_plain" -> shPlain / 1048576,
+        "shuffle_mb_bloom" -> shBloom / 1048576,
+        "input_mb_plain" -> inPlain / 1048576,
+        "input_mb_bloom" -> inBloom / 1048576)
     }
     spark.stop()
   }

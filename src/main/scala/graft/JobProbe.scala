@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
-/** Dev-only profiler (OPTIMIZATION_r15): run named catalog queries once
-  * under the Bench session settings and print ONE line per Spark job —
+/** Dev-only profiler (OPTIMIZATION_r15): run named catalog queries twice
+  * under the shared session (`Session`) and print ONE line per Spark job —
   * start offset, duration, #tasks, and the callsite/description — so a
   * multi-job query's wall time decomposes into its job ledger. This is
   * the measure-first tool the optimization guide §1 asks for when the UI
@@ -17,18 +16,7 @@ import org.apache.spark.scheduler._
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "4m")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-jobprobe")
     // jobId -> (submit ns, ntasks, description)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
@@ -53,26 +41,12 @@ object JobProbe {
       }
     })
     // Same warmup + prewarm as Bench so first-compile cost stays out.
-    try {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().collect()
-      val docs = graft.tables.Tables.load(spark, sfDir, "documents").limit(512)
-      graft.ops.Dedup.ngramJaccardPairs(docs, 3, 0.6).count()
-      graft.ops.Dedup.minHashNearDupPairs(docs, 0.5).count()
-      val emb = graft.tables.Tables.load(spark, sfDir, "embeddings").limit(500)
-      graft.ops.Vectors.cosineNearDupPairsBanded(emb, 0.4).count()
-    } catch { case _: Throwable => }
-    try { graft.catalog.StoredIndexes.prewarm(spark, sfDir) }
-    catch { case e: Throwable => System.err.println("prewarm failed: " + e) }
-    val runs = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").trim.toInt).getOrElse(2)
+    Warmup(spark, sfDir)
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
-      (1 to runs).foreach { r =>
+      (1 to 2).foreach { r =>
         spark.catalog.clearCache()
-        try org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
-        catch { case _: Throwable => }
+        Session.drainEvents(spark)
         lines.clear(); jobs.clear()
         t0 = System.nanoTime()
         val t = System.nanoTime()
@@ -80,8 +54,7 @@ object JobProbe {
         val tb = (System.nanoTime() - t) / 1e9
         df.count()
         val dt = (System.nanoTime() - t) / 1e9
-        try org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
-        catch { case _: Throwable => }
+        Session.drainEvents(spark)
         println(f"== $name run $r: $dt%.3f s (construct $tb%.3f s), ${lines.size} jobs")
         import scala.jdk.CollectionConverters._
         lines.asScala.toSeq.sortBy(_._1).foreach(l => println(l._2))

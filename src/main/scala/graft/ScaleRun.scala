@@ -1,22 +1,33 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Dev harness that RUNS scaled-knob LSH pair joins at a given SF — the
-  * end-to-end closure of the `ScaleProbe` budget table (BASELINE.md): the
-  * probes PRICE a banding before paying it; this main actually PAYS the
-  * two headline joins at knobs sized by the measured laws and records
-  * wall-time + result pair counts, so "the scaled knobs keep the join
-  * runnable at sf10" is a measured row, not an extrapolation.
+/** Dev harness that PRICES and RUNS the LSH pair joins at a given SF — the
+  * measured table behind BASELINE.md's band-resolution decade probe: fixed
+  * knobs make candidate pairs grow ~n²/buckets, knobs scaled with n restore
+  * ~linear candidates. It pays the headline joins at knobs sized by the
+  * measured laws and records wall-time + result pair counts, so "the scaled
+  * knobs keep the join runnable at sf10" is a measured row, not an
+  * extrapolation.
   *
-  * Each run prints the O(n) candidate-budget pre-flight FIRST (the
-  * production discipline: never start a banded join whose fan-out you
-  * didn't price), then the join's wall time, result pairs, and the
-  * verify-survivor ratio.
+  * Every O(n) candidate-budget pre-flight prints FIRST (the production
+  * discipline: never start a banded join whose fan-out you didn't price),
+  * then each join's wall time, result pairs, and the verify-survivor ratio.
+  * A run stopped after the budget rows is a budget-only probe. Budget-only
+  * rows (no join paid) price the alternative knobs:
+  *  - simhash 4 bands × 8-bit slices (the lossless-at-h≤3 catalog shape);
+  *  - minhash 4 bands × 4 hashes (band collision probability J^r —
+  *    doubling r squares the per-band selectivity; recall drops per
+  *    1−(1−J^r)^b);
+  *  - cosine 16 × 2 (catalog), 16 × 3 and 15 × 4 planes (each extra plane
+  *    halves expected bucket occupancy; recall at a given threshold drops
+  *    per the (1−θ/π)^r band law).
   *
-  *  - simhash: 2 bands × 16-bit slices (the `wide_2x16` probe row);
-  *    pigeonhole guarantee at 2 bands is h ≤ 1.
+  * Joins paid:
+  *  - simhash: 2 bands × 16-bit slices (the bucket space a 64-bit
+  *    fingerprint would give each of 4 bands at h≤3); pigeonhole guarantee
+  *    at 2 bands is h ≤ 1.
   *  - cosine: `bands` × `planes` per the +log₂10 ≈ 3.3 planes/decade
   *    sizing rule (default 2 planes at sf0.1 → ~10 at 100×), under the
   *    packed-signature cap planes·bands ≤ 62 — hence the 6×10 default
@@ -31,16 +42,7 @@ object ScaleRun {
     val dir = args(0)
     val cosPlanes = if (args.length > 1) args(1).toInt else 10
     val cosBands = if (args.length > 2) args(2).toInt else 6
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-scalerun")
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -51,82 +53,72 @@ object ScaleRun {
     val docs = tables.Tables.load(spark, dir, "documents")
     val emb = tables.Tables.load(spark, dir, "embeddings")
 
-    // --- simhash, wide knobs: 2 bands × 16-bit slices, h ≤ 1 ----------
-    val (sb, sbSec) = timed(
-      ops.Dedup.simHashCandidateBudget(docs, bands = 2).collect()(0))
-    println(s"""{"run":"simhash_budget","knobs":"2x16","dir":"$dir",""" +
-      s""""n":${sb.getLong(0)},"cand_pairs":${sb.getLong(3)},"sec":$sbSec}""")
-    val (sPairs, sSec) = timed(
-      ops.Dedup.simHashNearDupPairs(docs, maxHamming = 1, bands = 2)
-        .agg(count(lit(1)), coalesce(max(col("hamming")), lit(-1L)))
-        .collect()(0))
-    println(s"""{"run":"simhash_pairs","knobs":"2x16 h<=1","dir":"$dir",""" +
-      s""""pairs":${sPairs.getLong(0)},"max_hamming":${sPairs.getLong(1)},""" +
-      s""""sec":$sSec}""")
-    spark.catalog.clearCache()
+    // Every budget frame's columns 0 and 3 are (n, cand_pairs); the span
+    // budget also reports kept and hot (df-capped) spans.
+    def budget(run: String, knobs: String, df: => DataFrame,
+               extra: Row => Seq[(String, Any)] = _ => Nil): Unit = {
+      val (r, sec) = timed(df.collect()(0))
+      Json.line(Seq("run" -> s"${run}_budget", "knobs" -> knobs, "dir" -> dir,
+        "n" -> r.getLong(0)) ++ extra(r) ++
+        Seq("cand_pairs" -> r.getLong(3), "sec" -> sec): _*)
+    }
+    budget("simhash", "4x8", ops.Dedup.simHashCandidateBudget(docs))
+    budget("simhash", "2x16", ops.Dedup.simHashCandidateBudget(docs, bands = 2))
+    budget("minhash", "8x2", ops.Dedup.minHashCandidateBudget(docs))
+    budget("minhash", "4x4", ops.Dedup.minHashCandidateBudget(docs, bands = 4))
+    budget("ngram", "3g t0.6", ops.Dedup.ngramCandidateBudget(docs, 3, 0.6))
+    for ((b, p) <- Seq((16, 2), (16, 3), (15, 4), (cosBands, cosPlanes)))
+      budget("cosine", s"${b}x$p",
+        ops.Vectors.cosineBandCandidateBudget(emb, planesPerBand = p, bands = b))
+    budget("containment", "3g t0.8",
+      ops.Dedup.containmentCandidateBudget(docs, 3, 0.8))
+    budget("span", "8tok df<=64",
+      ops.Dedup.commonSpanCandidateBudget(docs, 8, maxDf = 64),
+      r => Seq("spans_kept" -> r.getLong(1), "spans_hot" -> r.getLong(2)))
 
-    // --- minhash, catalog knobs (16 hashes, 8 bands × 2): the text-side
-    // workhorse, now through the packed-long single-join first-matching-
-    // band shape (round-13 rewrite — no distinct over the fan-out, no
-    // candidate re-shuffle before the Jaccard verify join-backs) ---------
-    val (mb, mbSec) = timed(
-      ops.Dedup.minHashCandidateBudget(docs).collect()(0))
-    println(s"""{"run":"minhash_budget","knobs":"8x2","dir":"$dir",""" +
-      s""""n":${mb.getLong(0)},"cand_pairs":${mb.getLong(3)},"sec":$mbSec}""")
-    val (mPairs, mSec) = timed(
-      ops.Dedup.minHashNearDupPairs(docs, 0.5)
-        .agg(count(lit(1)), coalesce(round(min(col("jaccard")), 4), lit(-1.0)))
-        .collect()(0))
-    println(s"""{"run":"minhash_pairs","knobs":"8x2 j>=0.5","dir":"$dir",""" +
-      s""""pairs":${mPairs.getLong(0)},"min_jaccard":${mPairs.getDouble(1)},""" +
-      s""""sec":$mSec}""")
-    spark.catalog.clearCache()
-
-    // --- ngram-Jaccard PPJoin, catalog knobs (3-grams, t = 0.6): the
-    // prefix-filter regime priced by ngramCandidateBudget first, then
-    // paid through the distinct-based PPJoin — the emit-once (no
-    // distinct) residual was built, measured, and REJECTED (its carried
-    // earlier-prefix arrays are quadratic in document length; see the
-    // design note in Dedup.scala), so the thin-id distinct here is the
-    // linear quantity the budget prices ---
-    val (nb, nbSec) = timed(
-      ops.Dedup.ngramCandidateBudget(docs, 3, 0.6).collect()(0))
-    println(s"""{"run":"ngram_budget","knobs":"3g t0.6","dir":"$dir",""" +
-      s""""n":${nb.getLong(0)},"cand_pairs":${nb.getLong(3)},"sec":$nbSec}""")
-    val (nPairs, nSec) = timed(
-      ops.Dedup.ngramJaccardPairs(docs, 3, 0.6)
-        .agg(count(lit(1)), coalesce(round(min(col("jaccard")), 4), lit(-1.0)))
-        .collect()(0))
-    println(s"""{"run":"ngram_pairs","knobs":"3g j>=0.6","dir":"$dir",""" +
-      s""""pairs":${nPairs.getLong(0)},"min_jaccard":${nPairs.getDouble(1)},""" +
-      s""""sec":$nSec}""")
-    spark.catalog.clearCache()
-
-    // --- cosine, decade-scaled planes ----------------------------------
-    val (cb, cbSec) = timed(ops.Vectors.cosineBandCandidateBudget(
-      emb, planesPerBand = cosPlanes, bands = cosBands).collect()(0))
-    println(s"""{"run":"cosine_budget","knobs":"${cosBands}x$cosPlanes",""" +
-      s""""dir":"$dir","n":${cb.getLong(0)},"cand_pairs":${cb.getLong(3)},""" +
-      s""""sec":$cbSec}""")
-    // Two points on the verify-shape knob: the AS-SHIPPED default (the
-    // measured row count picks the shape — this corpus lands INLINE at
-    // 200 k > 2^17 — and the prefix stage arms itself from the measured
-    // residual-energy share, which DISARMS it here: share² ≈ 0.75 > τ),
-    // and the broadcast-probe shape forced via a raised row cap.
-    for ((label, p, maxRows) <- Seq(
-        ("auto", 16, ops.Vectors.BroadcastVerifyMaxRows),
-        ("bcast forced", 16, Long.MaxValue))) {
-      val (cPairs, cSec) = timed(
-        ops.Vectors.cosineNearDupPairsBanded(emb, 0.4,
-            planesPerBand = cosPlanes, bands = cosBands, prefixDims = p,
-            broadcastVerifyMaxRows = maxRows)
-          .agg(count(lit(1)), coalesce(round(min(col("cosine")), 4), lit(-1.0)))
-          .collect()(0))
-      println(s"""{"run":"cosine_pairs","knobs":"${cosBands}x$cosPlanes """ +
-        s"""th>=0.4 $label","dir":"$dir","pairs":${cPairs.getLong(0)},""" +
-        s""""min_cosine":${cPairs.getDouble(1)},"sec":$cSec}""")
+    // Pair rows: the join's result count and one summary statistic.
+    def pairs(run: String, knobs: String, df: => DataFrame,
+              stat: String, statCol: org.apache.spark.sql.Column): Unit = {
+      val (r, sec) = timed(df.agg(count(lit(1)), statCol).collect()(0))
+      Json.line("run" -> run, "knobs" -> knobs, "dir" -> dir,
+        "pairs" -> r.getLong(0), stat -> r.get(1), "sec" -> sec)
       spark.catalog.clearCache()
     }
+    def minOf(c: String) = coalesce(round(min(col(c)), 4), lit(-1.0))
+    def maxOf(c: String) = coalesce(max(col(c)), lit(-1L))
+
+    // --- simhash, wide knobs: 2 bands × 16-bit slices, h ≤ 1 ----------
+    pairs("simhash_pairs", "2x16 h<=1",
+      ops.Dedup.simHashNearDupPairs(docs, maxHamming = 1, bands = 2),
+      "max_hamming", maxOf("hamming"))
+    // --- minhash, catalog knobs (16 hashes, 8 bands × 2): the text-side
+    // workhorse, through the packed-long single-join first-matching-band
+    // shape (no distinct over the fan-out, no candidate re-shuffle before
+    // the Jaccard verify join-backs)
+    pairs("minhash_pairs", "8x2 j>=0.5", ops.Dedup.minHashNearDupPairs(docs, 0.5),
+      "min_jaccard", minOf("jaccard"))
+    // --- ngram-Jaccard PPJoin, catalog knobs (3-grams, t = 0.6): the
+    // prefix-filter regime, paid through the distinct-based PPJoin — the
+    // emit-once (no distinct) residual was built, measured, and REJECTED
+    // (its carried earlier-prefix arrays are quadratic in document length;
+    // see the design note in Dedup.scala), so the thin-id distinct here is
+    // the linear quantity the budget prices
+    pairs("ngram_pairs", "3g j>=0.6", ops.Dedup.ngramJaccardPairs(docs, 3, 0.6),
+      "min_jaccard", minOf("jaccard"))
+    // --- cosine, decade-scaled planes. Two points on the verify-shape
+    // knob: the AS-SHIPPED default (the measured row count picks the shape
+    // — this corpus lands INLINE at 200 k > 2^17 — and the prefix stage
+    // arms itself from the measured residual-energy share, which DISARMS
+    // it here: share² ≈ 0.75 > τ), and the broadcast-probe shape forced
+    // via a raised row cap.
+    for ((label, maxRows) <- Seq(
+        ("auto", ops.Vectors.BroadcastVerifyMaxRows),
+        ("bcast forced", Long.MaxValue)))
+      pairs("cosine_pairs", s"${cosBands}x$cosPlanes th>=0.4 $label",
+        ops.Vectors.cosineNearDupPairsBanded(emb, 0.4,
+          planesPerBand = cosPlanes, bands = cosBands, prefixDims = 16,
+          broadcastVerifyMaxRows = maxRows),
+        "min_cosine", minOf("cosine"))
 
     // --- Matryoshka ARMED branch: front-loaded-energy twin corpus ------
     // The staged-verify gate arms itself from the measured residual-
@@ -143,57 +135,21 @@ object ScaleRun {
       transform(col("embedding"),
         (x, i) => when(i < 16, x).otherwise(x * lit(0.1)))
         .cast("array<float>"))
-    for ((label, p) <- Seq(("armed p16", 16), ("disarmed p0", 0))) {
-      val (fPairs, fSec) = timed(
+    for ((label, p) <- Seq(("armed p16", 16), ("disarmed p0", 0)))
+      pairs("cosine_matryoshka", s"${cosBands}x$cosPlanes th>=0.4 $label",
         ops.Vectors.cosineNearDupPairsBanded(embFront, 0.4,
-            planesPerBand = cosPlanes, bands = cosBands, prefixDims = p)
-          .agg(count(lit(1)), coalesce(round(min(col("cosine")), 4), lit(-1.0)))
-          .collect()(0))
-      println(s"""{"run":"cosine_matryoshka","knobs":"${cosBands}x""" +
-        s"""$cosPlanes th>=0.4 $label","dir":"$dir",""" +
-        s""""pairs":${fPairs.getLong(0)},""" +
-        s""""min_cosine":${fPairs.getDouble(1)},"sec":$fSec}""")
-      spark.catalog.clearCache()
-    }
-
+          planesPerBand = cosPlanes, bands = cosBands, prefixDims = p),
+        "min_cosine", minOf("cosine"))
     // --- containment, catalog knobs (3-grams, t = 0.8): the asymmetric
     // PPJoin — src's df-ordered prefix against dst's FULL shingle list
-    // under the one-sided t·|A| ≤ |B| length filter, then the exact
-    // verify. containmentCandidateBudget prices the directed prefix
-    // fan-out Σ_prefix (df − 1) in O(n) before the join pays it --------
-    val (ob, obSec) = timed(
-      ops.Dedup.containmentCandidateBudget(docs, 3, 0.8).collect()(0))
-    println(s"""{"run":"containment_budget","knobs":"3g t0.8",""" +
-      s""""dir":"$dir","n":${ob.getLong(0)},"cand_pairs":${ob.getLong(3)},""" +
-      s""""sec":$obSec}""")
-    val (oPairs, oSec) = timed(
-      ops.Dedup.containmentPairs(docs, 3, 0.8)
-        .agg(count(lit(1)),
-          coalesce(round(min(col("containment")), 4), lit(-1.0)))
-        .collect()(0))
-    println(s"""{"run":"containment_pairs","knobs":"3g c>=0.8",""" +
-      s""""dir":"$dir","pairs":${oPairs.getLong(0)},""" +
-      s""""min_containment":${oPairs.getDouble(1)},"sec":$oSec}""")
-    spark.catalog.clearCache()
-
+    // under the one-sided t·|A| ≤ |B| length filter, then the exact verify
+    pairs("containment_pairs", "3g c>=0.8", ops.Dedup.containmentPairs(docs, 3, 0.8),
+      "min_containment", minOf("containment"))
     // --- common-span, catalog knobs (8-token spans, df cap 64): the
-    // df-bounded per-span self-join — commonSpanCandidateBudget prices
-    // the EXACT join fan-out Σ C(df, 2) over kept spans, and counts the
-    // hot spans the cap drops, before the join runs ---------------------
-    val (wb, wbSec) = timed(
-      ops.Dedup.commonSpanCandidateBudget(docs, 8, maxDf = 64).collect()(0))
-    println(s"""{"run":"span_budget","knobs":"8tok df<=64","dir":"$dir",""" +
-      s""""n":${wb.getLong(0)},"spans_kept":${wb.getLong(1)},""" +
-      s""""spans_hot":${wb.getLong(2)},"cand_pairs":${wb.getLong(3)},""" +
-      s""""sec":$wbSec}""")
-    val (wPairs, wSec) = timed(
-      ops.Dedup.commonSpanPairs(docs, 8, maxDf = 64)
-        .agg(count(lit(1)), coalesce(max(col("n_spans")), lit(-1L)))
-        .collect()(0))
-    println(s"""{"run":"span_pairs","knobs":"8tok df<=64","dir":"$dir",""" +
-      s""""pairs":${wPairs.getLong(0)},"max_spans":${wPairs.getLong(1)},""" +
-      s""""sec":$wSec}""")
-    spark.catalog.clearCache()
+    // df-bounded per-span self-join whose EXACT fan-out Σ C(df, 2) the
+    // span budget prices
+    pairs("span_pairs", "8tok df<=64", ops.Dedup.commonSpanPairs(docs, 8, maxDf = 64),
+      "max_spans", maxOf("n_spans"))
     spark.stop()
   }
 }

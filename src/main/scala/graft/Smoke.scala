@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke main mirroring the driver's t1 check: `SparkEntry.entry` on
   * sf0.001 must return >0 rows. Usage: `sbt "runMain graft.Smoke"`.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-smoke")
     val df = SparkEntry.entry(spark)
     df.show(10, truncate = false)
     println(s"ENTRY_ROWS=${df.count()}")

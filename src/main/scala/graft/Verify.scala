@@ -1,28 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Naming queries
+  * restricts the dump to them (the oracle file stays whole), so
+  * `tools/check.py` verifies just those without a full run.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query...]
+  *        runMain graft.Verify --sql-only <outDir>
+  */
 object Verify {
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness.
-    */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def dumpOracle(outDir: String): Unit = {
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-  }
+  private def dumpOracle(outDir: String): Unit =
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.write(SparkEntry.oracleSql))
 
   def main(args: Array[String]): Unit = {
     // Pre-flight mode: dump oracle_sql.json WITHOUT starting Spark or
@@ -37,17 +26,14 @@ object Verify {
         s"strings to $outDir/oracle_sql.json (sql-only mode)")
       return
     }
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
+    val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = Session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    all.filter { case (n, _) => names.isEmpty || names(n) }.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point — reference parity for `python etl/pipeline.py [--once]`
   * (etl/pipeline.py:358-388 and Docker entrypoint, Dockerfile:31-32).
   *
@@ -15,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   * JSON file in the reference's shape; without it the reference's default
   * path fallback applies and a missing file means compiled defaults.
   * `--fixtures` swaps the HTTP transport for local fixture files (CI has no
-  * network).
+  * network). The master is the launcher's (spark-submit `--master`), else
+  * local (`graft.Session`).
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -31,13 +30,7 @@ object Main {
       .getOrElse(new Extract.HttpTransport(config.timeoutSeconds))
     val logger = new RunLogger(config.logFile, config.logLevel)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-etl")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-etl")
     val pipeline = new Pipeline(spark, config, transport, logger = logger)
     try {
       if (once) {

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Runnable streaming demo — the honest upgrade of the reference's
@@ -21,14 +20,7 @@ object Main {
     require(args.length >= 2, "usage: Main <inDir> <outDir> [--follow]")
     val Array(inDir, outDir) = args.take(2)
     val follow = args.contains("--follow")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-streaming")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-streaming")
 
     val events = StreamOps.readEventStream(spark, inDir)
     val trigger =

@@ -7,17 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite fast; tests must not depend on session-global mutable state).
   */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = Session("graft-test", cores = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -6,9 +6,9 @@ Dev tool, driver-side python only (duckdb) — NOT part of the shipped
 library. BASELINE.md's sf1 adjudication argues the LSH dedup family
 returns to linear candidate growth when band/bucket knobs scale with n;
 this corpus gives that claim a second measured order of magnitude via
-`graft.ScaleProbe` (candidate budgets only — the full pair joins are
-deliberately NOT run at this size with sf0.1 knobs; the probe exists to
-show why). Same replication rules as gen_sf1.py: id offsets, ~25%
+`graft.ScaleRun`'s budget rows (candidate budgets, printed before any
+pair join; the joins at sf0.1 knobs are deliberately NOT worth running at
+this size — the budgets exist to show why). Same replication rules as gen_sf1.py: id offsets, ~25%
 deterministic token mutation per document copy (copies are NOT
 near-dups), hash-noise re-randomized embeddings; copy 0 byte-identical
 to sf0.1.
