@@ -72,14 +72,7 @@ object BloomScale {
     }
 
     val root = java.nio.file.Files.createTempDirectory("graft-bloomscale-")
-    sys.addShutdownHook {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    }
+    sys.addShutdownHook(graft.etl.Load.deleteLocalTree(root))
 
     // corpus digest table — md5("corpus:<i>"), the digest the batch's
     // hit rows will recompute from their text

@@ -54,14 +54,7 @@ object StoredIndexes {
   private val tempDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
   sys.addShutdownHook {
-    tempDirs.forEach { root =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    }
+    tempDirs.forEach(root => graft.etl.Load.deleteLocalTree(root))
   }
 
   private def newTempDir(prefix: String): String = {

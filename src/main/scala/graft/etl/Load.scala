@@ -222,6 +222,20 @@ object Load {
     org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
 
+  /** Delete the local tree under `root`, deepest paths first — for
+    * shutdown-hook cleanups of scratch dirs. A failure is printed as a
+    * WARNING naming the path, not thrown: the JVM is exiting anyway.
+    */
+  def deleteLocalTree(root: java.nio.file.Path): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount)
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[cleanup] WARNING: could not delete $root: $e")
+    }
+
   /** Replace the table at `path` with `df` via stage-then-rename. Parquet
     * has no in-place merge; writing straight over `path` (delete + full
     * second write) leaves the table missing for the whole rewrite. Staging

@@ -235,20 +235,32 @@ object Dedup {
     * ingest is the cost ceiling. Returns the batch rows that survive: the
     * min-id survivor within the batch's own duplicate groups, minus
     * anything byte-identical to a corpus row (plus the digest column, for
-    * appending to the stored digest table). Shape: one groupBy and one
-    * left-anti join, both keyed on the 16-byte digest — corpus text is
-    * never read here, and no corpus-wide work happens per ingest.
+    * appending to the stored digest table). Shape: one keyed pass over the
+    * batch (`batchFirsts`) and one left-anti join on the 16-byte digest.
+    * The corpus digests are not de-duplicated first: an anti join drops
+    * the same rows whether its right side repeats a digest or not, so a
+    * whole-state aggregate per ingest would buy nothing. Corpus text is
+    * never read here.
     */
   def exactIncremental(newDocs: DataFrame, corpusDigests: DataFrame,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val hashed = newDocs.withColumn("content_md5", md5(col(textCol).cast("binary")))
-    val firsts = hashed.groupBy(col("content_md5"))
-      .agg(min(col(idCol)).as("__survivor"))
-    hashed.join(firsts, "content_md5")
+                       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    batchFirsts(newDocs, idCol, textCol)
+      .join(corpusDigests.select(col("content_md5")), Seq("content_md5"), "left_anti")
+
+  /** The batch's rows with their `content_md5`, keeping in each digest
+    * group every row whose id equals the group's minimum id (ties
+    * included). One window pass keyed on the digest, so the batch is
+    * scanned once with no aggregate joined back. A NULL text has a NULL
+    * digest and a NULL id never equals the minimum, so both rows drop, as
+    * an inner join back to a `groupBy` would drop them.
+    */
+  private def batchFirsts(newDocs: DataFrame, idCol: String,
+                          textCol: String): DataFrame =
+    newDocs.withColumn("content_md5", md5(col(textCol).cast("binary")))
+      .filter(col("content_md5").isNotNull)
+      .withColumn("__survivor", min(col(idCol)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("content_md5"))))
       .filter(col(idCol) === col("__survivor")).drop("__survivor")
-      .join(corpusDigests.select(col("content_md5")).distinct(),
-        Seq("content_md5"), "left_anti")
-  }
 
   /** Serialized Bloom filter over a stored digest table — the probe-state
     * companion of `contentDigests`: at 100 TB the digest table is
@@ -384,11 +396,7 @@ object Dedup {
       newDocs: DataFrame, corpusDigests: DataFrame, bloom: Array[Byte],
       idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, () => Unit) = {
-    val hashed = newDocs.withColumn("content_md5", md5(col(textCol).cast("binary")))
-    val firsts = hashed.groupBy(col("content_md5"))
-      .agg(min(col(idCol)).as("__survivor"))
-    val surv = hashed.join(firsts, "content_md5")
-      .filter(col(idCol) === col("__survivor")).drop("__survivor")
+    val surv = batchFirsts(newDocs, idCol, textCol)
       .withColumn("__mc", bloomMightContain(bloom, col("content_md5")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     val novel = surv.filter(!col("__mc")).drop("__mc")
@@ -620,20 +628,6 @@ object Dedup {
       numHashes, bands, shingleSize, idCol, textCol)
   }
 
-  /** `minHashIncremental` against a STORED corpus index (the two frames
-    * from `minHashIndex`, read back from their tables) — the true
-    * steady-state path: per ingest, only the batch is shingled and banded;
-    * the corpus contributes a probe join against its stored band keys and
-    * an id-keyed shingle lookup for candidate verification.
-    *
-    * INVARIANT: `numHashes`/`bands`/`shingleSize` must equal the values the
-    * index was built with. A mismatch never fails on its own — batch band
-    * keys simply stop matching stored ones and near-dups are silently
-    * admitted as novel — so the sampled pre-flight below fails fast
-    * instead: every doc emits every band id and each band_key carries
-    * rowsPerBand `:`-joined values, so a few index rows prove the band
-    * geometry, and one stored shingle proves the shingle width.
-    */
   /** Fail-fast geometry check of a stored MinHash index against the
     * parameters a caller is about to probe (or append) with — factored out
     * so the probe path and the append path enforce the SAME invariant. A
@@ -641,13 +635,14 @@ object Dedup {
     * near-dups are silently admitted; appends would poison the index), so
     * a few sampled rows prove the band geometry and the shingle width
     * instead. Bounded collects: `limit(bands*4)` + `limit(1)`.
-    */
-  /** Geometry checks already proven this session, keyed by the IDENTITY of
-    * the index frames plus the probe parameters: a steady-state loop probes
-    * the same index objects every few minutes, and re-collecting samples
-    * per batch would add two driver round-trips to every ingest for a fact
-    * that cannot change under an object identity that hasn't. A NEW read
-    * of the same storage is a new DataFrame → re-checked.
+    *
+    * Checks already proven this session are memoized, keyed by the
+    * IDENTITY of the index frames plus the probe parameters: a loop that
+    * probes the same index objects every few minutes pays the two sample
+    * jobs once. A NEW read of the same storage is a new DataFrame →
+    * re-checked; a loop that re-reads batch-partitioned state every batch
+    * uses `minHashPreflightDirs` instead, which memoizes per stored
+    * partition.
     *
     * The memo is a WEAK-keyed identity map (DataFrame doesn't override
     * equals), not a set of identity HASH codes: hash codes are reused after
@@ -675,24 +670,10 @@ object Dedup {
     if (memoized) return
     val bandSample = corpusBanded.select(col("band").cast("int"), col("band_key"))
       .limit(bands * 4).collect()
-    if (bandSample.nonEmpty) {
-      val seen = bandSample.map(_.getInt(0)).toSet
-      require(seen.min == 0 && seen.max == bands - 1,
-        s"stored index has band ids ${seen.min}..${seen.max}, expected 0..${bands - 1} " +
-          s"— it was built with a different `bands` than $bands")
-      val rpb = bandSample.head.getString(1).count(_ == ':') + 1
-      require(rpb == numHashes / bands,
-        s"stored band keys carry $rpb signature values, expected ${numHashes / bands} " +
-          s"— the index was built with different numHashes/bands than $numHashes/$bands")
-    }
+    requireBandGeometry(bandSample, numHashes, bands)
     val shingleSample = corpusToks
       .select(explode(col("ts")).as("s")).limit(1).collect()
-    shingleSample.foreach { r =>
-      val width = r.getString(0).split(" ").length
-      require(width == shingleSize,
-        s"stored shingles are $width-grams, expected $shingleSize-grams " +
-          "— the index was built with a different shingleSize")
-    }
+    shingleSample.foreach(r => requireShingleWidth(r.getString(0), shingleSize))
     // only FULLY-checked, non-empty indexes are memoized: an empty sample
     // proves nothing, and the next probe may see appended rows
     if (bandSample.nonEmpty && shingleSample.nonEmpty)
@@ -702,6 +683,122 @@ object Dedup {
       }
   }
 
+  /** Band rows `(band: Int, band_key: String)` sampled from one stored
+    * index: band ids must span 0..bands-1 and every key must carry
+    * numHashes/bands values. An empty sample proves nothing and passes.
+    */
+  private def requireBandGeometry(sample: Seq[org.apache.spark.sql.Row],
+                                  numHashes: Int, bands: Int): Unit =
+    if (sample.nonEmpty) {
+      val seen = sample.map(_.getInt(0)).toSet
+      require(seen.min == 0 && seen.max == bands - 1,
+        s"stored index has band ids ${seen.min}..${seen.max}, expected 0..${bands - 1} " +
+          s"— it was built with a different `bands` than $bands")
+      sample.foreach { r =>
+        val rpb = r.getString(1).count(_ == ':') + 1
+        require(rpb == numHashes / bands,
+          s"stored band keys carry $rpb signature values, expected ${numHashes / bands} " +
+            s"— the index was built with different numHashes/bands than $numHashes/$bands")
+      }
+    }
+
+  private def requireShingleWidth(shingle: String, shingleSize: Int): Unit = {
+    val width = shingle.split(" ").length
+    require(width == shingleSize,
+      s"stored shingles are $width-grams, expected $shingleSize-grams " +
+        "— the index was built with a different shingleSize")
+  }
+
+  /** Stored index partition dirs (`.../batch=<id>`) whose geometry is
+    * proven for a parameter set: dir → (parameters, file listing). An
+    * entry holds only while the dir's listing (file names, sizes and
+    * modification times — read on the driver, no job) is unchanged, so a
+    * rewrite by anyone else is checked again.
+    */
+  private val checkedDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+
+  private def dirListing(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    graft.etl.Load.fsFor(spark, dir).listStatus(p)
+      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+      .sorted.mkString("|")
+  }
+
+  /** Record index partition dirs as proven for these parameters — for a
+    * writer that has just built their rows with them.
+    */
+  private[graft] def markIndexDirsChecked(spark: org.apache.spark.sql.SparkSession,
+                                          dirs: Seq[String], numHashes: Int,
+                                          bands: Int, shingleSize: Int): Unit =
+    dirs.foreach(d =>
+      checkedDirs.put(d, (s"$numHashes|$bands|$shingleSize", dirListing(spark, d))))
+
+  /** `minHashPreflight` for a stored index kept as partition dirs (one
+    * per micro-batch): only dirs not yet proven for these parameters
+    * under their current listing are sampled, with one job per table
+    * over all of them, and the sample takes the first rows of EVERY file
+    * in them, so every dir a probe reads is checked at least once. A
+    * steady loop whose prior dirs are all proven runs no job here. Memo
+    * entries of dirs under the same roots that are no longer listed
+    * (folded or compacted away) are dropped.
+    */
+  private[graft] def minHashPreflightDirs(spark: org.apache.spark.sql.SparkSession,
+                                          toksDirs: Seq[String], bandedDirs: Seq[String],
+                                          numHashes: Int, bands: Int,
+                                          shingleSize: Int): Unit = {
+    val params = s"$numHashes|$bands|$shingleSize"
+    val live = (toksDirs ++ bandedDirs).toSet
+    val roots = live.map(d => d.substring(0, d.lastIndexOf('/') + 1))
+    checkedDirs.keySet.removeIf(k => roots.exists(k.startsWith) && !live(k))
+    def unchecked(dirs: Seq[String]) = dirs.map(d => d -> dirListing(spark, d))
+      .filterNot { case (d, l) => checkedDirs.get(d) == ((params, l)) }
+    val (toksNew, bandedNew) = (unchecked(toksDirs), unchecked(bandedDirs))
+    if (bandedNew.nonEmpty)
+      firstRowsPerFile(spark.read.schema("band INT, band_key STRING")
+          .parquet(bandedNew.map(_._1): _*), bands * 4)
+        .values.foreach(requireBandGeometry(_, numHashes, bands))
+    if (toksNew.nonEmpty)
+      firstRowsPerFile(spark.read.schema("ts ARRAY<STRING>")
+          .parquet(toksNew.map(_._1): _*).filter(size(col("ts")) > 0)
+          .select(element_at(col("ts"), 1)), 1)
+        .values.flatten.foreach(r => requireShingleWidth(r.getString(0), shingleSize))
+    (toksNew ++ bandedNew).foreach { case (d, l) => checkedDirs.put(d, (params, l)) }
+  }
+
+  /** The first `k` rows of every input file of `df`, grouped by file: one
+    * job that reads every row but keeps k per file, so no file's rows
+    * can hide behind another's in a plain `limit`.
+    */
+  private def firstRowsPerFile(df: DataFrame, k: Int)
+      : Map[String, Seq[org.apache.spark.sql.Row]] = {
+    val n = df.columns.length
+    df.withColumn("__file", input_file_name()).rdd.mapPartitions { it =>
+      val taken = scala.collection.mutable.HashMap.empty[String, Int]
+      it.filter { r =>
+        val f = r.getString(n)
+        val t = taken.getOrElse(f, 0)
+        taken(f) = t + 1
+        t < k
+      }
+    }.collect().toSeq.groupBy(_.getString(n))
+  }
+
+  /** `minHashIncremental` against a STORED corpus index (the two frames
+    * from `minHashIndex`, read back from their tables) — the true
+    * steady-state path: per ingest, only the batch is shingled and banded;
+    * the corpus contributes a probe join against its stored band keys and
+    * an id-keyed shingle lookup for candidate verification.
+    *
+    * INVARIANT: `numHashes`/`bands`/`shingleSize` must equal the values the
+    * index was built with. A mismatch never fails on its own — batch band
+    * keys simply stop matching stored ones and near-dups are silently
+    * admitted as novel — so `minHashPreflight` fails fast instead: every
+    * doc emits every band id and each band_key carries rowsPerBand
+    * `:`-joined values, so a few index rows prove the band geometry, and
+    * one stored shingle proves the shingle width.
+    */
   def minHashIncrementalIndexed(newDocs: DataFrame,
                                 corpusToks: DataFrame, corpusBanded: DataFrame,
                                 threshold: Double,
@@ -742,23 +839,26 @@ object Dedup {
                                           threshold: Double,
                                           numHashes: Int, bands: Int, shingleSize: Int,
                                           idCol: String, textCol: String): DataFrame = {
+    minHashPreflight(corpusToks, corpusBanded, numHashes, bands, shingleSize)
     val (nToks, nBand, _) = minHashSide(newDocs, numHashes, bands, shingleSize,
       idCol, textCol, org.apache.spark.storage.StorageLevel.NONE)
     minHashProbePairs(nToks, nBand, corpusToks, corpusBanded, threshold,
-      numHashes, bands, shingleSize, broadcastBatch = false)
+      broadcastBatch = false)
   }
 
   /** The probe over an ALREADY-SIGNED batch (`minHashSide`'s frames), for
-    * callers that own the signature. `broadcastBatch` broadcasts the batch
-    * side into every band and verify join, so the corpus side is never
-    * shuffled; the caller decides it from the batch's measured size.
+    * callers that own the signature and have proven the stored index's
+    * geometry (`minHashPreflight` / `minHashPreflightDirs`).
+    * `broadcastBatch` broadcasts the batch side into every band join, and
+    * the distinct corpus candidate pairs into the stored-shingle join, so
+    * the corpus side is streamed, never shuffled, and only its candidate
+    * rows meet a shingle set; the caller decides it from the batch's
+    * measured size.
     */
   private[graft] def minHashProbePairs(nToks: DataFrame, nBand: DataFrame,
                                        corpusToks: DataFrame, corpusBanded: DataFrame,
                                        threshold: Double,
-                                       numHashes: Int, bands: Int, shingleSize: Int,
                                        broadcastBatch: Boolean): DataFrame = {
-    minHashPreflight(corpusToks, corpusBanded, numHashes, bands, shingleSize)
     def batchSide(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     def bandJoin(a: DataFrame, b: DataFrame, extra: Column) = a.as("a")
       .join(b.as("b"),
@@ -768,13 +868,16 @@ object Dedup {
       .distinct()
     val candCorpus = bandJoin(batchSide(nBand), corpusBanded, lit(true))
     val candEarlier = bandJoin(nBand, batchSide(nBand), col("b.id") < col("a.id"))
-    def verify(cand: DataFrame, toksJ: DataFrame) = cand
-      .join(batchSide(nToks.select(col("id").as("i"), col("ts").as("ts_a"))), "i")
-      .join(toksJ.select(col("id").as("j"), col("ts").as("ts_b")), "j")
+    def batchToks(id: String, ts: String) =
+      batchSide(nToks.select(col("id").as(id), col("ts").as(ts)))
+    def verify(pairs: DataFrame) = pairs
+      .join(batchToks("i", "ts_a"), "i")
       .select(col("i"), col("j"),
         round(jaccard(col("ts_a"), col("ts_b")), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    verify(candCorpus, corpusToks).unionByName(verify(candEarlier, batchSide(nToks)))
+    verify(corpusToks.select(col("id").as("j"), col("ts").as("ts_b"))
+        .join(batchSide(candCorpus), "j"))
+      .unionByName(verify(candEarlier.join(batchToks("j", "ts_b"), "j")))
   }
 
   /** Near-duplicate CLUSTERS: connected components over the verified

@@ -605,7 +605,12 @@ object Relational {
         freq.select(col("v").cast("double").as("vd"))
           .stat.approxQuantile("vd", probs, 0.001)
           .toSeq.filterNot(_.isNaN).distinct.sorted
-      } catch { case _: Exception => Seq.empty }
+      } catch { case scala.util.control.NonFatal(e) =>
+        // still exact, but every row lands in one window partition
+        System.err.println("[relational] WARNING: approxQuantile bucket " +
+          s"bounds failed ($e); the cumulative sums run as one bucket")
+        Seq.empty
+      }
     // One cast, evaluated once, referenced by every boundary comparison —
     // not one cast per boundary inside the fold.
     val pidExpr = bounds

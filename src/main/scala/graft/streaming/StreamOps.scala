@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 import graft.ops.{EventOps, Exact}
 
 /** Structured-Streaming surface (SURVEY §2.8): the same event-time operators
@@ -457,17 +457,36 @@ object StreamOps {
     * identical state wherever the previous attempt died. Reads pin the
     * state's known schema, so they launch no schema-inference job.
     */
-  private final class BatchState(spark: SparkSession, batchId: Long) {
+  private final class BatchState(spark: SparkSession, val batchId: Long) {
     def hasData(p: String): Boolean =
       graft.etl.Load.fsFor(spark, p).exists(new org.apache.hadoop.fs.Path(p))
+    /** The prior `batch=<id>` dirs under `root` (this batch's excluded),
+      * listed on the driver, so a reader knows which partitions it reads. */
+    def priorDirs(root: String): Seq[String] =
+      if (!hasData(root)) Nil
+      else graft.etl.Load.fsFor(spark, root)
+        .listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
+        .map(_.getPath.getName)
+        .filter(n => n.startsWith("batch=") && n != s"batch=$batchId")
+        .sorted.map(n => s"$root/$n")
+    def readDirsOr(dirs: Seq[String], schema: StructType): DataFrame =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else spark.read.schema(schema).parquet(dirs: _*)
     def readPriorOr(root: String, schema: StructType): DataFrame =
-      if (!hasData(root)) spark.createDataFrame(java.util.List.of[Row](), schema)
-      else spark.read.schema(schema.add("batch", LongType)).parquet(root)
-        .filter(col("batch") =!= batchId).drop("batch")
+      readDirsOr(priorDirs(root), schema)
     def overwriteOwn(df: DataFrame, root: String): Unit =
       df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$root/batch=$batchId")
   }
+
+  /** `df` in at most as many partitions as the micro-batch it derives
+    * from. The exact step's keyed shuffle would otherwise set the
+    * partition count of a batch's cached frames, and with it the file
+    * count of every state table the batch writes: AQE does not coalesce
+    * the shuffles of a cached plan.
+    */
+  private def batchSized(df: DataFrame, batch: DataFrame): DataFrame =
+    df.coalesce(batch.queryExecution.toRdd.getNumPartitions)
 
   /** The steady-state corpus-ingest loop as a STREAMING sink: every
     * micro-batch is (1) exact-deduped against the stored digest set,
@@ -477,10 +496,21 @@ object StreamOps {
     * survivors land in `stateDir/out/`, and (5) the survivors'
     * digests/shingles/bands are appended to the stored state so the NEXT
     * batch dedups against them — the index rows come from the batch's own
-    * signature. When the signed batch's measured size is within the
-    * session's `spark.sql.autoBroadcastJoinThreshold` the batch side is
-    * broadcast into every band and verify join, so the corpus side is
-    * never shuffled; otherwise (or at -1) the joins shuffle. Every cache a
+    * signature.
+    *
+    * Per-batch shape. The exact step is one keyed pass over the batch and
+    * an anti join against the stored digests, with no aggregate over the
+    * stored state. One action fills the batch's caches (exact survivors,
+    * shingle sets, band rows). When the signed batch's measured size is
+    * within the session's `spark.sql.autoBroadcastJoinThreshold`, the batch
+    * side is broadcast into every band join and the corpus candidate pairs
+    * into the stored-shingle join, so the stored index is streamed, never
+    * shuffled; the flagged ids are then collected once and filter the
+    * survivors and the appended index rows. Otherwise (or at -1) the joins
+    * shuffle and the flagged ids stay a distributed anti join. The stored
+    * index's geometry is checked once per stored partition and parameter
+    * set (`Dedup.minHashPreflightDirs`): partitions this sink wrote in this
+    * JVM count as checked, so a steady batch samples nothing. Every cache a
     * batch creates is released before it returns.
     *
     * State layout — every table batch-partitioned (`.../batch=<id>/`):
@@ -539,43 +569,68 @@ object StreamOps {
                                 shingleSize: Int, idCol: String,
                                 textCol: String): Unit = {
     import graft.ops.Dedup
+    val spark = batch.sparkSession
     val digestsRoot = s"$stateDir/digests"
     val toksRoot = s"$stateDir/index/toks"
     val bandedRoot = s"$stateDir/index/banded"
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
     val priorDigests = st.readPriorOr(digestsRoot,
       Dedup.contentDigests(batch.limit(0), textCol).schema)
-    val exact = Dedup.exactIncremental(batch, priorDigests, idCol, textCol)
+    val exact = batchSized(
+      Dedup.exactIncremental(batch, priorDigests, idCol, textCol), batch)
       .persist(mem)
     val (nToks, nBand, releaseSigned) = Dedup.minHashSide(exact, numHashes,
       bands, shingleSize, idCol, textCol, mem)
-    // one job fills all three caches (banded reads toks reads exact), so
-    // the broadcast gate below sees measured sizes, not plan estimates
-    nBand.count()
-    val limit = batch.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    // one action fills all three caches (banded reads toks reads exact),
+    // so the broadcast gate below sees measured sizes, not plan estimates;
+    // a plain scan, not count(), whose aggregate would add an exchange
+    nBand.foreachPartition((rows: Iterator[Row]) => rows.foreach(_ => ()))
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
     // a fresh plan over the cache re-reads its stats (sizes are >= 0, so a
     // threshold of -1 never fits)
     def fits(df: DataFrame) =
       df.select(col("*")).queryExecution.optimizedPlan.stats.sizeInBytes <= limit
     val broadcastBatch = fits(nToks) && fits(nBand)
-    // the bootstrap batch probes an empty delta index (in-batch near-dups
-    // are caught by the probe's NEW×earlier-NEW leg)
-    val indexes = (st.readPriorOr(toksRoot, nToks.schema),
-      st.readPriorOr(bandedRoot, nBand.schema)) +: baseIndexes
-    def batchSide(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
-    // flagged ids are distinct batch ids, so they fit wherever the batch does
+    // the delta index is read as the listed prior dirs, so the geometry
+    // check covers exactly what the probe reads; the bootstrap batch probes
+    // an empty delta index (in-batch near-dups are caught by the probe's
+    // NEW×earlier-NEW leg)
+    val (toksDirs, bandedDirs) = (st.priorDirs(toksRoot), st.priorDirs(bandedRoot))
+    Dedup.minHashPreflightDirs(spark, toksDirs, bandedDirs, numHashes, bands,
+      shingleSize)
+    baseIndexes.foreach { case (toks, banded) =>
+      Dedup.minHashPreflight(toks, banded, numHashes, bands, shingleSize)
+    }
+    val indexes = (st.readDirsOr(toksDirs, nToks.schema),
+      st.readDirsOr(bandedDirs, nBand.schema)) +: baseIndexes
     val flagged = indexes.map { case (toks, banded) =>
       Dedup.minHashProbePairs(nToks, nBand, toks, banded, threshold,
-        numHashes, bands, shingleSize, broadcastBatch).select(col("i").as(idCol))
+        broadcastBatch).select(col("i").as(idCol))
     }.reduce(_ unionByName _).distinct()
-    val survivors = exact.join(batchSide(flagged), Seq(idCol), "left_anti")
-      .persist(mem)
+    // survivors and the index rows kept for them. Flagged ids are distinct
+    // batch ids, so they fit wherever the batch does: collected once, they
+    // filter all three frames with no further join. A NULL id is never
+    // flagged and survives, as under the anti join (the exact step drops
+    // NULL ids, so none reach here).
+    val (survivors, kept, releaseSurvivors) =
+      if (broadcastBatch) {
+        val ids = flagged.collect().filterNot(_.isNullAt(0)).map(_.get(0))
+        def novel(df: DataFrame, c: String) =
+          if (ids.isEmpty) df else df.filter(col(c).isNull || !col(c).isin(ids: _*))
+        (novel(exact, idCol), novel(_: DataFrame, "id"), () => ())
+      } else {
+        val surv = exact.join(flagged, Seq(idCol), "left_anti").persist(mem)
+        val keptIds = surv.select(col(idCol).as("id"))
+        (surv, (df: DataFrame) => df.join(keptIds, Seq("id"), "left_semi"),
+          () => { surv.unpersist(); () })
+      }
     st.overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
     st.overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
-    val keptIds = batchSide(survivors.select(col(idCol).as("id")))
-    st.overwriteOwn(nToks.join(keptIds, Seq("id"), "left_semi"), toksRoot)
-    st.overwriteOwn(nBand.join(keptIds, Seq("id"), "left_semi"), bandedRoot)
-    survivors.unpersist()
+    st.overwriteOwn(kept(nToks), toksRoot)
+    st.overwriteOwn(kept(nBand), bandedRoot)
+    Dedup.markIndexDirsChecked(spark, Seq(toksRoot, bandedRoot)
+      .map(r => s"$r/batch=${st.batchId}"), numHashes, bands, shingleSize)
+    releaseSurvivors()
     releaseSigned()
     exact.unpersist()
     ()
@@ -660,7 +715,7 @@ object StreamOps {
         Dedup.exactIncrementalBloomWithHandle(batch, priorDigests,
           out.toByteArray, idCol, textCol)
       }
-    val survivors = survRaw.persist(mem)
+    val survivors = batchSized(survRaw, batch).persist(mem)
     overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
     overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
     // this batch's own sketch — built from the just-written digests so

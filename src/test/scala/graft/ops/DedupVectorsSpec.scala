@@ -860,6 +860,38 @@ class DedupVectorsSpec extends SparkSpec {
     // (be pruned) — proven by the survivor set already excluding 20
   }
 
+  test("exactIncremental over a corpus with repeated digests ≡ the naive " +
+      "form, NULL ids and texts, ties and reused ids included; the bloom " +
+      "path agrees") {
+    val corpus = Seq[(java.lang.Long, String)](
+      (10L, "alpha beta gamma"), (11L, "alpha beta gamma"), (12L, "alpha beta gamma"),
+      (13L, "delta epsilon zeta"), (13L, "delta epsilon zeta"), (null, "eta theta iota"))
+      .toDF("doc_id", "text").withColumn("lang", lit("en"))
+    val batch = Seq[(java.lang.Long, String)](
+      (20L, "alpha beta gamma"),                           // corpus dup, three times over
+      (21L, "brand new text one"), (23L, "brand new text one"), // 21 wins
+      (22L, "brand new text two"), (22L, "brand new text two"), // tie: both stay
+      (24L, "eta theta iota"),                             // corpus text under a NULL id
+      (null, "a text without an id"), (25L, null),         // both drop
+      (26L, "kappa lambda mu"), (26L, "nu xi omicron"))    // one id, two texts: both stay
+      .toDF("doc_id", "text").withColumn("lang", lit("en"))
+    // naive: per text, the rows holding the minimum non-NULL id, unless
+    // the corpus holds the text at all
+    val corpusTexts = corpus.select("text").as[String].collect().toSet
+    val rows = batch.select("doc_id", "text").as[(Option[Long], Option[String])].collect()
+    val want = rows.collect { case (Some(id), Some(t)) => (id, t) }
+      .groupBy(_._2).values.flatMap { g => g.filter(_._1 == g.map(_._1).min) }
+      .filterNot(r => corpusTexts(r._2)).map(_._1).toSeq.sorted
+    assert(want == Seq(21L, 22L, 22L, 26L, 26L))
+    val digests = Dedup.contentDigests(corpus)
+    val got = Dedup.exactIncremental(batch, digests).select("doc_id").as[Long]
+      .collect().toSeq.sorted
+    assert(got == want)
+    val bloom = Dedup.digestBloom(digests, expectedItems = 8, numBits = 64)
+    assert(Dedup.exactIncrementalBloom(batch, digests, bloom).select("doc_id")
+      .as[Long].collect().toSeq.sorted == want)
+  }
+
   test("digestBloom: production sizing ABOVE the optimizer bloom conf caps " +
       "builds (confs raised around the agg) and the caps are restored after") {
     val digests = Dedup.contentDigests(

@@ -533,6 +533,171 @@ class StreamOpsSpec extends SparkSpec {
       s"threshold -1 run probe joins: $gatedJoins")
   }
 
+  private def dedupBatchDf(file: (String, Seq[String])): DataFrame = {
+    import spark.implicits._
+    spark.read.schema("doc_id BIGINT, lang STRING, text STRING").json(file._2.toDS())
+  }
+
+  test("incrementalDedupSink: geometry mismatches fail loudly — a foreign " +
+      "index on the first batch, a checked partition rewritten between batches") {
+    def assertMismatch(run: => Unit): Unit = {
+      val e = intercept[Exception](run)
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(messages.contains("was built with"), messages)
+    }
+    // a state dir whose index was written with other bands and shingleSize
+    val foreign = tmpDir("dedup-geom-foreign")
+    StreamOps.dedupDocumentBatch(dedupBatchDf(dedupFiles(0)), 100L, foreign,
+      bands = 4, shingleSize = 2)
+    val src = tmpDir("docs-geom-src")
+    writeDedupFile(src, dedupFiles(1))
+    assertMismatch(runDedupSink(src, foreign, tmpDir("dedup-geom-ckpt")))
+    // a partition the sink wrote and checked, rewritten with the wrong
+    // geometry before the next batch
+    val state = tmpDir("dedup-geom-state")
+    val ckpt = tmpDir("dedup-geom-ckpt2")
+    val src2 = tmpDir("docs-geom-src2")
+    dedupFiles.take(2).foreach(writeDedupFile(src2, _))
+    runDedupSink(src2, state, ckpt)
+    val (toks, banded) = Dedup.minHashIndex(dedupBatchDf(dedupFiles(0)), bands = 4,
+      shingleSize = 2, storage = org.apache.spark.storage.StorageLevel.NONE)
+    toks.write.mode("overwrite").parquet(s"$state/index/toks/batch=0")
+    banded.write.mode("overwrite").parquet(s"$state/index/banded/batch=0")
+    writeDedupFile(src2, dedupFiles(2))
+    assertMismatch(runDedupSink(src2, state, ckpt))
+  }
+
+  test("incrementalDedupSink: a steady batch runs at most 20 jobs and " +
+      "samples no index partition already checked") {
+    val state = tmpDir("dedup-jobs-state")
+    dedupFiles.take(2).zipWithIndex.foreach { case (f, i) =>
+      StreamOps.dedupDocumentBatch(dedupBatchDf(f), i.toLong, state)
+    }
+    // the geometry sample is the only job the batch starts from Dedup
+    def samples(jobs: Seq[org.apache.spark.scheduler.SparkListenerJobStart]) =
+      jobs.filter(_.stageInfos.exists(_.name.contains("Dedup.scala")))
+    // same state under another path: its partitions are unchecked
+    val copy = tmpDir("dedup-jobs-copy")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    org.apache.hadoop.fs.FileUtil.copy(local, new org.apache.hadoop.fs.Path(state),
+      local, new org.apache.hadoop.fs.Path(copy), false, conf)
+    val copied = s"$copy/${new java.io.File(state).getName}"
+    val (_, steady) = jobsDuring(
+      StreamOps.dedupDocumentBatch(dedupBatchDf(dedupFiles(2)), 2L, state))
+    val (_, unchecked) = jobsDuring(
+      StreamOps.dedupDocumentBatch(dedupBatchDf(dedupFiles(2)), 2L, copied))
+    assert(steady.size <= 20, s"steady batch ran ${steady.size} jobs")
+    assert(samples(steady).isEmpty,
+      s"steady batch sampled checked partitions: ${samples(steady).map(_.jobId)}")
+    assert(samples(unchecked).nonEmpty, "unchecked partitions were not sampled")
+    assert(dedupOutIds(state) == Set(1L, 2L, 13L, 23L))
+  }
+
+  test("incrementalDedupSink: NULL ids, reused ids, in-batch duplicate text " +
+      "and a prior digest table with repeated rows — survivors and state " +
+      "equal the naive definition, with and without the broadcast gate") {
+    import org.apache.spark.sql.Row
+    val A = "the quick brown fox jumps over the lazy dog tonight"
+    val B = "completely different text about spark engines at scale today"
+    val C = "a third unrelated sentence concerning warehouse loading jobs"
+    val F = "novel content never seen in the corpus before now"
+    val H = "this text was already stored twice in the digest table"
+    def near(t: String, w: String) = t.split(" ").init.mkString(" ") + " " + w
+    def doc(id: Any, text: Any) = {
+      def js(v: Any) = if (v == null) "null" else v match {
+        case s: String => "\"" + s + "\""
+        case o => o.toString
+      }
+      s"""{"doc_id":${js(id)},"lang":"en","text":${js(text)}}"""
+    }
+    val files = Seq(
+      "u1.json" -> Seq(doc(1, A), doc(2, B), doc(2, C),
+        doc(null, "rows without an id carry text nobody repeats"),
+        doc(3, A), doc(4, "tied rows share both their id and their exact text"),
+        doc(4, "tied rows share both their id and their exact text"), doc(5, null)),
+      "u2.json" -> Seq(doc(11, A), doc(12, near(B, "tomorrow")), doc(13, F),
+        doc(14, near(F, "yesterday")), doc(null, "yet another sentence whose id field is missing"),
+        doc(15, H), doc(17, F)),
+      "u3.json" -> Seq(doc(21, B), doc(22, near(C, "tasks")), doc(4, near(F, "later")),
+        doc(1, "brand new text arriving under a reused identifier here"),
+        doc(23, "absolutely fresh material arriving in the third batch"),
+        doc(23, "and a second fresh text sharing the identifier twenty three")))
+    def md5(t: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(t.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    val seeded = Seq(md5(H), md5(H))
+    // the naive sink: digests, shingle sets and band keys of each batch's
+    // exact survivors come from Dedup.minHashIndex; everything else is
+    // driver-side collections
+    type Toks = Seq[(Long, Set[String])]
+    type Bands = Seq[(Long, Int, String)]
+    def jaccard(a: Set[String], b: Set[String]) =
+      BigDecimal((a & b).size.toDouble / (a | b).size)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val (wantOut, wantDigests, wantToks, wantBands) = files.foldLeft(
+        (Seq.empty[Row], seeded, Seq.empty[(Long, Set[String])], Seq.empty[(Long, Int, String)])) {
+      case ((out, digests, toks, bands), (_, lines)) =>
+        val rows = dedupBatchDf("" -> lines).collect().toSeq
+          .filter(r => !r.isNullAt(2))
+        val firsts = rows.groupBy(_.getString(2)).values.flatMap { g =>
+          val ids = g.filterNot(_.isNullAt(0)).map(_.getLong(0))
+          if (ids.isEmpty) Nil else g.filter(r => !r.isNullAt(0) && r.getLong(0) == ids.min)
+        }.toSeq
+        val exact = firsts.filterNot(r => digests.contains(md5(r.getString(2))))
+        val (t, b) = Dedup.minHashIndex(spark.createDataFrame(
+            java.util.Arrays.asList(exact: _*), dedupBatchDf("" -> Nil).schema),
+          storage = org.apache.spark.storage.StorageLevel.NONE)
+        val nToks: Toks = t.collect().toSeq.map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
+        val nBands: Bands = b.collect().toSeq.map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+        def verified(pairs: Set[(Long, Long)], other: Toks) = pairs.collect {
+          case (i, j) if nToks.exists { case (a, ta) => a == i &&
+            other.exists { case (c, tb) => c == j && jaccard(ta, tb) >= 0.5 } } => i
+        }
+        def cands(other: Bands, keep: (Long, Long) => Boolean) = (for {
+          (i, band, key) <- nBands; (j, band2, key2) <- other
+          if band == band2 && key == key2 && keep(i, j)
+        } yield (i, j)).toSet
+        val flagged = verified(cands(bands, (_, _) => true), toks) ++
+          verified(cands(nBands, (i, j) => j < i), nToks)
+        val kept = exact.filterNot(r => flagged(r.getLong(0)))
+        val keptIds = kept.map(_.getLong(0)).toSet
+        (out ++ kept, digests ++ kept.map(r => md5(r.getString(2))),
+          toks ++ nToks.filter(x => keptIds(x._1)), bands ++ nBands.filter(x => keptIds(x._1)))
+    }
+    // the naive definition really meets every case: 3 loses to 1, both
+    // tied 4s stay, 12 is a near-dup of one of the two texts stored under
+    // id 2, 14 of 13, the reused id 4 of 13, 15 hits the seeded digests;
+    // 22 is a near-dup of the other text under id 2, but that id is signed
+    // over both its texts, so no band matches and 22 stays
+    assert(wantOut.map(_.getLong(0)).sorted ==
+      Seq(1L, 1L, 2L, 2L, 4L, 4L, 13L, 22L, 23L, 23L))
+    def multiset[T](xs: Seq[T]) = xs.groupBy(identity).map { case (k, v) => k -> v.size }
+    Seq(None, Some("-1")).foreach { threshold =>
+      val src = tmpDir("docs-odd-src")
+      val state = tmpDir("dedup-odd-state")
+      files.foreach(writeDedupFile(src, _))
+      spark.createDataFrame(java.util.Arrays.asList(seeded.map(Row(_)): _*),
+          Dedup.contentDigests(dedupBatchDf("" -> Nil)).schema)
+        .write.parquet(s"$state/digests/batch=90")
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val saved = spark.conf.getOption(key)
+      threshold.foreach(spark.conf.set(key, _))
+      try runDedupSink(src, state, tmpDir("dedup-odd-ckpt"))
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      def read(t: String) = spark.read.parquet(s"$state/$t").drop("batch").collect().toSeq
+      val label = s"threshold ${threshold.getOrElse("default")}"
+      assert(multiset(read("out").map(r => r.getAs[Any]("doc_id") ->
+          r.getAs[String]("text"))) ==
+        multiset(wantOut.map(r => r.get(0) -> r.getString(2))), label)
+      assert(multiset(read("digests").map(_.getString(0))) == multiset(wantDigests), label)
+      assert(multiset(read("index/toks").map(r => r.getAs[Long]("id") ->
+        r.getAs[Seq[String]]("ts").toSet)) == multiset(wantToks), label)
+      assert(multiset(read("index/banded").map(r => (r.getAs[Long]("id"),
+        r.getAs[Int]("band"), r.getAs[String]("band_key")))) == multiset(wantBands), label)
+    }
+  }
+
   test("bloomDedupSink: streamed survivors ≡ the serial exactIncremental " +
       "closure, sketch state OR-folds across batches, replay-idempotent") {
     val src = tmpDir("bloom-src")
