@@ -208,7 +208,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
         }

@@ -62,28 +62,6 @@ final class Load(warehouse: String) {
     Load.parquetRowCount(df.sparkSession, tablePath(name))
   }
 
-  /** Bucketed APPEND: add a batch to an existing bucketed table, keeping
-    * the bucket spec (Spark validates it — an append with a different
-    * bucketBy fails instead of silently mixing layouts). This is the index
-    * -maintenance write: per-ingest batches land pre-shuffled on the same
-    * key as the base table, so probe joins stay exchange-free as the table
-    * grows. Returns the EXACT rows appended (footer-count delta around the
-    * commit — same retry-proof accounting as `writeBucketed`; two
-    * metadata-only passes).
-    */
-  def appendBucketed(df: DataFrame, name: String, buckets: Int,
-                     keys: Seq[String]): Long = {
-    require(keys.nonEmpty, "bucketing needs at least one key column")
-    val before = Load.parquetRowCount(df.sparkSession, tablePath(name))
-    df.write
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .option("path", tablePath(name))
-      .mode(SaveMode.Append)
-      .saveAsTable(name)
-    Load.parquetRowCount(df.sparkSession, tablePath(name)) - before
-  }
-
   /** K1 at scale: refresh of a PARTITIONED table. Rows land in one
     * directory per partition value (`part=.../`), so downstream readers get
     * partition pruning for free. `targetPartitions` repartitions by the
@@ -163,8 +141,8 @@ object Load {
     * not introduce an exchange ABOVE the metric point (fullRefresh and
     * fullRefreshPartitioned observe atop the final frame, directly under the
     * write). Bucketed writes CANNOT satisfy that (the bucketing spec inserts
-    * its own shuffle above the plan), which is why `writeBucketed`/
-    * `appendBucketed` count committed parquet footers instead of observing.
+    * its own shuffle above the plan), which is why `writeBucketed`
+    * counts committed parquet footers instead of observing.
     * Returns the rows that flowed into the write.
     */
   private[etl] def writeCounted(df: DataFrame, write: DataFrame => Unit): Long = {

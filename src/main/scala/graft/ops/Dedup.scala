@@ -550,54 +550,6 @@ object Dedup {
     release()
   }
 
-  /** Bucketed-table variant of the index lifecycle, for corpora where the
-    * probe join itself is the bottleneck: the banded table is written
-    * through `Load.writeBucketed` bucketed by (band, band_key) — exactly
-    * the probe join's keys, so the CORPUS side of every future band join
-    * is read pre-shuffled (zero exchange; the batch side alone shuffles) —
-    * and the shingle table by id for the verify join-back. Appends go
-    * through `Load.appendBucketed`, which keeps the bucket spec.
-    * Probe via `spark.table(s"${name}_toks")` / `spark.table(s"${name}_banded")`.
-    */
-  def writeMinHashIndexBucketed(load: graft.etl.Load, docs: DataFrame,
-                                name: String, buckets: Int,
-                                numHashes: Int = 16, bands: Int = 8,
-                                shingleSize: Int = 3,
-                                idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val (toks, banded, release) = minHashSide(docs, numHashes, bands, shingleSize,
-      idCol, textCol, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    load.writeBucketed(toks, s"${name}_toks", buckets, Seq("id"))
-    load.writeBucketed(banded, s"${name}_banded", buckets, Seq("band", "band_key"))
-    release()
-  }
-
-  /** Bucketed-index write from PREBUILT index frames — the streaming fold
-    * path, whose deltas are already shingled and banded (re-deriving them
-    * from text would re-pay the dominant cost the deltas exist to avoid).
-    */
-  private[graft] def writeMinHashIndexBucketedFrames(load: graft.etl.Load,
-      toks: DataFrame, banded: DataFrame, name: String, buckets: Int): Unit = {
-    load.writeBucketed(toks, s"${name}_toks", buckets, Seq("id"))
-    load.writeBucketed(banded, s"${name}_banded", buckets, Seq("band", "band_key"))
-    ()
-  }
-
-  /** Bucketed twin of `appendToMinHashIndex`. */
-  def appendToMinHashIndexBucketed(load: graft.etl.Load, survivors: DataFrame,
-                                   name: String, buckets: Int,
-                                   numHashes: Int = 16, bands: Int = 8,
-                                   shingleSize: Int = 3,
-                                   idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = survivors.sparkSession
-    minHashPreflight(spark.table(s"${name}_toks"), spark.table(s"${name}_banded"),
-      numHashes, bands, shingleSize)
-    val (toks, banded, release) = minHashSide(survivors, numHashes, bands,
-      shingleSize, idCol, textCol, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    load.appendBucketed(toks, s"${name}_toks", buckets, Seq("id"))
-    load.appendBucketed(banded, s"${name}_banded", buckets, Seq("band", "band_key"))
-    release()
-  }
-
   /** X3 at steady state: MinHash-LSH near-dup detection for a NEW batch
     * against an existing corpus. Band buckets join NEW×CORPUS and
     * NEW×(earlier NEW) — never CORPUS×CORPUS; that work happened when the

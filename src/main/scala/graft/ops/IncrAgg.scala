@@ -71,7 +71,7 @@ object IncrAgg {
     * (same contract as the streaming dedup state dirs).
     */
   def writeState(state: DataFrame, root: String, batchId: Long): Unit =
-    state.write.mode("overwrite").parquet(s"$root/batch=$batchId")
+    state.write.mode("overwrite").parquet(BatchDirs.dir(root, batchId))
 
   /** All stored partials; the inferred `batch` partition column is dropped
     * (merge treats every batch alike).
@@ -96,9 +96,7 @@ object IncrAgg {
     * so the in-flight dir is never absorbed — otherwise a crash after the
     * fold but before the checkpoint commit would replay the batch into a
     * fresh dir while its rows also live inside the folded partial,
-    * double-counting them. (Same in-flight-exclusion rule as the dedup
-    * sink's delta fold, but load-bearing here: duplicated aggregate rows
-    * are corruption, not just wasted probe work.)
+    * double-counting them.
     */
   def foldState(spark: SparkSession, root: String, keys: Seq[String],
                 before: Long = Long.MaxValue): Unit =
@@ -122,14 +120,8 @@ object IncrAgg {
                                  before: Long)
                                 (combine: DataFrame => DataFrame): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    def foldable() = fs.listStatus(rootPath).filter { s =>
-      val n = s.getPath.getName
-      s.isDirectory && n.startsWith("batch=") &&
-        n.stripPrefix("batch=").forall(_.isDigit) &&
-        n.stripPrefix("batch=").toLong < before
-    }
+    val fs = graft.etl.Load.fsFor(spark, root)
+    def foldable() = BatchDirs.ids(spark, root)(_ < before)
     val staging = new org.apache.hadoop.fs.Path(root + "/.fold_staging")
     // The commit marker is a MANIFEST of exactly the dir names the staged
     // fold covers (written after the parquet commit, so its existence
@@ -142,10 +134,10 @@ object IncrAgg {
       val dirs = foldable()
       if (dirs.length <= 1) return // nothing to collapse
       val folded = combine(spark.read.option("basePath", root)
-        .parquet(dirs.map(_.getPath.toString): _*))
+        .parquet(dirs.map(BatchDirs.dir(root, _)): _*))
       folded.write.mode("overwrite").parquet(staging.toString)
       val out = fs.create(manifest, true)
-      out.write(dirs.map(_.getPath.getName).sorted.mkString("\n").getBytes("UTF-8"))
+      out.write(dirs.map(BatchDirs.name).sorted.mkString("\n").getBytes("UTF-8"))
       out.close()
     }
     val covered = {
@@ -158,17 +150,40 @@ object IncrAgg {
     // a silently failed staging→batch=0 swap after the covered dirs were
     // deleted would leave the folded partials invisible (dot-prefixed) and
     // under-count every read until some later fold retries. Fail loudly.
-    foldable().filter(s => covered.contains(s.getPath.getName))
-      .foreach { s =>
-        require(fs.delete(s.getPath, true),
-          s"foldStateWith: delete of covered batch dir ${s.getPath} failed")
+    foldable().filter(id => covered(BatchDirs.name(id))).map(BatchDirs.dir(root, _))
+      .foreach { d =>
+        require(fs.delete(new org.apache.hadoop.fs.Path(d), true),
+          s"foldStateWith: delete of covered batch dir $d failed")
       }
-    val dest = new org.apache.hadoop.fs.Path(root + "/batch=0")
+    val dest = new org.apache.hadoop.fs.Path(BatchDirs.dir(root, 0L))
     require(fs.rename(staging, dest),
       s"foldStateWith: staging→$dest swap failed — folded state would be " +
         "invisible while its covered batches are already deleted")
     require(fs.delete(new org.apache.hadoop.fs.Path(dest, ".fold_ids"), false),
       s"foldStateWith: manifest cleanup under $dest failed")
     ()
+  }
+}
+
+/** The `batch=<id>` layout every batch-partitioned state table shares
+  * (IncrAgg and Ivm partials, every streaming sink's state): one dir per
+  * ingest batch, named by its id. The one place that names and lists them.
+  */
+private[graft] object BatchDirs {
+  private val Named = """batch=(\d+)""".r
+
+  def name(id: Long): String = s"batch=$id"
+  def dir(root: String, id: Long): String = s"$root/${name(id)}"
+
+  /** Ids of the `batch=<digits>` dirs under `root` that pass `keep`, in
+    * ascending order; none when `root` does not exist. Listed on the
+    * driver, no job.
+    */
+  def ids(spark: SparkSession, root: String)(keep: Long => Boolean): Seq[Long] = {
+    val fs = graft.etl.Load.fsFor(spark, root)
+    val p = new org.apache.hadoop.fs.Path(root)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case Named(id) => id.toLong }.filter(keep).sorted
   }
 }

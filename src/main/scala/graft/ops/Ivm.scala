@@ -139,16 +139,6 @@ object Ivm {
 
   // ------------------------------------------ stored delta-state lifecycle
 
-  /** Append one batch's view-delta partials under `root/batch=<id>` —
-    * the IncrAgg state layout (overwrite-own-dir ⇒ idempotent crash
-    * replay), holding `viewPartial` rows. Unlike IncrAgg's partials these
-    * are SIGNED: a batch's net effect on a group can be n_rows = 0 with
-    * sum_v ≠ 0 (a pure value update), which is a real pending delta, not
-    * a no-op.
-    */
-  def writeViewDelta(delta: DataFrame, root: String, batchId: Long): Unit =
-    delta.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-
   /** All stored delta partials (the `delta` argument `mergeView` wants). */
   def readViewDeltas(spark: org.apache.spark.sql.SparkSession,
                      root: String): DataFrame =

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.ops.{EventOps, Exact}
 
 /** Structured-Streaming surface (SURVEY §2.8): the same event-time operators
@@ -353,6 +353,79 @@ object StreamOps {
         unix_timestamp(col("click_ts")).as("click_epoch"))
   }
 
+  /** The driver every `foreachBatch` sink here runs on — the streaming
+    * counterpart of `graft.ops.Iterate.run`. `StateSink.sink` is the only
+    * `foreachBatch` wiring in the file; `StateSink.run` hands one
+    * micro-batch its state handle and, in a `finally`, releases every
+    * cache the step registered (`cache`, `onEnd`), latest first — a batch
+    * that throws leaks nothing either.
+    *
+    * The state contract, written once for every sink. State is one
+    * `batch=<id>` dir per micro-batch under each state root
+    * (`graft.ops.BatchDirs`). EXACTLY-ONCE under restart follows by
+    * construction, not from marker files: foreachBatch re-delivers the
+    * last uncommitted batch id after a crash, batch ids are
+    * checkpoint-stable, and a step
+    *  - reads prior state only from dirs OTHER than its own
+    *    (`priorDirs`, `readPrior`): a half-committed previous attempt
+    *    cannot poison its own recomputation — reading its own digests back
+    *    would kill every row as a "duplicate" and overwrite good output
+    *    with nothing;
+    *  - writes only by OVERWRITING its own dir (`overwriteOwn`), so a
+    *    replay converges to identical state wherever the previous attempt
+    *    died;
+    *  - folds only dirs BELOW the in-flight id (`foldDue`, then
+    *    `IncrAgg.foldState(before = id)`): a fold that absorbed the
+    *    in-flight dir would let a crash-replay count its rows twice.
+    * Prior reads pin the state's known schema, so they launch no
+    * schema-inference job; a root with no prior dir (or none at all) reads
+    * as an empty frame of that schema, and a prior dir with no committed
+    * file (an attempt that died mid-write) reads as no rows.
+    */
+  private final class StateSink(batch: DataFrame, batchId: Long) {
+    import graft.ops.BatchDirs
+    val spark: SparkSession = batch.sparkSession
+    private var releases: List[() => Unit] = Nil
+
+    /** The prior `batch=<id>` dirs under `root` (this batch's excluded),
+      * listed on the driver, so a reader knows which partitions it reads. */
+    def priorDirs(root: String): Seq[String] =
+      BatchDirs.ids(spark, root)(_ != batchId).map(BatchDirs.dir(root, _))
+    def readDirs(dirs: Seq[String], schema: StructType): DataFrame =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else spark.read.schema(schema).parquet(dirs: _*)
+    def readPrior(root: String, schema: StructType): DataFrame =
+      readDirs(priorDirs(root), schema)
+    def ownDir(root: String): String = BatchDirs.dir(root, batchId)
+    def overwriteOwn(df: DataFrame, root: String): Unit =
+      df.write.mode(SaveMode.Overwrite).parquet(ownDir(root))
+    /** Whether `foldEvery` dirs below this batch's id sit under `root`. */
+    def foldDue(root: String, foldEvery: Int): Boolean =
+      BatchDirs.ids(spark, root)(_ < batchId).size >= foldEvery
+    /** `df` cached MEMORY_ONLY until the batch ends. */
+    def cache(df: DataFrame): DataFrame = {
+      val cached = df.persist(StorageLevel.MEMORY_ONLY)
+      onEnd(() => { cached.unpersist(); () })
+      cached
+    }
+    /** Run `release` when the batch ends, before anything registered earlier. */
+    def onEnd(release: () => Unit): Unit = releases ::= release
+    private def end(): Unit = releases.foreach(_())
+  }
+
+  private object StateSink {
+    def sink(df: DataFrame, checkpoint: String)
+            (perBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+      df.writeStream
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: DataFrame, batchId: Long) => perBatch(batch, batchId) }
+
+    def run(batch: DataFrame, batchId: Long)(step: StateSink => Unit): Unit = {
+      val st = new StateSink(batch, batchId)
+      try step(st) finally st.end()
+    }
+  }
+
   /** Keyed-upsert sink via foreachBatch: each micro-batch MERGEs into a
     * Parquet table by key (latest event per key wins within the batch via
     * deterministic ordering). The streaming twin of the reference's
@@ -367,21 +440,19 @@ object StreamOps {
     */
   def upsertSink(df: DataFrame, path: String, checkpoint: String,
                  keys: Seq[String], orderCols: Seq[String]): DataStreamWriter[Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val latest = graft.ops.Relational.firstPerKey(
-          batch, keys, orderCols.map(c => col(c).desc))
-        val fs = graft.etl.Load.fsFor(spark, path)
-        val merged =
-          if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-            graft.ops.Relational.upsertByKey(
-              spark.read.parquet(path), latest, keys)
-          else latest
-        graft.etl.Load.replaceTable(spark, merged, path)
-        ()
-      }
+    StateSink.sink(df, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val latest = graft.ops.Relational.firstPerKey(
+        batch, keys, orderCols.map(c => col(c).desc))
+      val fs = graft.etl.Load.fsFor(spark, path)
+      val merged =
+        if (fs.exists(new org.apache.hadoop.fs.Path(path)))
+          graft.ops.Relational.upsertByKey(
+            spark.read.parquet(path), latest, keys)
+        else latest
+      graft.etl.Load.replaceTable(spark, merged, path)
+      ()
+    }
 
   /** `upsertSink` for LARGE keyed tables: the table is hash-partitioned on
     * the key into `nParts` `_kp=<n>` directories, and each micro-batch
@@ -394,11 +465,9 @@ object StreamOps {
   def upsertSinkPartitioned(df: DataFrame, path: String, checkpoint: String,
                             keys: Seq[String], orderCols: Seq[String],
                             nParts: Int = 64): DataStreamWriter[Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatchPartitioned(batch, path, keys, orderCols, nParts)
-      }
+    StateSink.sink(df, checkpoint) { (batch, _) =>
+      upsertBatchPartitioned(batch, path, keys, orderCols, nParts)
+    }
 
   /** One micro-batch of `upsertSinkPartitioned`, public for direct testing
     * (and usable as a batch-mode MERGE). The touched-partition list is a
@@ -424,7 +493,7 @@ object StreamOps {
         graft.ops.Relational.upsertByKey(existing, latest, keys)
       }
     merged.repartition(col("_kp"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("_kp").parquet(path)
   }
@@ -445,38 +514,6 @@ object StreamOps {
       .schema("doc_id BIGINT, lang STRING, text STRING")
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.json(dir)
-  }
-
-  /** The exactly-once batch-state primitives every foreachBatch sink here
-    * shares — ONE copy of the discipline instead of a per-sink closure
-    * trio: prior-state reads EXCLUDE the in-flight batch id (a
-    * half-committed previous attempt cannot poison its own replay; a
-    * root whose only content is a half-written dir with no committed
-    * parquet reads as the empty fallback), and writes OVERWRITE exactly
-    * that batch's `batch=<id>` partition, so replay converges to
-    * identical state wherever the previous attempt died. Reads pin the
-    * state's known schema, so they launch no schema-inference job.
-    */
-  private final class BatchState(spark: SparkSession, val batchId: Long) {
-    def hasData(p: String): Boolean =
-      graft.etl.Load.fsFor(spark, p).exists(new org.apache.hadoop.fs.Path(p))
-    /** The prior `batch=<id>` dirs under `root` (this batch's excluded),
-      * listed on the driver, so a reader knows which partitions it reads. */
-    def priorDirs(root: String): Seq[String] =
-      if (!hasData(root)) Nil
-      else graft.etl.Load.fsFor(spark, root)
-        .listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("batch=") && n != s"batch=$batchId")
-        .sorted.map(n => s"$root/$n")
-    def readDirsOr(dirs: Seq[String], schema: StructType): DataFrame =
-      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
-      else spark.read.schema(schema).parquet(dirs: _*)
-    def readPriorOr(root: String, schema: StructType): DataFrame =
-      readDirsOr(priorDirs(root), schema)
-    def overwriteOwn(df: DataFrame, root: String): Unit =
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/batch=$batchId")
   }
 
   /** `df` in at most as many partitions as the micro-batch it derives
@@ -510,27 +547,16 @@ object StreamOps {
     * shuffle and the flagged ids stay a distributed anti join. The stored
     * index's geometry is checked once per stored partition and parameter
     * set (`Dedup.minHashPreflightDirs`): partitions this sink wrote in this
-    * JVM count as checked, so a steady batch samples nothing. Every cache a
-    * batch creates is released before it returns.
+    * JVM count as checked, so a steady batch samples nothing.
     *
-    * State layout — every table batch-partitioned (`.../batch=<id>/`):
+    * State layout — every table batch-partitioned (`.../batch=<id>/`,
+    * under the `StateSink` contract):
     * {{{
     *   stateDir/digests/batch=<id>/        content_md5 of survivors
     *   stateDir/index/toks/batch=<id>/     shingle sets  (id, ts)
     *   stateDir/index/banded/batch=<id>/   band keys     (id, band, band_key)
     *   stateDir/out/batch=<id>/            surviving document rows
     * }}}
-    *
-    * EXACTLY-ONCE under restart, by construction rather than by marker
-    * files: foreachBatch re-delivers the last uncommitted batch id after a
-    * crash, and `dedupDocumentBatch` (a) excludes the CURRENT batch id from
-    * every state read — a half-committed previous attempt cannot poison
-    * its own recomputation (reading this batch's own appended digests back
-    * would kill every row as a "duplicate" and overwrite good output with
-    * nothing) — and (b) OVERWRITES exactly its own `batch=<id>` dirs, so a
-    * replay converges to the identical state no matter where the previous
-    * attempt died. Batch ids are checkpoint-stable, which makes that
-    * overwrite well-defined.
     */
   def incrementalDedupSink(docs: DataFrame, stateDir: String, checkpoint: String,
                            threshold: Double = 0.5,
@@ -538,12 +564,10 @@ object StreamOps {
                            shingleSize: Int = 3,
                            idCol: String = "doc_id",
                            textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupDocumentBatch(batch, batchId, stateDir, threshold,
-          numHashes, bands, shingleSize, idCol, textCol)
-      }
+    StateSink.sink(docs, checkpoint) { (batch, batchId) =>
+      dedupDocumentBatch(batch, batchId, stateDir, threshold,
+        numHashes, bands, shingleSize, idCol, textCol)
+    }
 
   /** One ingest iteration of `incrementalDedupSink`, public so replay
     * semantics are directly testable: calling it twice with the same
@@ -555,86 +579,63 @@ object StreamOps {
                          numHashes: Int = 16, bands: Int = 8,
                          shingleSize: Int = 3,
                          idCol: String = "doc_id", textCol: String = "text"): Unit =
-    minHashDedupBatch(batch, new BatchState(batch.sparkSession, batchId),
-      stateDir, Nil, threshold, numHashes, bands, shingleSize, idCol, textCol)
-
-  /** The per-batch body both MinHash dedup sinks share. The stored delta
-    * index and each `baseIndexes` (toks, banded) pair are probed
-    * separately, so a bucketed base keeps its layout in a shuffled probe.
-    */
-  private def minHashDedupBatch(batch: DataFrame, st: BatchState,
-                                stateDir: String,
-                                baseIndexes: Seq[(DataFrame, DataFrame)],
-                                threshold: Double, numHashes: Int, bands: Int,
-                                shingleSize: Int, idCol: String,
-                                textCol: String): Unit = {
-    import graft.ops.Dedup
-    val spark = batch.sparkSession
-    val digestsRoot = s"$stateDir/digests"
-    val toksRoot = s"$stateDir/index/toks"
-    val bandedRoot = s"$stateDir/index/banded"
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val priorDigests = st.readPriorOr(digestsRoot,
-      Dedup.contentDigests(batch.limit(0), textCol).schema)
-    val exact = batchSized(
-      Dedup.exactIncremental(batch, priorDigests, idCol, textCol), batch)
-      .persist(mem)
-    val (nToks, nBand, releaseSigned) = Dedup.minHashSide(exact, numHashes,
-      bands, shingleSize, idCol, textCol, mem)
-    // one action fills all three caches (banded reads toks reads exact),
-    // so the broadcast gate below sees measured sizes, not plan estimates;
-    // a plain scan, not count(), whose aggregate would add an exchange
-    nBand.foreachPartition((rows: Iterator[Row]) => rows.foreach(_ => ()))
-    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-    // a fresh plan over the cache re-reads its stats (sizes are >= 0, so a
-    // threshold of -1 never fits)
-    def fits(df: DataFrame) =
-      df.select(col("*")).queryExecution.optimizedPlan.stats.sizeInBytes <= limit
-    val broadcastBatch = fits(nToks) && fits(nBand)
-    // the delta index is read as the listed prior dirs, so the geometry
-    // check covers exactly what the probe reads; the bootstrap batch probes
-    // an empty delta index (in-batch near-dups are caught by the probe's
-    // NEW×earlier-NEW leg)
-    val (toksDirs, bandedDirs) = (st.priorDirs(toksRoot), st.priorDirs(bandedRoot))
-    Dedup.minHashPreflightDirs(spark, toksDirs, bandedDirs, numHashes, bands,
-      shingleSize)
-    baseIndexes.foreach { case (toks, banded) =>
-      Dedup.minHashPreflight(toks, banded, numHashes, bands, shingleSize)
+    StateSink.run(batch, batchId) { st =>
+      import graft.ops.Dedup
+      val spark = st.spark
+      val digestsRoot = s"$stateDir/digests"
+      val toksRoot = s"$stateDir/index/toks"
+      val bandedRoot = s"$stateDir/index/banded"
+      val priorDigests = st.readPrior(digestsRoot,
+        Dedup.contentDigests(batch.limit(0), textCol).schema)
+      val exact = st.cache(batchSized(
+        Dedup.exactIncremental(batch, priorDigests, idCol, textCol), batch))
+      val (nToks, nBand, releaseSigned) = Dedup.minHashSide(exact, numHashes,
+        bands, shingleSize, idCol, textCol, StorageLevel.MEMORY_ONLY)
+      st.onEnd(releaseSigned)
+      // one action fills all three caches (banded reads toks reads exact),
+      // so the broadcast gate below sees measured sizes, not plan estimates;
+      // a plain scan, not count(), whose aggregate would add an exchange
+      nBand.foreachPartition((rows: Iterator[Row]) => rows.foreach(_ => ()))
+      val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+      // a fresh plan over the cache re-reads its stats (sizes are >= 0, so a
+      // threshold of -1 never fits)
+      def fits(df: DataFrame) =
+        df.select(col("*")).queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+      val broadcastBatch = fits(nToks) && fits(nBand)
+      // the stored index is read as the listed prior dirs, so the geometry
+      // check covers exactly what the probe reads; the bootstrap batch probes
+      // an empty index (in-batch near-dups are caught by the probe's
+      // NEW×earlier-NEW leg)
+      val (toksDirs, bandedDirs) = (st.priorDirs(toksRoot), st.priorDirs(bandedRoot))
+      Dedup.minHashPreflightDirs(spark, toksDirs, bandedDirs, numHashes, bands,
+        shingleSize)
+      val flagged = Dedup.minHashProbePairs(nToks, nBand,
+          st.readDirs(toksDirs, nToks.schema), st.readDirs(bandedDirs, nBand.schema),
+          threshold, broadcastBatch)
+        .select(col("i").as(idCol)).distinct()
+      // survivors and the index rows kept for them. Flagged ids are distinct
+      // batch ids, so they fit wherever the batch does: collected once, they
+      // filter all three frames with no further join. A NULL id is never
+      // flagged and survives, as under the anti join (the exact step drops
+      // NULL ids, so none reach here).
+      val (survivors, kept) =
+        if (broadcastBatch) {
+          val ids = flagged.collect().filterNot(_.isNullAt(0)).map(_.get(0))
+          def novel(df: DataFrame, c: String) =
+            if (ids.isEmpty) df else df.filter(col(c).isNull || !col(c).isin(ids: _*))
+          (novel(exact, idCol), novel(_: DataFrame, "id"))
+        } else {
+          val surv = st.cache(exact.join(flagged, Seq(idCol), "left_anti"))
+          val keptIds = surv.select(col(idCol).as("id"))
+          (surv, (df: DataFrame) => df.join(keptIds, Seq("id"), "left_semi"))
+        }
+      st.overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
+      st.overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
+      st.overwriteOwn(kept(nToks), toksRoot)
+      st.overwriteOwn(kept(nBand), bandedRoot)
+      Dedup.markIndexDirsChecked(spark, Seq(toksRoot, bandedRoot).map(st.ownDir),
+        numHashes, bands, shingleSize)
     }
-    val indexes = (st.readDirsOr(toksDirs, nToks.schema),
-      st.readDirsOr(bandedDirs, nBand.schema)) +: baseIndexes
-    val flagged = indexes.map { case (toks, banded) =>
-      Dedup.minHashProbePairs(nToks, nBand, toks, banded, threshold,
-        broadcastBatch).select(col("i").as(idCol))
-    }.reduce(_ unionByName _).distinct()
-    // survivors and the index rows kept for them. Flagged ids are distinct
-    // batch ids, so they fit wherever the batch does: collected once, they
-    // filter all three frames with no further join. A NULL id is never
-    // flagged and survives, as under the anti join (the exact step drops
-    // NULL ids, so none reach here).
-    val (survivors, kept, releaseSurvivors) =
-      if (broadcastBatch) {
-        val ids = flagged.collect().filterNot(_.isNullAt(0)).map(_.get(0))
-        def novel(df: DataFrame, c: String) =
-          if (ids.isEmpty) df else df.filter(col(c).isNull || !col(c).isin(ids: _*))
-        (novel(exact, idCol), novel(_: DataFrame, "id"), () => ())
-      } else {
-        val surv = exact.join(flagged, Seq(idCol), "left_anti").persist(mem)
-        val keptIds = surv.select(col(idCol).as("id"))
-        (surv, (df: DataFrame) => df.join(keptIds, Seq("id"), "left_semi"),
-          () => { surv.unpersist(); () })
-      }
-    st.overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
-    st.overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
-    st.overwriteOwn(kept(nToks), toksRoot)
-    st.overwriteOwn(kept(nBand), bandedRoot)
-    Dedup.markIndexDirsChecked(spark, Seq(toksRoot, bandedRoot)
-      .map(r => s"$r/batch=${st.batchId}"), numHashes, bands, shingleSize)
-    releaseSurvivors()
-    releaseSigned()
-    exact.unpersist()
-    ()
-  }
 
   /** `incrementalDedupSink`'s EXACT-ONLY sibling behind a Bloom pre-probe
     * — the streaming twin of `Dedup.exactIncrementalBloom`: every
@@ -649,21 +650,16 @@ object StreamOps {
     * single binary row; the prior state is the OR-fold
     * (`BloomFilter.mergeInPlace` — Spark's own sketch, the same bytes
     * `BloomFilterAggregate` emits and `might_contain` consumes) of every
-    * partition EXCEPT the current batch id. Sketches are KB–MB-sized, so
-    * the fold is a driver-side byte operation, not a job.
+    * prior partition. Sketches are KB–MB-sized, so the fold is a
+    * driver-side byte operation, not a job.
     *
-    * EXACTLY-ONCE inherits `dedupDocumentBatch`'s construction: state
-    * reads exclude the current batch id (a half-committed previous
-    * attempt cannot poison its own replay — reading this batch's own
-    * sketch back would kill every row as a "hit" that then fails the
-    * confirm join, which is CORRECT but wasteful; reading its own
-    * digests back would kill rows as duplicates, which is WRONG — both
-    * are excluded), and writes overwrite exactly their own `batch=<id>`
-    * dirs, so replay converges to identical state. BOTH `expectedItems`
-    * AND `numBits` must be constant per state dir: mergeInPlace requires
-    * equal bit size AND equal hash-function count, and the latter is
-    * derived from the (items, bits) PAIR — varying either across batches
-    * of one state dir makes the next OR-fold throw
+    * Under the `StateSink` contract the sketch read excludes the batch's
+    * own sketch too: reading it back would turn every row into a "hit"
+    * that then fails the confirm join — correct, but wasteful. BOTH
+    * `expectedItems` AND `numBits` must be constant per state dir:
+    * mergeInPlace requires equal bit size AND equal hash-function count,
+    * and the latter is derived from the (items, bits) PAIR — varying
+    * either across batches of one state dir makes the next OR-fold throw
     * IncompatibleMergeException with the incompatible sketch already
     * persisted.
     */
@@ -671,194 +667,71 @@ object StreamOps {
                      expectedItems: Long = 1L << 17, numBits: Long = 1L << 21,
                      idCol: String = "doc_id",
                      textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bloomDedupBatch(batch, batchId, stateDir, expectedItems, numBits,
-          idCol, textCol)
-      }
+    StateSink.sink(docs, checkpoint) { (batch, batchId) =>
+      bloomDedupBatch(batch, batchId, stateDir, expectedItems, numBits,
+        idCol, textCol)
+    }
 
   /** One ingest iteration of `bloomDedupSink`, public so replay semantics
     * are directly testable (same-batchId re-run must converge).
     */
   def bloomDedupBatch(batch: DataFrame, batchId: Long, stateDir: String,
                       expectedItems: Long = 1L << 17, numBits: Long = 1L << 21,
-                      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    import graft.ops.Dedup
-    val spark = batch.sparkSession
-    val st = new BatchState(spark, batchId)
-    import st.{readPriorOr, overwriteOwn}
-    val digestsRoot = s"$stateDir/digests"
-    val bloomRoot = s"$stateDir/bloom"
-    val priorDigests = readPriorOr(digestsRoot,
-      Dedup.contentDigests(batch.limit(0), textCol).schema)
-    // OR-fold the prior sketches on the driver — KBs per batch, and
-    // mergeInPlace is Spark's own compatibility-checked sketch union
-    val priorSketches = readPriorOr(bloomRoot,
-        StructType(Seq(StructField("bf", BinaryType))))
-      .collect().map(_.getAs[Array[Byte]]("bf"))
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    val (survRaw, releaseBloom) =
-      if (priorSketches.isEmpty)
-        (Dedup.exactIncremental(batch, priorDigests, idCol, textCol),
-          () => ())
-      else {
-        val folded = priorSketches
-          .map(b => org.apache.spark.util.sketch.BloomFilter
-            .readFrom(new java.io.ByteArrayInputStream(b)))
-          .reduce { (a, b) => a.mergeInPlace(b); a }
-        val out = new java.io.ByteArrayOutputStream()
-        folded.writeTo(out)
-        // WithHandle: the op's internal batch cache must be RELEASED per
-        // micro-batch — one leaked CacheManager entry per batch, each
-        // pinning the sketch literal, is unbounded driver growth
-        Dedup.exactIncrementalBloomWithHandle(batch, priorDigests,
-          out.toByteArray, idCol, textCol)
-      }
-    val survivors = batchSized(survRaw, batch).persist(mem)
-    overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
-    overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
-    // this batch's own sketch — built from the just-written digests so
-    // the sketch and the table can never disagree about membership
-    val own = Dedup.digestBloom(
-      spark.read.parquet(s"$digestsRoot/batch=$batchId"),
-      expectedItems, numBits)
-    import spark.implicits._
-    overwriteOwn(Seq(own).toDF("bf"), bloomRoot)
-    survivors.unpersist()
-    releaseBloom()
-    ()
-  }
-
-  /** `incrementalDedupSink` with a BUCKETED corpus index: the plain sink's
-    * stored banded table is one parquet dir per micro-batch, so every probe
-    * re-shuffles the whole corpus side; here the long-lived corpus rows
-    * live in bucketed base tables (`<indexName>_toks` bucketed by id,
-    * `<indexName>_banded` bucketed by (band, band_key) — exactly the probe
-    * join's keys, so the corpus side reads pre-shuffled with ZERO exchange)
-    * and only the most recent batches' rows wait in small `batch=<id>`
-    * delta dirs. Maintenance runs inside the sink loop: once `foldEvery`
-    * prior deltas accumulate they are folded into the base (one bucketed
-    * append — the deltas are batch-sized, so the append's shuffle is tiny)
-    * and the digest state is leaf-compacted.
-    *
-    * Exactly-once story is UNCHANGED from the plain sink: state reads
-    * exclude the current batch id (base rows are always prior batches —
-    * folding excludes the in-flight batch), writes overwrite exactly their
-    * own `batch=<id>` dirs. A crash between fold's append and its delta
-    * deletes re-folds on the next cadence — duplicated index rows cost
-    * probe work but never correctness (candidates are distinct'ed, the
-    * verify re-derives identical pairs): the same retry-then-compact
-    * contract as `Dedup.appendToMinHashIndex`.
-    */
-  def incrementalDedupSinkBucketed(docs: DataFrame, stateDir: String,
-                                   checkpoint: String,
-                                   load: graft.etl.Load, indexName: String,
-                                   buckets: Int, foldEvery: Int = 8,
-                                   threshold: Double = 0.5,
-                                   numHashes: Int = 16, bands: Int = 8,
-                                   shingleSize: Int = 3,
-                                   idCol: String = "doc_id",
-                                   textCol: String = "text"): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupDocumentBatchBucketed(batch, batchId, stateDir, load, indexName,
-          buckets, foldEvery, threshold, numHashes, bands, shingleSize,
-          idCol, textCol)
-      }
-
-  /** One ingest iteration of `incrementalDedupSinkBucketed` (public for
-    * replay testing, like `dedupDocumentBatch`): dedup against bucketed
-    * base + unfolded deltas, land survivors + own deltas, then maintain.
-    */
-  def dedupDocumentBatchBucketed(batch: DataFrame, batchId: Long,
-                                 stateDir: String,
-                                 load: graft.etl.Load, indexName: String,
-                                 buckets: Int, foldEvery: Int = 8,
-                                 threshold: Double = 0.5,
-                                 numHashes: Int = 16, bands: Int = 8,
-                                 shingleSize: Int = 3,
-                                 idCol: String = "doc_id",
-                                 textCol: String = "text"): Unit = {
-    val spark = batch.sparkSession
-    val st = new BatchState(spark, batchId)
-    // the bucketed base (prior batches folded by maintenance) is probed
-    // beside the unfolded deltas, not unioned with them: a union would
-    // discard the bucket layout the shuffled probe relies on
-    val base =
-      if (spark.catalog.tableExists(s"${indexName}_toks") &&
-          st.hasData(load.tablePath(s"${indexName}_toks")))
-        Seq((spark.table(s"${indexName}_toks"), spark.table(s"${indexName}_banded")))
-      else Nil
-    minHashDedupBatch(batch, st, stateDir, base, threshold, numHashes, bands,
-      shingleSize, idCol, textCol)
-    foldIndexDeltas(spark, load, indexName, buckets, s"$stateDir/index/toks",
-      s"$stateDir/index/banded", excludeBatch = batchId, foldEvery,
-      numHashes, bands, shingleSize, alsoCompact = Seq(s"$stateDir/digests"))
-  }
-
-  /** Maintenance half of the bucketed sink: fold prior batches' index
-    * deltas into the bucketed base tables (creating them on first fold) and
-    * leaf-compact the listed batch-partitioned state roots. No-op until
-    * `foldEvery` prior deltas exist, so steady-state batches pay nothing.
-    */
-  private def foldIndexDeltas(spark: SparkSession, load: graft.etl.Load,
-                              indexName: String, buckets: Int,
-                              toksRoot: String, bandedRoot: String,
-                              excludeBatch: Long, foldEvery: Int,
-                              numHashes: Int, bands: Int, shingleSize: Int,
-                              alsoCompact: Seq[String]): Unit = {
-    import graft.ops.Dedup
-    val fs = graft.etl.Load.fsFor(spark, toksRoot)
-    def deltaIds(root: String): Set[Long] = {
-      val p = new org.apache.hadoop.fs.Path(root)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong).toSet - excludeBatch
+                      idCol: String = "doc_id", textCol: String = "text"): Unit =
+    StateSink.run(batch, batchId) { st =>
+      import graft.ops.Dedup
+      val spark = st.spark
+      val digestsRoot = s"$stateDir/digests"
+      val bloomRoot = s"$stateDir/bloom"
+      val priorDigests = st.readPrior(digestsRoot,
+        Dedup.contentDigests(batch.limit(0), textCol).schema)
+      // OR-fold the prior sketches on the driver — KBs per batch, and
+      // mergeInPlace is Spark's own compatibility-checked sketch union
+      val priorSketches = st.readPrior(bloomRoot,
+          StructType(Seq(StructField("bf", BinaryType))))
+        .collect().map(_.getAs[Array[Byte]]("bf"))
+      val survRaw =
+        if (priorSketches.isEmpty)
+          Dedup.exactIncremental(batch, priorDigests, idCol, textCol)
+        else {
+          val folded = priorSketches
+            .map(b => org.apache.spark.util.sketch.BloomFilter
+              .readFrom(new java.io.ByteArrayInputStream(b)))
+            .reduce { (a, b) => a.mergeInPlace(b); a }
+          val out = new java.io.ByteArrayOutputStream()
+          folded.writeTo(out)
+          // the op's internal batch cache pins the sketch literal: one leaked
+          // entry per batch would be unbounded driver growth
+          val (surv, releaseBloom) = Dedup.exactIncrementalBloomWithHandle(
+            batch, priorDigests, out.toByteArray, idCol, textCol)
+          st.onEnd(releaseBloom)
+          surv
+        }
+      val survivors = st.cache(batchSized(survRaw, batch))
+      st.overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
+      st.overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
+      // this batch's own sketch — built from the just-written digests so
+      // the sketch and the table can never disagree about membership
+      val own = Dedup.digestBloom(spark.read.parquet(st.ownDir(digestsRoot)),
+        expectedItems, numBits)
+      import spark.implicits._
+      st.overwriteOwn(Seq(own).toDF("bf"), bloomRoot)
     }
-    // fold only dirs present on BOTH sides: a crash between the two delta
-    // writes leaves a half-landed batch that its replay will overwrite
-    val ids = (deltaIds(toksRoot) intersect deltaIds(bandedRoot)).toSeq.sorted
-    if (ids.size < foldEvery) return
-    val toksDf = spark.read.parquet(ids.map(i => s"$toksRoot/batch=$i"): _*)
-    val bandedDf = spark.read.parquet(ids.map(i => s"$bandedRoot/batch=$i"): _*)
-    if (!spark.catalog.tableExists(s"${indexName}_toks")) {
-      Dedup.writeMinHashIndexBucketedFrames(load, toksDf, bandedDf,
-        indexName, buckets)
-    } else {
-      Dedup.minHashPreflight(spark.table(s"${indexName}_toks"),
-        spark.table(s"${indexName}_banded"), numHashes, bands, shingleSize)
-      load.appendBucketed(toksDf, s"${indexName}_toks", buckets, Seq("id"))
-      load.appendBucketed(bandedDf, s"${indexName}_banded", buckets,
-        Seq("band", "band_key"))
-    }
-    ids.foreach { i =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$toksRoot/batch=$i"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$bandedRoot/batch=$i"), true)
-    }
-    alsoCompact.foreach(root => compactStateRoot(spark, root))
-  }
 
   /** Leaf-compact every batch-partitioned state root under `stateDir` that
     * has accumulated fragmented leaves — the run-over-run maintenance pass
-    * (reference analogue: the scheduled re-run loop). Public so operators
-    * of the PLAIN `incrementalDedupSink` (whose index stays per-batch
-    * parquet) can run it on their own cadence too.
+    * (reference analogue: the scheduled re-run loop), run on whatever
+    * cadence the operator of `incrementalDedupSink` chooses.
     */
   def maintainDedupState(spark: SparkSession, stateDir: String): Unit =
     Seq(s"$stateDir/digests", s"$stateDir/index/toks", s"$stateDir/index/banded")
-      .foreach(root => compactStateRoot(spark, root))
-
-  private def compactStateRoot(spark: SparkSession, root: String): Unit = {
-    val fs = graft.etl.Load.fsFor(spark, root)
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (fs.exists(p) &&
-        fs.listStatus(p).exists(e => e.isDirectory && e.getPath.getName.contains("=")))
-      graft.etl.Load.compactPartitioned(spark, root)
-    ()
-  }
+      .foreach { root =>
+        val fs = graft.etl.Load.fsFor(spark, root)
+        val p = new org.apache.hadoop.fs.Path(root)
+        if (fs.exists(p) &&
+            fs.listStatus(p).exists(e => e.isDirectory && e.getPath.getName.contains("=")))
+          graft.etl.Load.compactPartitioned(spark, root)
+      }
 
   /** Streaming incremental aggregate maintenance (the live form of
     * `ops/IncrAgg`): every micro-batch lands ONLY its mergeable partials
@@ -867,24 +740,18 @@ object StreamOps {
     * `IncrAgg.mergeState(IncrAgg.readState(...))` away at any moment —
     * over a state table of groups × batches rows, never the raw stream
     * history. The in-loop fold keeps that table bounded: once `foldEvery`
-    * PRIOR batch dirs accumulate they collapse to one partial per group.
-    *
-    * Exactly-once: the partial write overwrites exactly its own
-    * `batch=<id>` dir, and the fold passes the in-flight batch id as its
-    * exclusive upper bound (`IncrAgg.foldState(before = id)`) — see the
-    * fold's scaladoc for why absorbing the in-flight batch would let a
-    * crash-replay double-count it.
+    * PRIOR batch dirs accumulate they collapse to one partial per group
+    * (`IncrAgg.foldState`, bounded by the in-flight id as `StateSink`
+    * requires).
     */
   def incrementalAggSink(rows: DataFrame, stateRoot: String,
                          checkpoint: String, keys: Seq[String],
                          value: org.apache.spark.sql.Column,
                          distinctOver: org.apache.spark.sql.Column,
                          foldEvery: Int = 8): DataStreamWriter[Row] =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        aggStateBatch(batch, id, stateRoot, keys, value, distinctOver, foldEvery)
-      }
+    StateSink.sink(rows, checkpoint) { (batch, batchId) =>
+      aggStateBatch(batch, batchId, stateRoot, keys, value, distinctOver, foldEvery)
+    }
 
   /** One micro-batch of `incrementalAggSink`, public for direct testing
     * (and the crash-replay entry point: re-running the last uncommitted
@@ -893,22 +760,13 @@ object StreamOps {
   def aggStateBatch(batch: DataFrame, batchId: Long, stateRoot: String,
                     keys: Seq[String], value: org.apache.spark.sql.Column,
                     distinctOver: org.apache.spark.sql.Column,
-                    foldEvery: Int = 8): Unit = {
-    val spark = batch.sparkSession
-    graft.ops.IncrAgg.writeState(
-      graft.ops.IncrAgg.partialState(batch, keys, value, distinctOver),
-      stateRoot, batchId)
-    val fs = graft.etl.Load.fsFor(spark, stateRoot)
-    val prior = fs.listStatus(new org.apache.hadoop.fs.Path(stateRoot))
-      .count { s =>
-        val n = s.getPath.getName
-        s.isDirectory && n.startsWith("batch=") &&
-          n.stripPrefix("batch=").forall(_.isDigit) &&
-          n.stripPrefix("batch=").toLong < batchId
-      }
-    if (prior >= foldEvery)
-      graft.ops.IncrAgg.foldState(spark, stateRoot, keys, before = batchId)
-  }
+                    foldEvery: Int = 8): Unit =
+    StateSink.run(batch, batchId) { st =>
+      st.overwriteOwn(
+        graft.ops.IncrAgg.partialState(batch, keys, value, distinctOver), stateRoot)
+      if (st.foldDue(stateRoot, foldEvery))
+        graft.ops.IncrAgg.foldState(st.spark, stateRoot, keys, before = batchId)
+    }
 
   /** Streaming JOIN-view maintenance (ops/Ivm): a stream of SIGNED
     * left-fact deltas (+1 insert / −1 delete; an update is the pair)
@@ -916,49 +774,38 @@ object StreamOps {
     * or re-aggregating history — the foreachBatch form of the
     * `ivm_join_agg` delta rule for the streaming-facts / static-dim
     * shape. Each micro-batch broadcast-joins its (batch-sized) deltas
-    * against the dim, writes signed view partials under `batch=<id>`
-    * (own-dir overwrite ⇒ crash-replay idempotent, the IncrAgg state
-    * contract), and folds accumulated dirs every `foldEvery` batches so
-    * the read side stays O(groups). `Ivm.mergeView(baseView,
-    * Ivm.readViewDeltas(...))` is the serving read.
+    * against the dim, writes signed view partials under `batch=<id>`, and
+    * folds accumulated dirs every `foldEvery` batches so the read side
+    * stays O(groups). Unlike IncrAgg's partials these are SIGNED: a
+    * batch's net effect on a group can be n_rows = 0 with sum_v ≠ 0 (a
+    * pure value update), which is a real pending delta, not a no-op.
+    * `Ivm.mergeView(baseView, Ivm.readViewDeltas(...))` is the serving
+    * read.
     */
   def ivmViewSink(deltas: DataFrame, dim: DataFrame, stateRoot: String,
                   checkpoint: String, keys: Seq[String],
                   lKey: String, rKey: String, value: Column,
                   foldEvery: Int = 8): DataStreamWriter[Row] =
-    deltas.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ivmDeltaBatch(batch, id, dim, stateRoot, keys, lKey, rKey, value,
-          foldEvery)
-      }
+    StateSink.sink(deltas, checkpoint) { (batch, batchId) =>
+      ivmDeltaBatch(batch, batchId, dim, stateRoot, keys, lKey, rKey, value,
+        foldEvery)
+    }
 
   /** One micro-batch of `ivmViewSink`, public for direct testing and as
     * the crash-replay entry point (re-running the last uncommitted batch
-    * id must leave state equivalent). The in-flight batch id is excluded
-    * from the fold — the aggStateBatch discipline; absorbing it would
-    * double-count its rows when foreachBatch re-delivers after a crash.
+    * id must leave state equivalent).
     */
   def ivmDeltaBatch(batch: DataFrame, batchId: Long, dim: DataFrame,
                     stateRoot: String, keys: Seq[String],
                     lKey: String, rKey: String, value: Column,
-                    foldEvery: Int = 8): Unit = {
-    val spark = batch.sparkSession
-    val joined = broadcast(batch).join(dim, col(lKey) === col(rKey))
-    graft.ops.Ivm.writeViewDelta(
-      graft.ops.Ivm.viewPartial(joined, keys, value, col("sign")),
-      stateRoot, batchId)
-    val fs = graft.etl.Load.fsFor(spark, stateRoot)
-    val prior = fs.listStatus(new org.apache.hadoop.fs.Path(stateRoot))
-      .count { s =>
-        val n = s.getPath.getName
-        s.isDirectory && n.startsWith("batch=") &&
-          n.stripPrefix("batch=").forall(_.isDigit) &&
-          n.stripPrefix("batch=").toLong < batchId
-      }
-    if (prior >= foldEvery)
-      graft.ops.Ivm.foldViewDeltas(spark, stateRoot, keys, before = batchId)
-  }
+                    foldEvery: Int = 8): Unit =
+    StateSink.run(batch, batchId) { st =>
+      val joined = broadcast(batch).join(dim, col(lKey) === col(rKey))
+      st.overwriteOwn(
+        graft.ops.Ivm.viewPartial(joined, keys, value, col("sign")), stateRoot)
+      if (st.foldDue(stateRoot, foldEvery))
+        graft.ops.Ivm.foldViewDeltas(st.spark, stateRoot, keys, before = batchId)
+    }
 
   /** File-source stream of embedding rows — the ingest feed for
     * `embeddingDedupSink`. JSON lines `{"vec_id": …, "embedding": […]}`.
@@ -980,12 +827,9 @@ object StreamOps {
     * half of a streaming ingest pipeline (the MinHash sink is the lexical
     * half): paraphrase-duplicates arrive continuously too.
     *
-    * State layout and EXACTLY-ONCE contract are identical to
-    * `dedupDocumentBatch`: per-batch dirs (`normed/banded/out` under
-    * `batch=<id>/`), state reads exclude the in-flight batch id, writes
-    * overwrite exactly their own dirs — crash-replay converges to
-    * identical state. Deltas are foldable by `Load.compactPartitioned` on
-    * whatever maintenance cadence the operator runs.
+    * State is `normed/banded/out` under `batch=<id>/`. Deltas are foldable
+    * by `Load.compactPartitioned` on whatever maintenance cadence the
+    * operator runs.
     */
   def embeddingDedupSink(vecs: DataFrame, stateDir: String, checkpoint: String,
                          threshold: Double = 0.9,
@@ -993,12 +837,10 @@ object StreamOps {
                          dims: Int = 64,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): DataStreamWriter[Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        embeddingDedupBatch(batch, batchId, stateDir, threshold,
-          planesPerBand, bands, dims, idCol, vecCol)
-      }
+    StateSink.sink(vecs, checkpoint) { (batch, batchId) =>
+      embeddingDedupBatch(batch, batchId, stateDir, threshold,
+        planesPerBand, bands, dims, idCol, vecCol)
+    }
 
   /** One ingest iteration of `embeddingDedupSink`, public for replay
     * testing: same batch id twice must leave state and output identical.
@@ -1008,31 +850,26 @@ object StreamOps {
                           planesPerBand: Int = 2, bands: Int = 16,
                           dims: Int = 64,
                           idCol: String = "vec_id",
-                          vecCol: String = "embedding"): Unit = {
-    import graft.ops.Vectors
-    val spark = batch.sparkSession
-    val st = new BatchState(spark, batchId)
-    import st.{readPriorOr, overwriteOwn}
-    val none = org.apache.spark.storage.StorageLevel.NONE
-    val emptyIndex =
-      Vectors.cosineIndex(batch.limit(0), planesPerBand, bands, dims,
-        idCol, vecCol, none)
-    val priorNormed = readPriorOr(s"$stateDir/normed", emptyIndex._1.schema)
-    val priorBanded = readPriorOr(s"$stateDir/banded", emptyIndex._2.schema)
-    val flagged = Vectors.cosineIncrementalIndexed(batch, priorNormed,
-      priorBanded, threshold, planesPerBand, bands, dims, idCol, vecCol)
-    val survivors = batch
-      .join(flagged.select(col(idCol)), Seq(idCol), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    overwriteOwn(survivors, s"$stateDir/out")
-    val (sNormed, sBanded) =
-      Vectors.cosineIndex(survivors, planesPerBand, bands, dims,
-        idCol, vecCol, none)
-    overwriteOwn(sNormed, s"$stateDir/normed")
-    overwriteOwn(sBanded, s"$stateDir/banded")
-    survivors.unpersist()
-    ()
-  }
+                          vecCol: String = "embedding"): Unit =
+    StateSink.run(batch, batchId) { st =>
+      import graft.ops.Vectors
+      val none = StorageLevel.NONE
+      val emptyIndex =
+        Vectors.cosineIndex(batch.limit(0), planesPerBand, bands, dims,
+          idCol, vecCol, none)
+      val priorNormed = st.readPrior(s"$stateDir/normed", emptyIndex._1.schema)
+      val priorBanded = st.readPrior(s"$stateDir/banded", emptyIndex._2.schema)
+      val flagged = Vectors.cosineIncrementalIndexed(batch, priorNormed,
+        priorBanded, threshold, planesPerBand, bands, dims, idCol, vecCol)
+      val survivors = st.cache(batch
+        .join(flagged.select(col(idCol)), Seq(idCol), "left_anti"))
+      st.overwriteOwn(survivors, s"$stateDir/out")
+      val (sNormed, sBanded) =
+        Vectors.cosineIndex(survivors, planesPerBand, bands, dims,
+          idCol, vecCol, none)
+      st.overwriteOwn(sNormed, s"$stateDir/normed")
+      st.overwriteOwn(sBanded, s"$stateDir/banded")
+    }
 
   /** Streaming vocabulary maintenance + OOV reporting: every micro-batch
     * of documents is scored against the vocabulary accumulated by PRIOR
@@ -1040,58 +877,37 @@ object StreamOps {
     * vocabulary lands under `stateDir/vocab/batch=<id>/` so the NEXT batch
     * sees it. Reports land under `stateDir/report/batch=<id>/`.
     *
-    * Exactly-once by the usual state-dir contract: reads exclude the
-    * in-flight batch id, writes overwrite exactly their own `batch=` dirs
-    * — a crash-replay recomputes the identical report from the identical
-    * prior-batch state. The per-batch vocab deltas carry duplicate
-    * (lang, token) rows across batches by design (`oovStats` tests
-    * membership through a distinct); `Load.compactPartitioned` folds the
-    * delta dirs on whatever maintenance cadence the operator runs.
+    * The per-batch vocab deltas carry duplicate (lang, token) rows across
+    * batches by design (`oovStats` tests membership through a distinct);
+    * `Load.compactPartitioned` folds the delta dirs on whatever
+    * maintenance cadence the operator runs.
     */
   def oovSink(docs: DataFrame, stateDir: String,
               checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        oovDocumentBatch(batch, id, stateDir)
-      }
+    StateSink.sink(docs, checkpoint) { (batch, batchId) =>
+      oovDocumentBatch(batch, batchId, stateDir)
+    }
 
   /** One micro-batch of `oovSink`, public for direct testing and crash
     * replay.
     */
   def oovDocumentBatch(batch: DataFrame, batchId: Long,
-                       stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val vocabRoot = s"$stateDir/vocab"
-    val fs = graft.etl.Load.fsFor(spark, vocabRoot)
-    val prior =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(vocabRoot))) None
-      else {
-        val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(vocabRoot))
-          .filter { s =>
-            val n = s.getPath.getName
-            s.isDirectory && n.startsWith("batch=") &&
-              n.stripPrefix("batch=").forall(_.isDigit) &&
-              n.stripPrefix("batch=").toLong != batchId // exclude own replay
-          }
-        if (dirs.isEmpty) None
-        else Some(spark.read.option("basePath", vocabRoot)
-          .parquet(dirs.map(_.getPath.toString): _*).drop("batch"))
-      }
-    val report = prior match {
-      case Some(vocab) => graft.ops.Text.oovStats(batch, vocab)
-      case None => // empty vocabulary: every occurrence is OOV
-        batch.select(col("lang"),
-            explode(graft.ops.Text.tokens(col("text"))).as("token"))
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_tokens"), count(lit(1)).as("n_oov"))
-          .withColumn("oov_bp", lit(10000L))
+                       stateDir: String): Unit =
+    StateSink.run(batch, batchId) { st =>
+      val vocabRoot = s"$stateDir/vocab"
+      val vocab = graft.ops.Text.vocabulary(batch)
+      val prior = st.priorDirs(vocabRoot)
+      val report =
+        if (prior.isEmpty) // empty vocabulary: every occurrence is OOV
+          batch.select(col("lang"),
+              explode(graft.ops.Text.tokens(col("text"))).as("token"))
+            .groupBy(col("lang"))
+            .agg(count(lit(1)).as("n_tokens"), count(lit(1)).as("n_oov"))
+            .withColumn("oov_bp", lit(10000L))
+        else graft.ops.Text.oovStats(batch, st.readDirs(prior, vocab.schema))
+      st.overwriteOwn(report, s"$stateDir/report")
+      st.overwriteOwn(vocab, vocabRoot)
     }
-    report.write.mode("overwrite")
-      .parquet(s"$stateDir/report/batch=$batchId")
-    graft.ops.Text.vocabulary(batch).write.mode("overwrite")
-      .parquet(s"$vocabRoot/batch=$batchId")
-  }
 
   /** Streaming perplexity scoring — the log-domain sibling of `oovSink`:
     * every micro-batch of documents is scored by
@@ -1103,62 +919,40 @@ object StreamOps {
     * `stateDir/report/batch=<id>`. The FIRST batch has no LM — every
     * token prices at the 1e-6 clamp's maximum (13 815 510 µnat), the same
     * value the scorer gives an OOV token, so batch 0 is just the
-    * everything-is-OOV corner of the same formula.
-    *
-    * Exactly-once by the usual state-dir contract: reads exclude the
-    * in-flight batch id, writes overwrite exactly their own `batch=`
-    * dirs — a crash-replay recomputes the identical report from the
-    * identical prior-batch state; `Load.compactPartitioned` folds the
-    * vocab deltas on maintenance cadence (counts re-sum).
+    * everything-is-OOV corner of the same formula. `Load.compactPartitioned`
+    * folds the vocab deltas on maintenance cadence (counts re-sum).
     */
   def perplexitySink(docs: DataFrame, stateDir: String,
                      checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        perplexityDocumentBatch(batch, id, stateDir)
-      }
+    StateSink.sink(docs, checkpoint) { (batch, batchId) =>
+      perplexityDocumentBatch(batch, batchId, stateDir)
+    }
 
   /** One micro-batch of `perplexitySink`, public for direct testing and
     * crash replay.
     */
   def perplexityDocumentBatch(batch: DataFrame, batchId: Long,
-                              stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val vocabRoot = s"$stateDir/vocab"
-    val fs = graft.etl.Load.fsFor(spark, vocabRoot)
-    val prior =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(vocabRoot))) None
-      else {
-        val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(vocabRoot))
-          .filter { s =>
-            val n = s.getPath.getName
-            s.isDirectory && n.startsWith("batch=") &&
-              n.stripPrefix("batch=").forall(_.isDigit) &&
-              n.stripPrefix("batch=").toLong != batchId // exclude own replay
-          }
-        if (dirs.isEmpty) None
-        else Some(spark.read.option("basePath", vocabRoot)
-          .parquet(dirs.map(_.getPath.toString): _*)
-          .groupBy(col("token")).agg(sum(col("cnt")).as("cnt")))
-      }
-    val report = prior match {
-      case Some(lm) => graft.ops.Text.unigramSurprisalAgainst(batch, lm)
-      case None => // no LM yet: every token at the clamp maximum
-        batch.select(col("doc_id"),
-            explode(graft.ops.Text.tokens(col("text"))).as("token"))
-          .filter(col("token") =!= "")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).cast("long").as("n_tokens"))
-          .select(col("doc_id"), col("n_tokens"),
-            (col("n_tokens") * lit(13815510L)).as("surprisal_total"),
-            lit(13815510L).as("surprisal_per_tok"))
+                              stateDir: String): Unit =
+    StateSink.run(batch, batchId) { st =>
+      val vocabRoot = s"$stateDir/vocab"
+      val counts = graft.ops.Text.tokenCounts(batch)
+      val prior = st.priorDirs(vocabRoot)
+      val report =
+        if (prior.isEmpty) // no LM yet: every token at the clamp maximum
+          batch.select(col("doc_id"),
+              explode(graft.ops.Text.tokens(col("text"))).as("token"))
+            .filter(col("token") =!= "")
+            .groupBy(col("doc_id"))
+            .agg(count(lit(1)).cast("long").as("n_tokens"))
+            .select(col("doc_id"), col("n_tokens"),
+              (col("n_tokens") * lit(13815510L)).as("surprisal_total"),
+              lit(13815510L).as("surprisal_per_tok"))
+        else graft.ops.Text.unigramSurprisalAgainst(batch,
+          st.readDirs(prior, counts.schema)
+            .groupBy(col("token")).agg(sum(col("cnt")).as("cnt")))
+      st.overwriteOwn(report, s"$stateDir/report")
+      st.overwriteOwn(counts, vocabRoot)
     }
-    report.write.mode("overwrite")
-      .parquet(s"$stateDir/report/batch=$batchId")
-    graft.ops.Text.tokenCounts(batch).write.mode("overwrite")
-      .parquet(s"$vocabRoot/batch=$batchId")
-  }
 
   /** Streaming collocation state: each micro-batch's windowed pair +
     * unigram counts (`Text.pmiState` — the mergeable PMI frame) land under
@@ -1166,36 +960,26 @@ object StreamOps {
     * partials with one keyed sum, so the merged state — and therefore the
     * collocation report — is identical to one built from the union of
     * every batch (TextQueries' `text_pmi_incremental` pins the same
-    * equivalence against the full-recompute oracle). Same exactly-once
-    * state-dir contract as the other sinks: each write overwrites exactly
-    * its own `batch=` dir, so crash-replay of an uncommitted batch is
-    * idempotent; `Load.compactPartitioned` folds delta dirs on
-    * maintenance cadence (partials stay partials — counts re-sum).
+    * equivalence against the full-recompute oracle).
+    * `Load.compactPartitioned` folds delta dirs on maintenance cadence
+    * (partials stay partials — counts re-sum).
     */
   def pmiSink(docs: DataFrame, stateDir: String, checkpoint: String,
               window: Int): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        pmiDocumentBatch(batch, id, stateDir, window)
-      }
+    StateSink.sink(docs, checkpoint) { (batch, batchId) =>
+      pmiDocumentBatch(batch, batchId, stateDir, window)
+    }
 
   /** One micro-batch of `pmiSink`, public for direct testing and crash
-    * replay. Owns its token cache's lifecycle — persisted for the
-    * multi-branch state build, unpersisted once the write commits, so a
-    * long-lived stream never accumulates dead per-batch cache entries
-    * (same explicit-unpersist discipline as the dedup sinks).
+    * replay. Its token cache serves the multi-branch state build and is
+    * released with the batch.
     */
   def pmiDocumentBatch(batch: DataFrame, batchId: Long, stateDir: String,
-                       window: Int): Unit = {
-    val toks = batch
-      .select(graft.ops.Text.tokens(col("text")).as("l"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    try
-      graft.ops.Text.pmiStateFromTokens(toks, window).write.mode("overwrite")
-        .parquet(s"$stateDir/batch=$batchId")
-    finally toks.unpersist(false)
-  }
+                       window: Int): Unit =
+    StateSink.run(batch, batchId) { st =>
+      val toks = st.cache(batch.select(graft.ops.Text.tokens(col("text")).as("l")))
+      st.overwriteOwn(graft.ops.Text.pmiStateFromTokens(toks, window), stateDir)
+    }
 
   /** Read side of `pmiSink`: top-k collocations from the merged stored
     * state — never the raw document history. cache=false: the state is a
@@ -1222,18 +1006,14 @@ object StreamOps {
     * all; the sink ships depth×width counters per batch regardless of
     * cardinality). `Sketch.heavyHittersCmsStored` merges the stored
     * sketches cell-wise — exact counter addition, so the merged sketch is
-    * bit-identical to a one-pass sketch over the whole stream. Same
-    * exactly-once contract as the other sinks: each write overwrites
-    * exactly its own `batch=` dir.
+    * bit-identical to a one-pass sketch over the whole stream.
     */
   def cmsSink(rows: DataFrame, stateDir: String, checkpoint: String,
               key: Column, eps: Double = 0.001, confidence: Double = 0.99,
               seed: Int = 42): DataStreamWriter[Row] =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        cmsBatch(batch, id, stateDir, key, eps, confidence, seed)
-      }
+    StateSink.sink(rows, checkpoint) { (batch, batchId) =>
+      cmsBatch(batch, batchId, stateDir, key, eps, confidence, seed)
+    }
 
   /** One micro-batch of `cmsSink`, public for direct testing and crash
     * replay.
@@ -1241,9 +1021,10 @@ object StreamOps {
   def cmsBatch(batch: DataFrame, batchId: Long, stateDir: String,
                key: Column, eps: Double, confidence: Double,
                seed: Int): Unit =
-    batch.agg(count_min_sketch(key, lit(eps), lit(confidence), lit(seed))
-        .as("s"))
-      .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+    StateSink.run(batch, batchId) { st =>
+      st.overwriteOwn(batch.agg(
+        count_min_sketch(key, lit(eps), lit(confidence), lit(seed)).as("s")), stateDir)
+    }
 
   /** Streaming distribution-drift monitoring: every micro-batch is scored
     * (`Quality.psiDriftFromCounts`) against the reference histogram
@@ -1252,70 +1033,47 @@ object StreamOps {
     * the stream. Reports land under `stateDir/report/batch=<id>/`. The
     * FIRST batch scores against an empty reference — finite under the
     * Laplace smoothing (uniform prior), and flagged by `ref_n = 0` rows.
-    *
-    * Exactly-once by the usual state-dir contract: reads exclude the
-    * in-flight batch id, writes overwrite exactly their own `batch=` dirs
-    * — crash-replay recomputes the identical report from identical prior
-    * state. Per-batch histograms are ≤ `nBuckets` rows each; merging is
-    * one keyed sum at read time, and `Load.compactPartitioned` folds the
+    * Per-batch histograms are ≤ `nBuckets` rows each; merging is one
+    * keyed sum at read time, and `Load.compactPartitioned` folds the
     * delta dirs on maintenance cadence.
     */
   def driftSink(docs: DataFrame, stateDir: String, checkpoint: String,
                 bucket: Column, nBuckets: Int): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        driftDocumentBatch(batch, id, stateDir, bucket, nBuckets)
-      }
+    StateSink.sink(docs, checkpoint) { (batch, batchId) =>
+      driftDocumentBatch(batch, batchId, stateDir, bucket, nBuckets)
+    }
 
   /** One micro-batch of `driftSink`, public for direct testing and crash
     * replay.
     */
   def driftDocumentBatch(batch: DataFrame, batchId: Long, stateDir: String,
-                         bucket: Column, nBuckets: Int): Unit = {
-    val spark = batch.sparkSession
-    val histRoot = s"$stateDir/hist"
-    val fs = graft.etl.Load.fsFor(spark, histRoot)
-    val prior =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(histRoot))) None
-      else {
-        val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(histRoot))
-          .filter { s =>
-            val n = s.getPath.getName
-            s.isDirectory && n.startsWith("batch=") &&
-              n.stripPrefix("batch=").forall(_.isDigit) &&
-              n.stripPrefix("batch=").toLong != batchId // exclude own replay
-          }
-        if (dirs.isEmpty) None
-        else Some(spark.read.option("basePath", histRoot)
-          .parquet(dirs.map(_.getPath.toString): _*).drop("batch")
-          .groupBy(col("bucket")).agg(sum(col("n")).as("n")))
-      }
-    val ref = prior.getOrElse( // empty reference: uniform Laplace prior
-      spark.range(0).select(col("id").as("bucket"), col("id").as("n")))
-    graft.ops.Quality.psiDriftFromCounts(ref, batch, bucket, nBuckets)
-      .write.mode("overwrite").parquet(s"$stateDir/report/batch=$batchId")
-    graft.ops.Quality.histogram(batch, bucket).write.mode("overwrite")
-      .parquet(s"$histRoot/batch=$batchId")
-  }
+                         bucket: Column, nBuckets: Int): Unit =
+    StateSink.run(batch, batchId) { st =>
+      val histRoot = s"$stateDir/hist"
+      val hist = graft.ops.Quality.histogram(batch, bucket)
+      val ref = st.readPrior(histRoot, hist.schema)
+        .groupBy(col("bucket")).agg(sum(col("n")).as("n"))
+      st.overwriteOwn(
+        graft.ops.Quality.psiDriftFromCounts(ref, batch, bucket, nBuckets),
+        s"$stateDir/report")
+      st.overwriteOwn(hist, histRoot)
+    }
 
   /** Streaming SCD2 maintenance: every micro-batch of change events merges
     * into the stored, key-hash-bucketed history via
     * `History.scd2MergeStored` — per trigger, only the buckets the batch
     * touches are read and rewritten. Crash-replay is idempotent through
     * `scd2Merge`'s replay guard (events before a key's current valid_from
-    * are already reflected and get dropped), so the usual
-    * foreachBatch replay semantics hold without extra bookkeeping.
+    * are already reflected and get dropped), so this sink keeps no
+    * `batch=<id>` state of its own.
     */
   def scd2Sink(rows: DataFrame, root: String, checkpoint: String,
                keys: Seq[String], ts: org.apache.spark.sql.Column,
                tiebreak: org.apache.spark.sql.Column,
                attr: org.apache.spark.sql.Column,
                nParts: Int = 64): DataStreamWriter[Row] =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.History.scd2MergeStored(batch.sparkSession, root, batch,
-          keys, ts, tiebreak, attr, nParts)
-      }
+    StateSink.sink(rows, checkpoint) { (batch, _) =>
+      graft.ops.History.scd2MergeStored(batch.sparkSession, root, batch,
+        keys, ts, tiebreak, attr, nParts)
+    }
 }

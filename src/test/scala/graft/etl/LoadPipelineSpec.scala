@@ -208,8 +208,7 @@ class LoadPipelineSpec extends SparkSpec {
 
   test("parquetRowCount: missing table counts 0; uncommitted _temporary files don't count") {
     val load = new Load(tmpDir("wh"))
-    // a not-yet-created table must read as empty, not throw — this is the
-    // before-count of a bootstrap appendBucketed
+    // a not-yet-created table must read as empty, not throw
     assert(Load.parquetRowCount(spark, load.tablePath("nope")) == 0L)
     val path = load.tablePath("with_temp")
     Seq(1, 2, 3).toDF("n").write.parquet(path)
@@ -221,17 +220,14 @@ class LoadPipelineSpec extends SparkSpec {
     assert(Load.parquetRowCount(spark, path) == 3L)
   }
 
-  test("bucketed write + append report exact footer-based row counts") {
+  test("bucketed write reports an exact footer-based row count") {
     val load = new Load(tmpDir("wh"))
     try {
       val base = (1L to 1000L).map(i => (i % 50, i)).toDF("k", "v")
       assert(load.writeBucketed(base, "bkt_cnt", 4, Seq("k")) == 1000L)
-      val batch = (1001L to 1300L).map(i => (i % 50, i)).toDF("k", "v")
-      // append returns the BATCH's rows, not the table total
-      assert(load.appendBucketed(batch, "bkt_cnt", 4, Seq("k")) == 300L)
-      assert(spark.table("bkt_cnt").count() == 1300L)
+      assert(spark.table("bkt_cnt").count() == 1000L)
       // and the footer counter itself agrees with a full scan
-      assert(Load.parquetRowCount(spark, load.tablePath("bkt_cnt")) == 1300L)
+      assert(Load.parquetRowCount(spark, load.tablePath("bkt_cnt")) == 1000L)
     } finally spark.sql("DROP TABLE IF EXISTS bkt_cnt")
   }
 

@@ -50,48 +50,6 @@ class BucketingSpec extends SparkSpec {
     assert(filtered.count() == 100)
   }
 
-  test("bucketed index lifecycle: write + append keep probe results identical") {
-    val load = new graft.etl.Load(tmpDir("idx-wh"))
-    val corpus = Seq(
-      (1L, "en", "the quick brown fox jumps over the lazy dog tonight"),
-      (2L, "en", "the quick brown fox jumps over the lazy dog today"),
-      (3L, "en", "completely different text about spark engines at scale")
-    ).toDF("doc_id", "lang", "text")
-    val batch1 = Seq(
-      (11L, "en", "a quick brown fox jumps over the lazy dog tonight"))
-      .toDF("doc_id", "lang", "text")
-    val batch2 = Seq(
-      (21L, "en", "the quick brown fox jumps over the lazy dog tonight"),
-      (22L, "en", "a quick brown fox jumps over the lazy dog yesterday"))
-      .toDF("doc_id", "lang", "text")
-    try {
-      Dedup.writeMinHashIndexBucketed(load, corpus, "mh_idx", 4)
-      Dedup.appendToMinHashIndexBucketed(load, batch1, "mh_idx", 4)
-      val viaBucketed = Dedup.minHashIncrementalIndexed(batch2,
-          spark.table("mh_idx_toks"), spark.table("mh_idx_banded"), 0.5)
-        .collect().map(_.toSeq).toSet
-      // ground truth: in-memory index over the same grown corpus
-      val (toks, banded) = Dedup.minHashIndex(corpus.unionByName(batch1))
-      val direct = Dedup.minHashIncrementalIndexed(batch2, toks, banded, 0.5)
-        .collect().map(_.toSeq).toSet
-      assert(viaBucketed == direct && viaBucketed.nonEmpty)
-      // a mismatched append against the bucketed tables fails fast too
-      intercept[IllegalArgumentException] {
-        Dedup.appendToMinHashIndexBucketed(load, batch2, "mh_idx", 4,
-          numHashes = 32, bands = 16)
-      }
-      // the banded table really is bucketed on the probe join's keys: an
-      // aggregation on (band, band_key) runs with zero exchanges
-      val agged = spark.table("mh_idx_banded")
-        .groupBy("band", "band_key").count()
-      assert(shuffleCount(agged) == 0,
-        "banded index table must be pre-shuffled on its probe keys")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS mh_idx_toks")
-      spark.sql("DROP TABLE IF EXISTS mh_idx_banded")
-    }
-  }
-
   test("bucketed-by-key tables join with zero shuffle exchanges") {
     val load = new graft.etl.Load(tmpDir("bucket-wh"))
     val left = (1L to 1000L).map(i => (i % 100, i)).toDF("k", "lv")

@@ -546,6 +546,16 @@ class StreamOpsSpec extends SparkSpec {
         .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
       assert(messages.contains("was built with"), messages)
     }
+    // a failed batch releases the caches it filled before the check threw:
+    // nothing may stay in the SQL cache or as a persistent RDD
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def assertNothingRetained(after: String): Unit = {
+      assert(ColumnBridge.sqlCacheIsEmpty(spark), s"SQL cache entries left after $after")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+      assert(leaked.isEmpty, s"persistent RDDs left after $after: $leaked")
+    }
     // a state dir whose index was written with other bands and shingleSize
     val foreign = tmpDir("dedup-geom-foreign")
     StreamOps.dedupDocumentBatch(dedupBatchDf(dedupFiles(0)), 100L, foreign,
@@ -553,6 +563,7 @@ class StreamOpsSpec extends SparkSpec {
     val src = tmpDir("docs-geom-src")
     writeDedupFile(src, dedupFiles(1))
     assertMismatch(runDedupSink(src, foreign, tmpDir("dedup-geom-ckpt")))
+    assertNothingRetained("the failed batch on a foreign index")
     // a partition the sink wrote and checked, rewritten with the wrong
     // geometry before the next batch
     val state = tmpDir("dedup-geom-state")
@@ -566,6 +577,7 @@ class StreamOpsSpec extends SparkSpec {
     banded.write.mode("overwrite").parquet(s"$state/index/banded/batch=0")
     writeDedupFile(src2, dedupFiles(2))
     assertMismatch(runDedupSink(src2, state, ckpt))
+    assertNothingRetained("the failed batch on a rewritten partition")
   }
 
   test("incrementalDedupSink: a steady batch runs at most 20 jobs and " +
@@ -778,84 +790,6 @@ class StreamOpsSpec extends SparkSpec {
       expectedItems = 1L << 10, numBits = 1L << 14)
     assert(outIds == Set(1L, 2L, 12L, 23L))
     assert(stateCounts == before)
-  }
-
-  test("incrementalDedupSinkBucketed: bucketed base + delta fold, same semantics, replay-idempotent") {
-    val state = tmpDir("dedup-bstate")
-    val name = "sdx_stream"
-    def batchDf(rows: Seq[(Long, String)]): DataFrame =
-      rows.map { case (id, t) => (id, "en", t) }.toDF("doc_id", "lang", "text")
-        .repartition(3) // multi-file deltas/digests → compaction observable
-    val wh = new graft.etl.Load(tmpDir("sdx-wh"))
-    def run(b: DataFrame, id: Long): Unit =
-      StreamOps.dedupDocumentBatchBucketed(b, id, state, wh, name, 4, foldEvery = 2)
-    def outIds: Set[Long] = spark.read.parquet(s"$state/out")
-      .select("doc_id").as[Long].collect().toSet
-    try {
-      run(batchDf(Seq(
-        1L -> "the quick brown fox jumps over the lazy dog tonight",
-        2L -> "completely different text about spark engines at scale",
-        3L -> "the quick brown fox jumps over the lazy dog tonight")), 0L)
-      run(batchDf(Seq(
-        11L -> "the quick brown fox jumps over the lazy dog tonight",
-        12L -> "the quick brown fox jumps over the lazy dog today",
-        13L -> "novel content never seen in the corpus before now")), 1L)
-      // same cross-batch semantics as the plain sink: 3 in-batch exact dup,
-      // 11 exact vs stored digests, 12 near-dup vs the stored index
-      assert(outIds == Set(1L, 2L, 13L))
-      run(batchDf(Seq(
-        21L -> "novel content never seen in the corpus before now",
-        22L -> "absolutely fresh material arriving in the third batch")), 2L)
-      assert(outIds == Set(1L, 2L, 13L, 22L))
-      // batch 2's maintenance folded deltas 0+1 into the bucketed base;
-      // only its own (excluded) delta remains unfolded
-      def deltaIds(root: String): Set[String] =
-        new java.io.File(root).listFiles().toSeq
-          .map(_.getName).filter(_.startsWith("batch=")).toSet
-      assert(deltaIds(s"$state/index/toks") == Set("batch=2"))
-      assert(deltaIds(s"$state/index/banded") == Set("batch=2"))
-      assert(spark.catalog.tableExists(s"${name}_toks"))
-      // folded rows = batches 0+1 survivors (ids 1, 2, 13)
-      assert(spark.table(s"${name}_toks").select("id").as[Long].collect().toSet
-        == Set(1L, 2L, 13L))
-      // the bucketed base really is pre-shuffled on the probe join's keys
-      val agged = spark.table(s"${name}_banded").groupBy("band", "band_key").count()
-      agged.collect()
-      def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
-        case _: org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec => 1
-        case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => 1
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          shuffles(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => shuffles(q.plan)
-        case other => other.children.map(shuffles).sum
-      }
-      assert(shuffles(agged.queryExecution.executedPlan) == 0,
-        "bucketed index base must be pre-shuffled on (band, band_key)")
-      // digest state was compacted on the fold cadence: one file per leaf
-      // (each batch wrote 3 — repartition(3) above)
-      val digestLeaves = new java.io.File(s"$state/digests").listFiles()
-        .filter(_.getName.startsWith("batch="))
-      assert(digestLeaves.nonEmpty && digestLeaves.forall(
-        _.listFiles().count(_.getName.endsWith(".parquet")) == 1),
-        "digest leaves not compacted to one file")
-      // crash-replay idempotence AFTER a fold: re-running the last batch must
-      // leave output and state (base + deltas) identical
-      def stateRows: (Long, Long, Long) = (
-        spark.read.parquet(s"$state/digests").count(),
-        spark.table(s"${name}_toks").count() +
-          spark.read.parquet(s"$state/index/toks").drop("batch").count(),
-        spark.table(s"${name}_banded").count() +
-          spark.read.parquet(s"$state/index/banded").drop("batch").count())
-      val before = stateRows
-      run(batchDf(Seq(
-        21L -> "novel content never seen in the corpus before now",
-        22L -> "absolutely fresh material arriving in the third batch")), 2L)
-      assert(outIds == Set(1L, 2L, 13L, 22L))
-      assert(stateRows == before)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_toks")
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_banded")
-    }
   }
 
   test("maintainDedupState: compaction shrinks fragmented state leaves, content identical") {
