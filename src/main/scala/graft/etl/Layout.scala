@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional storage layout: Z-order (Morton) clustering so that
@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * 1-D sort key whose contiguous ranges are (approximately) k-D boxes, so
   * a `WHERE x BETWEEN … AND y BETWEEN …` touches ~(selectivity)^k of the
   * files instead of (selectivity)^1. Same idea as the public OPTIMIZE
-  * ZORDER of lakehouse engines; here it is just an expression + a
-  * range-partitioned sorted write — no new writer machinery.
+  * ZORDER of lakehouse engines; here it is just an expression a query
+  * range-partitions and sorts by — no new writer machinery.
   *
   * The z-value is a PURE deterministic function of the row (clamp → bit
   * interleave via shift/and/or), built from codegen'd Spark functions — no
@@ -74,9 +74,9 @@ object Layout {
     * than the Morton code above — consecutive h-values are always
     * grid-adjacent cells (|Δx|+|Δy| = 1, pinned by spec as a bijection +
     * adjacency walk), where a Morton curve takes long diagonal jumps at
-    * quadrant boundaries. Same write path (`writeZOrdered` with the h
-    * column): contiguous h-ranges are tighter 2-D boxes → tighter parquet
-    * footer min/max per file under conjunctive range predicates.
+    * quadrant boundaries. Sorted and range-partitioned by h, contiguous
+    * h-ranges are tighter 2-D boxes → tighter parquet footer min/max per
+    * file under conjunctive range predicates.
     *
     * The classic MSB-first fold (Warren, Hacker's Delight §16; the
     * public-domain xy2d formulation): per level `s = 2^k`, the quadrant
@@ -153,90 +153,4 @@ object Layout {
     }
     (base +: levels).mkString(",\n")
   }
-
-  /** Write `df` clustered by `zCol`: range-partition on the z-value (so each
-    * output file owns a contiguous z-range = an approximate k-D box of the
-    * coordinate space), sort within partitions (so ROW GROUPS inside each
-    * file get tight per-group min/max too), drop the derived key, write.
-    * One shuffle; the z column is derivable, so it is not stored.
-    */
-  def writeZOrdered(df: DataFrame, path: String, zCol: Column,
-                    partitions: Int): Unit = {
-    require(!df.columns.contains("_z"), "input must not already have _z")
-    df.withColumn("_z", zCol)
-      .repartitionByRange(partitions, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** The 1-D baseline `writeZOrdered` is compared against: range-partition +
-    * sort on a single column (what a naive "sort by the most-selective
-    * column" layout produces).
-    */
-  def writeRangeSorted(df: DataFrame, path: String, sortCol: Column,
-                       partitions: Int): Unit =
-    df.repartitionByRange(partitions, sortCol)
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(path)
-
-  /** Per-FILE [min,max] footer statistics for the named int64 columns —
-    * metadata-only (no data pages), the same statistics a pushed-down
-    * conjunctive predicate prunes against. Returns one map per committed
-    * parquet file: colName -> (min, max) folded across the file's row
-    * groups.
-    */
-  def fileColumnRanges(spark: SparkSession, path: String,
-                       cols: Seq[String]): Seq[Map[String, (Long, Long)]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val it = fs.listFiles(root, true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, (Long, Long)]]
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith(".")) {
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try {
-          val blocks = reader.getFooter.getBlocks
-          val ranges = scala.collection.mutable.Map.empty[String, (Long, Long)]
-          blocks.forEach { b =>
-            b.getColumns.forEach { cc =>
-              val dotted = cc.getPath.toDotString
-              if (cols.contains(dotted)) {
-                val st = cc.getStatistics
-                if (st != null && st.hasNonNullValue) {
-                  val mn = st.genericGetMin.asInstanceOf[Number].longValue()
-                  val mx = st.genericGetMax.asInstanceOf[Number].longValue()
-                  val cur = ranges.get(dotted)
-                  ranges(dotted) = cur match {
-                    case Some((a, b2)) => (math.min(a, mn), math.max(b2, mx))
-                    case None => (mn, mx)
-                  }
-                }
-              }
-            }
-          }
-          out += ranges.toMap
-        } finally reader.close()
-      }
-    }
-    out.toSeq
-  }
-
-  /** How many files a conjunctive box predicate `col in [lo,hi]` per
-    * dimension must READ given per-file footer ranges: a file is skippable
-    * iff ANY dimension's footer range misses its box — exactly the pruning
-    * rule a parquet reader applies per row group.
-    */
-  def filesNeeded(ranges: Seq[Map[String, (Long, Long)]],
-                  box: Map[String, (Long, Long)]): Int =
-    ranges.count { fr =>
-      box.forall { case (c, (lo, hi)) =>
-        fr.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
-    }
 }

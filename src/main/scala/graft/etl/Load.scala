@@ -62,41 +62,6 @@ final class Load(warehouse: String) {
     Load.parquetRowCount(df.sparkSession, tablePath(name))
   }
 
-  /** K1 at scale: refresh of a PARTITIONED table. Rows land in one
-    * directory per partition value (`part=.../`), so downstream readers get
-    * partition pruning for free. `targetPartitions` repartitions by the
-    * partition columns first — one shuffle that both co-locates writers
-    * (one file per partition dir per task, not one per task × partition:
-    * the small-files killer at 100 TB) and bounds file count.
-    *
-    * Default is a TRUE full refresh (static overwrite — partition values
-    * absent from this load are removed, never served stale).
-    * `onlyTouchedPartitions = true` switches to dynamic overwrite for
-    * incremental reloads: only the partition values present in `df` are
-    * rewritten, everything else is intentionally left as loaded before.
-    */
-  def fullRefreshPartitioned(df: DataFrame, name: String,
-                             partitionCols: Seq[String],
-                             targetPartitions: Int = 0,
-                             onlyTouchedPartitions: Boolean = false): Long = {
-    // Same single-scan contract as fullRefresh: limit-1 empty probe, row
-    // count observed on the write pass. The repartition happens BELOW the
-    // metric point so CollectMetrics runs in the write (result) stage —
-    // a metric under the exchange would sit in the shuffle-map stage, where
-    // re-executed tasks after a fetch failure double-count.
-    if (df.isEmpty) 0L
-    else {
-      val arranged =
-        if (targetPartitions > 0)
-          df.repartition(targetPartitions, partitionCols.map(df(_)): _*)
-        else df.repartition(partitionCols.map(df(_)): _*)
-      Load.writeCounted(arranged, counted => counted.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode",
-          if (onlyTouchedPartitions) "dynamic" else "static")
-        .partitionBy(partitionCols: _*).parquet(tablePath(name)))
-    }
-  }
-
   /** K3: INSERT-OR-REPLACE one keyed row into a table (pipeline.py:286-296),
     * creating it if absent (K5's CREATE IF NOT EXISTS).
     */
@@ -138,9 +103,8 @@ object Load {
     * pass itself (`Dataset.observe` → CollectMetrics): the count costs no
     * extra job and no second scan of the input. Exactness contract: the
     * accumulator is exactly-once only for RESULT-stage tasks — callers must
-    * not introduce an exchange ABOVE the metric point (fullRefresh and
-    * fullRefreshPartitioned observe atop the final frame, directly under the
-    * write). Bucketed writes CANNOT satisfy that (the bucketing spec inserts
+    * not introduce an exchange ABOVE the metric point (fullRefresh observes
+    * atop the final frame, directly under the write). Bucketed writes CANNOT satisfy that (the bucketing spec inserts
     * its own shuffle above the plan), which is why `writeBucketed`
     * counts committed parquet footers instead of observing.
     * Returns the rows that flowed into the write.
@@ -254,8 +218,8 @@ object Load {
     * and compacts each LEAF partition directory independently, preserving
     * the layout (and therefore partition pruning) exactly — the companion
     * `compact` correctly refuses these tables, and partitioned layouts are
-    * where micro-batch loads fragment worst (`fullRefreshPartitioned` with
-    * `onlyTouchedPartitions` appends a few files per run per partition).
+    * where micro-batch loads fragment worst (each batch-partitioned state
+    * root gains a few files per batch).
     *
     * Durability: each leaf is rewritten under `<root>/.compact-staging/...`
     * (dot-prefixed — readers listing the table never see half-written
@@ -355,90 +319,6 @@ object Load {
     fs.delete(staging, true)
     fs.delete(trash, true)
     (results.map(_._1).sum, results.map(_._2).sum)
-  }
-
-  /** `compactPartitioned` for PATHOLOGICAL partition counts: ONE Spark job
-    * instead of one-per-leaf. At tens of thousands of fragmented leaves the
-    * per-leaf variant's driver thread pool becomes the scheduler bottleneck
-    * (round-3 verdict); here the driver does a single metadata sweep to find
-    * fragmented leaves, reads JUST those directories (explicit leaf paths
-    * under `basePath` — untouched leaves are never opened), repartitions by
-    * the partition columns — co-locating each partition's rows into one
-    * writer task → one output file per leaf — and commits through DYNAMIC
-    * partition overwrite, so only the fragmented partition values are
-    * replaced and pruning layout is preserved exactly.
-    *
-    * Trade vs the per-leaf variant: a leaf larger than `targetFileBytes`
-    * comes out as ONE file here (the hash repartition cannot split a single
-    * partition value without a nondeterministic salt, which task retries
-    * forbid) — acceptable because this path exists for the many-tiny-leaves
-    * pathology; use `compactPartitioned` when individual leaves are huge.
-    * Same single-writer precondition. Returns (filesBefore, filesAfter)
-    * summed over all leaves.
-    */
-  def compactPartitionedByRewrite(spark: SparkSession, path: String,
-                                  targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val fs = fsFor(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val rootEntries = fs.listStatus(root)
-    require(!rootEntries.exists(_.getPath.getName == "_spark_metadata"),
-      s"$path is a streaming file-sink table (_spark_metadata present) — " +
-        "compacting would orphan the sink log and hide rows from readers")
-    require(rootEntries.exists(e => e.isDirectory && e.getPath.getName.contains("=")),
-      s"$path has no col=value partition directories — use compact instead")
-    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val dirs = fs.listStatus(p)
-        .filter(e => e.isDirectory && e.getPath.getName.contains("="))
-      if (dirs.isEmpty) Seq(p) else dirs.toSeq.flatMap(d => leaves(d.getPath))
-    }
-    def leafFiles(l: org.apache.hadoop.fs.Path) = fs.listStatus(l)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val leafList = leaves(root)
-    val stats = leafList.map(l => l -> leafFiles(l))
-    val before = stats.map(_._2.length).sum
-    val fragmented = stats.filter { case (_, fls) =>
-      val nOut = math.max(1,
-        math.ceil(fls.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-      fls.length > nOut
-    }.map(_._1)
-    if (fragmented.isEmpty) return (before, before)
-    val rowsBefore = parquetRowCount(spark, path)
-    // partition column names, in directory order, from any leaf's rel path
-    val partCols = fragmented.head.toUri.getPath
-      .stripPrefix(root.toUri.getPath).stripPrefix("/")
-      .split("/").map(_.split("=")(0)).toSeq
-    // Partition values must round-trip BYTE-IDENTICALLY through the
-    // read-rewrite cycle: with type inference on, a leaf like `hour=00` is
-    // read back as int 0 and rewritten to `hour=0` — and since dynamic
-    // overwrite only deletes the partitions it WRITES, the original
-    // `hour=00` directory would survive and readers would see those rows
-    // twice. Inference off keeps partition columns as strings, so the
-    // directory names are reproduced exactly. Session conf (no per-read
-    // option exists for it) — restored afterwards.
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prevInfer = spark.conf.get(inferKey)
-    spark.conf.set(inferKey, "false")
-    try {
-      spark.read.option("basePath", path)
-        .parquet(fragmented.map(_.toString): _*)
-        .repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCols: _*)
-        .parquet(path)
-    } finally spark.conf.set(inferKey, prevInfer)
-    // belt-and-braces: compaction must preserve rows EXACTLY. If a
-    // partition value still failed to round-trip (some exotic encoding),
-    // dynamic overwrite lands the rows in a NEW leaf while the original
-    // survives — rows double. Footer counts are metadata-only, so the
-    // invariant is cheap to enforce and strictly better than silent dups.
-    val rowsAfter = parquetRowCount(spark, path)
-    require(rowsAfter == rowsBefore,
-      s"compaction changed the table's row count ($rowsBefore -> $rowsAfter) — " +
-        "a partition value did not round-trip through the rewrite and its " +
-        "rows were duplicated into a new leaf; inspect the partition layout")
-    val after = leaves(root).map(l => leafFiles(l).length).sum
-    (before, after)
   }
 
   def compact(spark: SparkSession, path: String,

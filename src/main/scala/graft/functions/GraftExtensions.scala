@@ -9,9 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `shingle_set(tokens, 3)`) as well as Column APIs.
   *
   * Cluster use: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * (public `SparkSessionExtensions.injectFunction` API). For a session that
-  * already exists (notebooks, tests), `GraftFunctions.install(spark)`
-  * registers the same builders directly.
+  * (public `SparkSessionExtensions.injectFunction` API).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -49,13 +47,4 @@ object GraftFunctions {
         require(exprs.length == 1, "simhash_bits takes exactly 1 argument")
         SimHashBits(exprs(0))
       }))
-
-  /** Register into an already-built session (same builders the extension
-    * injects at session construction).
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    all.foreach { case (ident, inf, builder) =>
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .registerFunction(spark, ident, inf, builder)
-    }
 }

@@ -523,33 +523,6 @@ object Dedup {
                        dir: String): (DataFrame, DataFrame) =
     (spark.read.parquet(mhToksPath(dir)), spark.read.parquet(mhBandedPath(dir)))
 
-  /** The step every per-ingest loop ENDS with: append the SURVIVING batch
-    * rows' shingles and band keys to the stored index, so the next batch
-    * dedups against them without the corpus ever being re-shingled. The
-    * geometry pre-flight runs against the STORED tables first — appending
-    * rows built with mismatched parameters would silently poison every
-    * future probe, which is strictly worse than the probe-side mismatch
-    * (that only misses dups once).
-    *
-    * Idempotence caveat (same as any parquet append): a retried append
-    * duplicates index rows for the batch. Duplicated rows cost probe work
-    * but never correctness — candidates are `distinct`ed and the verify
-    * join re-derives the same pair rows — so retry-then-compact is the
-    * operational answer, not a transaction log.
-    */
-  def appendToMinHashIndex(survivors: DataFrame, dir: String,
-                           numHashes: Int = 16, bands: Int = 8, shingleSize: Int = 3,
-                           idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = survivors.sparkSession
-    val (storedToks, storedBanded) = readMinHashIndex(spark, dir)
-    minHashPreflight(storedToks, storedBanded, numHashes, bands, shingleSize)
-    val (toks, banded, release) = minHashSide(survivors, numHashes, bands,
-      shingleSize, idCol, textCol, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    toks.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(mhToksPath(dir))
-    banded.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(mhBandedPath(dir))
-    release()
-  }
-
   /** X3 at steady state: MinHash-LSH near-dup detection for a NEW batch
     * against an existing corpus. Band buckets join NEW×CORPUS and
     * NEW×(earlier NEW) — never CORPUS×CORPUS; that work happened when the
@@ -1179,15 +1152,6 @@ object Dedup {
                      idCol: String = "doc_id", textCol: String = "text"): Unit =
     spanIndex(docs, n, idCol, textCol)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-
-  def readSpanIndex(spark: org.apache.spark.sql.SparkSession,
-                    path: String): DataFrame = spark.read.parquet(path)
-
-  def appendToSpanIndex(batch: DataFrame, path: String, n: Int = 8,
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): Unit =
-    spanIndex(batch, n, idCol, textCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
 
   /** Incremental common-span probe: pairs INVOLVING the batch — batch docs'
     * span digests against (stored index ∪ batch), never CORPUS×CORPUS —

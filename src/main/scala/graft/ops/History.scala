@@ -116,49 +116,6 @@ object History {
     untouched.unionByName(closed).unionByName(merged)
   }
 
-  private def kpCol(keys: Seq[String], nParts: Int): Column =
-    pmod(hash(keys.map(col): _*), lit(nParts))
-
-  /** Stored SCD2 history with PARTITION-SCOPED merges: rows live under
-    * key-hash bucket dirs (`_kp=<hash(keys) % nParts>/`), and each batch
-    * (1) collects its ≤ `nParts` touched bucket ids (config-bounded driver
-    * list), (2) reads ONLY those buckets back (partition-pruned scan),
-    * (3) runs `scd2Merge`, and (4) dynamically overwrites ONLY the touched
-    * buckets. Untouched bucket files are never read or rewritten —
-    * per-batch cost is O(batch + touched buckets), not O(dimension) — the
-    * same layout contract as `upsertSinkPartitioned`.
-    *
-    * `nParts` must stay CONSTANT for the life of the table (it defines the
-    * layout); pick it so one bucket ≈ one executor-comfortable partition
-    * at full dimension size.
-    */
-  def scd2MergeStored(spark: org.apache.spark.sql.SparkSession, root: String,
-                      batch: DataFrame, keys: Seq[String], ts: Column,
-                      tiebreak: Column, attr: Column, nParts: Int = 64): Unit = {
-    val fs = graft.etl.Load.fsFor(spark, root)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(root))
-    val merged =
-      if (!exists) scd2FromEvents(batch, keys, ts, tiebreak, attr)
-      else {
-        val touched = batch.select(kpCol(keys, nParts).as("_kp")).distinct()
-          .collect().map(_.getInt(0))
-        val existing = spark.read.parquet(root)
-          .filter(col("_kp").isin(touched.map(Int.box): _*))
-          .drop("_kp")
-        scd2Merge(existing, batch, keys, ts, tiebreak, attr)
-      }
-    merged.withColumn("_kp", kpCol(keys, nParts))
-      .repartition(col("_kp"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_kp").parquet(root)
-  }
-
-  /** The stored history without its layout column. */
-  def readScd2Stored(spark: org.apache.spark.sql.SparkSession,
-                     root: String): DataFrame =
-    spark.read.parquet(root).drop("_kp")
-
   /** Point-in-time (as-of) enrichment of a fact stream from an SCD2
     * history WITHOUT a range join: version rows and facts merge into one
     * per-key ordered stream (a version row sorts BEFORE any fact sharing

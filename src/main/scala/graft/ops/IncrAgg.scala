@@ -66,13 +66,6 @@ object IncrAgg {
         max(col("p_max")).as("max_v"),
         hll_sketch_estimate(hll_union_agg(col("p_hll"))).as("approx_distinct"))
 
-  /** Append one batch's partials under `root/batch=<id>/`. Overwriting
-    * exactly its own dir makes crash replay idempotent by construction
-    * (same contract as the streaming dedup state dirs).
-    */
-  def writeState(state: DataFrame, root: String, batchId: Long): Unit =
-    state.write.mode("overwrite").parquet(BatchDirs.dir(root, batchId))
-
   /** All stored partials; the inferred `batch` partition column is dropped
     * (merge treats every batch alike).
     */

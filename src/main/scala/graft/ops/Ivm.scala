@@ -136,26 +136,4 @@ object Ivm {
       .groupBy(keys.map(col): _*)
       .agg(sum(col("n_rows")).as("n_rows"), sum(col("sum_v")).as("sum_v"))
       .filter(col("n_rows") =!= 0)
-
-  // ------------------------------------------ stored delta-state lifecycle
-
-  /** All stored delta partials (the `delta` argument `mergeView` wants). */
-  def readViewDeltas(spark: org.apache.spark.sql.SparkSession,
-                     root: String): DataFrame =
-    spark.read.parquet(root).drop("batch")
-
-  /** Collapse accumulated delta dirs into one partial per group
-    * (`batch=0`), bounding `mergeView`'s input at O(groups). Shares
-    * IncrAgg's staged-fold crash contract verbatim. Rows where BOTH
-    * sums telescope to zero are true no-ops and drop; n_rows = 0 with
-    * sum_v ≠ 0 (value-only updates) MUST survive the fold — dropping on
-    * n_rows alone would lose the pending sum.
-    */
-  def foldViewDeltas(spark: org.apache.spark.sql.SparkSession, root: String,
-                     keys: Seq[String], before: Long = Long.MaxValue): Unit =
-    IncrAgg.foldStateWith(spark, root, before) { all =>
-      all.groupBy(keys.map(col): _*)
-        .agg(sum(col("n_rows")).as("n_rows"), sum(col("sum_v")).as("sum_v"))
-        .filter(col("n_rows") =!= 0 || col("sum_v") =!= 0)
-    }
 }

@@ -19,9 +19,7 @@ final case class PslRules(
     exact3: Seq[String],
     wildcardTlds: Seq[String],
     exceptions: Seq[String],
-    unsupported: Seq[String]) {
-  def suffixCount: Int = exact2.size + exact3.size + wildcardTlds.size
-}
+    unsupported: Seq[String])
 
 /** Public Suffix List loader + the PSL-aware registrable-domain rule.
   *

@@ -311,24 +311,6 @@ object Relational {
       .agg(sum(col("support")).as("support"))
   }
 
-  /** Rewrite accumulated per-batch partials as one row per pair (run on a
-    * maintenance cadence, not per append — the read path is already
-    * correct without it; this just re-bounds the partial-row count).
-    * Two-phase via a temp sibling dir: consolidating INTO the dir being
-    * read would truncate the source mid-scan.
-    */
-  def compactBasketEdges(spark: SparkSession, dir: String): Unit = {
-    val tmp = dir.stripSuffix("/") + "__compact"
-    readBasketEdges(spark, dir)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
-    resetBatchLog(spark, dir) // compacted = single consolidated batch again
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    markerFs(spark, tmpPath).delete(tmpPath, true)
-    ()
-  }
-
   /** Per-group exact OLS trend line ŷ = slope·x + intercept over integer
     * (x, y) samples — the "is this segment's spend rising?" primitive.
     * ONE pass, one keyed shuffle (partial+final aggregation of the five

@@ -500,26 +500,6 @@ object Vectors {
                       dir: String): (DataFrame, DataFrame) =
     (spark.read.parquet(cosNormedPath(dir)), spark.read.parquet(cosBandedPath(dir)))
 
-  /** Append the surviving batch vectors to a stored index — the closing
-    * step of each embedding-ingest iteration. Geometry pre-flight runs
-    * against the STORED tables first (a mismatched append poisons future
-    * probes). Retried appends duplicate index rows for the batch — extra
-    * probe work, never wrong flags (candidates are deduped per band and
-    * the verify re-derives identical pair rows); compaction cleans up.
-    */
-  def appendToCosineIndex(survivors: DataFrame, dir: String,
-                          planesPerBand: Int = 2, bands: Int = 16, dims: Int = 64,
-                          idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = survivors.sparkSession
-    val (storedNormed, storedBanded) = readCosineIndex(spark, dir)
-    cosinePreflight(storedNormed, storedBanded, planesPerBand, bands, dims)
-    val (nv, banded) = cosineIndex(survivors, planesPerBand, bands, dims, idCol, vecCol)
-    nv.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(cosNormedPath(dir))
-    banded.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(cosBandedPath(dir))
-    nv.unpersist()
-    ()
-  }
-
   /** `cosineIncremental` against a STORED corpus index (the two frames from
     * `cosineIndex`, read back): per ingest only the batch is projected and
     * banded; the corpus contributes a probe join on its stored band keys
@@ -1022,8 +1002,7 @@ object Vectors {
     * reads exactly its `nprobe` cells' directories and nothing else
     * (plan-time partition pruning; the 100 TB story the in-memory `ivfTopK`
     * docblock promises). The once-at-bootstrap step of an embedding-serving
-    * loop; append batches with `appendToIvfIndex`, re-train centroids on a
-    * schedule by rebuilding.
+    * loop; re-train centroids on a schedule by rebuilding.
     */
   def writeIvfIndex(corpus: DataFrame, dir: String,
                     centroidEvery: Int = 50, maxCentroids: Int = 128,
@@ -1046,24 +1025,6 @@ object Vectors {
                    dir: String): (DataFrame, DataFrame) =
     (spark.read.parquet(ivfCentroidsPath(dir)),
       spark.read.parquet(ivfListsPath(dir)))
-
-  /** Append a batch to a stored IVF index: assign each new vector to its
-    * nearest STORED centroid (no re-clustering — the standard IVF append;
-    * centroid re-training is a scheduled rebuild) and append into the
-    * matching `cell=` directories. Dimensionality pre-flight first: a
-    * mismatched batch would land rows no probe scores correctly.
-    */
-  def appendToIvfIndex(newVecs: DataFrame, dir: String, dims: Int = 64,
-                       maxCentroids: Int = 128,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = newVecs.sparkSession
-    val (cents, _) = readIvfIndex(spark, dir)
-    ivfPreflight(cents, dims)
-    nearestCellsFrame(normedPrefixed(newVecs, "x", idCol, vecCol),
-        boundedCentroids(cents, maxCentroids), "x", 1)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("cell").parquet(ivfListsPath(dir))
-  }
 
   /** Broadcast-wrap a STORED centroid table with a structural cardinality
     * bound: the table is ≤ maxCentroids rows by construction
@@ -1089,18 +1050,6 @@ object Vectors {
     }
   }
 
-  /** The cells a probe of `queries` will read — distinct nearest-`nprobe`
-    * cell ids (bounded by the centroid cap, so the collect is config-sized).
-    * Public so callers (and specs) can audit exactly which inverted lists
-    * a probe touches.
-    */
-  def ivfProbeCells(queries: DataFrame, centroids: DataFrame, nprobe: Int,
-                    maxCentroids: Int = 128,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): Seq[Long] =
-    nearestCellsFrame(normedPrefixed(queries, "q", idCol, vecCol),
-        boundedCentroids(centroids, maxCentroids), "q", nprobe)
-      .select(col("cell")).distinct().collect().map(_.getLong(0)).toSeq
-
   /** `ivfTopK` against a STORED index — the steady-state probe: queries are
     * assigned to their `nprobe` nearest stored centroids (tiny broadcast),
     * the probed cell ids are collected (≤ the centroid cap — a
@@ -1108,8 +1057,7 @@ object Vectors {
     * turned into a PLAN-TIME partition filter, so the lists scan opens only
     * those `cell=` directories; scoring and per-query top-k are unchanged
     * from `ivfTopK`. Results are identical to a fresh `ivfTopK` over the
-    * same corpus and parameters (IvfSpec-pinned via append-then-probe ≡
-    * rebuild).
+    * same corpus and parameters (DedupVectorsSpec pins it).
     */
   def ivfTopKIndexed(queries: DataFrame,
                      centroids: DataFrame, lists: DataFrame,

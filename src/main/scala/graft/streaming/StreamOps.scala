@@ -313,22 +313,6 @@ object StreamOps {
       .toDF("user_id", "n_events", "level_bp", "trend_bp", "forecast_bp")
   }
 
-  /** Stream-STATIC enrichment join: each streaming event decorated with a
-    * static dimension row (user profile / segment lookup) — the third leg
-    * of the streaming join taxonomy next to stream-stream
-    * (`clicksAfterSignup`) and the stateful sinks. STATELESS by
-    * construction: the static side needs no watermark and holds no join
-    * state — every micro-batch is a plain batch join, and the dimension is
-    * explicitly `broadcast` so at cluster scale each executor hash-probes
-    * a local map instead of shuffling the event stream (dimension tables
-    * are segment-sized; the 100 TB side must never move for them). LEFT
-    * join: an event whose key is missing from the dimension passes through
-    * with nulls — enrichment must not drop facts.
-    */
-  def enrichWithDimension(events: DataFrame, dim: DataFrame,
-                          key: String = "user_id"): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
   /** Stream-stream interval join: each `click` joined to the same user's
     * `signup` that happened at most `horizon` earlier. Both sides carry
     * watermarks and the join condition bounds event-time distance, so join
@@ -434,9 +418,7 @@ object StreamOps {
     *
     * COST: the merge rewrites the WHOLE table every micro-batch — right for
     * its run-metadata-sized use (the reference's etl_runs table), O(table)
-    * per trigger on anything larger. For large keyed tables use
-    * `upsertSinkPartitioned`, which rewrites only the key partitions a
-    * batch touches.
+    * per trigger on anything larger.
     */
   def upsertSink(df: DataFrame, path: String, checkpoint: String,
                  keys: Seq[String], orderCols: Seq[String]): DataStreamWriter[Row] =
@@ -453,50 +435,6 @@ object StreamOps {
       graft.etl.Load.replaceTable(spark, merged, path)
       ()
     }
-
-  /** `upsertSink` for LARGE keyed tables: the table is hash-partitioned on
-    * the key into `nParts` `_kp=<n>` directories, and each micro-batch
-    * merges into and dynamically overwrites ONLY the partitions its keys
-    * hash into — per-trigger cost is O(touched partitions), not O(table).
-    * `_kp` is an internal layout column (readers can ignore or drop it).
-    * Replay-idempotent: the merge is a keyed upsert, so re-running a batch
-    * rewrites the same partitions to the same contents.
-    */
-  def upsertSinkPartitioned(df: DataFrame, path: String, checkpoint: String,
-                            keys: Seq[String], orderCols: Seq[String],
-                            nParts: Int = 64): DataStreamWriter[Row] =
-    StateSink.sink(df, checkpoint) { (batch, _) =>
-      upsertBatchPartitioned(batch, path, keys, orderCols, nParts)
-    }
-
-  /** One micro-batch of `upsertSinkPartitioned`, public for direct testing
-    * (and usable as a batch-mode MERGE). The touched-partition list is a
-    * config-bounded driver collect (≤ `nParts` values).
-    */
-  def upsertBatchPartitioned(batch: DataFrame, path: String,
-                             keys: Seq[String], orderCols: Seq[String],
-                             nParts: Int): Unit = {
-    val spark = batch.sparkSession
-    val latest = graft.ops.Relational.firstPerKey(
-        batch, keys, orderCols.map(c => col(c).desc))
-      .withColumn("_kp", pmod(hash(keys.map(col): _*), lit(nParts)))
-    val fs = graft.etl.Load.fsFor(spark, path)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
-    val merged =
-      if (!exists) latest
-      else {
-        val touched = latest.select(col("_kp")).distinct()
-          .collect().map(_.getInt(0))
-        // partition pruning keeps this read to the touched directories only
-        val existing = spark.read.parquet(path)
-          .filter(col("_kp").isin(touched.map(Int.box): _*))
-        graft.ops.Relational.upsertByKey(existing, latest, keys)
-      }
-    merged.repartition(col("_kp"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_kp").parquet(path)
-  }
 
   /** Sink helper: append to Parquet with checkpointing (exactly-once file
     * sink semantics).
@@ -768,109 +706,6 @@ object StreamOps {
         graft.ops.IncrAgg.foldState(st.spark, stateRoot, keys, before = batchId)
     }
 
-  /** Streaming JOIN-view maintenance (ops/Ivm): a stream of SIGNED
-    * left-fact deltas (+1 insert / −1 delete; an update is the pair)
-    * maintains `γ_keys(count, Σ value)(L ⋈ dim)` without ever re-joining
-    * or re-aggregating history — the foreachBatch form of the
-    * `ivm_join_agg` delta rule for the streaming-facts / static-dim
-    * shape. Each micro-batch broadcast-joins its (batch-sized) deltas
-    * against the dim, writes signed view partials under `batch=<id>`, and
-    * folds accumulated dirs every `foldEvery` batches so the read side
-    * stays O(groups). Unlike IncrAgg's partials these are SIGNED: a
-    * batch's net effect on a group can be n_rows = 0 with sum_v ≠ 0 (a
-    * pure value update), which is a real pending delta, not a no-op.
-    * `Ivm.mergeView(baseView, Ivm.readViewDeltas(...))` is the serving
-    * read.
-    */
-  def ivmViewSink(deltas: DataFrame, dim: DataFrame, stateRoot: String,
-                  checkpoint: String, keys: Seq[String],
-                  lKey: String, rKey: String, value: Column,
-                  foldEvery: Int = 8): DataStreamWriter[Row] =
-    StateSink.sink(deltas, checkpoint) { (batch, batchId) =>
-      ivmDeltaBatch(batch, batchId, dim, stateRoot, keys, lKey, rKey, value,
-        foldEvery)
-    }
-
-  /** One micro-batch of `ivmViewSink`, public for direct testing and as
-    * the crash-replay entry point (re-running the last uncommitted batch
-    * id must leave state equivalent).
-    */
-  def ivmDeltaBatch(batch: DataFrame, batchId: Long, dim: DataFrame,
-                    stateRoot: String, keys: Seq[String],
-                    lKey: String, rKey: String, value: Column,
-                    foldEvery: Int = 8): Unit =
-    StateSink.run(batch, batchId) { st =>
-      val joined = broadcast(batch).join(dim, col(lKey) === col(rKey))
-      st.overwriteOwn(
-        graft.ops.Ivm.viewPartial(joined, keys, value, col("sign")), stateRoot)
-      if (st.foldDue(stateRoot, foldEvery))
-        graft.ops.Ivm.foldViewDeltas(st.spark, stateRoot, keys, before = batchId)
-    }
-
-  /** File-source stream of embedding rows — the ingest feed for
-    * `embeddingDedupSink`. JSON lines `{"vec_id": …, "embedding": […]}`.
-    */
-  def readEmbeddingStream(spark: SparkSession, dir: String,
-                          maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.json(dir)
-  }
-
-  /** The EMBEDDING twin of `incrementalDedupSink`: every micro-batch of
-    * vectors is probed against the stored sign-LSH index
-    * (`Vectors.cosineIncrementalIndexed` — NEW×CORPUS and NEW×earlier-NEW
-    * band joins only, the corpus is never re-banded), novel survivors land
-    * in `stateDir/out/`, and the survivors' normed + banded rows are
-    * appended so the NEXT batch dedups against them. This is the semantic
-    * half of a streaming ingest pipeline (the MinHash sink is the lexical
-    * half): paraphrase-duplicates arrive continuously too.
-    *
-    * State is `normed/banded/out` under `batch=<id>/`. Deltas are foldable
-    * by `Load.compactPartitioned` on whatever maintenance cadence the
-    * operator runs.
-    */
-  def embeddingDedupSink(vecs: DataFrame, stateDir: String, checkpoint: String,
-                         threshold: Double = 0.9,
-                         planesPerBand: Int = 2, bands: Int = 16,
-                         dims: Int = 64,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataStreamWriter[Row] =
-    StateSink.sink(vecs, checkpoint) { (batch, batchId) =>
-      embeddingDedupBatch(batch, batchId, stateDir, threshold,
-        planesPerBand, bands, dims, idCol, vecCol)
-    }
-
-  /** One ingest iteration of `embeddingDedupSink`, public for replay
-    * testing: same batch id twice must leave state and output identical.
-    */
-  def embeddingDedupBatch(batch: DataFrame, batchId: Long, stateDir: String,
-                          threshold: Double = 0.9,
-                          planesPerBand: Int = 2, bands: Int = 16,
-                          dims: Int = 64,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): Unit =
-    StateSink.run(batch, batchId) { st =>
-      import graft.ops.Vectors
-      val none = StorageLevel.NONE
-      val emptyIndex =
-        Vectors.cosineIndex(batch.limit(0), planesPerBand, bands, dims,
-          idCol, vecCol, none)
-      val priorNormed = st.readPrior(s"$stateDir/normed", emptyIndex._1.schema)
-      val priorBanded = st.readPrior(s"$stateDir/banded", emptyIndex._2.schema)
-      val flagged = Vectors.cosineIncrementalIndexed(batch, priorNormed,
-        priorBanded, threshold, planesPerBand, bands, dims, idCol, vecCol)
-      val survivors = st.cache(batch
-        .join(flagged.select(col(idCol)), Seq(idCol), "left_anti"))
-      st.overwriteOwn(survivors, s"$stateDir/out")
-      val (sNormed, sBanded) =
-        Vectors.cosineIndex(survivors, planesPerBand, bands, dims,
-          idCol, vecCol, none)
-      st.overwriteOwn(sNormed, s"$stateDir/normed")
-      st.overwriteOwn(sBanded, s"$stateDir/banded")
-    }
-
   /** Streaming vocabulary maintenance + OOV reporting: every micro-batch
     * of documents is scored against the vocabulary accumulated by PRIOR
     * batches (`Text.oovStats` — the vocab-drift monitor), then its own
@@ -1057,23 +892,5 @@ object StreamOps {
         graft.ops.Quality.psiDriftFromCounts(ref, batch, bucket, nBuckets),
         s"$stateDir/report")
       st.overwriteOwn(hist, histRoot)
-    }
-
-  /** Streaming SCD2 maintenance: every micro-batch of change events merges
-    * into the stored, key-hash-bucketed history via
-    * `History.scd2MergeStored` — per trigger, only the buckets the batch
-    * touches are read and rewritten. Crash-replay is idempotent through
-    * `scd2Merge`'s replay guard (events before a key's current valid_from
-    * are already reflected and get dropped), so this sink keeps no
-    * `batch=<id>` state of its own.
-    */
-  def scd2Sink(rows: DataFrame, root: String, checkpoint: String,
-               keys: Seq[String], ts: org.apache.spark.sql.Column,
-               tiebreak: org.apache.spark.sql.Column,
-               attr: org.apache.spark.sql.Column,
-               nParts: Int = 64): DataStreamWriter[Row] =
-    StateSink.sink(rows, checkpoint) { (batch, _) =>
-      graft.ops.History.scd2MergeStored(batch.sparkSession, root, batch,
-        keys, ts, tiebreak, attr, nParts)
     }
 }

@@ -47,10 +47,4 @@ object Tables {
               "extend Tables.load's ts normalization for this corpus format")
       }
     } else spark.read.parquet(s"$sfDir/$name.parquet")
-
-  /** Register every corpus table as a temp view so `spark.sql` text queries
-    * (grouping sets, etc.) see the same names the DuckDB oracle uses.
-    */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    All.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

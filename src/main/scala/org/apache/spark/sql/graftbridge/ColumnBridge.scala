@@ -16,26 +16,6 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Register a function builder into an existing session's registry (the
-    * post-construction twin of `SparkSessionExtensions.injectFunction`).
-    */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      ident: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(ident, info, builder)
-
-  /** True when the session's SQL cache manager holds ZERO cached plans.
-    * Read-only introspection (the CacheManager is `private[sql]`) used by
-    * specs to pin the iterative graph ops' lifecycle contract: after a
-    * deep-iteration call returns, every persist() it issued must be gone.
-    */
-  def sqlCacheIsEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager.isEmpty
-
   /** Block until the listener bus has delivered every queued event
     * (`listenerBus.waitUntilEmpty` is `private[spark]`). Used by the
     * bench harness to attribute task-metric spill counters to the query

@@ -81,48 +81,4 @@ class LayoutSpec extends SparkSpec {
     assert(viaExpr == viaSql)
   }
 
-  test("z-ordered layout prunes a 2-D box to fewer files than 1-D sort") {
-    // deterministic 128x128 grid, both coordinates uniform in [0,127]
-    val grid = spark.range(128L * 128L)
-      .select((col("id") % 128).as("x"), (col("id") / 128).cast("long").as("y"))
-    val zDir = tmpDir("layout_z")
-    val linDir = tmpDir("layout_lin")
-    val files = 32
-    Layout.writeZOrdered(grid, zDir,
-      Layout.zValue(Seq(col("x"), col("y")), 7), files)
-    Layout.writeRangeSorted(grid, linDir, col("x"), files)
-
-    // the same conjunctive box predicate, pruned by footer min/max
-    val box = Map("x" -> (32L, 63L), "y" -> (32L, 63L)) // 1/16 of the space
-    val zNeeded = Layout.filesNeeded(
-      Layout.fileColumnRanges(spark, zDir, Seq("x", "y")), box)
-    val linNeeded = Layout.filesNeeded(
-      Layout.fileColumnRanges(spark, linDir, Seq("x", "y")), box)
-
-    // 1-D layout prunes on x only (~1/4 of files, every one spans all y);
-    // z-order localizes the box (~1/16 plus boundary curves)
-    assert(zNeeded > 0, "box must hit at least one file")
-    assert(zNeeded < linNeeded,
-      s"z-order needed $zNeeded files, 1-D sort $linNeeded — no pruning win")
-
-    // Hilbert layout on the same grid: unit-step adjacency means file
-    // boundaries never take the Morton curve's diagonal jumps, so the box
-    // needs no MORE files than Morton (and beats 1-D outright)
-    val hDir = tmpDir("layout_h")
-    Layout.writeZOrdered(
-      Layout.withHValue(grid, col("x"), col("y"), 7), hDir, col("hval"), files)
-    val hNeeded = Layout.filesNeeded(
-      Layout.fileColumnRanges(spark, hDir, Seq("x", "y")), box)
-    assert(hNeeded > 0 && hNeeded <= zNeeded,
-      s"hilbert needed $hNeeded files vs morton $zNeeded — locality loss")
-    assert(hNeeded < linNeeded,
-      s"hilbert needed $hNeeded files, 1-D sort $linNeeded — no pruning win")
-
-    // and both layouts return identical rows for the box (layout is
-    // organization, never semantics)
-    def boxCount(dir: String): Long =
-      spark.read.parquet(dir)
-        .filter(col("x").between(32, 63) && col("y").between(32, 63)).count()
-    assert(boxCount(zDir) == 32L * 32L && boxCount(linDir) == 32L * 32L)
-  }
 }

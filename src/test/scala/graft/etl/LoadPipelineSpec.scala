@@ -29,27 +29,6 @@ class LoadPipelineSpec extends SparkSpec {
     assert(rows.forall(_.getAs[String]("_etl_loaded_at") == "2026-08-12T00:00:00Z"))
   }
 
-  test("partitioned full refresh: partition dirs, pruning-ready layout, dynamic overwrite") {
-    val load = new Load(tmpDir("wh"))
-    val v1 = Seq(("a", 1), ("a", 2), ("b", 3)).toDF("part", "v")
-    assert(load.fullRefreshPartitioned(v1, "t", Seq("part"), 2) == 3L)
-    val root = new java.io.File(load.tablePath("t"))
-    assert(root.listFiles().map(_.getName).toSet.filter(_.startsWith("part="))
-      == Set("part=a", "part=b"))
-    // incremental mode: rewriting only part=a leaves part=b intact
-    val v2 = Seq(("a", 9)).toDF("part", "v")
-    load.fullRefreshPartitioned(v2, "t", Seq("part"), onlyTouchedPartitions = true)
-    val out = spark.read.parquet(load.tablePath("t"))
-      .select("part", "v").as[(String, Int)].collect().toSet
-    assert(out == Set(("a", 9), ("b", 3)))
-    // default = TRUE full refresh: absent partition values are removed,
-    // not served stale
-    load.fullRefreshPartitioned(v2, "t", Seq("part"))
-    val out2 = spark.read.parquet(load.tablePath("t"))
-      .select("part", "v").as[(String, Int)].collect().toSet
-    assert(out2 == Set(("a", 9)))
-  }
-
   test("compact: fragmented table rewritten to fewer files, data identical") {
     val load = new Load(tmpDir("wh"))
     val frag = spark.range(0, 10000).toDF("n").repartition(50)
@@ -80,8 +59,8 @@ class LoadPipelineSpec extends SparkSpec {
     new java.io.File(s"$sinkPath/_spark_metadata").mkdirs()
     intercept[IllegalArgumentException] { Load.compact(spark, sinkPath) }
     // partitioned layout → refuse: a flat rewrite destroys pruning
-    load.fullRefreshPartitioned(
-      Seq(("a", 1), ("b", 2)).toDF("part", "v"), "parted", Seq("part"))
+    Seq(("a", 1), ("b", 2)).toDF("part", "v")
+      .write.partitionBy("part").parquet(load.tablePath("parted"))
     intercept[IllegalArgumentException] {
       Load.compact(spark, load.tablePath("parted"))
     }
@@ -135,75 +114,6 @@ class LoadPipelineSpec extends SparkSpec {
       s"scan still touches: ${files.filterNot(_.contains("part=a")).take(3)}")
     // idempotent: already-compact leaves untouched
     assert(Load.compactPartitioned(spark, path, targetFileBytes = 1L << 30) == (2, 2))
-  }
-
-  test("compactPartitionedByRewrite: one job compacts all fragmented leaves, pruning preserved") {
-    val load = new Load(tmpDir("wh"))
-    val path = load.tablePath("parts1j")
-    (1 to 5).foreach { b =>
-      Seq(("a", b), ("b", b)).toDF("part", "v")
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("part").parquet(path)
-    }
-    // one leaf is already compact — the rewrite must not touch it
-    Seq(("c", 99)).toDF("part", "v")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("part").parquet(path)
-    val cFile = new java.io.File(s"$path/part=c").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    val before = spark.read.parquet(path)
-      .select("part", "v").as[(String, Int)].collect().toSet
-    val (nBefore, nAfter) =
-      Load.compactPartitionedByRewrite(spark, path, targetFileBytes = 1L << 30)
-    assert(nBefore >= 11 && nAfter == 3, s"$nBefore -> $nAfter files")
-    // untouched leaf kept its exact files (dynamic overwrite touched only
-    // the fragmented partition values)
-    assert(new java.io.File(s"$path/part=c").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet == cFile)
-    val reread = spark.read.parquet(path)
-    assert(reread.select("part", "v").as[(String, Int)].collect().toSet == before)
-    // partition pruning must still happen at PLAN time after the rewrite
-    val filtered = reread.filter($"part" === "a")
-    val scans = filtered.queryExecution.sparkPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }
-    val files = scans.head.relation.location
-      .listFiles(scans.head.partitionFilters, scans.head.dataFilters)
-      .flatMap(_.files.map(_.getPath.toString))
-    assert(files.nonEmpty && files.forall(_.contains("part=a")),
-      s"scan still touches: ${files.filterNot(_.contains("part=a")).take(3)}")
-    // idempotent: nothing fragmented → no job, counts unchanged
-    assert(Load.compactPartitionedByRewrite(spark, path,
-      targetFileBytes = 1L << 30) == (3, 3))
-  }
-
-  test("compactPartitionedByRewrite: zero-padded partition values round-trip exactly") {
-    // hour=00 vs hour=0: with partition type inference on, the rewrite
-    // would read "00" back as int 0, write a NEW hour=0 leaf, and dynamic
-    // overwrite would leave the original hour=00 leaf in place — readers
-    // would then see those rows TWICE. The fix reads partition values as
-    // strings so directory names reproduce byte-identically.
-    val load = new Load(tmpDir("wh"))
-    val path = load.tablePath("padded")
-    (1 to 4).foreach { b =>
-      Seq(("00", b), ("7", b)).toDF("hour", "v")
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("hour").parquet(path)
-    }
-    assert(new java.io.File(s"$path/hour=00").isDirectory)
-    val before = spark.read.parquet(path)
-      .selectExpr("CAST(hour AS STRING)", "v").as[(String, Int)].collect().toSeq
-        .groupBy(identity).view.mapValues(_.size).toMap
-    val (nb, na) = Load.compactPartitionedByRewrite(spark, path,
-      targetFileBytes = 1L << 30)
-    assert(nb == 8 && na == 2, s"$nb -> $na files")
-    // the zero-padded leaf was rewritten IN PLACE — no hour=0 twin appeared
-    assert(new java.io.File(s"$path/hour=00").isDirectory)
-    assert(!new java.io.File(s"$path/hour=0").exists())
-    val after = spark.read.parquet(path)
-      .selectExpr("CAST(hour AS STRING)", "v").as[(String, Int)].collect().toSeq
-        .groupBy(identity).view.mapValues(_.size).toMap
-    assert(after == before, "row multiplicities changed — duplicate leaves")
   }
 
   test("parquetRowCount: missing table counts 0; uncommitted _temporary files don't count") {

@@ -2,14 +2,19 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TestBridge
 
 /** SQL-surface registration of the native expressions. */
 class GraftFunctionsSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** What `GraftExtensions` injects at session build, into the running one. */
+  private def install(): Unit =
+    GraftFunctions.all.foreach(TestBridge.registerFunction(spark, _))
+
   test("dot_product and shingle_set are callable from SQL after install") {
-    GraftFunctions.install(spark)
+    install()
     Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)))
       .toDF("a", "b").createOrReplaceTempView("vecs")
     val dot = spark.sql("SELECT dot_product(a, b) AS d FROM vecs")
@@ -22,7 +27,7 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("simhash_bits is callable from SQL and matches the Column API") {
-    GraftFunctions.install(spark)
+    install()
     Seq(Seq("the", "quick", "brown", "fox")).toDF("toks")
       .createOrReplaceTempView("toksv")
     val viaSql = spark.sql("SELECT simhash_bits(toks) AS fp FROM toksv")
@@ -34,8 +39,8 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("install is idempotent and SQL agrees with the Column API") {
-    GraftFunctions.install(spark)
-    GraftFunctions.install(spark)
+    install()
+    install()
     val df = Seq((Array(0.5f, -1.5f), Array(2.0f, 4.0f))).toDF("a", "b")
     df.createOrReplaceTempView("vecs2")
     val viaSql = spark.sql("SELECT dot_product(a, b) FROM vecs2").head().getDouble(0)

@@ -92,7 +92,7 @@ class DedupVectorsSpec extends SparkSpec {
     assert(indexed == direct && direct.nonEmpty)
     // the probe returns a lazy frame with no release point, so it must
     // not leave cached batch signatures behind
-    assert(org.apache.spark.sql.graftbridge.ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(org.apache.spark.sql.graftbridge.TestBridge.sqlCacheIsEmpty(spark),
       "minHashIncrementalIndexed must retain no cached frames")
     // mismatched build params must fail fast, not silently admit near-dups
     intercept[IllegalArgumentException] {
@@ -104,67 +104,6 @@ class DedupVectorsSpec extends SparkSpec {
       Dedup.minHashIncrementalIndexed(batch,
         spark.read.parquet(s"$dir/toks"), spark.read.parquet(s"$dir/banded"),
         0.5, shingleSize = 4)
-    }
-  }
-
-  test("appendToMinHashIndex: append-then-reprobe equals a full index rebuild") {
-    val corpus = Seq(
-      (1L, "en", "the quick brown fox jumps over the lazy dog tonight"),
-      (2L, "en", "the quick brown fox jumps over the lazy dog today"),
-      (3L, "en", "completely different text about spark engines at scale")
-    ).toDF("doc_id", "lang", "text")
-    val batch1 = Seq(
-      (11L, "en", "a quick brown fox jumps over the lazy dog tonight"),
-      (12L, "en", "fresh material with no relation to anything stored here")
-    ).toDF("doc_id", "lang", "text")
-    val batch2 = Seq(
-      (21L, "en", "fresh material with no relation to anything stored today"),
-      (22L, "en", "the quick brown fox jumps over the lazy dog tonight")
-    ).toDF("doc_id", "lang", "text")
-    val dir = tmpDir("mh-append")
-    Dedup.writeMinHashIndex(corpus, dir)
-    // ingest loop iteration: probe batch1, then append it (all of it — both
-    // rows are novel under exact dedup) to the stored index
-    Dedup.appendToMinHashIndex(batch1, dir)
-    val (toks, banded) = Dedup.readMinHashIndex(spark, dir)
-    val viaAppend = Dedup.minHashIncrementalIndexed(batch2, toks, banded, 0.5)
-      .collect().map(_.toSeq).toSet
-    // ground truth: the same probe against an index built from scratch over
-    // corpus + batch1
-    val dir2 = tmpDir("mh-rebuild")
-    Dedup.writeMinHashIndex(corpus.unionByName(batch1), dir2)
-    val (toks2, banded2) = Dedup.readMinHashIndex(spark, dir2)
-    val viaRebuild = Dedup.minHashIncrementalIndexed(batch2, toks2, banded2, 0.5)
-      .collect().map(_.toSeq).toSet
-    assert(viaAppend == viaRebuild && viaAppend.nonEmpty)
-    // batch2 doc 21 near-dups batch1 doc 12 — only visible through the
-    // APPENDED rows, so this pins that the append actually landed
-    assert(viaAppend.exists(_.head == 21L))
-    // appending with mismatched geometry must fail fast, not poison probes
-    intercept[IllegalArgumentException] {
-      Dedup.appendToMinHashIndex(batch2, dir, numHashes = 32, bands = 16)
-    }
-  }
-
-  test("appendToCosineIndex: append-then-reprobe equals a full index rebuild") {
-    val emb = graft.tables.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val corpus = emb.filter(col("vec_id") % 7 =!= 0 && col("vec_id") % 7 =!= 1)
-    val batch1 = emb.filter(col("vec_id") % 7 === 1)
-    val batch2 = emb.filter(col("vec_id") % 7 === 0)
-    val dir = tmpDir("cos-append")
-    Vectors.writeCosineIndex(corpus, dir)
-    Vectors.appendToCosineIndex(batch1, dir)
-    val (n1, b1) = Vectors.readCosineIndex(spark, dir)
-    val viaAppend = Vectors.cosineIncrementalIndexed(batch2, n1, b1, 0.4)
-      .collect().map(_.toSeq).toSet
-    val dir2 = tmpDir("cos-rebuild")
-    Vectors.writeCosineIndex(corpus.unionByName(batch1), dir2)
-    val (n2, b2) = Vectors.readCosineIndex(spark, dir2)
-    val viaRebuild = Vectors.cosineIncrementalIndexed(batch2, n2, b2, 0.4)
-      .collect().map(_.toSeq).toSet
-    assert(viaAppend == viaRebuild && viaAppend.nonEmpty)
-    intercept[IllegalArgumentException] {
-      Vectors.appendToCosineIndex(batch2, dir, planesPerBand = 3, bands = 12)
     }
   }
 
@@ -529,16 +468,10 @@ class DedupVectorsSpec extends SparkSpec {
       "objective_monotone_r2" -> true, "recall_floor" -> true))
   }
 
-  test("IVF stored index: append-then-probe equals a full rebuild; probe prunes to probed cells") {
+  test("IVF stored index: probe equals a fresh ivfTopK; probe prunes to probed cells") {
     val emb = graft.tables.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    // batch must introduce NO new centroid seeds (ids % 50 != 0) so the
-    // stored centroids equal the ones a full rebuild would pick — the same
-    // invariant a production append relies on (centroids are re-trained on
-    // a schedule, not per batch)
-    val isBatch = col("vec_id") % 7 === 1 && col("vec_id") % 50 =!= 0
     val dir = tmpDir("ivf-index")
-    Vectors.writeIvfIndex(emb.filter(!isBatch), dir)
-    Vectors.appendToIvfIndex(emb.filter(isBatch), dir)
+    Vectors.writeIvfIndex(emb, dir)
     val (cents, lists) = Vectors.readIvfIndex(spark, dir)
     val queries = emb.filter(col("vec_id") % 100 === 0)
     val viaIndex = Vectors.ivfTopKIndexed(queries, cents, lists, 5, nprobe = 2)
@@ -548,7 +481,8 @@ class DedupVectorsSpec extends SparkSpec {
     assert(viaIndex == viaRebuild && viaIndex.nonEmpty)
     // the probe reads ONLY the probed cells' partition directories — the
     // inverted-list pruning that makes stored IVF the 100 TB path
-    val cells = Vectors.ivfProbeCells(queries, cents, 2).toSet
+    val cells = Vectors.cellAssignments(queries, cents, keep = 2)
+      .select("cell").distinct().as[Long].collect().toSet
     assert(cells.nonEmpty)
     val df = Vectors.ivfTopKIndexed(queries, cents, lists, 5, nprobe = 2)
     val scans = df.queryExecution.sparkPlan.collect {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class GraphSpec extends SparkSpec {
 
   import spark.implicits._
-  import org.apache.spark.sql.graftbridge.ColumnBridge
+  import org.apache.spark.sql.graftbridge.TestBridge
 
   // independent reference: textbook synchronous LPA, ties to min label
   private def refLpa(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
@@ -57,7 +57,7 @@ class GraphSpec extends SparkSpec {
     // lifecycle: the catalog's 3-round call leaves no cached frame behind
     spark.catalog.clearCache() // isolate OUR call's cache lifecycle
     val r3 = Graph.pageRankBp(und, Stop.Rounds(3))
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "pageRankBp(3 rounds) must unpersist deg/withDeg on exit")
     assert(r3.rounds == 3 && !r3.converged)
   }
@@ -94,7 +94,7 @@ class GraphSpec extends SparkSpec {
     // (no withDeg/seed MEMORY_ONLY frames left in the session)
     spark.catalog.clearCache() // isolate OUR call's cache lifecycle
     Graph.personalizedPageRankBp(edges, seeds, Stop.Rounds(3)).out.collect()
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "personalizedPageRankBp must retain no cached frames")
   }
 
@@ -189,7 +189,7 @@ class GraphSpec extends SparkSpec {
     spark.catalog.clearCache() // isolate OUR call's cache lifecycle
     val got = Graph.labelPropagation(pairs.toDF("a", "b"), Stop.Rounds(4), "a", "b")
       .out.as[(Long, Long)].collect().toMap
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "labelPropagation(4 rounds) must unpersist its edge cache on exit")
     assert(got == refLpa(pairs, 4))
     // the two triangles carry different labels; each is internally uniform
@@ -215,7 +215,7 @@ class GraphSpec extends SparkSpec {
 
     val lpaDeep = Graph.labelPropagation(pairs, Stop.Rounds(16), "a", "b").out
     // caches dropped the moment the call returns (result is materialized)
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "labelPropagation(iters=16) must unpersist its edge cache on exit")
     // bounded plan depth: the returned frame reads materialized rows — no
     // 16-round join lineage to re-optimize or recover through
@@ -228,7 +228,7 @@ class GraphSpec extends SparkSpec {
 
     spark.catalog.clearCache()
     val prDeep = Graph.pageRankBp(und, Stop.Rounds(16)).out
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "pageRankBp(iters=16) must unpersist deg/withDeg on exit")
     assert(prDeep.queryExecution.analyzed.collect {
       case j: Join => j }.isEmpty,
@@ -284,7 +284,7 @@ class GraphSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     spark.catalog.clearCache()
     val out = Graph.bfsHops(und, 3, Stop.Rounds(4)).out
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "bfsHops must unpersist its adjacency cache on exit")
     assert(out.queryExecution.analyzed.collect { case j: Join => j }.isEmpty,
       "bfsHops result must be checkpoint-backed, not a per-round join plan")
@@ -316,7 +316,7 @@ class GraphSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     spark.catalog.clearCache()
     val out = Graph.minCostHops(und, "w", 3, Stop.Rounds(3)).out
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "minCostHops must unpersist its adjacency cache on exit")
     assert(out.queryExecution.analyzed.collect { case j: Join => j }.isEmpty,
       "minCostHops result must be checkpoint-backed")
@@ -341,7 +341,7 @@ class GraphSpec extends SparkSpec {
     // lifecycle: checkpoint-only rounds leave no cached frame behind
     spark.catalog.clearCache()
     Graph.kCore(und, 2, Stop.Rounds(3)).out.collect()
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "kCore must retain no cached frames")
   }
 
@@ -361,7 +361,7 @@ class GraphSpec extends SparkSpec {
     spark.catalog.clearCache() // isolate OUR call's cache lifecycle
     val Iterated(pr2, n2, _) = Graph.pageRankBp(path, Stop.Converge(200))
     assert(n2 < 100, s"oscillation not detected: ran $n2 rounds")
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "converged PR must unpersist its edge/degree caches on exit")
     assert(pr2.as[(String, Long)].collect().toMap ==
       Graph.pageRankBp(path, Stop.Rounds(n2)).out.as[(String, Long)].collect().toMap)
@@ -383,7 +383,7 @@ class GraphSpec extends SparkSpec {
     // round 1 swaps, round 2 swaps back to the initial state — the
     // signature matches two-rounds-ago and the cycle is caught at round 2
     assert(n2 == 2, s"period-2 swap should be caught at round 2, ran $n2")
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "converged LPA must unpersist its edge cache on exit")
     assert(lp2.as[(Long, Long)].collect().toMap == Graph.labelPropagation(
       edge, Stop.Rounds(n2), "a", "b").out.as[(Long, Long)].collect().toMap)
@@ -443,7 +443,7 @@ class GraphSpec extends SparkSpec {
     // prove twoStar itself retains nothing (localCheckpoint-only rounds)
     spark.catalog.clearCache()
     Graph.twoStarComponents(mixed).out.collect()
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "twoStarComponents must retain no cached frames")
   }
 
@@ -497,7 +497,7 @@ class GraphSpec extends SparkSpec {
     // loses both partners — the cascade must kill it in round 2
     spark.catalog.clearCache() // isolate OUR call's cache lifecycle
     val k4 = trussSet(Graph.kTrussEdges(edges, 4).out)
-    assert(ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(TestBridge.sqlCacheIsEmpty(spark),
       "kTrussEdges must retain no cached frames")
     assert(k4.map(e => (e._1, e._2)) == clique.toSet)
     assert(k4.forall(_._3 == 2L))

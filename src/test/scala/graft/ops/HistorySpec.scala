@@ -64,52 +64,6 @@ class HistorySpec extends SparkSpec {
     assert(rows(merged) == rows(hist(log(before ++ batch))))
   }
 
-  test("scd2MergeStored: merge equals full recompute, untouched buckets byte-stable") {
-    val root = tmpDir("scd2-store") + "/hist"
-    val nParts = 4
-    // idle keys are chosen so at least one provably hashes to a bucket the
-    // batch does NOT touch — hash collisions otherwise make the
-    // untouched-bucket assertion vacuous
-    val batchKeys = Seq("ext", "chg")
-    val candidates = (0 until 32).map(i => s"idle$i")
-    val kpOf: Map[String, Int] = (batchKeys ++ candidates).toDF("k")
-      .select(col("k"), pmod(hash(col("k")), lit(nParts)).as("kp"))
-      .as[(String, Int)].collect().toMap
-    val batchKps = batchKeys.map(kpOf).toSet
-    val idleKeys = candidates.filterNot(k => batchKps.contains(kpOf(k))).take(2)
-    assert(idleKeys.nonEmpty, "no idle key outside the batch buckets in 32 tries")
-    val before = Seq(("ext", 10L, 1L, "A"), ("chg", 10L, 3L, "A")) ++
-      idleKeys.zipWithIndex.map { case (k, i) => (k, 11L + i, 4L + i, "Z") }
-    val batch = Seq(("ext", 50L, 6L, "B"), ("chg", 60L, 7L, "C"))
-    def merge(rows: Seq[(String, Long, Long, String)]): Unit =
-      History.scd2MergeStored(spark, root, log(rows), Seq("k"),
-        col("ts"), col("tb"), col("a"), nParts)
-    def bucketFiles(): Map[String, Set[String]] =
-      new java.io.File(root).listFiles().filter(_.isDirectory)
-        .filter(_.getName.startsWith("_kp="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filterNot(_.startsWith(".")).toSet)
-        .toMap
-
-    merge(before)
-    val snap0 = bucketFiles()
-    merge(batch)
-    assert(rows(History.readScd2Stored(spark, root)) ==
-      rows(hist(log(before ++ batch))))
-
-    // buckets not touched by the batch keep their exact files
-    val touched = log(batch)
-      .select(pmod(hash(col("k")), lit(nParts)).as("kp"))
-      .distinct().as[Int].collect().map(kp => s"_kp=$kp").toSet
-    val untouched = snap0.keySet -- touched
-    assert(untouched.nonEmpty, "test needs at least one untouched bucket")
-    val snap1 = bucketFiles()
-    untouched.foreach(d => assert(snap1(d) == snap0(d), s"bucket $d rewritten"))
-    // and touched buckets were actually rewritten (fresh part files)
-    touched.filter(snap0.contains)
-      .foreach(d => assert(snap1(d) != snap0(d), s"bucket $d not rewritten"))
-  }
-
   test("scd2Merge leaves untouched keys' rows intact and extension keeps valid_from") {
     val before = Seq(("ext", 10L, 1L, "A"), ("idle", 10L, 2L, "Z"))
     val merged = History.scd2Merge(hist(log(before)),

@@ -18,6 +18,11 @@ class IncrAggSpec extends SparkSpec {
   private def partial(rows: Seq[(String, Long, Long)]): DataFrame =
     IncrAgg.partialState(mkBatch(rows), Seq("grp"), col("v"), col("uid"))
 
+  /** One batch's partials under `root/batch=<id>/`, as a sink writes them. */
+  private def writeState(rows: Seq[(String, Long, Long)], root: String,
+                         batchId: Long): Unit =
+    partial(rows).write.mode("overwrite").parquet(BatchDirs.dir(root, batchId))
+
   private def direct(rows: Seq[(String, Long, Long)]): Array[(String, Long, Long, Long, Long, Long)] =
     mkBatch(rows).groupBy("grp")
       .agg(count(lit(1)).as("cnt"), sum("v").as("sum_v"),
@@ -41,21 +46,21 @@ class IncrAggSpec extends SparkSpec {
 
   test("write/read/append state lifecycle: disk state merges identically; replay idempotent") {
     val root = tmpDir("incragg")
-    IncrAgg.writeState(partial(b0), root, 0L)
-    IncrAgg.writeState(partial(b1), root, 1L)
-    IncrAgg.writeState(partial(b2), root, 2L)
+    writeState(b0, root, 0L)
+    writeState(b1, root, 1L)
+    writeState(b2, root, 2L)
     val fromDisk = mergedOf(IncrAgg.readState(spark, root))
     assert(fromDisk.toSeq == direct(b0 ++ b1 ++ b2).toSeq)
 
     // crash replay of batch 1: overwriting its own dir changes nothing
-    IncrAgg.writeState(partial(b1), root, 1L)
+    writeState(b1, root, 1L)
     assert(mergedOf(IncrAgg.readState(spark, root)).toSeq == fromDisk.toSeq)
   }
 
   test("foldState collapses batches to one partial per group, merge unchanged, still appendable") {
     val root = tmpDir("incragg_fold")
-    IncrAgg.writeState(partial(b0), root, 0L)
-    IncrAgg.writeState(partial(b1), root, 1L)
+    writeState(b0, root, 0L)
+    writeState(b1, root, 1L)
     val before = mergedOf(IncrAgg.readState(spark, root))
 
     IncrAgg.foldState(spark, root, Seq("grp"))
@@ -65,16 +70,16 @@ class IncrAggSpec extends SparkSpec {
     assert(mergedOf(IncrAgg.readState(spark, root)).toSeq == before.toSeq)
 
     // folded state is still partials: appending a later batch keeps merging
-    IncrAgg.writeState(partial(b2), root, 3L)
+    writeState(b2, root, 3L)
     assert(mergedOf(IncrAgg.readState(spark, root)).toSeq ==
       direct(b0 ++ b1 ++ b2).toSeq)
   }
 
   test("foldState(before) folds only earlier batches — the in-flight dir survives") {
     val root = tmpDir("incragg_before")
-    IncrAgg.writeState(partial(b0), root, 0L)
-    IncrAgg.writeState(partial(b1), root, 1L)
-    IncrAgg.writeState(partial(b2), root, 5L)
+    writeState(b0, root, 0L)
+    writeState(b1, root, 1L)
+    writeState(b2, root, 5L)
     IncrAgg.foldState(spark, root, Seq("grp"), before = 5L)
     val dirs = new java.io.File(root).listFiles().filter(_.isDirectory)
       .map(_.getName).filterNot(_.startsWith(".")).sorted
@@ -85,8 +90,8 @@ class IncrAggSpec extends SparkSpec {
 
   test("foldState resumes from committed staging without losing state") {
     val root = tmpDir("incragg_resume")
-    IncrAgg.writeState(partial(b0), root, 0L)
-    IncrAgg.writeState(partial(b1), root, 1L)
+    writeState(b0, root, 0L)
+    writeState(b1, root, 1L)
 
     // simulate a crash AFTER staging commit (parquet + manifest written),
     // BEFORE the swap: call foldState — it must resume the swap using the
@@ -102,7 +107,7 @@ class IncrAggSpec extends SparkSpec {
       "batch=0\nbatch=1".getBytes("UTF-8"))
     // a batch that landed AFTER the crash, BEFORE the resume: the swap
     // must leave it alone even though it matches the foldable filter
-    IncrAgg.writeState(partial(b2), root, 2L)
+    writeState(b2, root, 2L)
     IncrAgg.foldState(spark, root, Seq("grp"))
     val dirs = new java.io.File(root).listFiles().filter(_.isDirectory)
       .map(_.getName).filterNot(_.startsWith(".")).sorted

@@ -132,7 +132,7 @@ class MultimodalSpec extends SparkSpec {
     // about OUR call only.
     spark.catalog.clearCache()
     Multimodal.perceptualNearDupPairs(media).collect()
-    assert(org.apache.spark.sql.graftbridge.ColumnBridge.sqlCacheIsEmpty(spark),
+    assert(org.apache.spark.sql.graftbridge.TestBridge.sqlCacheIsEmpty(spark),
       "perceptualNearDupPairs must not leave a cached frame behind")
   }
 

@@ -572,28 +572,6 @@ class RelationalSpec extends SparkSpec {
     assert(got == Seq(("signup", 1L, 4L), ("view", 2L, 3L)))
   }
 
-  test("span index lifecycle: append-then-probe equals a full index rebuild") {
-    val quote = "the rain in spain falls mainly on plains"
-    val docs1 = Seq((1L, s"first document text with $quote inside body"),
-      (2L, s"second unrelated document without any overlap present here at all"))
-      .toDF("doc_id", "text")
-    val docs2 = Seq((3L, s"third document also quoting $quote verbatim today"))
-      .toDF("doc_id", "text")
-    val batch = Seq((10L, s"batch document carrying $quote and novel words"))
-      .toDF("doc_id", "text")
-    val path = tmpDir("span-index") + "/idx"
-    Dedup.writeSpanIndex(docs1, path, 8)
-    Dedup.appendToSpanIndex(docs2, path, 8)
-    def pairs(index: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
-      Dedup.commonSpanIncrementalPairs(batch, index, 8, maxDf = 64)
-        .as[(Long, Long, Long)].collect().toSet
-    val fromDisk = pairs(Dedup.readSpanIndex(spark, path))
-    val rebuilt = pairs(Dedup.spanIndex(docs1.unionByName(docs2), 8))
-    assert(fromDisk == rebuilt && fromDisk.nonEmpty)
-    // the probe finds batch↔corpus pairs for BOTH corpus writers (1 and 3)
-    assert(fromDisk.map(p => (p._1, p._2)) == Set((1L, 10L), (3L, 10L)))
-  }
-
   test("outlierFlagsMad matches the float MAD rule and resists masking") {
     // group A: one huge outlier inflates σ enough that the z-score at
     // 1.5σ misses the second, smaller outlier — MAD flags both
@@ -707,7 +685,7 @@ class RelationalSpec extends SparkSpec {
     assert(got == Set((10L, 20L, 2L), (10L, 30L, 1L), (20L, 30L, 1L)))
   }
 
-  test("basket edge index: append-then-read ≡ full rebuild; compact preserves") {
+  test("basket edge index: append-then-read ≡ full rebuild") {
     // 9 baskets across 3 ingest batches (whole baskets per batch — the
     // documented contract); overlapping pairs across batches so the
     // consolidating sum is load-bearing: (10,20) appears in all 3 batches.
@@ -732,12 +710,8 @@ class RelationalSpec extends SparkSpec {
     val got = Relational.readBasketEdges(spark, dir)
       .as[(Long, Long, Long)].collect().toSet
     assert(got == want)
-    // appends leave per-batch partial rows; compact folds to one per pair
+    // appends leave per-batch partial rows; the read folds them per pair
     assert(spark.read.parquet(dir).count() > want.size)
-    Relational.compactBasketEdges(spark, dir)
-    assert(spark.read.parquet(dir).count() == want.size)
-    assert(Relational.readBasketEdges(spark, dir)
-      .as[(Long, Long, Long)].collect().toSet == want)
   }
 
   test("abLift: hand 2x2 contingency, bp rates, and chi-square") {

@@ -15,22 +15,7 @@ class StreamOpsSpec extends SparkSpec {
 
   private lazy val eventsJsonDir: String = {
     val dir = tmpDir("events-stream")
-    val rows = Seq(
-      """{"event_id":1,"ts":"2026-01-01T00:01:00Z","user_id":1,"event_type":"click","value":1.5,"props":"{}"}""",
-      """{"event_id":2,"ts":"2026-01-01T00:04:00Z","user_id":1,"event_type":"click","value":2.0,"props":"{}"}""",
-      """{"event_id":3,"ts":"2026-01-01T00:12:00Z","user_id":1,"event_type":"view","value":0.25,"props":"{}"}""",
-      """{"event_id":4,"ts":"2026-01-01T01:00:00Z","user_id":2,"event_type":"click","value":4.0,"props":"{}"}""",
-      """{"event_id":5,"ts":"2026-01-01T01:05:00Z","user_id":2,"event_type":"click","value":1.0,"props":"{}"}""")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part1.json"),
-      rows.mkString("\n").getBytes("UTF-8"))
-    // A later sentinel event in a SECOND file: with maxFilesPerTrigger=1 it
-    // forms a second micro-batch whose arrival advances the watermark past
-    // every real window, flushing append-mode aggregate state. Its own
-    // window stays open (correct) — assertions exclude event_type=sentinel.
-    Thread.sleep(5) // distinct mtime so the file source orders part1 first
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part2.json"),
-      """{"event_id":99,"ts":"2026-01-01T09:00:00Z","user_id":9,"event_type":"sentinel","value":0.0,"props":"{}"}"""
-        .getBytes("UTF-8"))
+    StreamFixtures.write(dir, StreamFixtures.events)
     dir
   }
 
@@ -134,25 +119,7 @@ class StreamOpsSpec extends SparkSpec {
   test("sequenceMatchStream: custom state equals the batch operator, carried " +
       "across micro-batch boundaries") {
     val dir = tmpDir("seqmatch-events")
-    def ev(id: Long, sec: Long, uid: Long, typ: String) =
-      s"""{"event_id":$id,"ts":"${java.time.Instant.ofEpochSecond(sec)}",""" +
-        s""""user_id":$uid,"event_type":"$typ","value":0.0,"props":"{}"}"""
-    // batch 1: u1 open signup (resolves in batch 2); u2 open signup
-    // (guarded in batch 2); u3 full in-batch match; u4 open signup
-    // (expires in batch 2)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part1.json"), Seq(
-      ev(1, 100, 1, "signup"),
-      ev(2, 100, 2, "signup"),
-      ev(3, 100, 3, "signup"), ev(4, 150, 3, "purchase"),
-      ev(5, 100, 4, "signup")
-    ).mkString("\n").getBytes("UTF-8"))
-    Thread.sleep(5) // distinct mtime → file source orders part1 first
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part2.json"), Seq(
-      ev(6, 200, 1, "purchase"),                      // cross-batch match
-      ev(7, 150, 2, "error"), ev(8, 200, 2, "purchase"), // guard kills u2
-      ev(9, 5000, 4, "purchase"),                     // beyond the bound
-      ev(10, 400, 3, "signup"), ev(11, 450, 3, "purchase")
-    ).mkString("\n").getBytes("UTF-8"))
+    StreamFixtures.write(dir, StreamFixtures.sequenceEvents)
     val schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
       "event_type STRING, value DOUBLE, props STRING"
     val streamed = runToMemory(
@@ -247,28 +214,6 @@ class StreamOpsSpec extends SparkSpec {
     assert(streamed == batch)
     assert(batch.map(r => (r(1), r(4))) == Set(
       (4L, "direct"), (5L, "view"), (6L, "direct"), (8L, "click")))
-  }
-
-  test("enrichWithDimension: stream-static broadcast join equals the batch " +
-      "join; missing keys pass through with nulls") {
-    import org.apache.spark.sql.functions.col
-    // user 9 (the sentinel) is NOT in the dimension — must survive with null
-    val dim = Seq((1L, "gold"), (2L, "trial"), (7L, "gold"))
-      .toDF("user_id", "segment")
-    val streamed = runToMemory(
-      StreamOps.enrichWithDimension(readStreamBatched, dim)
-        .select(col("event_id"), col("user_id"), col("segment")),
-      "enriched", "append")
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        Option(r.getString(2)))).toSet
-    val batch = StreamOps.enrichWithDimension(batchEvents, dim)
-      .select(col("event_id"), col("user_id"), col("segment"))
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        Option(r.getString(2)))).toSet
-    assert(streamed == batch)
-    assert(streamed.size == 6)                       // no fact dropped
-    assert(streamed((99L, 9L, None)))                // unmatched → null
-    assert(streamed((1L, 1L, Some("gold"))))
   }
 
   test("twapStream: running LOCF integral, latest emission per user equals " +
@@ -381,19 +326,7 @@ class StreamOpsSpec extends SparkSpec {
     * arrival order: in-batch exact dup (3), cross-batch exact (11, 21) and
     * near (12, 22) dups of earlier batches, fresh docs (2, 13, 23).
     */
-  private val dedupFiles: Seq[(String, Seq[String])] = Seq(
-    "b1.json" -> Seq(
-      """{"doc_id":1,"lang":"en","text":"the quick brown fox jumps over the lazy dog tonight"}""",
-      """{"doc_id":2,"lang":"en","text":"completely different text about spark engines at scale"}""",
-      """{"doc_id":3,"lang":"en","text":"the quick brown fox jumps over the lazy dog tonight"}"""),
-    "b2.json" -> Seq(
-      """{"doc_id":11,"lang":"en","text":"the quick brown fox jumps over the lazy dog tonight"}""",
-      """{"doc_id":12,"lang":"en","text":"the quick brown fox jumps over the lazy dog today"}""",
-      """{"doc_id":13,"lang":"en","text":"novel content never seen in the corpus before now"}"""),
-    "b3.json" -> Seq(
-      """{"doc_id":21,"lang":"en","text":"novel content never seen in the corpus before now"}""",
-      """{"doc_id":22,"lang":"en","text":"the quick brown fox jumps over the lazy dog yesterday"}""",
-      """{"doc_id":23,"lang":"en","text":"absolutely fresh material arriving in the third batch"}"""))
+  private val dedupFiles: Seq[(String, Seq[String])] = StreamFixtures.dedupFiles
 
   private def writeDedupFile(src: String, file: (String, Seq[String])): Unit = {
     java.nio.file.Files.write(java.nio.file.Paths.get(src, file._1),
@@ -420,7 +353,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("incrementalDedupSink: cross-batch dedup via stored index, restart-safe, replay-idempotent") {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.graftbridge.TestBridge
     val src = tmpDir("docs-src")
     val state = tmpDir("dedup-state")
     val ckpt = tmpDir("dedup-ckpt")
@@ -430,7 +363,7 @@ class StreamOpsSpec extends SparkSpec {
     spark.catalog.clearCache()
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     def assertNothingRetained(after: String): Unit = {
-      assert(ColumnBridge.sqlCacheIsEmpty(spark), s"SQL cache entries left after $after")
+      assert(TestBridge.sqlCacheIsEmpty(spark), s"SQL cache entries left after $after")
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
       assert(leaked.isEmpty, s"persistent RDDs left after $after: $leaked")
     }
@@ -548,11 +481,11 @@ class StreamOpsSpec extends SparkSpec {
     }
     // a failed batch releases the caches it filled before the check threw:
     // nothing may stay in the SQL cache or as a persistent RDD
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.graftbridge.TestBridge
     spark.catalog.clearCache()
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     def assertNothingRetained(after: String): Unit = {
-      assert(ColumnBridge.sqlCacheIsEmpty(spark), s"SQL cache entries left after $after")
+      assert(TestBridge.sqlCacheIsEmpty(spark), s"SQL cache entries left after $after")
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
       assert(leaked.isEmpty, s"persistent RDDs left after $after: $leaked")
     }
@@ -811,58 +744,6 @@ class StreamOpsSpec extends SparkSpec {
       .select("content_md5").as[String].collect().toSet == before)
   }
 
-  test("upsertSinkPartitioned: a micro-batch rewrites ONLY the key partitions it touches") {
-    val path = tmpDir("upsert-part") + "/state"
-    val ckpt = tmpDir("ckpt-upsert-part")
-    val nParts = 8
-    // batch 1: keys spread over many partitions
-    val b1 = (1L to 40L).map(k => (k, "click", k * 10, k)).toDF("user_id", "event_type", "event_id", "ts")
-    StreamOps.upsertBatchPartitioned(b1, path, Seq("user_id", "event_type"),
-      Seq("ts", "event_id"), nParts)
-    val dirs = new java.io.File(path).listFiles().filter(_.getName.startsWith("_kp="))
-    assert(dirs.length > 1, "keys should spread over multiple partitions")
-    def filesOf(d: java.io.File): Set[String] =
-      d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    val filesBefore = dirs.map(d => d.getName -> filesOf(d)).toMap
-    // batch 2: ONE key updated — only its partition may be rewritten
-    val b2 = Seq((7L, "click", 9999L, 99L)).toDF("user_id", "event_type", "event_id", "ts")
-    StreamOps.upsertBatchPartitioned(b2, path, Seq("user_id", "event_type"),
-      Seq("ts", "event_id"), nParts)
-    val touched = b2.selectExpr(s"pmod(hash(user_id, event_type), $nParts)")
-      .as[Int].head()
-    val dirsAfter = new java.io.File(path).listFiles().filter(_.getName.startsWith("_kp="))
-    dirsAfter.foreach { d =>
-      if (d.getName == s"_kp=$touched")
-        assert(filesOf(d) != filesBefore(d.getName), "touched partition must be rewritten")
-      else
-        assert(filesOf(d) == filesBefore(d.getName),
-          s"untouched partition ${d.getName} was rewritten")
-    }
-    // merge semantics: key 7 now carries the batch-2 row, everything else intact
-    val rows = spark.read.parquet(path)
-      .select("user_id", "event_id").as[(Long, Long)].collect().toMap
-    assert(rows(7L) == 9999L)
-    assert(rows(8L) == 80L && rows.size == 40)
-    // replay of the same batch converges to the identical table
-    StreamOps.upsertBatchPartitioned(b2, path, Seq("user_id", "event_type"),
-      Seq("ts", "event_id"), nParts)
-    val rows2 = spark.read.parquet(path)
-      .select("user_id", "event_id").as[(Long, Long)].collect().toMap
-    assert(rows2 == rows)
-    // and the streaming wrapper drives the same per-batch merge
-    val src = tmpDir("upsert-part-src")
-    java.nio.file.Files.write(java.nio.file.Paths.get(src, "a.json"),
-      """{"event_id":1,"ts":"2026-01-01T00:01:00Z","user_id":1,"event_type":"click","value":1.0,"props":"{}"}"""
-        .getBytes("UTF-8"))
-    val q = StreamOps.upsertSinkPartitioned(
-      StreamOps.readEventStream(spark, src)
-        .selectExpr("user_id", "event_type", "event_id", "CAST(ts AS LONG) AS ts"),
-      tmpDir("upsert-part2") + "/t", ckpt, Seq("user_id", "event_type"),
-      Seq("ts", "event_id"), nParts)
-      .trigger(Trigger.AvailableNow()).start()
-    assert(q.awaitTermination(120000), "streaming query did not terminate within 120s")
-  }
-
   test("incrementalAggSink: partials per micro-batch, fold cadence, replay-idempotent") {
     import org.apache.spark.sql.functions._
     val src = tmpDir("agg-src")
@@ -950,44 +831,6 @@ class StreamOpsSpec extends SparkSpec {
     // windows ending h0:{1,2}=2, h1:{1,2}=2, h2:{1,2,3,4}=4, h3:{3,4}=2
     assert(rolled == Map(h0 -> 2L, (h0 + 3600) -> 2L, (h0 + 7200) -> 4L,
       (h0 + 10800) -> 2L))
-  }
-
-  test("embeddingDedupSink: cross-batch semantic dups dropped; replay idempotent") {
-    import org.apache.spark.sql.functions._
-    val src = tmpDir("emb-src")
-    val state = tmpDir("emb-state")
-    val ckpt = tmpDir("emb-ckpt")
-    def vec(id: Long, v: Seq[Double]) =
-      s"""{"vec_id":$id,"embedding":[${v.mkString(",")}]}"""
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5)
-    }
-    // batch 0: two orthogonal vectors; batch 1: a near-copy of v1 (dup),
-    // a novel direction, and a within-batch near-copy of that novel one
-    writeFile("b1.json", Seq(
-      vec(1, Seq(1, 0, 0, 0)), vec(2, Seq(0, 1, 0, 0))))
-    writeFile("b2.json", Seq(
-      vec(3, Seq(0.99, 0.01, 0, 0)), vec(4, Seq(0, 0, 1, 0)),
-      vec(5, Seq(0, 0.01, 0.99, 0))))
-    val q = StreamOps.embeddingDedupSink(
-      StreamOps.readEmbeddingStream(spark, src, maxFilesPerTrigger = Some(1)),
-      state, ckpt, threshold = 0.9, dims = 4)
-      .trigger(Trigger.AvailableNow()).start()
-    assert(q.awaitTermination(120000), "streaming query did not terminate within 120s")
-
-    def survivors: Set[Long] = spark.read.parquet(s"$state/out")
-      .select(col("vec_id")).as[Long].collect().toSet
-    assert(survivors == Set(1L, 2L, 4L)) // 3 dups 1; 5 dups 4 within batch
-    // crash-replay of the LAST batch: state reads exclude its own dirs
-    val b2 = spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .json(s"$src/b2.json")
-    StreamOps.embeddingDedupBatch(b2, 1L, state, threshold = 0.9, dims = 4)
-    assert(survivors == Set(1L, 2L, 4L))
-    // the index state matches the survivors exactly
-    assert(spark.read.parquet(s"$state/normed").select(col("id"))
-      .as[Long].collect().toSet == Set(1L, 2L, 4L))
   }
 
   test("oovSink: batches score against prior vocab only; replay idempotent") {
@@ -1265,54 +1108,6 @@ class StreamOpsSpec extends SparkSpec {
       Set((0L, 1L), (1L, 2L), (3L, 1L)))
   }
 
-  test("scd2Sink: streamed batches maintain bucketed history; replay idempotent") {
-    import org.apache.spark.sql.functions._
-    import graft.ops.History
-    val src = tmpDir("scd2-src")
-    val root = tmpDir("scd2-root") + "/hist"
-    val ckpt = tmpDir("scd2-ckpt")
-    def ev(id: Long, t: String, u: Long, typ: String) =
-      s"""{"event_id":$id,"ts":"$t","user_id":$u,"event_type":"$typ","value":0.0,"props":"{}"}"""
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5)
-    }
-    writeFile("b1.json", Seq(
-      ev(1, "2026-01-01T00:00:00Z", 1, "trial"),
-      ev(2, "2026-01-02T00:00:00Z", 1, "trial")))
-    writeFile("b2.json", Seq(
-      ev(3, "2026-01-03T00:00:00Z", 1, "paid"),
-      ev(4, "2026-01-01T00:00:00Z", 2, "trial")))
-    val q = StreamOps.scd2Sink(
-      StreamOps.readEventStream(spark, src, maxFilesPerTrigger = Some(1)),
-      root, ckpt, Seq("user_id"), col("ts"), col("event_id"),
-      col("event_type"), nParts = 4)
-      .trigger(Trigger.AvailableNow()).start()
-    assert(q.awaitTermination(120000), "streaming query did not terminate within 120s")
-
-    def rowsOf(df: DataFrame): Set[(Long, String, Long, Option[Long], Boolean)] =
-      df.select(col("user_id"), col("attr_val"),
-          unix_timestamp(col("valid_from")).as("vf"),
-          unix_timestamp(col("valid_to")).as("vt"), col("is_current"))
-        .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
-    val full = spark.read.schema(
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
-        "value DOUBLE, props STRING").json(src)
-    val expect = rowsOf(History.scd2FromEvents(full, Seq("user_id"),
-      col("ts"), col("event_id"), col("event_type")))
-    assert(rowsOf(History.readScd2Stored(spark, root)) == expect)
-
-    // crash-replay of the LAST micro-batch: the replay guard drops
-    // already-reflected events, so the stored history is unchanged
-    val b2 = spark.read.schema(
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
-        "value DOUBLE, props STRING").json(s"$src/b2.json")
-    History.scd2MergeStored(spark, root, b2, Seq("user_id"), col("ts"),
-      col("event_id"), col("event_type"), nParts = 4)
-    assert(rowsOf(History.readScd2Stored(spark, root)) == expect)
-  }
-
   test("holtStream: three-long state folds the identical truncating " +
       "recurrence; latest emission equals the batch operator across " +
       "micro-batch boundaries") {
@@ -1351,62 +1146,6 @@ class StreamOpsSpec extends SparkSpec {
     // div 1e4 = 502500, forecast = 2825000 + 3·502500
     assert(latest(1L) == ((3L, 2825000L, 502500L, 4332500L)))
     assert(latest(2L) == ((1L, 4000000L, 0L, 4000000L)))
-  }
-
-  test("ivmViewSink: streamed signed deltas maintain the join view; " +
-      "value-only updates survive the fold; replay idempotent") {
-    import org.apache.spark.sql.functions._
-    val src = tmpDir("ivm-src")
-    val state = tmpDir("ivm-state")
-    val ckpt = tmpDir("ivm-ckpt")
-    val dim = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("rk", "grp")
-    val baseL = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("lk", "v")
-    val base = graft.ops.Ivm.viewPartial(
-      baseL.join(dim, col("lk") === col("rk")), Seq("grp"), col("v"))
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5)
-    }
-    // b1: insert; b2: a VALUE-ONLY update (net n_rows 0, sum_v +2 — the
-    // partial a count-keyed fold would wrongly drop); b3: retract group
-    // b's only row
-    writeFile("b1.json", Seq("""{"lk":2,"v":5,"sign":1}"""))
-    writeFile("b2.json", Seq("""{"lk":1,"v":10,"sign":-1}""",
-      """{"lk":1,"v":12,"sign":1}"""))
-    writeFile("b3.json", Seq("""{"lk":3,"v":30,"sign":-1}"""))
-    def runOnce(): Unit = {
-      val q = StreamOps.ivmViewSink(
-        spark.readStream.schema("lk BIGINT, v BIGINT, sign BIGINT")
-          .option("maxFilesPerTrigger", 1).json(src),
-        dim, state, ckpt, Seq("grp"), "lk", "rk", col("v"), foldEvery = 2)
-        .trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(120000), "streaming query did not terminate")
-    }
-    runOnce()
-    def served: Map[String, (Long, Long)] =
-      graft.ops.Ivm.mergeView(base,
-          graft.ops.Ivm.readViewDeltas(spark, state), Seq("grp"))
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-    // truth = full recompute over the applied rows:
-    // a: (1,12),(2,20),(2,5) → (3, 37); b: retracted away entirely
-    assert(served == Map("a" -> ((3L, 37L))))
-    // the fold ran (foldEvery=2) and kept the value-only-update partial
-    val dirs = new java.io.File(state).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("batch=")).sorted
-    assert(dirs.length < 3 && dirs.contains("batch=0"))
-    // crash-replay of the LAST batch id: own-dir overwrite → unchanged
-    val lastId = dirs.map(_.stripPrefix("batch=").toLong).max
-    val b3 = spark.read.schema("lk BIGINT, v BIGINT, sign BIGINT")
-      .json(s"$src/b3.json")
-    StreamOps.ivmDeltaBatch(b3, lastId, dim, state, Seq("grp"),
-      "lk", "rk", col("v"), foldEvery = 2)
-    assert(served == Map("a" -> ((3L, 37L))))
-    // restart with a fourth file: checkpoint resumes and extends
-    writeFile("b4.json", Seq("""{"lk":3,"v":7,"sign":1}"""))
-    runOnce()
-    assert(served == Map("a" -> ((3L, 37L)), "b" -> ((1L, 7L))))
   }
 
   test("runningUserCounts: mapGroupsWithState accumulates per-user counts") {
