@@ -88,16 +88,59 @@ final class Load(warehouse: String) {
       Schemas.EtlRuns)
 
   /** Load every transformed table (K1/K2/K4) and return per-table rows
-    * written (A1 — pipeline.py:269-284).
+    * written (A1 — pipeline.py:269-284). Each table lives in its own
+    * directory, so the refreshes run concurrently (`Load.concurrently`):
+    * the reference writes one after another only because SQLite has one
+    * writer. When a table fails, every other table is still refreshed
+    * before the failure is rethrown.
     */
   def loadAll(tables: Map[String, DataFrame], runId: String,
-              loadedAt: String): Map[String, Long] =
-    tables.map { case (name, df) =>
-      name -> fullRefresh(withLineage(df, runId, loadedAt), name)
-    }
+              loadedAt: String): Map[String, Long] = {
+    val named = tables.toSeq
+    named.map(_._1).zip(Load.concurrently(named.map { case (name, df) =>
+      () => fullRefresh(withLineage(df, runId, loadedAt), name)
+    })).toMap
+  }
 }
 
 object Load {
+
+  /** Run independent Spark actions concurrently; results come back in
+    * input order. At most the session's `defaultParallelism` actions run
+    * at a time, each on a fresh thread the calling thread starts: Spark's
+    * inheritable local properties (a streaming batch id, the query's job
+    * group, job tags, trace spans) reach only threads created after they
+    * were set, so a shared pool of older threads would drop them. Every
+    * action finishes or fails before this returns; then the first failure
+    * in input order is rethrown with the others suppressed on it. An
+    * empty or one-action list runs inline.
+    */
+  def concurrently[A](actions: Seq[() => A]): Seq[A] =
+    if (actions.size <= 1) actions.map(_())
+    else {
+      val results = new Array[Any](actions.size)
+      val failures = new Array[Throwable](actions.size)
+      val next = new java.util.concurrent.atomic.AtomicInteger()
+      val width = SparkSession.active.sparkContext.defaultParallelism
+      val workers = Seq.fill(math.min(width, actions.size))(new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < actions.size) {
+          try results(i) = actions(i)() catch { case e: Throwable => failures(i) = e }
+          i = next.getAndIncrement()
+        }
+      }, "graft-concurrently"))
+      workers.foreach(_.start())
+      // an interrupted caller stops the workers too, but still waits for them
+      var interrupt: Option[InterruptedException] = None
+      workers.foreach(w => while (w.isAlive) try w.join() catch {
+        case e: InterruptedException => interrupt = Some(e); workers.foreach(_.interrupt())
+      })
+      interrupt.foreach(e => throw e)
+      failures.filter(_ != null) match {
+        case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+        case _ => results.toSeq.map(_.asInstanceOf[A])
+      }
+    }
 
   /** Execute `write` over `df` with a row-count metric OBSERVED on the write
     * pass itself (`Dataset.observe` → CollectMetrics): the count costs no
@@ -194,26 +237,6 @@ object Load {
       sys.error(s"rename $staged -> $path failed")
   }
 
-  /** Compact a fragmented flat Parquet table to ~`targetFileBytes` files —
-    * the maintenance pass micro-batch pipelines need: frequent small loads
-    * leave thousands of tiny files whose open/footer costs come to dominate
-    * scans. The rewrite sizes output from the MEASURED input bytes (never a
-    * row-count guess), no-ops when the table is empty or already at/below
-    * the target file count, and swaps atomically through `replaceTable`.
-    * Returns (filesBefore, filesAfter).
-    *
-    * Preconditions, enforced:
-    *  - NOT a streaming file-sink table: those carry a `_spark_metadata`
-    *    transaction log that readers trust over the directory listing;
-    *    rewriting the files would orphan the log and make compacted rows
-    *    invisible. Stop the stream and migrate such tables first.
-    *  - NOT partitioned: a flat rewrite would silently destroy the
-    *    `col=value` layout (and its pruning); compact leaf partition
-    *    directories individually instead.
-    *  - Single writer: like every non-transactional Parquet rewrite, the
-    *    caller must ensure nothing appends between the read snapshot and
-    *    the swap — run it in the maintenance window of the load schedule.
-    */
   /** `compact` for PARTITIONED tables: walks the `col=value` directory tree
     * and compacts each LEAF partition directory independently, preserving
     * the layout (and therefore partition pruning) exactly — the companion
@@ -231,14 +254,15 @@ object Load {
     * the instant between the two renames (Parquet directories have no
     * transaction log to do better with). Leaves already at/below their
     * target file count are untouched, so re-running is cheap and
-    * idempotent; independent leaves compact CONCURRENTLY (each leaf job is
-    * small — serial execution would idle the cluster once per leaf ×
-    * thousands of leaves). Same single-writer precondition as `compact`.
+    * idempotent; independent leaves compact CONCURRENTLY (`concurrently`:
+    * each leaf job is small — serial execution would idle the cluster once
+    * per leaf × thousands of leaves), and a failed leaf is rethrown only
+    * after every other leaf has finished its swap or failed. Same
+    * single-writer precondition as `compact`.
     * Returns (filesBefore, filesAfter) summed over all leaves.
     */
   def compactPartitioned(spark: SparkSession, path: String,
-                         targetFileBytes: Long = 128L * 1024 * 1024,
-                         maxConcurrentLeaves: Int = 8): (Int, Int) = {
+                         targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val fs = fsFor(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
     val rootEntries = fs.listStatus(root)
@@ -304,23 +328,32 @@ object Load {
         }
       }
     }
-    val leafList = leaves(root)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(maxConcurrentLeaves, leafList.size)))
-    val results =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(leafList.map(l =>
-            scala.concurrent.Future(compactLeaf(l)))),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+    val results = concurrently(leaves(root).map(l => () => compactLeaf(l)))
     fs.delete(staging, true)
     fs.delete(trash, true)
     (results.map(_._1).sum, results.map(_._2).sum)
   }
 
+  /** Compact a fragmented flat Parquet table to ~`targetFileBytes` files —
+    * the maintenance pass micro-batch pipelines need: frequent small loads
+    * leave thousands of tiny files whose open/footer costs come to dominate
+    * scans. The rewrite sizes output from the MEASURED input bytes (never a
+    * row-count guess), no-ops when the table is empty or already at/below
+    * the target file count, and swaps atomically through `replaceTable`.
+    * Returns (filesBefore, filesAfter).
+    *
+    * Preconditions, enforced:
+    *  - NOT a streaming file-sink table: those carry a `_spark_metadata`
+    *    transaction log that readers trust over the directory listing;
+    *    rewriting the files would orphan the log and make compacted rows
+    *    invisible. Stop the stream and migrate such tables first.
+    *  - NOT partitioned: a flat rewrite would silently destroy the
+    *    `col=value` layout (and its pruning); compact leaf partition
+    *    directories individually instead.
+    *  - Single writer: like every non-transactional Parquet rewrite, the
+    *    caller must ensure nothing appends between the read snapshot and
+    *    the swap — run it in the maintenance window of the load schedule.
+    */
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val fs = fsFor(spark, path)

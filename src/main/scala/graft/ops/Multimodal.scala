@@ -73,25 +73,6 @@ object Multimodal {
     }
   }
 
-  /** Kind-dispatching codec: routes each record to the codec registered for
-    * its `kind` (image/audio/video/...), batching PER KIND within each
-    * micro-batch so every underlying codec still sees homogeneous batches
-    * (real decoders and models are per-modality). Unknown kinds fail fast —
-    * silently dropping media is how corpora rot.
-    */
-  final class CompositeCodec(routes: Map[String, Codec]) extends Codec {
-    def decodeBatch(batch: Seq[MediaRecord]): Seq[MediaFeatures] = {
-      val unknown = batch.iterator.map(_.kind).filterNot(routes.contains).toSet
-      require(unknown.isEmpty,
-        s"no codec registered for kind(s): ${unknown.mkString(", ")}")
-      // group → decode per kind → restore input order by media_id position
-      val byId = batch.groupBy(_.kind).toSeq.flatMap { case (kind, recs) =>
-        routes(kind).decodeBatch(recs)
-      }.map(f => f.media_id -> f).toMap
-      batch.map(r => byId(r.media_id))
-    }
-  }
-
   /** Batched feature extraction: one codec instance per PARTITION (setup
     * amortized), records grouped into `batchSize` micro-batches inside each
     * partition. Narrow transformation — no shuffle; scales with partitions.

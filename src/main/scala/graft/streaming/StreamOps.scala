@@ -357,7 +357,12 @@ object StreamOps {
     *    with nothing;
     *  - writes only by OVERWRITING its own dir (`overwriteOwn`), so a
     *    replay converges to identical state wherever the previous attempt
-    *    died;
+    *    died. One `overwriteOwn` call commits its writes concurrently:
+    *    each targets a different dir and none reads another's own dir, so
+    *    no order among them is observable, and a batch that dies with
+    *    some written and some not is the same half-committed attempt the
+    *    replay already overwrites. The call returns only once every write
+    *    has finished, before the batch's caches are released;
     *  - folds only dirs BELOW the in-flight id (`foldDue`, then
     *    `IncrAgg.foldState(before = id)`): a fold that absorbed the
     *    in-flight dir would let a crash-replay count its rows twice.
@@ -381,8 +386,13 @@ object StreamOps {
     def readPrior(root: String, schema: StructType): DataFrame =
       readDirs(priorDirs(root), schema)
     def ownDir(root: String): String = BatchDirs.dir(root, batchId)
-    def overwriteOwn(df: DataFrame, root: String): Unit =
-      df.write.mode(SaveMode.Overwrite).parquet(ownDir(root))
+    /** Overwrite this batch's dir under each `(frame, root)` pair, all
+      * pairs at once (`Load.concurrently`); no frame may read another
+      * pair's own dir. */
+    def overwriteOwn(writes: (DataFrame, String)*): Unit =
+      graft.etl.Load.concurrently(writes.map { case (df, root) =>
+        () => df.write.mode(SaveMode.Overwrite).parquet(ownDir(root))
+      })
     /** Whether `foldEvery` dirs below this batch's id sit under `root`. */
     def foldDue(root: String, foldEvery: Int): Boolean =
       BatchDirs.ids(spark, root)(_ < batchId).size >= foldEvery
@@ -567,10 +577,9 @@ object StreamOps {
           val keptIds = surv.select(col(idCol).as("id"))
           (surv, (df: DataFrame) => df.join(keptIds, Seq("id"), "left_semi"))
         }
-      st.overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
-      st.overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
-      st.overwriteOwn(kept(nToks), toksRoot)
-      st.overwriteOwn(kept(nBand), bandedRoot)
+      st.overwriteOwn(survivors.drop("content_md5") -> s"$stateDir/out",
+        survivors.select(col("content_md5")) -> digestsRoot,
+        kept(nToks) -> toksRoot, kept(nBand) -> bandedRoot)
       Dedup.markIndexDirsChecked(spark, Seq(toksRoot, bandedRoot).map(st.ownDir),
         numHashes, bands, shingleSize)
     }
@@ -646,14 +655,14 @@ object StreamOps {
           surv
         }
       val survivors = st.cache(batchSized(survRaw, batch))
-      st.overwriteOwn(survivors.drop("content_md5"), s"$stateDir/out")
-      st.overwriteOwn(survivors.select(col("content_md5")), digestsRoot)
+      st.overwriteOwn(survivors.drop("content_md5") -> s"$stateDir/out",
+        survivors.select(col("content_md5")) -> digestsRoot)
       // this batch's own sketch — built from the just-written digests so
       // the sketch and the table can never disagree about membership
       val own = Dedup.digestBloom(spark.read.parquet(st.ownDir(digestsRoot)),
         expectedItems, numBits)
       import spark.implicits._
-      st.overwriteOwn(Seq(own).toDF("bf"), bloomRoot)
+      st.overwriteOwn(Seq(own).toDF("bf") -> bloomRoot)
     }
 
   /** Leaf-compact every batch-partitioned state root under `stateDir` that
@@ -701,7 +710,7 @@ object StreamOps {
                     foldEvery: Int = 8): Unit =
     StateSink.run(batch, batchId) { st =>
       st.overwriteOwn(
-        graft.ops.IncrAgg.partialState(batch, keys, value, distinctOver), stateRoot)
+        graft.ops.IncrAgg.partialState(batch, keys, value, distinctOver) -> stateRoot)
       if (st.foldDue(stateRoot, foldEvery))
         graft.ops.IncrAgg.foldState(st.spark, stateRoot, keys, before = batchId)
     }
@@ -740,8 +749,7 @@ object StreamOps {
             .agg(count(lit(1)).as("n_tokens"), count(lit(1)).as("n_oov"))
             .withColumn("oov_bp", lit(10000L))
         else graft.ops.Text.oovStats(batch, st.readDirs(prior, vocab.schema))
-      st.overwriteOwn(report, s"$stateDir/report")
-      st.overwriteOwn(vocab, vocabRoot)
+      st.overwriteOwn(report -> s"$stateDir/report", vocab -> vocabRoot)
     }
 
   /** Streaming perplexity scoring — the log-domain sibling of `oovSink`:
@@ -785,8 +793,7 @@ object StreamOps {
         else graft.ops.Text.unigramSurprisalAgainst(batch,
           st.readDirs(prior, counts.schema)
             .groupBy(col("token")).agg(sum(col("cnt")).as("cnt")))
-      st.overwriteOwn(report, s"$stateDir/report")
-      st.overwriteOwn(counts, vocabRoot)
+      st.overwriteOwn(report -> s"$stateDir/report", counts -> vocabRoot)
     }
 
   /** Streaming collocation state: each micro-batch's windowed pair +
@@ -813,7 +820,7 @@ object StreamOps {
                        window: Int): Unit =
     StateSink.run(batch, batchId) { st =>
       val toks = st.cache(batch.select(graft.ops.Text.tokens(col("text")).as("l")))
-      st.overwriteOwn(graft.ops.Text.pmiStateFromTokens(toks, window), stateDir)
+      st.overwriteOwn(graft.ops.Text.pmiStateFromTokens(toks, window) -> stateDir)
     }
 
   /** Read side of `pmiSink`: top-k collocations from the merged stored
@@ -858,7 +865,7 @@ object StreamOps {
                seed: Int): Unit =
     StateSink.run(batch, batchId) { st =>
       st.overwriteOwn(batch.agg(
-        count_min_sketch(key, lit(eps), lit(confidence), lit(seed)).as("s")), stateDir)
+        count_min_sketch(key, lit(eps), lit(confidence), lit(seed)).as("s")) -> stateDir)
     }
 
   /** Streaming distribution-drift monitoring: every micro-batch is scored
@@ -889,8 +896,8 @@ object StreamOps {
       val ref = st.readPrior(histRoot, hist.schema)
         .groupBy(col("bucket")).agg(sum(col("n")).as("n"))
       st.overwriteOwn(
-        graft.ops.Quality.psiDriftFromCounts(ref, batch, bucket, nBuckets),
-        s"$stateDir/report")
-      st.overwriteOwn(hist, histRoot)
+        graft.ops.Quality.psiDriftFromCounts(ref, batch, bucket, nBuckets) ->
+          s"$stateDir/report",
+        hist -> histRoot)
     }
 }

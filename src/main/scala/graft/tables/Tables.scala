@@ -12,13 +12,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * assumes a single file.
   */
 object Tables {
-  val All: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Small dimension tables a planner should broadcast in joins. */
-  val Dims: Set[String] = Set("region", "nation", "supplier")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts precision varies by corpus generation: TIMESTAMP(NANOS)

@@ -26,7 +26,8 @@ class ContractSpec extends SparkSpec {
   }
 
   test("oracle SQL only references corpus tables that exist") {
-    val known = graft.tables.Tables.All.toSet
+    val known = Set("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")
     val tableRef = raw"(?i)\bFROM\s+([a-z_]+)\b|\bJOIN\s+([a-z_]+)\b".r
     SparkEntry.oracleSql.foreach { case (name, sql) =>
       tableRef.findAllMatchIn(sql).foreach { m =>

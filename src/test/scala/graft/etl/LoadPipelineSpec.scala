@@ -83,6 +83,34 @@ class LoadPipelineSpec extends SparkSpec {
       s"input evaluated ${acc.value}x rows — the load is scanning twice")
   }
 
+  test("concurrently: input order, every action finishes before the first " +
+      "failure is rethrown with the rest suppressed, jobs keep the caller's " +
+      "local properties") {
+    import java.util.concurrent.atomic.AtomicBoolean
+    val caller = Thread.currentThread()
+    val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val actions = (1 to 4).map { i => () =>
+      threads.add(Thread.currentThread())
+      spark.sparkContext.parallelize(1 to i, 2).map(_ * 10).collect().sum
+    }
+    val (out, jobs) = jobsDuring(Load.concurrently(actions))
+    assert(out == Seq(10, 30, 60, 100))
+    assert(threads.size > 0 && !threads.contains(caller), s"ran on $threads")
+    // one job per action, each tagged through the inherited local property
+    assert(jobs.size == actions.size, s"${jobs.size} tagged jobs")
+    val finished = Array.fill(3)(new AtomicBoolean(false))
+    val err = intercept[IllegalStateException] {
+      Load.concurrently(Seq(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(300); spark.range(10).collect(); finished(1).set(true) },
+        () => { Thread.sleep(300); finished(2).set(true)
+          throw new IllegalArgumentException("second") }))
+    }
+    assert(err.getMessage == "first")
+    assert(finished(1).get && finished(2).get, "rethrown before the others finished")
+    assert(err.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+  }
+
   test("compactPartitioned: each leaf compacted in place, layout + pruning preserved") {
     val load = new Load(tmpDir("wh"))
     val path = load.tablePath("parts")
@@ -241,6 +269,35 @@ class LoadPipelineSpec extends SparkSpec {
     val agents = spark.read.parquet(s"${cfg.warehouse}/agents")
     assert(agents.columns.contains("_etl_run_id"))
     assert(agents.head.getAs[String]("_etl_run_id") == "20260812_060000")
+  }
+
+  test("pipeline run: a failed table write rethrows and records a Failed row, " +
+      "after every other table is refreshed") {
+    // a damage range past Long's range fails weapon_damage's ANSI cast when
+    // the write evaluates it; weapons reads the same fetch and stays good
+    val bodies = fixtureBodies.updated("weapons", fixtureBodies("weapons")
+      .replace("\"rangeStartMeters\":0", "\"rangeStartMeters\":1e300"))
+    val transport = new Extract.Transport {
+      def fetch(url: String): Try[String] =
+        Success(bodies(url.split("/").last.takeWhile(_ != '?')))
+    }
+    val cfg = PipelineConfig(warehouse = tmpDir("wh"), requestDelayMs = 0)
+    val clock = java.time.Instant.parse("2026-08-12T06:00:00Z")
+    val err = intercept[Exception](new Pipeline(spark, cfg, transport, () => clock).run())
+    val runs = spark.read.parquet(s"${cfg.warehouse}/etl_runs").collect()
+    assert(runs.map(_.getAs[String]("status")).toSeq == Seq(s"Failed: ${err.getMessage}"))
+    def file(rel: String) = new java.io.File(s"${cfg.warehouse}/$rel")
+    val runsWritten = file("etl_runs/_SUCCESS").lastModified()
+    Seq("agents", "abilities", "weapons", "maps", "gamemodes").foreach { t =>
+      assert(file(s"$t/_SUCCESS").exists(), s"$t was not refreshed")
+      assert(file(s"$t/_SUCCESS").lastModified() <= runsWritten,
+        s"$t committed after the etl_runs row")
+    }
+    assert(!file("weapon_damage/_SUCCESS").exists())
+    import scala.jdk.CollectionConverters._
+    val leftovers = java.nio.file.Files.walk(file("").toPath).iterator().asScala
+      .filter(_.getFileName.toString == "_temporary").toSeq
+    assert(leftovers.isEmpty, s"uncommitted attempts left: $leftovers")
   }
 
   test("pipeline run: extraction failure degrades to empty tables, still Success") {

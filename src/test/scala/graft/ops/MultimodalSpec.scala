@@ -60,33 +60,6 @@ class MultimodalSpec extends SparkSpec {
     assert(observed.sum == 20)
   }
 
-  test("CompositeCodec routes per kind, preserves order, fails fast on unknown kinds") {
-    val tagging = (dim: Int) => new Multimodal.Codec {
-      private val inner = new Multimodal.StubCodec(dim)
-      def decodeBatch(batch: Seq[Multimodal.MediaRecord]) = {
-        assert(batch.map(_.kind).distinct.size == 1) // homogeneous batches
-        inner.decodeBatch(batch)
-      }
-    }
-    val codec = new Multimodal.CompositeCodec(
-      Map("image" -> tagging(8), "audio" -> tagging(4)))
-    val media = (1L to 10L).map(i => Multimodal.MediaRecord(
-      i, if (i % 2 == 0) "image" else "audio", Array.tabulate(i.toInt)(_.toByte)))
-    val out = codec.decodeBatch(media)
-    assert(out.map(_.media_id) == (1L to 10L)) // input order preserved
-    assert(out.forall(f =>
-      f.features.length == (if (f.kind == "image") 8 else 4)))
-    // distributed path: same routing through extractFeatures
-    val dist = Multimodal.extractFeatures(
-      spark.createDataset(media).repartition(3), codec, batchSize = 4)
-      .collect().sortBy(_.media_id)
-    assert(dist.map(f => (f.media_id, f.features.toSeq)).toSeq ==
-      out.map(f => (f.media_id, f.features.toSeq)).toSeq)
-    intercept[IllegalArgumentException] {
-      codec.decodeBatch(Seq(Multimodal.MediaRecord(99L, "video", Array(1.toByte))))
-    }
-  }
-
   test("aHashBands: hand-computed bits, cross-multiplied mean, empty blocks read 0") {
     // payload [0,10,20,30]: n=4 < 64 blocks → bytes land in blocks
     // 0/16/32/48 (i*64/4), all other blocks empty → 0. tot=60, each
@@ -198,22 +171,14 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("PnmDecoder as a Codec: real dimensions + 8x8 block-mean features " +
-      "through CompositeCodec dispatch alongside the stub") {
+      "through extractFeatures") {
     val real = p5(16, 8, Array.tabulate(128)(i => if (i % 16 < 8) 0 else 200))
-    val media = spark.createDataset(Seq(
-      Multimodal.MediaRecord(1L, "image_pnm", real),
-      Multimodal.MediaRecord(2L, "text", "hello".getBytes("UTF-8"))))
-    val codec = new Multimodal.CompositeCodec(Map(
-      "image_pnm" -> new Multimodal.PnmDecoder,
-      "text" -> new Multimodal.StubCodec()))
-    val out = Multimodal.extractFeatures(media, codec)
-      .collect().sortBy(_.media_id)
+    val media = spark.createDataset(Seq(Multimodal.MediaRecord(1L, "image_pnm", real)))
+    val out = Multimodal.extractFeatures(media, new Multimodal.PnmDecoder).collect()
     // real decode: true 16x8 dims, 64 features, block means 0 or 200/255
     assert(out(0).width == 16 && out(0).height == 8)
     assert(out(0).features.length == 64)
     assert(out(0).features.toSeq.distinct.sorted == Seq(0f, 200f / 255f))
-    // stub path untouched: fake dims from byte length
-    assert(out(1).width == 5 % 640 && out(1).features.length == 8)
   }
 
   test("asMedia lifts any table's binary column; documentFeatures runs end-to-end") {

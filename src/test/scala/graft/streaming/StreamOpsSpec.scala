@@ -529,11 +529,32 @@ class StreamOpsSpec extends SparkSpec {
     org.apache.hadoop.fs.FileUtil.copy(local, new org.apache.hadoop.fs.Path(state),
       local, new org.apache.hadoop.fs.Path(copy), false, conf)
     val copied = s"$copy/${new java.io.File(state).getName}"
-    val (_, steady) = jobsDuring(
-      StreamOps.dedupDocumentBatch(dedupBatchDf(dedupFiles(2)), 2L, state))
+    // AQE names a write's stages after the thread that runs its stages, so
+    // a write job is found through its SQL execution, described by the
+    // write's call site
+    val writeExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val execs = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if s.description.startsWith("parquet at StreamOps.scala") =>
+            writeExecs.add(s.executionId.toString); ()
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(execs)
+    val (_, steady) =
+      try jobsDuring(StreamOps.dedupDocumentBatch(dedupBatchDf(dedupFiles(2)), 2L, state))
+      finally spark.sparkContext.removeSparkListener(execs)
     val (_, unchecked) = jobsDuring(
       StreamOps.dedupDocumentBatch(dedupBatchDf(dedupFiles(2)), 2L, copied))
     assert(steady.size <= 20, s"steady batch ran ${steady.size} jobs")
+    // the count covers the state commit: its four writes (out, digests and
+    // the two index roots) run on threads of their own and still carry the tag
+    val writes = steady.map(_.properties.getProperty("spark.sql.execution.id"))
+      .filter(writeExecs.contains)
+    assert(writes.distinct.size == 4,
+      s"state-write executions among the steady jobs: $writes")
     assert(samples(steady).isEmpty,
       s"steady batch sampled checked partitions: ${samples(steady).map(_.jobId)}")
     assert(samples(unchecked).nonEmpty, "unchecked partitions were not sampled")

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""List the public defs in src/main that no production entry point reaches.
+"""List the public members of src/main that no production entry point reaches:
+defs, vals, classes, traits and objects.
 
 Roots are every catalog file (src/main/scala/graft/catalog), every object
 with a `def main`, and every file under perfbench/harness. From there the
@@ -16,9 +17,14 @@ A reached class or trait also reaches its `override`, `implicit` and
 IMPLICIT_NAMES members, and a reached object reaches its plain vals (they
 run when the object initializes).
 
+A val counts as unreached when no reached code names it outside its own
+declaration, even though it runs when its object initializes. A class,
+trait or object counts as unreached when nothing reached names it; its
+members are then not listed again.
+
 Prints `<code lines>  <Owner.name>  <file>:<line>` for every unreached
-public def, code lines counted as tools/loc.py counts them; then the kept
-exceptions with their reasons; then the total.
+public member, code lines counted as tools/loc.py counts them; then the
+kept exceptions with their reasons; then the total.
 
 Usage: python3 tools/reach.py [root]
 """
@@ -29,7 +35,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from loc import code_lines  # noqa: E402
 
-# Public defs that stay although no entry point reaches them.
+# Public members that stay although no entry point reaches them.
 EXCEPTIONS = {
     "Vectors.cosineNearDupPairs":
         "exact all-pairs reference the banded-join specs compare against",
@@ -235,6 +241,7 @@ def main(argv):
 
     reached = set()
     named = set()
+    used = set()     # names reached code uses outside their own declaration
     work = []
 
     def reach(u):
@@ -258,7 +265,9 @@ def main(argv):
                             ("case" in u.mods and c.kind != "def"))
                 if implicit or c.name in named:
                     reach(c)
-        for name in names_in(u) - named:
+        names = names_in(u)
+        used |= names - {u.name}
+        for name in names - named:
             named.add(name)
             for c in by_name.get(name, ()):
                 if id(c.owner) in reached or c.owner.kind in ("class", "trait"):
@@ -266,17 +275,26 @@ def main(argv):
 
     def code_count(u):
         text = texts[u.path][0]
-        a = min(s for s, _ in u.spans)
-        b = max(e for _, e in u.spans)
+        spans = [sp for m in walk(u) for sp in m.spans]
+        a = min(s for s, _ in spans)
+        b = max(e for _, e in spans)
         first = text.rfind("\n", 0, a) + 1
         return code_lines(text[first:b])
 
-    dead, kept = [], []
+    def unused(u):
+        if u.kind == "val":    # an object's vals run without being named
+            return u.name not in used
+        return id(u) not in reached
+
+    dead, kept, inside_dead = [], [], set()
     for u in units:
-        if (u.kind != "def" or id(u) in reached or
-                u.mods & {"private", "protected", "override"} or
+        if id(u) in inside_dead:
+            continue
+        if (u.kind == "file" or not unused(u) or
+                u.mods & {"private", "protected", "override", "implicit"} or
                 not u.path.startswith("src/main/") or not u.spans):
             continue
+        inside_dead.update(id(m) for m in walk(u))
         row = (code_count(u), u.qual(), f"{u.path}:{u.line}")
         (kept if row[1] in EXCEPTIONS else dead).append(row)
     for n, q, where in dead:
@@ -284,7 +302,7 @@ def main(argv):
     for n, q, where in kept:
         print(f"{n:6d}  {q}  {where}  (kept: {EXCEPTIONS[q]})")
     print(f"{sum(r[0] for r in dead):6d}  total unreached, "
-          f"{len(dead)} defs ({len(kept)} kept exceptions)")
+          f"{len(dead)} members ({len(kept)} kept exceptions)")
 
 
 if __name__ == "__main__":
