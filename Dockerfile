@@ -32,7 +32,8 @@ ENV TZ=UTC
 
 # Healthcheck: the pipeline's first successful run creates the etl_runs
 # table directory inside the warehouse — its absence after startup means
-# no run has completed. The path must match `database.path` in
+# no run has completed. Later runs add or swap one file inside it, so the
+# directory stays in place while a run is recorded. The path must match `database.path` in
 # config/pipeline_config.json; if you point the config elsewhere, update
 # this line too.
 HEALTHCHECK --interval=60s --timeout=10s --retries=3 \

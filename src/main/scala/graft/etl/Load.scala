@@ -2,16 +2,19 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Relational
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Load layer — reference parity for `etl/pipeline.py:239-310` (K1-K5,
   * A1-A2), re-targeted from SQLite to Parquet tables under a warehouse
   * directory (one subdir per table).
   *
-  * Scale notes: full refresh is an atomic-enough `SaveMode.Overwrite`; the
-  * keyed upsert is anti-join + union (one shuffle on the key — the MERGE
-  * building block on immutable storage); lineage columns are constants per
-  * run, stamped once at plan time (NOT per-row current_timestamp()).
+  * Scale notes: every write that replaces data goes through `Load.commit`
+  * (stage in a hidden sibling, swap in by rename), so a failed or killed
+  * write leaves the previous copy readable — the SQLite transaction's
+  * guarantee on storage without one; the keyed upsert writes one file per
+  * key, so recording a run never reads or rewrites the run log; lineage
+  * columns are constants per run, stamped once at plan time (NOT per-row
+  * current_timestamp()).
   */
 final class Load(warehouse: String) {
 
@@ -25,16 +28,17 @@ final class Load(warehouse: String) {
   /** K1+K2: full-refresh write, skipping (and reporting) empty inputs
     * (pipeline.py:273-280). Returns rows written.
     *
-    * SINGLE-scan: the old shape ran `df.count()` before the write — a full
-    * extra pass over the input per load, doubling load cost at 100 TB just
-    * to report rows. Now the skip-empty probe is `isEmpty` (a limit-1 job
-    * that stops at the first non-empty partition) and the row count rides
-    * the write itself as an `observe` metric, so the input is computed once.
+    * ONE job, one scan: the input is written once to the commit's staging
+    * copy and its rows are counted by an `observe` metric riding that write
+    * — no pre-count pass and no `isEmpty` probe job. A write of 0 rows is
+    * dropped with its staging and the previous table stays as it was (K2);
+    * a failed write leaves it readable too.
     */
-  def fullRefresh(df: DataFrame, name: String): Long = {
-    if (df.isEmpty) 0L
-    else Load.writeCounted(df, _.write.mode(SaveMode.Overwrite).parquet(tablePath(name)))
-  }
+  def fullRefresh(df: DataFrame, name: String): Long =
+    Load.commit(df.sparkSession, tablePath(name)) { staging =>
+      val n = Load.writeCounted(df, _.write.parquet(staging.toString))
+      (n, Some(staging).filter(_ => n > 0))
+    }
 
   /** Bucketed refresh: pre-shuffle the table ONCE on its join/agg key so
     * every later equi-join or aggregation on that key runs with zero
@@ -64,16 +68,38 @@ final class Load(warehouse: String) {
 
   /** K3: INSERT-OR-REPLACE one keyed row into a table (pipeline.py:286-296),
     * creating it if absent (K5's CREATE IF NOT EXISTS).
+    *
+    * Each key owns one Parquet file, named by a digest of its key values
+    * and committed through `Load.commit`: a new key adds its file, a
+    * replayed key swaps its own. One write job, whatever the table's size —
+    * the table is never read, joined or rewritten. A table still in the
+    * one-file layout (a `part-*` file holding every row) is folded into
+    * per-key files on its first upsert: every stored row is rewritten to
+    * its key's file before the `part-*` files go, so a crash mid-fold
+    * loses no row and the next upsert folds again.
     */
   def upsertRow(spark: SparkSession, name: String, keys: Seq[String],
                 row: DataFrame): Unit = {
-    val path = tablePath(name)
-    val fs = Load.fsFor(spark, path)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
-    val merged =
-      if (exists) Relational.upsertByKey(spark.read.parquet(path), row, keys)
-      else row
-    Load.replaceTable(spark, merged, path)
+    val root = new Path(tablePath(name))
+    val fs = Load.fsFor(spark, root.toString)
+    def writeKey(one: DataFrame): Unit = {
+      val key = one.select(keys.map(col): _*).collect()
+      require(key.length == 1, s"upsertRow takes one row, got ${key.length}")
+      val digest = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(key.head.toSeq.map(String.valueOf).mkString("\u0000").getBytes("UTF-8"))
+      Load.commit(spark, s"$root/${digest.map(b => f"$b%02x").mkString}.parquet") { staging =>
+        one.coalesce(1).write.parquet(staging.toString)
+        ((), fs.listStatus(staging).map(_.getPath).find(_.getName.startsWith("part-")))
+      }
+    }
+    val legacy = Option(fs.globStatus(new Path(root, "part-*"))).toSeq.flatten.map(_.getPath)
+    if (legacy.nonEmpty) {
+      val stored = spark.read.parquet(legacy.map(_.toString): _*)
+      stored.collect().foreach(r =>
+        writeKey(spark.createDataFrame(java.util.List.of(r), stored.schema)))
+      (legacy :+ new Path(root, "_SUCCESS")).foreach(fs.delete(_, false))
+    }
+    writeKey(row)
   }
 
   /** A2: one etl_runs metrics row (pipeline.py:286-297 success /
@@ -166,7 +192,7 @@ object Load {
     */
   def parquetRowCount(spark: SparkSession, path: String): Long = {
     val fs = fsFor(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     // a not-yet-created table has zero rows — the before-count of a first
     // append must not throw FileNotFoundException
     if (!fs.exists(root)) return 0L
@@ -176,7 +202,7 @@ object Load {
     // `_temporary/.../part-*.parquet` attempts that the committer never
     // promoted — counting them over-reports (and double-reports retried
     // tasks). Readers skip underscore/dot-prefixed paths; so does this walk.
-    def committed(p: org.apache.hadoop.fs.Path): Boolean = {
+    def committed(p: Path): Boolean = {
       var cur = p
       while (cur != null && cur.depth() > rootDepth) {
         val n = cur.getName
@@ -203,8 +229,8 @@ object Load {
     * resolves the DEFAULT filesystem and throws "Wrong FS" the moment the
     * warehouse lives on s3a://, hdfs://, ... while defaultFS differs.
     */
-  def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    org.apache.hadoop.fs.FileSystem.get(
+  def fsFor(spark: SparkSession, path: String): FileSystem =
+    FileSystem.get(
       java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
 
   /** Delete the local tree under `root`, deepest paths first — for
@@ -221,87 +247,110 @@ object Load {
       System.err.println(s"[cleanup] WARNING: could not delete $root: $e")
     }
 
-  /** Replace the table at `path` with `df` via stage-then-rename. Parquet
-    * has no in-place merge; writing straight over `path` (delete + full
-    * second write) leaves the table missing for the whole rewrite. Staging
-    * the new data first and swapping with a RENAME shrinks the unprotected
-    * window to one metadata operation and writes the data exactly once.
+  /** The one commit protocol for every write that replaces a table (or one
+    * file of it). `stage` writes the new copy under `.<name>.staging`, a
+    * hidden sibling of `path` that readers listing the parent skip, and
+    * returns its result with what to commit: the staging dir, a file inside
+    * it, or None to drop the staging and leave `path` untouched. Then the
+    * swap: old copy → hidden `.<name>.trash`, staged copy → `path`, drop
+    * the trash. At every crash point a complete old or new copy is on
+    * disk, and the recovery pass that opens each commit restores a trash
+    * copy whose target is missing before it drops stale hidden siblings.
+    * Readers can find `path` missing only in the instant between the two
+    * renames (Parquet directories have no transaction log to do better
+    * with). A failed `stage` leaves `path` as it was and nothing hidden
+    * behind. One writer per `path`.
     */
-  def replaceTable(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val staged = s"$path.staging"
-    df.write.mode(SaveMode.Overwrite).parquet(staged)
+  def commit[A](spark: SparkSession, path: String)(stage: Path => (A, Option[Path])): A = {
     val fs = fsFor(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    fs.delete(target, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staged), target))
-      sys.error(s"rename $staged -> $path failed")
+    val target = new Path(path)
+    def hidden(suffix: String) = new Path(target.getParent, s".${target.getName}.$suffix")
+    val (staging, trash) = (hidden("staging"), hidden("trash"))
+    restore(fs, trash, target)
+    Seq(trash, staging).foreach(fs.delete(_, true))
+    try {
+      val (out, staged) = stage(staging)
+      staged.foreach(swap(fs, _, target, trash))
+      out
+    } finally fs.delete(staging, true)
   }
 
-  /** `compact` for PARTITIONED tables: walks the `col=value` directory tree
-    * and compacts each LEAF partition directory independently, preserving
-    * the layout (and therefore partition pruning) exactly — the companion
-    * `compact` correctly refuses these tables, and partitioned layouts are
-    * where micro-batch loads fragment worst (each batch-partitioned state
-    * root gains a few files per batch).
+  /** Recovery: a trash copy whose target is missing is the only copy left. */
+  private def restore(fs: FileSystem, trash: Path, target: Path): Unit =
+    if (fs.exists(trash) && !fs.exists(target)) {
+      fs.mkdirs(target.getParent)
+      if (!fs.rename(trash, target)) sys.error(s"recovery rename $trash -> $target failed")
+    }
+
+  /** The swap: old copy (if any) to trash, staged copy into place, drop trash. */
+  private def swap(fs: FileSystem, staged: Path, target: Path, trash: Path): Unit = {
+    if (fs.exists(target)) {
+      fs.mkdirs(trash.getParent)
+      if (!fs.rename(target, trash)) sys.error(s"rename $target -> $trash failed")
+    }
+    if (!fs.rename(staged, target))
+      sys.error(s"rename $staged -> $target failed (the old copy stays in $trash)")
+    fs.delete(trash, true)
+  }
+
+  /** Compact a PARTITIONED Parquet table: walks the `col=value` directory
+    * tree and rewrites each fragmented LEAF partition directory to
+    * ~`targetFileBytes` files (sized from the measured input bytes),
+    * preserving the layout (and therefore partition pruning) exactly.
+    * Partitioned layouts are where micro-batch loads fragment worst (each
+    * batch-partitioned state root gains a few files per batch).
     *
     * Durability: each leaf is rewritten under `<root>/.compact-staging/...`
     * (dot-prefixed — readers listing the table never see half-written
-    * files), then swapped in as original → `.compact-trash`, staged → leaf,
-    * drop trash. At EVERY crash point at least one complete copy of the
-    * leaf exists on disk, and the next run's recovery pass restores any
-    * trash leaf whose target went missing BEFORE dropping the hidden dirs —
-    * a mid-swap crash never loses a partition. The reader-visible gap is
-    * the instant between the two renames (Parquet directories have no
-    * transaction log to do better with). Leaves already at/below their
+    * files), then swapped in with `commit`'s steps: original →
+    * `.compact-trash`, staged → leaf, drop trash. At EVERY crash point at
+    * least one complete copy of the leaf exists on disk. The recovery pass
+    * is root-wide, not per leaf: a leaf lost between its two renames is no
+    * longer listed by the leaf walk, so every trash leaf whose target went
+    * missing is restored BEFORE the hidden dirs are dropped — a mid-swap
+    * crash never loses a partition. Leaves already at/below their
     * target file count are untouched, so re-running is cheap and
     * idempotent; independent leaves compact CONCURRENTLY (`concurrently`:
     * each leaf job is small — serial execution would idle the cluster once
     * per leaf × thousands of leaves), and a failed leaf is rethrown only
-    * after every other leaf has finished its swap or failed. Same
-    * single-writer precondition as `compact`.
+    * after every other leaf has finished its swap or failed. Refuses
+    * streaming file-sink tables (their `_spark_metadata` log would be
+    * orphaned and hide the rewritten rows) and flat tables. Single writer:
+    * nothing may append between the read snapshot and the swap.
     * Returns (filesBefore, filesAfter) summed over all leaves.
     */
   def compactPartitioned(spark: SparkSession, path: String,
                          targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val fs = fsFor(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val rootEntries = fs.listStatus(root)
     require(!rootEntries.exists(_.getPath.getName == "_spark_metadata"),
       s"$path is a streaming file-sink table (_spark_metadata present) — " +
         "compacting would orphan the sink log and hide rows from readers")
     require(rootEntries.exists(e => e.isDirectory && e.getPath.getName.contains("=")),
-      s"$path has no col=value partition directories — use compact instead")
-    val staging = new org.apache.hadoop.fs.Path(root, ".compact-staging")
-    val trash = new org.apache.hadoop.fs.Path(root, ".compact-trash")
-    def rel(p: org.apache.hadoop.fs.Path, base: org.apache.hadoop.fs.Path) =
+      s"$path has no col=value partition directories")
+    val staging = new Path(root, ".compact-staging")
+    val trash = new Path(root, ".compact-trash")
+    def rel(p: Path, base: Path) =
       p.toUri.getPath.stripPrefix(base.toUri.getPath).stripPrefix("/")
+    def dirLeaves(p: Path): Seq[Path] = {
+      val st = fs.listStatus(p)
+      val dirs = st.filter(_.isDirectory).toSeq
+      if (st.exists(_.isFile) || dirs.isEmpty) Seq(p)
+      else dirs.flatMap(d => dirLeaves(d.getPath))
+    }
     // Recovery from a previous crashed run: a trash leaf whose target leaf
     // is missing holds the ONLY copy of that partition — restore it first.
-    if (fs.exists(trash)) {
-      def dirLeaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-        val st = fs.listStatus(p)
-        val dirs = st.filter(_.isDirectory).toSeq
-        if (st.exists(_.isFile) || dirs.isEmpty) Seq(p)
-        else dirs.flatMap(d => dirLeaves(d.getPath))
-      }
-      dirLeaves(trash).foreach { t =>
-        val target = new org.apache.hadoop.fs.Path(root, rel(t, trash))
-        if (!fs.exists(target)) {
-          fs.mkdirs(target.getParent)
-          if (!fs.rename(t, target))
-            sys.error(s"recovery rename $t -> $target failed")
-        }
-      }
-    }
+    if (fs.exists(trash))
+      dirLeaves(trash).foreach(t => restore(fs, t, new Path(root, rel(t, trash))))
     // Only now are the hidden dirs stale-by-construction and safe to drop.
-    fs.delete(staging, true)
-    fs.delete(trash, true)
-    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
+    Seq(staging, trash).foreach(fs.delete(_, true))
+    def leaves(p: Path): Seq[Path] = {
       val dirs = fs.listStatus(p)
         .filter(e => e.isDirectory && e.getPath.getName.contains("="))
       if (dirs.isEmpty) Seq(p) else dirs.toSeq.flatMap(d => leaves(d.getPath))
     }
-    def compactLeaf(leaf: org.apache.hadoop.fs.Path): (Int, Int) = {
+    def compactLeaf(leaf: Path): (Int, Int) = {
       val parts = fs.listStatus(leaf)
         .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       if (parts.isEmpty) (0, 0)
@@ -311,67 +360,20 @@ object Load {
         if (parts.length <= nOut) (parts.length, parts.length)
         else {
           val leafRel = rel(leaf, root)
-          val staged = new org.apache.hadoop.fs.Path(staging, leafRel)
-          val trashed = new org.apache.hadoop.fs.Path(trash, leafRel)
+          val staged = new Path(staging, leafRel)
+          val trashed = new Path(trash, leafRel)
           // A leaf dir has no partition subdirs, so this read sees only the
           // data columns — partition values stay encoded in the dir name.
           spark.read.parquet(leaf.toString).coalesce(nOut)
-            .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-          fs.mkdirs(trashed.getParent)
-          if (!fs.rename(leaf, trashed))
-            sys.error(s"rename $leaf -> $trashed failed")
-          if (!fs.rename(staged, leaf))
-            sys.error(s"rename $staged -> $leaf failed (original preserved in $trashed)")
-          fs.delete(trashed, true)
+            .write.parquet(staged.toString)
+          swap(fs, staged, leaf, trashed)
           (parts.length, fs.listStatus(leaf)
             .count(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
         }
       }
     }
     val results = concurrently(leaves(root).map(l => () => compactLeaf(l)))
-    fs.delete(staging, true)
-    fs.delete(trash, true)
+    Seq(staging, trash).foreach(fs.delete(_, true))
     (results.map(_._1).sum, results.map(_._2).sum)
-  }
-
-  /** Compact a fragmented flat Parquet table to ~`targetFileBytes` files —
-    * the maintenance pass micro-batch pipelines need: frequent small loads
-    * leave thousands of tiny files whose open/footer costs come to dominate
-    * scans. The rewrite sizes output from the MEASURED input bytes (never a
-    * row-count guess), no-ops when the table is empty or already at/below
-    * the target file count, and swaps atomically through `replaceTable`.
-    * Returns (filesBefore, filesAfter).
-    *
-    * Preconditions, enforced:
-    *  - NOT a streaming file-sink table: those carry a `_spark_metadata`
-    *    transaction log that readers trust over the directory listing;
-    *    rewriting the files would orphan the log and make compacted rows
-    *    invisible. Stop the stream and migrate such tables first.
-    *  - NOT partitioned: a flat rewrite would silently destroy the
-    *    `col=value` layout (and its pruning); compact leaf partition
-    *    directories individually instead.
-    *  - Single writer: like every non-transactional Parquet rewrite, the
-    *    caller must ensure nothing appends between the read snapshot and
-    *    the swap — run it in the maintenance window of the load schedule.
-    */
-  def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val fs = fsFor(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val entries = fs.listStatus(target)
-    require(!entries.exists(_.getPath.getName == "_spark_metadata"),
-      s"$path is a streaming file-sink table (_spark_metadata present) — " +
-        "compacting would orphan the sink log and hide rows from readers")
-    require(!entries.exists(e => e.isDirectory && e.getPath.getName.contains("=")),
-      s"$path is partitioned — compact leaf partition directories individually")
-    val parts = entries.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (parts.isEmpty) return (0, 0)
-    val totalBytes = parts.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    if (parts.length <= nOut) return (parts.length, parts.length)
-    replaceTable(spark, spark.read.parquet(path).coalesce(nOut), path)
-    val after = fs.listStatus(target)
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    (parts.length, after)
   }
 }

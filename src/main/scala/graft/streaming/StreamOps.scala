@@ -426,6 +426,12 @@ object StreamOps {
     * `INSERT OR REPLACE` run-metadata sink (K3) — exactly-once per key given
     * checkpointed batch ids.
     *
+    * The merged table is committed through `Load.commit`: staged, then
+    * swapped in by rename, so at every crash point the previous or the new
+    * table is complete on disk, and a replayed batch merges into the
+    * recovered table — never into a missing one, which would keep only the
+    * batch's own keys.
+    *
     * COST: the merge rewrites the WHOLE table every micro-batch — right for
     * its run-metadata-sized use (the reference's etl_runs table), O(table)
     * per trigger on anything larger.
@@ -436,14 +442,15 @@ object StreamOps {
       val spark = batch.sparkSession
       val latest = graft.ops.Relational.firstPerKey(
         batch, keys, orderCols.map(c => col(c).desc))
-      val fs = graft.etl.Load.fsFor(spark, path)
-      val merged =
-        if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-          graft.ops.Relational.upsertByKey(
-            spark.read.parquet(path), latest, keys)
-        else latest
-      graft.etl.Load.replaceTable(spark, merged, path)
-      ()
+      graft.etl.Load.commit(spark, path) { staging =>
+        // checked after the commit's recovery pass has restored the table
+        val merged =
+          if (graft.etl.Load.fsFor(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
+            graft.ops.Relational.upsertByKey(spark.read.parquet(path), latest, keys)
+          else latest
+        merged.write.parquet(staging.toString)
+        ((), Some(staging))
+      }
     }
 
   /** Sink helper: append to Parquet with checkpointing (exactly-once file

@@ -29,48 +29,10 @@ class LoadPipelineSpec extends SparkSpec {
     assert(rows.forall(_.getAs[String]("_etl_loaded_at") == "2026-08-12T00:00:00Z"))
   }
 
-  test("compact: fragmented table rewritten to fewer files, data identical") {
-    val load = new Load(tmpDir("wh"))
-    val frag = spark.range(0, 10000).toDF("n").repartition(50)
-    assert(load.fullRefresh(frag, "frag") == 10000L)
-    val before = spark.read.parquet(load.tablePath("frag"))
-      .as[Long].collect().sorted.toSeq
-    val (nBefore, nAfter) =
-      Load.compact(spark, load.tablePath("frag"), targetFileBytes = 1L << 30)
-    assert(nBefore >= 50 && nAfter == 1, s"$nBefore -> $nAfter files")
-    val after = spark.read.parquet(load.tablePath("frag"))
-      .as[Long].collect().sorted.toSeq
-    assert(after == before)
-    // already compact → no rewrite (file count unchanged, returns as-is)
-    assert(Load.compact(spark, load.tablePath("frag"),
-      targetFileBytes = 1L << 30) == (1, 1))
-  }
-
-  test("compact refuses streaming-sink and partitioned tables; no-ops on empty") {
-    val load = new Load(tmpDir("wh"))
-    // empty dir → (0, 0), not a crash
-    val emptyPath = load.tablePath("empty")
-    new java.io.File(emptyPath).mkdirs()
-    assert(Load.compact(spark, emptyPath) == (0, 0))
-    // streaming file-sink table (_spark_metadata) → refuse: a rewrite would
-    // orphan the sink log and hide rows from readers
-    val sinkPath = load.tablePath("sink")
-    load.fullRefresh(Seq(1, 2).toDF("n"), "sink")
-    new java.io.File(s"$sinkPath/_spark_metadata").mkdirs()
-    intercept[IllegalArgumentException] { Load.compact(spark, sinkPath) }
-    // partitioned layout → refuse: a flat rewrite destroys pruning
-    Seq(("a", 1), ("b", 2)).toDF("part", "v")
-      .write.partitionBy("part").parquet(load.tablePath("parted"))
-    intercept[IllegalArgumentException] {
-      Load.compact(spark, load.tablePath("parted"))
-    }
-  }
-
   test("fullRefresh computes its input ONCE (row count rides the write, no pre-count scan)") {
     // A per-row accumulator probe: the old shape (df.count() then write)
-    // evaluated every input row twice. The single-scan contract allows the
-    // full write pass plus the limit-1 isEmpty probe, which touches at most
-    // one partition — nowhere near a second full pass.
+    // evaluated every input row twice, and an isEmpty probe evaluates part
+    // of one partition again. The write pass alone sees each row once.
     val load = new Load(tmpDir("wh"))
     val acc = spark.sparkContext.longAccumulator("rows-evaluated")
     val n = 10000L
@@ -78,9 +40,55 @@ class LoadPipelineSpec extends SparkSpec {
       .map { x => acc.add(1); x }.toDF("n")
     assert(load.fullRefresh(probed, "once") == n)
     assert(spark.read.parquet(load.tablePath("once")).count() == n)
-    assert(acc.value >= n, s"write pass saw only ${acc.value} rows")
-    assert(acc.value < 2 * n,
-      s"input evaluated ${acc.value}x rows — the load is scanning twice")
+    assert(acc.value == n, s"input evaluated for ${acc.value} rows, not $n")
+  }
+
+  /** The names under `dir` that readers skip: the commit's hidden siblings. */
+  private def hiddenIn(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten.filter(_.startsWith("."))
+      .filterNot(_.endsWith(".crc"))
+
+  test("commit: every crash point leaves the old or the new rows, and the next commit recovers") {
+    def ns(path: String) = spark.read.parquet(path).as[Int].collect().sorted.toSeq
+    def crashed(at: String, build: (java.io.File, java.io.File, java.io.File) => Unit,
+                expect: Seq[Int]): Unit = {
+      val load = new Load(tmpDir("wh"))
+      load.fullRefresh(Seq(1, 2).toDF("n"), "t")
+      val path = load.tablePath("t")
+      val Seq(table, staging, trash) = Seq("t", ".t.staging", ".t.trash")
+        .map(n => new java.io.File(load.tablePath(n)))
+      Seq(7, 8, 9).toDF("n").write.parquet(staging.getPath)
+      build(table, staging, trash)
+      // a complete copy is on disk, where the recovery pass will look
+      val onDisk = if (table.exists()) table else trash
+      assert(Set(Seq(1, 2), Seq(7, 8, 9)).contains(ns(onDisk.getPath)), at)
+      // an empty refresh commits nothing, so it shows what recovery left
+      assert(load.fullRefresh(Seq.empty[Int].toDF("n"), "t") == 0L)
+      assert(ns(path) == expect, at)
+      assert(hiddenIn(load.tablePath("")).isEmpty, s"$at: ${hiddenIn(load.tablePath(""))}")
+      assert(load.fullRefresh(Seq(5).toDF("n"), "t") == 1L)
+      assert(ns(path) == Seq(5), at)
+    }
+    crashed("staged only", (_, _, _) => (), Seq(1, 2))
+    crashed("old copy in trash, staged copy not renamed",
+      (table, _, trash) => assert(table.renameTo(trash)), Seq(1, 2))
+    crashed("both renamed, trash not dropped", { (table, staging, trash) =>
+      assert(table.renameTo(trash) && staging.renameTo(table))
+    }, Seq(7, 8, 9))
+  }
+
+  test("fullRefresh: a write that fails mid-job leaves the previous rows readable") {
+    val load = new Load(tmpDir("wh"))
+    load.fullRefresh(Seq(1, 2).toDF("n"), "t")
+    // the 4th partition (rows 6, 7) fails at its last row: a probe that
+    // reads one row per partition passes, the write fails
+    val failing = spark.range(0, 8, 1, 4).map { x =>
+      if (x == 7L) throw new IllegalStateException("the 4th partition's last row fails")
+      x
+    }.toDF("n")
+    intercept[Exception](load.fullRefresh(failing, "t"))
+    assert(spark.read.parquet(load.tablePath("t")).as[Int].collect().sorted.toSeq == Seq(1, 2))
+    assert(hiddenIn(load.tablePath("")).isEmpty)
   }
 
   test("concurrently: input order, every action finishes before the first " +
@@ -223,6 +231,36 @@ class LoadPipelineSpec extends SparkSpec {
     val out = spark.read.parquet(load.tablePath("etl_runs"))
       .select("run_id", "status").as[(String, String)].collect().toMap
     assert(out == Map("r1" -> "Failed: x", "r2" -> "Success"))
+    assert(hiddenIn(load.tablePath("etl_runs")).isEmpty)
+  }
+
+  test("K3: the run log costs the same jobs at its 51st row as at its 2nd") {
+    val load = new Load(tmpDir("wh"))
+    def record(i: Int) = load.upsertRow(spark, "etl_runs", Seq("run_id"),
+      load.metricsRow(spark, f"r$i%03d", "s", "c", "Success", 6, 239L, 0.07))
+    record(1)
+    val (_, second) = jobsDuring(record(2))
+    (3 to 50).foreach(record)
+    val (_, fiftyFirst) = jobsDuring(record(51))
+    assert(second.size == 1, s"${second.size} jobs for the 2nd row")
+    assert(fiftyFirst.size == second.size, s"${fiftyFirst.size} jobs for the 51st row")
+    val ids = spark.read.parquet(load.tablePath("etl_runs")).select("run_id").as[String].collect()
+    assert(ids.sorted.toSeq == (1 to 51).map(i => f"r$i%03d"))
+  }
+
+  test("K3: upsertRow folds a table written as one part file, each key read once") {
+    val load = new Load(tmpDir("wh"))
+    def row(id: String, status: String) =
+      load.metricsRow(spark, id, "s", "c", status, 6, 239L, 0.07)
+    val path = load.tablePath("etl_runs")
+    // the one-file layout: every row in a single part-* file
+    row("old", "Success").union(row("kept", "Success")).coalesce(1).write.parquet(path)
+    load.upsertRow(spark, "etl_runs", Seq("run_id"), row("old", "Failed: x"))
+    load.upsertRow(spark, "etl_runs", Seq("run_id"), row("new", "Success"))
+    val out = spark.read.parquet(path).select("run_id", "status").as[(String, String)].collect()
+    assert(out.sorted.toSeq ==
+      Seq("kept" -> "Success", "new" -> "Success", "old" -> "Failed: x"))
+    assert(!new java.io.File(path).list().exists(_.startsWith("part-")))
   }
 
   private val fixtureBodies = Map(
@@ -287,7 +325,10 @@ class LoadPipelineSpec extends SparkSpec {
     val runs = spark.read.parquet(s"${cfg.warehouse}/etl_runs").collect()
     assert(runs.map(_.getAs[String]("status")).toSeq == Seq(s"Failed: ${err.getMessage}"))
     def file(rel: String) = new java.io.File(s"${cfg.warehouse}/$rel")
-    val runsWritten = file("etl_runs/_SUCCESS").lastModified()
+    val runFiles = file("etl_runs").listFiles().filter(_.getName.endsWith(".parquet"))
+      .filterNot(_.getName.startsWith("."))
+    assert(runFiles.length == 1, runFiles.toSeq)
+    val runsWritten = runFiles.head.lastModified()
     Seq("agents", "abilities", "weapons", "maps", "gamemodes").foreach { t =>
       assert(file(s"$t/_SUCCESS").exists(), s"$t was not refreshed")
       assert(file(s"$t/_SUCCESS").lastModified() <= runsWritten,

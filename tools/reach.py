@@ -6,12 +6,14 @@ Roots are every catalog file (src/main/scala/graft/catalog), every object
 with a `def main`, and every file under perfbench/harness. From there the
 sweep follows names transitively: a member (def, val, class, object) is
 reached when a reached piece of code names it and its enclosing template is
-reached too. References inside comments do not count, and neither do
+reached too. Words inside comments and string literals do not count (the
+names a string interpolates, `$name` and `${...}`, do), and neither do
 references made from inside members that are themselves unreached, so a
 cluster of defs that only call each other stays unreached.
 
 Name-based, so it errs towards "reached": two members that share a name are
-both reached when either name is used. A class or trait member is reached
+both reached when either name is used, and a local val still reaches a
+member of the same name. A class or trait member is reached
 by its name alone, since a call through a supertype never names the class.
 A reached class or trait also reaches its `override`, `implicit` and
 IMPLICIT_NAMES members, and a reached object reaches its plain vals (they
@@ -52,55 +54,78 @@ DECL = re.compile(
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 MODS = re.compile(r"\b(private|protected|override|implicit)\b")
 # Members the compiler or Spark calls without naming them: `apply`/`unapply`
-# (`X(...)`, patterns), `main`, and the encoders of an `Aggregator`.
-IMPLICIT_NAMES = {"apply", "unapply", "main", "bufferEncoder", "outputEncoder"}
+# (`X(...)`, patterns), `main`, and the callbacks and encoders of an
+# `Aggregator`.
+IMPLICIT_NAMES = {"apply", "unapply", "main", "zero", "reduce", "merge",
+                  "finish", "bufferEncoder", "outputEncoder"}
 
 
 def blank(text):
-    """(code, idents): `text` with comments blanked, and additionally with
-    string and char literal contents blanked in `code`. Newlines and
-    offsets are kept, so positions line up with the source."""
-    code, idents = list(text), list(text)
+    """`text` with comments and the contents of string and char literals
+    blanked, except the names an interpolated string splices in (`$name`,
+    `${...}`), which stay code. Newlines and offsets are kept, so positions
+    line up with the source."""
+    code = list(text)
     i, n = 0, len(text)
 
-    def wipe(buf, a, b):
+    def wipe(a, b):
         for k in range(a, b):
-            if buf[k] != "\n":
-                buf[k] = " "
+            if code[k] != "\n":
+                code[k] = " "
+
+    def string(i, quote):
+        """Blank the literal opening at `i`; return the index past it."""
+        interpolated = i > 0 and (text[i - 1].isalnum() or text[i - 1] == "_")
+        j, keep = i + len(quote), []
+        while j < n and not text.startswith(quote, j):
+            if quote == '"' and text[j] == "\n":
+                break
+            if quote == '"' and text[j] == "\\":
+                j += 2
+            elif interpolated and text.startswith("${", j):
+                depth, k = 1, j + 2
+                while k < n and depth:
+                    depth += {"{": 1, "}": -1}.get(text[k], 0)
+                    k += 1
+                keep.append((j + 2, k - 1))
+                j = k
+            elif interpolated and text[j] == "$" and IDENT.match(text, j + 1):
+                end = IDENT.match(text, j + 1).end()
+                keep.append((j + 1, end))
+                j = end
+            else:
+                j += 1
+        wipe(i + len(quote), min(j, n))
+        for a, b in keep:
+            code[a:b] = text[a:b]
+        return j + len(quote)
 
     while i < n:
         if text.startswith("//", i):
             j = text.find("\n", i)
             j = n if j < 0 else j
-            wipe(code, i, j); wipe(idents, i, j)
+            wipe(i, j)
             i = j
         elif text.startswith("/*", i):
             j = text.find("*/", i + 2)
             j = n if j < 0 else j + 2
-            wipe(code, i, j); wipe(idents, i, j)
+            wipe(i, j)
             i = j
         elif text.startswith('"""', i):
-            j = text.find('"""', i + 3)
-            j = n if j < 0 else j + 3
-            wipe(code, i + 3, j - 3)
-            i = j
+            i = string(i, '"""')
         elif text[i] == '"':
-            j = i + 1
-            while j < n and text[j] not in '"\n':
-                j += 2 if text[j] == "\\" else 1
-            wipe(code, i + 1, j)
-            i = j + 1
+            i = string(i, '"')
         elif text[i] == "'" and i + 2 < n and text[i + 2] == "'":
-            wipe(code, i + 1, i + 2)
+            wipe(i + 1, i + 2)
             i += 3
         elif text.startswith("'\\", i):
             j = text.find("'", i + 2)
             j = n if j < 0 else j
-            wipe(code, i + 1, j)
+            wipe(i + 1, j)
             i = j + 1
         else:
             i += 1
-    return "".join(code), "".join(idents)
+    return "".join(code)
 
 
 class Unit:
@@ -122,7 +147,7 @@ def parse(path, rel):
     """All members of `path` as Units under one file-scope Unit."""
     with open(path, encoding="utf-8") as fh:
         text = fh.read()
-    code, idents = blank(text)
+    code = blank(text)
     root = Unit("file", rel, None, rel, 1, set())
     decls = {}
     for m in DECL.finditer(code):
@@ -195,7 +220,7 @@ def parse(path, rel):
                 pending = None
         i += 1
     attribute(n, root)
-    return text, idents, root
+    return text, code, root
 
 
 def walk(u):
@@ -215,8 +240,8 @@ def main(argv):
     units, roots, texts = [], [], {}
     for path in files:
         rel = os.path.relpath(path, root_dir)
-        text, idents, file_unit = parse(path, rel)
-        texts[rel] = (text, idents)
+        text, code, file_unit = parse(path, rel)
+        texts[rel] = (text, code)
         every = list(walk(file_unit))
         units += every
         if rel.startswith(("perfbench/", "src/main/scala/graft/catalog/")):
@@ -228,10 +253,10 @@ def main(argv):
                 roots += list(walk(u))
 
     def names_in(u):
-        idents = texts[u.path][1]
+        code = texts[u.path][1]
         out = set()
         for a, b in u.spans:
-            out.update(IDENT.findall(idents[a:b]))
+            out.update(IDENT.findall(code[a:b]))
         return out
 
     by_name = {}
