@@ -34,27 +34,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- MinHash
 
-  /** 28-bit integer hash of a token: first 7 hex chars of md5, parsed as an
-    * int. md5 — unlike murmur3 — is bit-identical in every engine, and hex
-    * parsing is too (`conv(...,16,10)` here ≡ `('0x'||...)::BIGINT` in the
-    * oracle), so signatures are cross-engine reproducible.
-    */
-  def tokenHash28(t: Column): Column =
-    conv(substring(md5(t.cast("binary")), 1, 7), 16, 10).cast("long")
-
-  /** Prime modulus for the permutation family (largest prime < 2^28). */
-  val MinHashPrime = 268435399L
-
-  /** Seed-s permutation of a 28-bit token hash: `((2s+3)·h + 12289·s + 1)
-    * mod P` — exact in 64-bit for every engine (max product ≈ 2^33), so the
-    * oracle replays it verbatim. One md5 per token total; per seed only
-    * integer arithmetic — versus numHashes md5 calls per token for the
-    * textbook md5(seed:token) form.
-    */
-  def minHashPerm(seed: Int, h: Column): Column =
-    (lit(2L * seed + 3L) * h + lit(12289L * seed + 1L)) % MinHashPrime
-
-
   /** Exact Jaccard similarity of two token-set columns. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
@@ -67,10 +46,11 @@ object Dedup {
     * encode local order and separate true near-dups from topical overlap.
     *
     * Plan shape (the part that must survive 100 TB):
-    *   1. shingle-explode → row-level 28-bit hash → `groupBy(doc).agg(min
-    *      per seed)`: entirely whole-stage codegen (no interpreted
-    *      higher-order functions), with map-side partial min, so the ONE
-    *      shuffle carries numHashes longs per doc — not tokens, not text;
+    *   1. one compiled signature per row (`MinHashSignature`: each
+    *      shingle md5'd once, numHashes minima, no row per shingle) →
+    *      `groupBy(doc).agg(min per position)`: entirely whole-stage
+    *      codegen, with map-side partial min, so the ONE shuffle carries
+    *      numHashes longs per doc — not shingles, not text;
     *   2. band keys from the signature → self-equi-join on (band, band_key)
     *      — one shuffle keyed by a short string; bucket sizes are the only
     *      quadratic term and LSH keeps them small;
@@ -154,16 +134,10 @@ object Dedup {
       else df.persist(storage)
     val toks = cached(docs.select(col(idCol).as("id"),
       shingles(col(textCol), shingleSize).as("ts")))
-    val sigCols = (0 until numHashes).map(s =>
-      min(minHashPerm(s, col("h"))).as(s"s$s")) :+
-      // shingle-set size, carried through the banding: `ts` is distinct,
-      // so the exploded row count IS |set| — feeds the verify prune below
-      count(lit(1)).as("nt")
-    val sigs = toks
-      .select(col("id"), explode(col("ts")).as("t"))
-      .select(col("id"), tokenHash28(col("t")).as("h"))
-      .groupBy(col("id"))
-      .agg(sigCols.head, sigCols.tail: _*)
+    // shingle-set size, carried through the banding (`ts` is distinct, so
+    // the size IS |set|) — feeds the verify prune below
+    val sigs = signatures(toks, numHashes,
+      sum(when(col("sig").isNotNull, size(col("ts")))).as("nt"))
     // bkey(b) = (b << 28·rowsPerBand) | s_{b·r} << 28·(r−1) | … | s_{b·r+r−1}
     // — ≤ 62 bits for rowsPerBand ≤ 2, bands ≤ 64; values < 2^28 (mod P).
     def bkey(b: Int): Column =
@@ -413,11 +387,7 @@ object Dedup {
   }
 
   /** THE MinHash pipeline for one input: (shingle sets, banded signature
-    * rows, unpersist handle). The single copy of the oracle-parity-critical
-    * construction (`tokenHash28` → per-seed `min` aggregation → `:`-joined
-    * band keys) — both the full-corpus pair path and the incremental path
-    * build on it, so the Spark side cannot drift from the SQL replay in one
-    * place but not the other. Both frames persist at `storage`: the banded
+    * rows, unpersist handle). Both frames persist at `storage`: the banded
     * rows feed band joins (twice, for a self-join), the shingle sets feed
     * the exact-Jaccard verify join-backs.
     */
@@ -425,8 +395,6 @@ object Dedup {
                           shingleSize: Int, idCol: String, textCol: String,
                           storage: org.apache.spark.storage.StorageLevel)
       : (DataFrame, DataFrame, () => Unit) = {
-    val rowsPerBand = numHashes / bands
-    require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
     // StorageLevel.NONE = no caching (for callers that materialize each
     // frame exactly once, e.g. an index build that writes both to disk)
     def cached(df: DataFrame) =
@@ -434,20 +402,46 @@ object Dedup {
       else df.persist(storage)
     val toks = cached(docs.select(col(idCol).as("id"),
       shingles(col(textCol), shingleSize).as("ts")))
-    val sigCols = (0 until numHashes).map(s =>
-      min(minHashPerm(s, col("h"))).as(s"s$s"))
-    val sigs = toks
-      .select(col("id"), explode(col("ts")).as("t"))
-      .select(col("id"), tokenHash28(col("t")).as("h"))
-      .groupBy(col("id"))
-      .agg(sigCols.head, sigCols.tail: _*)
-    val banded = cached(sigs.select(col("id"), explode(array((0 until bands).map { b =>
+    val banded = cached(minHashBands(toks, numHashes, bands))
+    (toks, banded, () => { toks.unpersist(); banded.unpersist(); () })
+  }
+
+  /** Banded signature rows `(id, band, band_key)` of a shingle-set frame
+    * `(id, ts)`: one signature per id (over ALL of its rows), cut into
+    * `bands` `:`-joined keys. The single copy of the oracle-parity-critical
+    * band-key construction — the full-corpus, incremental and streaming
+    * paths all build on it, so the Spark side cannot drift from the SQL
+    * replay in one place but not the other. An id with no shingle gets no
+    * band row.
+    */
+  private[graft] def minHashBands(toks: DataFrame, numHashes: Int,
+                                  bands: Int): DataFrame = {
+    val rowsPerBand = numHashes / bands
+    require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
+    signatures(toks, numHashes)
+      .select(col("id"), explode(array((0 until bands).map { b =>
         struct(lit(b).as("band"),
           concat_ws(":", (0 until rowsPerBand).map(r =>
             col(s"s${b * rowsPerBand + r}").cast("string")): _*).as("band_key"))
       }: _*)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.band_key").as("band_key")))
-    (toks, banded, () => { toks.unpersist(); banded.unpersist(); () })
+      .select(col("id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
+  }
+
+  /** Per-id MinHash signature `(id, s0 … s{numHashes-1}, extra…)` of a
+    * shingle-set frame `(id, ts)`: one compiled `MinHashSignature` per row,
+    * then a per-position `min` by id, so an id that holds several texts
+    * is signed over all of them. `extra` aggregates may read `ts` and the
+    * row's signature `sig`. Ids whose rows carry no shingle are dropped.
+    */
+  private def signatures(toks: DataFrame, numHashes: Int,
+                         extra: Column*): DataFrame = {
+    val aggs = (0 until numHashes).map(s =>
+      min(col("sig").getItem(s)).as(s"s$s")) ++ extra
+    toks.select(col("id"), col("ts"),
+        graft.functions.MinHashSignature(col("ts"), numHashes).as("sig"))
+      .groupBy(col("id"))
+      .agg(aggs.head, aggs.tail: _*)
+      .filter(col("s0").isNotNull)
   }
 
   /** Candidate-pair BUDGET of the MinHash banding — the third member of
@@ -730,79 +724,79 @@ object Dedup {
                                 numHashes: Int = 16, bands: Int = 8,
                                 shingleSize: Int = 3,
                                 idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    minHashIncrementalPairFrame(newDocs, corpusToks, corpusBanded, threshold,
+    minHashIncrementalIndexedPairs(newDocs, corpusToks, corpusBanded, threshold,
       numHashes, bands, shingleSize, idCol, textCol)
-      .groupBy(col("i").as(idCol))
-      // min over (j, jaccard) structs = the smallest dup_of with ITS
-      // jaccard — deterministic because j is unique per (i, j) pair
-      .agg(min(struct(col("j"), col("jaccard"))).as("m"))
-      .select(col(idCol), col("m.j").as("dup_of"), col("m.jaccard").as("jaccard"))
+      .groupBy(col(idCol))
+      // min over (dup_of, jaccard) structs = the smallest dup_of with ITS
+      // jaccard — deterministic because dup_of is unique per pair
+      .agg(min(struct(col("dup_of"), col("jaccard"))).as("m"))
+      .select(col(idCol), col("m.dup_of").as("dup_of"), col("m.jaccard").as("jaccard"))
 
   /** ALL qualifying (new, prior) pairs for a batch probe — the feed
     * cluster maintenance needs: `minHashIncrementalIndexed`'s min-dup_of
     * flag rows cannot express a new doc BRIDGING two existing components,
-    * so `mergeClusters` consumes this instead. Columns: (idCol, dup_of,
-    * jaccard), one row per verified pair.
+    * so `mergeClusters` consumes this instead (and the flag rows are built
+    * from it, so the two cannot drift). Columns: (idCol, dup_of, jaccard),
+    * one row per verified pair of texts. The batch is signed UNCACHED: a
+    * lazy result has no release point for a cache.
     */
   def minHashIncrementalIndexedPairs(newDocs: DataFrame,
                                      corpusToks: DataFrame, corpusBanded: DataFrame,
                                      threshold: Double,
                                      numHashes: Int = 16, bands: Int = 8,
                                      shingleSize: Int = 3,
-                                     idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    minHashIncrementalPairFrame(newDocs, corpusToks, corpusBanded, threshold,
-      numHashes, bands, shingleSize, idCol, textCol)
-      .select(col("i").as(idCol), col("j").as("dup_of"), col("jaccard"))
-
-  /** Shared probe pipeline: (i, j, jaccard) over NEW×CORPUS and
-    * NEW×earlier-NEW candidates — both public incremental surfaces wrap
-    * this, so flag rows and pair rows cannot drift. The batch is signed
-    * UNCACHED: a lazy result has no release point for a cache.
-    */
-  private def minHashIncrementalPairFrame(newDocs: DataFrame,
-                                          corpusToks: DataFrame, corpusBanded: DataFrame,
-                                          threshold: Double,
-                                          numHashes: Int, bands: Int, shingleSize: Int,
-                                          idCol: String, textCol: String): DataFrame = {
+                                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     minHashPreflight(corpusToks, corpusBanded, numHashes, bands, shingleSize)
     val (nToks, nBand, _) = minHashSide(newDocs, numHashes, bands, shingleSize,
       idCol, textCol, org.apache.spark.storage.StorageLevel.NONE)
     minHashProbePairs(nToks, nBand, corpusToks, corpusBanded, threshold,
-      broadcastBatch = false)
+        broadcastBatch = false, distinctCandidates = true)
+      .select(col("i").as(idCol), col("j").as("dup_of"), col("jaccard"))
   }
 
-  /** The probe over an ALREADY-SIGNED batch (`minHashSide`'s frames), for
-    * callers that own the signature and have proven the stored index's
-    * geometry (`minHashPreflight` / `minHashPreflightDirs`).
-    * `broadcastBatch` broadcasts the batch side into every band join, and
-    * the distinct corpus candidate pairs into the stored-shingle join, so
-    * the corpus side is streamed, never shuffled, and only its candidate
-    * rows meet a shingle set; the caller decides it from the batch's
-    * measured size.
+  /** The probe over an ALREADY-SIGNED batch (`minHashSide`'s frames, or
+    * the sink's batch cache), for callers that have proven the stored
+    * index's geometry (`minHashPreflight` / `minHashPreflightDirs`).
+    * Returns (i, j, jaccard) for every verified batch×stored and
+    * batch×earlier-batch pair, in ONE leg:
+    *   1. one band join of the batch bands against (stored bands ∪ batch
+    *      bands), each row tagged `stored` by its side, with the residual
+    *      `stored OR j < i` — never stored×stored, and an in-batch pair
+    *      once, at its larger id;
+    *   2. one shingle join of those candidates against (stored ∪ batch)
+    *      shingle sets keyed on `(j, stored)`, so the side tag, not the
+    *      id, picks the set when a batch id equals a stored one; then the
+    *      batch shingle sets by `i` and the exact Jaccard filter.
+    * `broadcastBatch` broadcasts the batch bands, the candidates and the
+    * batch shingle sets — three broadcasts — so the stored index is
+    * streamed, never shuffled, and only its candidate rows meet a shingle
+    * set; the caller decides it from the batch's measured size.
+    * A pair agreeing in several bands is a candidate once per band.
+    * `distinctCandidates` collapses them before the shingle join, for
+    * callers that return pair rows; a caller that only needs the flagged
+    * ids skips that shuffle.
     */
   private[graft] def minHashProbePairs(nToks: DataFrame, nBand: DataFrame,
                                        corpusToks: DataFrame, corpusBanded: DataFrame,
-                                       threshold: Double,
-                                       broadcastBatch: Boolean): DataFrame = {
+                                       threshold: Double, broadcastBatch: Boolean,
+                                       distinctCandidates: Boolean): DataFrame = {
     def batchSide(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
-    def bandJoin(a: DataFrame, b: DataFrame, extra: Column) = a.as("a")
-      .join(b.as("b"),
+    def bandsOf(df: DataFrame, stored: Boolean) =
+      df.select(col("id"), col("band"), col("band_key"), lit(stored).as("stored"))
+    val matched = batchSide(nBand).as("a")
+      .join(bandsOf(corpusBanded, true).unionByName(bandsOf(nBand, false)).as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          extra)
-      .select(col("a.id").as("i"), col("b.id").as("j"))
-      .distinct()
-    val candCorpus = bandJoin(batchSide(nBand), corpusBanded, lit(true))
-    val candEarlier = bandJoin(nBand, batchSide(nBand), col("b.id") < col("a.id"))
-    def batchToks(id: String, ts: String) =
-      batchSide(nToks.select(col("id").as(id), col("ts").as(ts)))
-    def verify(pairs: DataFrame) = pairs
-      .join(batchToks("i", "ts_a"), "i")
+          (col("b.stored") || col("b.id") < col("a.id")))
+      .select(col("a.id").as("i"), col("b.id").as("j"), col("b.stored").as("stored"))
+    val cand = if (distinctCandidates) matched.distinct() else matched
+    def toksOf(df: DataFrame, stored: Boolean) =
+      df.select(col("id").as("j"), lit(stored).as("stored"), col("ts").as("ts_b"))
+    toksOf(corpusToks, true).unionByName(toksOf(nToks, false))
+      .join(batchSide(cand), Seq("j", "stored"))
+      .join(batchSide(nToks.select(col("id").as("i"), col("ts").as("ts_a"))), "i")
       .select(col("i"), col("j"),
         round(jaccard(col("ts_a"), col("ts_b")), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    verify(corpusToks.select(col("id").as("j"), col("ts").as("ts_b"))
-        .join(batchSide(candCorpus), "j"))
-      .unionByName(verify(candEarlier.join(batchToks("j", "ts_b"), "j")))
   }
 
   /** Near-duplicate CLUSTERS: connected components over the verified

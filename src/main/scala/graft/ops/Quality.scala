@@ -70,13 +70,16 @@ object Quality {
     * `(p_cur − p_ref)·ln(p_cur/p_ref) ≥ 0`; their sum above ~0.2 is the
     * usual alarm line). Laplace-smoothed shares
     * `p = (n + 1) / (N + nBuckets)` keep empty buckets finite on both
-    * sides. Cost: two O(batch) keyed aggregates down to ≤ `nBuckets`
-    * rows, one bucket-keyed full outer join, and two one-row totals
-    * broadcast back on — nothing data-sized shuffles.
+    * sides. Cost: one keyed sum over both sides' raw rows down to
+    * ≤ `nBuckets` rows, then one single-partition pass over those rows
+    * that carries both totals — nothing data-sized shuffles.
     */
   def psiDrift(ref: DataFrame, cur: DataFrame, bucket: Column,
                nBuckets: Int): DataFrame =
-    psiDriftFromCounts(histogram(ref, bucket), cur, bucket, nBuckets)
+    // weight-1 raw rows, not a pre-groupBy: psiDriftFromCounts' one keyed
+    // sum counts both sides at once (the ksDrift stance)
+    psiDriftFromCounts(ref.select(bucket.cast("long").as("bucket"), lit(1L).as("n")),
+      cur, bucket, nBuckets)
 
   /** Two-sample Kolmogorov-Smirnov drift: D = sup_v |F_ref(v) − F_cur(v)|,
     * EXACT in integer arithmetic — the bucket-free sibling of `psiDrift`
@@ -259,7 +262,9 @@ object Quality {
   /** `psiDrift` against a PRE-AGGREGATED reference histogram `(bucket, n)`
     * — the steady-state entry point (see `histogram`). An EMPTY reference
     * stays finite under the Laplace smoothing: every current bucket scores
-    * against the uniform prior.
+    * against the uniform prior. `refCounts` may repeat a bucket (an
+    * un-summed union of batch histograms, or `psiDrift`'s weight-1 rows):
+    * the keyed sum below merges them.
     */
   def psiDriftFromCounts(refCounts: DataFrame, cur: DataFrame,
                          bucket: Column, nBuckets: Int): DataFrame = {
@@ -278,12 +283,17 @@ object Quality {
         lit(0L).as("ref_n"), lit(1L).as("cur_n")))
       .groupBy(col("bucket"))
       .agg(sum(col("ref_n")).as("ref_n"), sum(col("cur_n")).as("cur_n"))
-    val totals = joined.agg(sum(col("ref_n")).as("_rt"),
-      sum(col("cur_n")).as("_ct"))
-    val refP = (col("ref_n") + 1).cast("double") / (col("_rt") + nBuckets)
-    val curP = (col("cur_n") + 1).cast("double") / (col("_ct") + nBuckets)
-    joined.crossJoin(broadcast(totals))
-      .select(col("bucket"), col("ref_n"), col("cur_n"),
+    // ≤ nBuckets rows, gathered into ONE row beside both totals: the
+    // totals need no second aggregate over `joined`, whose plan a
+    // broadcast totals branch would repeat, exchanges included
+    val gathered = joined.agg(
+      collect_list(struct(col("bucket"), col("ref_n"), col("cur_n"))).as("rows"),
+      sum(col("ref_n")).as("_rt"), sum(col("cur_n")).as("_ct"))
+    val refP = (col("r.ref_n") + 1).cast("double") / (col("_rt") + nBuckets)
+    val curP = (col("r.cur_n") + 1).cast("double") / (col("_ct") + nBuckets)
+    gathered.select(explode(col("rows")).as("r"), col("_rt"), col("_ct"))
+      .select(col("r.bucket").as("bucket"), col("r.ref_n").as("ref_n"),
+        col("r.cur_n").as("cur_n"),
         round((curP - refP) * log(curP / refP), 6).as("psi_term"))
   }
 

@@ -492,17 +492,24 @@ object StreamOps {
     *
     * Per-batch shape. The exact step is one keyed pass over the batch and
     * an anti join against the stored digests, with no aggregate over the
-    * stored state. One action fills the batch's caches (exact survivors,
-    * shingle sets, band rows). When the signed batch's measured size is
-    * within the session's `spark.sql.autoBroadcastJoinThreshold`, the batch
-    * side is broadcast into every band join and the corpus candidate pairs
-    * into the stored-shingle join, so the stored index is streamed, never
-    * shuffled; the flagged ids are then collected once and filter the
-    * survivors and the appended index rows. Otherwise (or at -1) the joins
-    * shuffle and the flagged ids stay a distributed anti join. The stored
-    * index's geometry is checked once per stored partition and parameter
-    * set (`Dedup.minHashPreflightDirs`): partitions this sink wrote in this
-    * JVM count as checked, so a steady batch samples nothing.
+    * stored state. The batch has two caches, filled by one action: the
+    * exact survivors with their shingle sets (the shingle-set frame is a
+    * projection of it) and the band rows, signed by one compiled
+    * `MinHashSignature` per row. The probe is one leg
+    * (`Dedup.minHashProbePairs`): one band join of the batch bands against
+    * the stored and batch bands together, then one shingle join. When the
+    * batch's measured size is within the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the batch bands, the
+    * candidates and the batch shingle sets are broadcast (three
+    * broadcasts), so the stored index is streamed, never shuffled; the
+    * flagged ids are then collected once with no shuffle, made distinct on
+    * the driver, and filter the survivors and the appended index rows.
+    * Otherwise (or at -1) the joins shuffle and the flagged ids stay a
+    * distributed anti join. The stored index's geometry is checked once
+    * per stored partition and parameter set (`Dedup.minHashPreflightDirs`):
+    * partitions this sink wrote in this JVM count as checked, so a steady
+    * batch samples nothing. A steady micro-batch runs at most 13 Spark
+    * jobs, the bootstrap batch at most 12 (StreamOpsSpec pins both).
     *
     * State layout — every table batch-partitioned (`.../batch=<id>/`,
     * under the `StateSink` contract):
@@ -542,45 +549,50 @@ object StreamOps {
       val bandedRoot = s"$stateDir/index/banded"
       val priorDigests = st.readPrior(digestsRoot,
         Dedup.contentDigests(batch.limit(0), textCol).schema)
+      // the exact survivors carry their shingle sets: one cache, and the
+      // batch's shingle-set frame is a projection of it
       val exact = st.cache(batchSized(
-        Dedup.exactIncremental(batch, priorDigests, idCol, textCol), batch))
-      val (nToks, nBand, releaseSigned) = Dedup.minHashSide(exact, numHashes,
-        bands, shingleSize, idCol, textCol, StorageLevel.MEMORY_ONLY)
-      st.onEnd(releaseSigned)
-      // one action fills all three caches (banded reads toks reads exact),
-      // so the broadcast gate below sees measured sizes, not plan estimates;
-      // a plain scan, not count(), whose aggregate would add an exchange
+        Dedup.exactIncremental(batch, priorDigests, idCol, textCol)
+          .withColumn("__shingles", Dedup.shingles(col(textCol), shingleSize)), batch))
+      val nToks = exact.select(col(idCol).as("id"), col("__shingles").as("ts"))
+      val nBand = st.cache(Dedup.minHashBands(nToks, numHashes, bands))
+      // one action fills both caches (the bands read the survivors), so the
+      // broadcast gate below sees measured sizes, not plan estimates; a
+      // plain scan, not count(), whose aggregate would add an exchange
       nBand.foreachPartition((rows: Iterator[Row]) => rows.foreach(_ => ()))
       val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
       // a fresh plan over the cache re-reads its stats (sizes are >= 0, so a
-      // threshold of -1 never fits)
+      // threshold of -1 never fits); the survivors bound the shingle sets
+      // they carry
       def fits(df: DataFrame) =
         df.select(col("*")).queryExecution.optimizedPlan.stats.sizeInBytes <= limit
-      val broadcastBatch = fits(nToks) && fits(nBand)
+      val broadcastBatch = fits(exact) && fits(nBand)
       // the stored index is read as the listed prior dirs, so the geometry
       // check covers exactly what the probe reads; the bootstrap batch probes
-      // an empty index (in-batch near-dups are caught by the probe's
-      // NEW×earlier-NEW leg)
+      // an empty index (in-batch near-dups are caught by the batch half of
+      // the probe's band union)
       val (toksDirs, bandedDirs) = (st.priorDirs(toksRoot), st.priorDirs(bandedRoot))
       Dedup.minHashPreflightDirs(spark, toksDirs, bandedDirs, numHashes, bands,
         shingleSize)
       val flagged = Dedup.minHashProbePairs(nToks, nBand,
           st.readDirs(toksDirs, nToks.schema), st.readDirs(bandedDirs, nBand.schema),
-          threshold, broadcastBatch)
-        .select(col("i").as(idCol)).distinct()
-      // survivors and the index rows kept for them. Flagged ids are distinct
-      // batch ids, so they fit wherever the batch does: collected once, they
+          threshold, broadcastBatch, distinctCandidates = false)
+        .select(col("i").as(idCol))
+      // survivors and the index rows kept for them. Flagged ids are batch
+      // ids, so they fit wherever the batch does: collected once (a pair
+      // per agreeing band and text, made distinct here on the driver), they
       // filter all three frames with no further join. A NULL id is never
       // flagged and survives, as under the anti join (the exact step drops
       // NULL ids, so none reach here).
+      val rows = exact.drop("__shingles")
       val (survivors, kept) =
         if (broadcastBatch) {
-          val ids = flagged.collect().filterNot(_.isNullAt(0)).map(_.get(0))
+          val ids = flagged.collect().filterNot(_.isNullAt(0)).map(_.get(0)).distinct
           def novel(df: DataFrame, c: String) =
             if (ids.isEmpty) df else df.filter(col(c).isNull || !col(c).isin(ids: _*))
-          (novel(exact, idCol), novel(_: DataFrame, "id"))
+          (novel(rows, idCol), novel(_: DataFrame, "id"))
         } else {
-          val surv = st.cache(exact.join(flagged, Seq(idCol), "left_anti"))
+          val surv = st.cache(rows.join(flagged, Seq(idCol), "left_anti"))
           val keptIds = surv.select(col(idCol).as("id"))
           (surv, (df: DataFrame) => df.join(keptIds, Seq("id"), "left_semi"))
         }

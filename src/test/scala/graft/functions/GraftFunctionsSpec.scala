@@ -4,7 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.TestBridge
 
-/** SQL-surface registration of the native expressions. */
+/** SQL-surface registration of the native expressions, and the MinHash
+  * signature against its exploded definition. */
 class GraftFunctionsSpec extends SparkSpec {
 
   import spark.implicits._
@@ -47,5 +48,58 @@ class GraftFunctionsSpec extends SparkSpec {
     val viaCol = df.select(ArrayMath.dotNative(col("a"), col("b"))).head().getDouble(0)
     assert(java.lang.Double.doubleToLongBits(viaSql) ==
       java.lang.Double.doubleToLongBits(viaCol))
+  }
+
+  test("minhash_signature equals min(perm(s, hash28(t))) over the exploded " +
+      "shingles, per id — non-BMP text, short texts and reused ids, with and " +
+      "without codegen") {
+    // the definition the oracle SQL replays: a 28-bit md5 prefix per
+    // shingle, permuted per seed modulo the largest prime below 2^28
+    def hash28(t: org.apache.spark.sql.Column) =
+      conv(substring(md5(t.cast("binary")), 1, 7), 16, 10).cast("long")
+    def perm(s: Int, h: org.apache.spark.sql.Column) =
+      (lit(2L * s + 3L) * h + lit(12289L * s + 1L)) % 268435399L
+    val numHashes = 16
+    val docs = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog",
+      2L -> "\ud835\udc9c\ud835\udc9d grinning \ud83d\ude00 face \ud83d\ude00 again \u00e9t\u00e9 \u4e2d\u6587 end",
+      3L -> "too short",
+      4L -> "a reused id holds this first text here",
+      4L -> "and this second one under the same id",
+      5L -> "only short",
+      5L -> "hi",
+      6L -> "")
+      .toDF("id", "text")
+      .select(col("id"), graft.ops.Dedup.shingles(col("text"), 3).as("ts"))
+    val want = docs.select(col("id"), explode(col("ts")).as("t"))
+      .groupBy(col("id"))
+      .agg(array((0 until numHashes).map(s => min(perm(s, hash28(col("t"))))): _*).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    // texts shorter than the shingle size give no row, so ids 3, 5 and 6
+    // have no signature
+    assert(want.keySet == Set(1L, 2L, 4L))
+    def signed(conf: Map[String, String]): Map[Long, Seq[Long]] = {
+      val saved = conf.keys.map(k => k -> spark.conf.getOption(k))
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try docs
+        .select(col("id"), MinHashSignature(col("ts"), numHashes).as("sig"))
+        .groupBy(col("id"))
+        .agg(array((0 until numHashes).map(s => min(col("sig").getItem(s))): _*).as("sig"))
+        .filter(col("sig").getItem(0).isNotNull)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    assert(signed(Map.empty) == want)
+    assert(signed(Map("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")) == want)
+    // the interpreted path directly: no shingle → NULL, NULL input → NULL
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    def eval(v: Any) = MinHashSignature(
+      Literal.create(v, ArrayType(StringType, containsNull = false)), numHashes).eval()
+    assert(eval(Seq.empty[String]) == null && eval(null) == null)
+    val one = docs.filter(col("id") === 1L).head().getSeq[String](1)
+    assert(eval(one).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      .toLongArray().toSeq == want(1L))
   }
 }

@@ -107,6 +107,60 @@ class DedupVectorsSpec extends SparkSpec {
     }
   }
 
+  test("minHashIncrementalIndexed/Pairs equal the naive probe: a pair agreeing " +
+      "in several bands, a stored id holding two texts, a batch id equal to a " +
+      "stored id") {
+    val A = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val X = "the quick brown fox jumps over the lazy dog tonight"
+    val Y = "short second text here"
+    val Q = "novel content never seen in the corpus before now"
+    def near(t: String, w: String) = t.split(" ").init.mkString(" ") + " " + w
+    val corpus = Seq((1L, "en", A), (7L, "en", X), (7L, "en", Y), (3L, "en", Q))
+      .toDF("doc_id", "lang", "text")
+    // 21 = A (every band agrees with 1); 22 = X then Y (bands meet id 7's
+    // signature over both its texts, verifies against X only); batch id 3
+    // reuses a stored id, and 9 near-dups both the stored and the batch 3
+    val batch = Seq((21L, "en", A), (22L, "en", X + " " + Y),
+      (3L, "en", near(Q, "today")), (9L, "en", near(Q, "then")))
+      .toDF("doc_id", "lang", "text")
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    val (cToks, cBand) = Dedup.minHashIndex(corpus, storage = none)
+    val (nToks, nBand) = Dedup.minHashIndex(batch, storage = none)
+    def toks(df: DataFrame) =
+      df.collect().toSeq.map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
+    def bandRows(df: DataFrame) =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+    // the naive probe: band candidates per side, each verified against
+    // every text of i and every text of j on j's side
+    val sides = Seq(true -> (bandRows(cBand), toks(cToks)),
+      false -> (bandRows(nBand), toks(nToks)))
+    val batchToks = toks(nToks)
+    val agreeing = for {
+      (i, band, key) <- bandRows(nBand); (stored, (bs, _)) <- sides
+      (j, band2, key2) <- bs if band == band2 && key == key2 && (stored || j < i)
+    } yield (i, j, stored)
+    val cands = agreeing.distinct
+    def round4(x: Double) =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val want = (for {
+      (i, j, stored) <- cands; (a, ta) <- batchToks if a == i
+      (b, tb) <- sides.toMap.apply(stored)._2 if b == j
+      jac = round4((ta & tb).size.toDouble / (ta | tb).size) if jac >= 0.5
+    } yield (i, j, jac)).sorted
+    // the three cases really occur
+    assert(agreeing.count(_ == ((21L, 1L, true))) > 1)
+    assert(cands.contains((22L, 7L, true)) && toks(cToks).count(_._1 == 7L) == 2)
+    assert(cands.contains((9L, 3L, true)) && cands.contains((9L, 3L, false)) &&
+      cands.contains((3L, 3L, true)))
+    val pairs = Dedup.minHashIncrementalIndexedPairs(batch, cToks, cBand, 0.5)
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
+    assert(pairs == want)
+    val flags = Dedup.minHashIncrementalIndexed(batch, cToks, cBand, 0.5)
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
+    assert(flags == want.groupBy(_._1).values.map(_.min).toSeq.sorted)
+    assert(flags.map(_._1) == Seq(3L, 9L, 21L, 22L))
+  }
+
   test("mergeClusters: incremental label merge equals full recompute on a grown corpus") {
     val corpus = docs(3) // contains the {1,2,4} near-dup component
     val batch = Seq(

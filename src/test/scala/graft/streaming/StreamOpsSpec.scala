@@ -513,7 +513,7 @@ class StreamOpsSpec extends SparkSpec {
     assertNothingRetained("the failed batch on a rewritten partition")
   }
 
-  test("incrementalDedupSink: a steady batch runs at most 20 jobs and " +
+  test("incrementalDedupSink: a steady batch runs at most 14 jobs and " +
       "samples no index partition already checked") {
     val state = tmpDir("dedup-jobs-state")
     dedupFiles.take(2).zipWithIndex.foreach { case (f, i) =>
@@ -548,7 +548,7 @@ class StreamOpsSpec extends SparkSpec {
       finally spark.sparkContext.removeSparkListener(execs)
     val (_, unchecked) = jobsDuring(
       StreamOps.dedupDocumentBatch(dedupBatchDf(dedupFiles(2)), 2L, copied))
-    assert(steady.size <= 20, s"steady batch ran ${steady.size} jobs")
+    assert(steady.size <= 14, s"steady batch ran ${steady.size} jobs")
     // the count covers the state commit: its four writes (out, digests and
     // the two index roots) run on threads of their own and still carry the tag
     val writes = steady.map(_.properties.getProperty("spark.sql.execution.id"))
@@ -559,6 +559,37 @@ class StreamOpsSpec extends SparkSpec {
       s"steady batch sampled checked partitions: ${samples(steady).map(_.jobId)}")
     assert(samples(unchecked).nonEmpty, "unchecked partitions were not sampled")
     assert(dedupOutIds(state) == Set(1L, 2L, 13L, 23L))
+  }
+
+  test("incrementalDedupSink: a batch's job count does not grow with the " +
+      "stored batches — the 12th batch runs the 3rd batch's jobs") {
+    val src = tmpDir("docs-growth-src")
+    val state = tmpDir("dedup-growth-state")
+    // each file: a novel text, an exact copy and a near-dup of the previous
+    // file's novel text (the first file copies its own)
+    def novel(b: Int) = (0 until 10).map(w => s"w${b}x$w").mkString(" ")
+    def near(t: String) = t.split(" ").init.mkString(" ") + " changed"
+    def doc(id: Long, text: String) =
+      s"""{"doc_id":$id,"lang":"en","text":"$text"}"""
+    // a second apart, so the file source's order cannot depend on the
+    // clock tick a write lands on
+    val t0 = System.currentTimeMillis() - 60000L
+    (0 until 12).foreach { b =>
+      val prior = novel(math.max(b - 1, 0))
+      val name = f"g$b%02d.json"
+      writeDedupFile(src, name -> Seq(doc(100L * b + 1, novel(b)),
+        doc(100L * b + 2, prior), doc(100L * b + 3, near(prior))))
+      assert(new java.io.File(src, name).setLastModified(t0 + 1000L * b))
+    }
+    // the query's thread inherits the tag, and its jobs carry their batch id
+    val (_, jobs) = jobsDuring(runDedupSink(src, state, tmpDir("dedup-growth-ckpt")))
+    val perBatch = jobs.flatMap(j => Option(j.properties.getProperty("streaming.sql.batchId")))
+      .groupBy(_.toInt).view.mapValues(_.size).toMap
+    assert(perBatch.keySet == (0 until 12).toSet, s"jobs per batch: $perBatch")
+    assert(dedupOutIds(state) == (0 until 12).map(b => 100L * b + 1).toSet)
+    assert(perBatch(0) <= 12, s"bootstrap batch ran ${perBatch(0)} jobs")
+    assert(perBatch(2) <= 13, s"steady batch ran ${perBatch(2)} jobs")
+    assert(perBatch(11) == perBatch(2), s"jobs per batch: $perBatch")
   }
 
   test("incrementalDedupSink: NULL ids, reused ids, in-batch duplicate text " +
