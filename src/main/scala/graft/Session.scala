@@ -24,7 +24,10 @@ object Session {
     "spark.sql.session.timeZone" -> "UTC",
     // Coalesce for FEWER tasks, not device parallelism: at sf0.1 most
     // post-shuffle stages are a few MB, and per-task scheduling overhead
-    // dominates — let AQE shrink those stages to size.
+    // dominates — let AQE shrink those stages to size. The exception is a
+    // stage whose per-key CPU dwarfs its input bytes (pair expansion,
+    // banded candidate scoring): those fan explicitly with
+    // `repartition(numShufflePartitions, key)`, which AQE does not coalesce.
     "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "4m",
     // Split small files into more input partitions than the 128m default:

@@ -1511,8 +1511,8 @@ object RelationalQueries extends Catalog {
 
     // Market-basket frequent pairs (Relational.basketPairs): parts bought
     // together in the same order, support-counted and global-top-50 ranked.
-    // Distinct (order, part) → self-join keyed on the order id → canonical
-    // a<b pair count; basket sizes are bounded (≤7 lines/order) so the
+    // Item sets grouped by order id → map-side canonical a<b pair
+    // expansion → keyed count; basket sizes are bounded (≤7 lines/order) so the
     // expansion is linear in orders. The final top-k is a pushed
     // TakeOrdered, not a global sort; (support DESC, a, b) is a total
     // order so the LIMIT boundary is engine-independent.

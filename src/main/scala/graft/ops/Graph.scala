@@ -85,16 +85,17 @@ object Graph {
     // Compact adjacency list per source, rank-sorted (struct sort is
     // lexicographic on (d, id) = the orientation order). Out-degrees under
     // degree orientation are O(√m), so the array — and the map-side wedge
-    // expansion below (p pairs with everything after it, mirroring
-    // basketPairs) — is bounded per node; no wedge self-join shuffle.
+    // expansion below (`ArrayPairs`: each neighbor pairs with every
+    // higher-ranked one) — is bounded per node; no wedge self-join shuffle.
+    // Pair the ids alone (`nbrs.u`, rank order kept): whole (d, id) structs
+    // would make every wedge row carry two nested structs for the two ids
+    // the join reads.
     val adj = oriented.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dk"))).as("nbrs"))
-    val wedges = adj.select(col("src").as("x"),
-        explode(flatten(transform(col("nbrs"), (p, i) =>
-          transform(slice(col("nbrs"), i + 2, size(col("nbrs"))),
-            q => struct(p.getField("u").as("y"), q.getField("u").as("z"))))))
-          .as("_w"))
-      .select(col("x"), col("_w.y").as("y"), col("_w.z").as("z"))
+    val wedges = adj
+      .select(col("src").as("x"),
+        explode(graft.functions.ArrayPairs(col("nbrs").getField("u"))).as("_w"))
+      .select(col("x"), col("_w.a").as("y"), col("_w.b").as("z"))
     // {y,z} (both ranked above x, y before z in rank order) closes the
     // triangle iff the oriented edge y→z exists — one equi-join, and edge
     // uniqueness means no multiplicity.

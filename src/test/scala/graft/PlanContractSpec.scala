@@ -18,6 +18,24 @@ class PlanContractSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(df: DataFrame): SparkPlan = df.queryExecution.sparkPlan
+
+  /** `pf` over the plan AND every cached plan it scans, which plain
+    * collect() does not descend into. */
+  private def deepCollect[A](p: SparkPlan)(pf: PartialFunction[SparkPlan, A]): Seq[A] = {
+    // cached plans arrive wrapped in AdaptiveSparkPlanExec, whose child
+    // is a field, not a tree edge — unwrap before traversing
+    val unwrapped = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.inputPlan
+      case other => other
+    }
+    val here = unwrapped.collect(pf)
+    val cached = unwrapped.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        deepCollect(s.relation.cachedPlan)(pf)
+    }.flatten
+    here ++ cached
+  }
   private def q(name: String): SparkPlan = {
     // Canonical plan: drop cache entries registered by previously-planned
     // queries, or the CacheManager substitutes their InMemoryRelations into
@@ -369,24 +387,7 @@ class PlanContractSpec extends SparkSpec {
     // configured parallelism — the explicit repartition(parts, id), which
     // survives into the initial plan regardless of AQE's later choices.
     val parts = spark.sessionState.conf.numShufflePartitions
-    // the repartition sits INSIDE the persisted pair frame's cached plan —
-    // descend through InMemoryRelations, which plain collect() won't
-    def deepCollect[A](p: SparkPlan)(
-        pf: PartialFunction[SparkPlan, A]): Seq[A] = {
-      // cached plans arrive wrapped in AdaptiveSparkPlanExec, whose child
-      // is a field, not a tree edge — unwrap before traversing
-      val unwrapped = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.inputPlan
-        case other => other
-      }
-      val here = unwrapped.collect(pf)
-      val cached = unwrapped.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          deepCollect(s.relation.cachedPlan)(pf)
-      }.flatten
-      here ++ cached
-    }
+    // the repartition sits INSIDE the persisted pair frame's cached plan
     for (name <- Seq("sim_knn_graph", "dedup_embedding_cosine")) {
       val p = q(name)
       val exch = deepCollect(p) {
@@ -396,6 +397,30 @@ class PlanContractSpec extends SparkSpec {
       }
       assert(exch.nonEmpty,
         s"$name must repartition the banded probe side to $parts partitions")
+    }
+  }
+
+  test("basket pair builds group baskets over a fan to the shuffle parallelism") {
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    // The basket stage (set build, pair expansion, partial pair count) is
+    // the query's CPU over a few-MB input: a plain grouping shuffle is
+    // coalesced by AQE to one task, the explicit fan keeps every core busy.
+    val parts = spark.sessionState.conf.numShufflePartitions
+    for (name <- Seq("basket_pair_support", "basket_clustering_coeff")) {
+      val fans = deepCollect(q(name)) {
+        case e: ShuffleExchangeLike if e.shuffleOrigin == REPARTITION_BY_NUM =>
+          e.outputPartitioning
+      }.collect {
+        case h: HashPartitioning if h.numPartitions == parts &&
+          h.expressions.exists {
+            case a: AttributeReference => a.name == "_bk"
+            case _ => false
+          } => h
+      }
+      assert(fans.nonEmpty,
+        s"$name must repartition its baskets to $parts partitions")
     }
   }
 

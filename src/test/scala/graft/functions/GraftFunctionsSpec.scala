@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.TestBridge
 
-/** SQL-surface registration of the native expressions, and the MinHash
-  * signature against its exploded definition. */
+/** SQL-surface registration of the native expressions, the MinHash
+  * signature against its exploded definition, and the pair kernel against
+  * its nested-lambda form. */
 class GraftFunctionsSpec extends SparkSpec {
 
   import spark.implicits._
@@ -101,5 +102,72 @@ class GraftFunctionsSpec extends SparkSpec {
     val one = docs.filter(col("id") === 1L).head().getSeq[String](1)
     assert(eval(one).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toLongArray().toSeq == want(1L))
+  }
+
+  test("array_pairs equals the nested-lambda pair form — empty, one-element " +
+      "and NULL arrays, unsorted longs, NULL elements and struct elements, " +
+      "with and without codegen") {
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    def nested(c: Column) = flatten(transform(c, (x, i) =>
+      transform(slice(c, i + 2, size(c)), y => struct(x.as("a"), y.as("b")))))
+    val longs = Seq[(Int, Option[Seq[Option[Long]]])](
+      1 -> Some(Seq(Some(5L), Some(3L), Some(9L), Some(3L), Some(-1L))),
+      2 -> Some(Seq.empty),
+      3 -> Some(Seq(Some(7L))),
+      4 -> None,
+      5 -> Some(Seq(None, Some(2L), None, Some(1L))))
+      .toDF("id", "arr")
+    // the wedge shape: rank-sorted struct(d, u) lists out of an aggregation
+    // buffer, groups of different sizes so the buffer is reused between rows
+    val structs = Seq((1L, 3L, 10L), (1L, 1L, 11L), (1L, 2L, 12L), (1L, 2L, 9L),
+        (2L, 5L, 20L), (3L, 1L, 30L), (3L, 4L, 31L))
+      .toDF("id", "d", "u")
+      .groupBy(col("id"))
+      .agg(sort_array(collect_list(struct(col("d"), col("u")))).as("arr"))
+    def pairs(df: DataFrame, f: Column => Column,
+              conf: Map[String, String]): (org.apache.spark.sql.types.DataType,
+        Map[Any, Seq[Row]]) = {
+      val saved = conf.keys.map(k => k -> spark.conf.getOption(k))
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val out = df.select(col("id"), f(col("arr")).as("p"))
+        (out.schema("p").dataType,
+          out.collect().map(r => r.get(0) -> Option(r.getSeq[Row](1)).orNull).toMap)
+      } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val noCodegen = Map("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    for (df <- Seq(longs, structs); conf <- Seq(Map.empty[String, String], noCodegen)) {
+      val want = pairs(df, nested, conf)
+      assert(pairs(df, ArrayPairs(_), conf) == want)
+    }
+    val want = pairs(longs, nested, Map.empty)._2
+    assert(want(1).size == 10 && want(2).isEmpty && want(3).isEmpty && want(4) == null)
+    assert(want(5).map(r => (r.get(0), r.get(1))) == Seq((null, 2L), (null, null),
+      (null, 1L), (2L, null), (2L, 1L), (null, 1L)))
+
+    // the interpreted path directly, over an unsafe array whose buffer the
+    // projection reuses: the pairs must hold copies, not views into it
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
+    def eval(v: Any, t: ArrayType) = ArrayPairs(Literal.create(v, t)).eval()
+    val longArr = ArrayType(LongType)
+    assert(eval(null, longArr) == null)
+    assert(eval(Seq.empty[Long], longArr).asInstanceOf[ArrayData].numElements() == 0)
+    assert(eval(Seq(4L), longArr).asInstanceOf[ArrayData].numElements() == 0)
+    val du = new StructType().add("d", LongType).add("u", LongType)
+    val proj = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](ArrayType(du)))
+    def unsafe(xs: (Long, Long)*): ArrayData = proj(InternalRow(new GenericArrayData(
+      xs.map { case (d, u) => new GenericInternalRow(Array[Any](d, u)) }.toArray[Any])))
+      .getArray(0)
+    def read(out: ArrayData) = (0 until out.numElements()).map { k =>
+      val p = out.getStruct(k, 2)
+      (p.getStruct(0, 2).getLong(1), p.getStruct(1, 2).getLong(1))
+    }
+    val out = ArrayPairsHelper.pairs(unsafe((1L, 10L), (2L, 20L), (3L, 30L)), du)
+    unsafe((7L, 70L), (8L, 80L), (9L, 90L))
+    assert(read(out) == Seq((10L, 20L), (10L, 30L), (20L, 30L)))
   }
 }

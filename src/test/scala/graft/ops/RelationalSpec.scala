@@ -685,6 +685,44 @@ class RelationalSpec extends SparkSpec {
     assert(got == Set((10L, 20L, 2L), (10L, 30L, 1L), (20L, 30L, 1L)))
   }
 
+  test("basketPairs equals a naive driver-side pair count — duplicate " +
+      "lines, a NULL basket, NULL items, empty input and a 300-item basket") {
+    val rnd = new scala.util.Random(1307)
+    val hot = (0 until 300).map(i => (Option(1000L), Option(i.toLong)))
+    val base = Seq.fill(600)((Option(rnd.nextInt(80).toLong), Option(rnd.nextInt(500).toLong)))
+    val lines = rnd.shuffle(base ++ base.take(100) ++
+      Seq.fill(30)((Option.empty[Long], Option(rnd.nextInt(40).toLong))) ++
+      Seq.fill(30)((Option(rnd.nextInt(80).toLong), Option.empty[Long])) ++ hot)
+    def naive(ls: Seq[(Option[Long], Option[Long])]): Set[(Long, Long, Long)] =
+      ls.groupBy(_._1).values.toSeq.flatMap { basket =>
+        val items = basket.flatMap(_._2).distinct.sorted
+        for (i <- items.indices; j <- i + 1 until items.size) yield (items(i), items(j))
+      }.groupBy(identity).map { case ((a, b), n) => (a, b, n.size.toLong) }.toSet
+    def pairs(ls: Seq[(Option[Long], Option[Long])]) =
+      Relational.basketPairs(ls.toDF("o", "p"), "o", "p")
+        .as[(Long, Long, Long)].collect()
+    val want = naive(lines)
+    val got = pairs(lines)
+    assert(got.length == want.size && got.toSet == want)
+    assert(want.exists(_._3 > 1) && want.size > 44850)
+    val hotPairs = pairs(hot)
+    assert(hotPairs.length == 44850 && hotPairs.forall(p => p._1 < p._2 && p._3 == 1L))
+    assert(pairs(Seq.empty).isEmpty)
+  }
+
+  test("basketPairs: the basket stage runs at the shuffle parallelism, not " +
+      "the one task AQE would coalesce a few-KB grouping shuffle to") {
+    val parts = spark.sessionState.conf.numShufflePartitions
+    assume(parts > 1)
+    // one input split, so only the fanned basket stage can reach `parts` tasks
+    val df = spark.range(0, 2000, 1, 1)
+      .select((col("id") / 5).cast("long").as("o"), (col("id") % 97).as("p"))
+    val (n, jobs) = jobsDuring(Relational.basketPairs(df, "o", "p").count())
+    assert(n > 0)
+    val tasks = jobs.flatMap(_.stageInfos).map(s => s.stageId -> s.numTasks).toMap
+    assert(tasks.values.toSet == Set(1, parts), s"tasks per stage: $tasks")
+  }
+
   test("basket edge index: append-then-read ≡ full rebuild") {
     // 9 baskets across 3 ingest batches (whole baskets per batch — the
     // documented contract); overlapping pairs across batches so the

@@ -1,7 +1,7 @@
 package graft.streaming
 
 /** Input files the streaming specs share: (file name, JSON lines) in
-  * arrival order. `write` gives each file a distinct mtime, so a file
+  * arrival order. `write` gives each file its own mtime, so a file
   * source reads them in that order.
   */
 object StreamFixtures {
@@ -63,9 +63,18 @@ object StreamFixtures {
       """{"doc_id":23,"lang":"en","text":"absolutely fresh material arriving in the third batch"}"""))
 
   def write(dir: String, files: Seq[(String, Seq[String])]): Unit =
-    files.foreach { case (name, rows) =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5) // distinct mtimes → deterministic batch order
-    }
+    files.foreach { case (name, rows) => writeFile(dir, name, rows) }
+
+  private val lastStamp = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Writes one input file and stamps its mtime at least a second past the
+    * previous file written here. A file source orders files by mtime, whose
+    * granularity is the clock tick, so two files written milliseconds
+    * apart can tie and be read in either order. */
+  def writeFile(dir: String, name: String, rows: Seq[String]): Unit = {
+    val f = java.nio.file.Paths.get(dir, name)
+    java.nio.file.Files.write(f, rows.mkString("\n").getBytes("UTF-8"))
+    val stamp = lastStamp.updateAndGet(t => math.max(t + 1000L, System.currentTimeMillis()))
+    assert(f.toFile.setLastModified(stamp), s"cannot set the mtime of $f")
+  }
 }

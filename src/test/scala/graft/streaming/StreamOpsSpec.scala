@@ -79,11 +79,8 @@ class StreamOpsSpec extends SparkSpec {
 
   test("late data beyond the watermark is dropped from windowed aggregation") {
     val dir = tmpDir("events-late")
-    def write(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5) // distinct mtimes → deterministic batch order
-    }
+    def write(name: String, rows: Seq[String]): Unit =
+      StreamFixtures.writeFile(dir, name, rows)
     write("b1.json", Seq(
       """{"event_id":1,"ts":"2026-01-01T00:01:00Z","user_id":1,"event_type":"click","value":1.0,"props":"{}"}""",
       """{"event_id":2,"ts":"2026-01-01T02:00:00Z","user_id":1,"event_type":"click","value":1.0,"props":"{}"}"""))
@@ -148,13 +145,12 @@ class StreamOpsSpec extends SparkSpec {
     def ev(id: Long, sec: Long, uid: Long, v: Double) =
       s"""{"event_id":$id,"ts":"${java.time.Instant.ofEpochSecond(sec)}",""" +
         s""""user_id":$uid,"event_type":"purchase","value":$v,"props":"{}"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "p1.json"), Seq(
+    StreamFixtures.writeFile(dir, "p1.json", Seq(
       ev(1, 10, 1, 5.0), ev(2, 20, 2, 9.0), ev(3, 30, 3, 1.0)
-    ).mkString("\n").getBytes("UTF-8"))
-    Thread.sleep(5)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "p2.json"), Seq(
+    ))
+    StreamFixtures.writeFile(dir, "p2.json", Seq(
       ev(4, 40, 4, 7.0), ev(5, 50, 5, 9.0), ev(6, 60, 6, 2.0)
-    ).mkString("\n").getBytes("UTF-8"))
+    ))
     val schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
       "event_type STRING, value DOUBLE, props STRING"
     import org.apache.spark.sql.functions.{col => c}
@@ -186,20 +182,19 @@ class StreamOpsSpec extends SparkSpec {
     val wk = 604800L
     // batch 1: u1 click+view (view latest — crosses the batch boundary);
     // u2 stale click (out of window by batch 2); u3 nothing yet
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part1.json"), Seq(
+    StreamFixtures.writeFile(dir, "part1.json", Seq(
       ev(1, 100, 1, "click", 0.0), ev(2, 200, 1, "view", 0.0),
       ev(3, 100, 2, "click", 0.0),
       ev(4, 100, 3, "purchase", 2.5) // no touch → direct, in-batch
-    ).mkString("\n").getBytes("UTF-8"))
-    Thread.sleep(5)
+    ))
     // batch 2: u1 converts (cross-batch view credit); u2 converts one
     // second past the window (direct); u1 then clicks and converts again
     // in-batch (click credit — state advanced by the newer touch)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part2.json"), Seq(
+    StreamFixtures.writeFile(dir, "part2.json", Seq(
       ev(5, 300, 1, "purchase", 10.0),
       ev(6, 101 + wk, 2, "purchase", 5.0),
       ev(7, 400, 1, "click", 0.0), ev(8, 500, 1, "purchase", 1.0)
-    ).mkString("\n").getBytes("UTF-8"))
+    ))
     val schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
       "event_type STRING, value DOUBLE, props STRING"
     val streamed = runToMemory(
@@ -224,17 +219,16 @@ class StreamOpsSpec extends SparkSpec {
       s"""{"event_id":$id,"ts":"${java.time.Instant.ofEpochSecond(sec)}",""" +
         s""""user_id":$uid,"event_type":"view","value":$v,"props":"{}"}"""
     // batch 1: u1 two observations; u2 one (no span yet)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part1.json"), Seq(
+    StreamFixtures.writeFile(dir, "part1.json", Seq(
       ev(1, 0, 1, 1.0), ev(2, 100, 1, 3.0),
       ev(3, 0, 2, 9.0)
-    ).mkString("\n").getBytes("UTF-8"))
-    Thread.sleep(5)
+    ))
     // batch 2: u1 extends the span (state carries 3.00 from batch 1);
     // u2 gets its first interval
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part2.json"), Seq(
+    StreamFixtures.writeFile(dir, "part2.json", Seq(
       ev(4, 1000, 1, 5.0),
       ev(5, 10, 2, 1.0)
-    ).mkString("\n").getBytes("UTF-8"))
+    ))
     val schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
       "event_type STRING, value DOUBLE, props STRING"
     val streamed = runToMemory(
@@ -328,11 +322,8 @@ class StreamOpsSpec extends SparkSpec {
     */
   private val dedupFiles: Seq[(String, Seq[String])] = StreamFixtures.dedupFiles
 
-  private def writeDedupFile(src: String, file: (String, Seq[String])): Unit = {
-    java.nio.file.Files.write(java.nio.file.Paths.get(src, file._1),
-      file._2.mkString("\n").getBytes("UTF-8"))
-    Thread.sleep(5) // distinct mtimes → deterministic batch order
-  }
+  private def writeDedupFile(src: String, file: (String, Seq[String])): Unit =
+    StreamFixtures.writeFile(src, file._1, file._2)
 
   private def runDedupSink(src: String, state: String, ckpt: String): Unit = {
     val q = StreamOps.incrementalDedupSink(
@@ -571,15 +562,11 @@ class StreamOpsSpec extends SparkSpec {
     def near(t: String) = t.split(" ").init.mkString(" ") + " changed"
     def doc(id: Long, text: String) =
       s"""{"doc_id":$id,"lang":"en","text":"$text"}"""
-    // a second apart, so the file source's order cannot depend on the
-    // clock tick a write lands on
-    val t0 = System.currentTimeMillis() - 60000L
     (0 until 12).foreach { b =>
       val prior = novel(math.max(b - 1, 0))
       val name = f"g$b%02d.json"
       writeDedupFile(src, name -> Seq(doc(100L * b + 1, novel(b)),
         doc(100L * b + 2, prior), doc(100L * b + 3, near(prior))))
-      assert(new java.io.File(src, name).setLastModified(t0 + 1000L * b))
     }
     // the query's thread inherits the tag, and its jobs carry their batch id
     val (_, jobs) = jobsDuring(runDedupSink(src, state, tmpDir("dedup-growth-ckpt")))
@@ -700,11 +687,8 @@ class StreamOpsSpec extends SparkSpec {
     val src = tmpDir("bloom-src")
     val state = tmpDir("bloom-state")
     val ckpt = tmpDir("bloom-ckpt")
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5) // distinct mtimes → deterministic batch order
-    }
+    def writeFile(name: String, rows: Seq[String]): Unit =
+      StreamFixtures.writeFile(src, name, rows)
     def runOnce(): Unit = {
       val q = StreamOps.bloomDedupSink(
         StreamOps.readDocumentStream(spark, src, maxFilesPerTrigger = Some(1)),
@@ -801,11 +785,8 @@ class StreamOpsSpec extends SparkSpec {
     val src = tmpDir("agg-src")
     val state = tmpDir("agg-state")
     val ckpt = tmpDir("agg-ckpt")
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5)
-    }
+    def writeFile(name: String, rows: Seq[String]): Unit =
+      StreamFixtures.writeFile(src, name, rows)
     def doc(id: Long, lang: String, text: String) =
       s"""{"doc_id":$id,"lang":"$lang","text":"$text"}"""
     writeFile("b1.json", Seq(doc(1, "en", "aa bb"), doc(2, "de", "cc")))
@@ -856,14 +837,13 @@ class StreamOpsSpec extends SparkSpec {
     val ckpt = tmpDir("roll-ckpt")
     def ev(id: Long, t: String, u: Long) =
       s"""{"event_id":$id,"ts":"$t","user_id":$u,"event_type":"click","value":0.0,"props":"{}"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(src, "a.json"), Seq(
+    StreamFixtures.writeFile(src, "a.json", Seq(
       ev(1, "2026-01-01T00:10:00Z", 1), ev(2, "2026-01-01T00:20:00Z", 2),
       ev(3, "2026-01-01T01:10:00Z", 1), ev(4, "2026-01-01T02:10:00Z", 3)
-    ).mkString("\n").getBytes("UTF-8"))
-    Thread.sleep(5)
-    java.nio.file.Files.write(java.nio.file.Paths.get(src, "b.json"), Seq(
+    ))
+    StreamFixtures.writeFile(src, "b.json", Seq(
       ev(5, "2026-01-01T02:20:00Z", 4), ev(6, "2026-01-01T01:40:00Z", 2)
-    ).mkString("\n").getBytes("UTF-8"))
+    ))
     val q = StreamOps.incrementalAggSink(
       StreamOps.readEventStream(spark, src, maxFilesPerTrigger = Some(1))
         .select(unix_timestamp(date_trunc("hour", col("ts"))).as("h"),
@@ -892,11 +872,8 @@ class StreamOpsSpec extends SparkSpec {
     val ckpt = tmpDir("oov-ckpt")
     def doc(id: Long, text: String) =
       s"""{"doc_id":$id,"lang":"en","text":"$text"}"""
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5)
-    }
+    def writeFile(name: String, rows: Seq[String]): Unit =
+      StreamFixtures.writeFile(src, name, rows)
     writeFile("b1.json", Seq(doc(1, "alpha beta")))
     writeFile("b2.json", Seq(doc(2, "alpha gamma")))
     val q = StreamOps.oovSink(
@@ -932,11 +909,8 @@ class StreamOpsSpec extends SparkSpec {
     val ckpt = tmpDir("ppl-ckpt")
     def doc(id: Long, text: String) =
       s"""{"doc_id":$id,"lang":"en","text":"$text"}"""
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5)
-    }
+    def writeFile(name: String, rows: Seq[String]): Unit =
+      StreamFixtures.writeFile(src, name, rows)
     writeFile("b1.json", Seq(doc(1, "alpha beta")))
     writeFile("b2.json", Seq(doc(2, "alpha gamma")))
     val q = StreamOps.perplexitySink(
@@ -981,11 +955,8 @@ class StreamOpsSpec extends SparkSpec {
     val ckpt = tmpDir("pmi-ckpt")
     def doc(id: Long, text: String) =
       s"""{"doc_id":$id,"lang":"en","text":"$text"}"""
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5)
-    }
+    def writeFile(name: String, rows: Seq[String]): Unit =
+      StreamFixtures.writeFile(src, name, rows)
     writeFile("b1.json", Seq(doc(1, "a b c a b"), doc(2, "b c d")))
     writeFile("b2.json", Seq(doc(3, "a b a b"), doc(4, "c d e f")))
     val q = StreamOps.pmiSink(
@@ -1040,11 +1011,8 @@ class StreamOpsSpec extends SparkSpec {
     val dir = tmpDir("late-events")
     def ev(id: Long, ts: String, tpe: String, v: Double) =
       s"""{"event_id":$id,"ts":"$ts","user_id":1,"event_type":"$tpe","value":$v,"props":"{}"}"""
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5) // distinct mtimes → deterministic micro-batch order
-    }
+    def writeFile(name: String, rows: Seq[String]): Unit =
+      StreamFixtures.writeFile(dir, name, rows)
     // batch 0: on-time events; max ts 01:25 → model watermark 01:15 after
     writeFile("b0.json", Seq(
       ev(1, "2026-01-01T00:10:00Z", "click", 1.0),
@@ -1116,11 +1084,8 @@ class StreamOpsSpec extends SparkSpec {
     val ckpt = tmpDir("drift-ckpt")
     def doc(id: Long, nToks: Int) =
       s"""{"doc_id":$id,"lang":"en","text":"${Seq.fill(nToks)("w").mkString(" ")}"}"""
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.mkString("\n").getBytes("UTF-8"))
-      Thread.sleep(5)
-    }
+    def writeFile(name: String, rows: Seq[String]): Unit =
+      StreamFixtures.writeFile(src, name, rows)
     // bucket = token-count decile band, like the catalog query
     val bucket = least(floor(size(split(col("text"), " ")) / 10), lit(9L))
     writeFile("b1.json", Seq(doc(1, 5), doc(2, 15), doc(3, 15)))
@@ -1169,14 +1134,13 @@ class StreamOpsSpec extends SparkSpec {
       s"""{"event_id":$id,"ts":"${java.time.Instant.ofEpochSecond(sec)}",""" +
         s""""user_id":$uid,"event_type":"view","value":$v,"props":"{}"}"""
     // the state must carry l/b ACROSS the file boundary
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "p1.json"), Seq(
+    StreamFixtures.writeFile(dir, "p1.json", Seq(
       ev(1, 0, 1, 1.0), ev(2, 10, 1, 2.0),
       ev(3, 0, 2, 4.0)
-    ).mkString("\n").getBytes("UTF-8"))
-    Thread.sleep(5)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "p2.json"), Seq(
+    ))
+    StreamFixtures.writeFile(dir, "p2.json", Seq(
       ev(4, 20, 1, 4.0)
-    ).mkString("\n").getBytes("UTF-8"))
+    ))
     val schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
       "event_type STRING, value DOUBLE, props STRING"
     val streamed = runToMemory(
